@@ -495,17 +495,23 @@ object Bench {
     * instance), it captures the artifact the verdict asked for, once:
     * executor-task thread stacks + JIT counters + GC time, to stderr
     * (which the run log keeps). Bounded to 2 dumps per JVM so a globally
-    * degraded box cannot flood the log. */
+    * degraded box cannot flood the log. One shared daemon timer thread
+    * serves every execution; each arms its own task and cancels it. */
   private[graft] object SlowWatch {
-    @volatile private var dumps = 0
-    private val thresholdMs =
-      sys.env.get("GRAFT_SLOWDUMP_MS").map(_.toLong).getOrElse(30000L)
-    def arm(name: String): java.util.Timer = {
-      val t = new java.util.Timer("graft-slowwatch", true)
-      t.schedule(new java.util.TimerTask {
-        override def run(): Unit = if (dumps < 2) { dumps += 1; dump(name) }
-      }, thresholdMs)
-      t
+    private val dumps = new java.util.concurrent.atomic.AtomicInteger(0)
+    private val thresholdMs = thresholdOf(sys.env.get("GRAFT_SLOWDUMP_MS"))
+    private lazy val timer = new java.util.Timer("graft-slowwatch", true)
+    /** The dump threshold from `GRAFT_SLOWDUMP_MS`: unset, malformed or
+      * non-positive values fall back to 30 s, so a bad value degrades the
+      * watchdog instead of failing the run. */
+    private[graft] def thresholdOf(v: Option[String]): Long =
+      v.flatMap(s => scala.util.Try(s.trim.toLong).toOption).filter(_ > 0).getOrElse(30000L)
+    def arm(name: String): java.util.TimerTask = {
+      val task = new java.util.TimerTask {
+        override def run(): Unit = if (dumps.getAndIncrement() < 2) dump(name)
+      }
+      timer.schedule(task, thresholdMs)
+      task
     }
     private def dump(name: String): Unit = {
       val (compMs, ccBytes) = jitStat()

@@ -32,18 +32,19 @@ object HashOps {
   }
 }
 
-/** `md5_prefix60(binary) -> long` as a native Catalyst expression — the
+/** `md5_prefix60(string | binary) -> long` as a native Catalyst expression — the
   * §2.13 custom-op tier ([[DotPacked]] pattern) for the pipeline's
   * portable 60-bit hash. The Column-function form
   * `conv(substring(md5(c), 1, 15), 16, 10).cast("long")` evaluates FOUR
   * chained expressions per value and allocates three intermediates (the
   * 32-char hex UTF8String, the 15-char substring, conv's decimal string);
   * this expression is the digest plus bit math, nothing else — measured
-  * ~3× per value at sf0.1 volumes (round 20, guide §4). Same input
-  * contract as Spark's own `Md5` (BinaryType with the implicit
-  * string→binary cast, i.e. UTF-8 bytes), so swapping it under
-  * [[TextFunctions.hash60]] changes NO value anywhere: every oracle keeps
-  * the md5-based SQL form. */
+  * ~3× per value at sf0.1 volumes (round 20, guide §4). It accepts
+  * string or binary natively — there is no implicit cast: a string hashes
+  * its UTF-8 bytes, the same bytes Spark's own `Md5` hashes after its
+  * string→binary cast — so swapping it under [[TextFunctions.hash60]]
+  * changes NO value anywhere: every oracle keeps the md5-based SQL form.
+  * A numeric input fails analysis by design. */
 case class Md5Prefix60(child: Expression)
     extends UnaryExpression {
 

@@ -583,9 +583,11 @@ object Augurs {
     // frames in one job (two fewer jobs, one fewer pass over the k-row
     // frames). The pair budget is guarded on that same k (= the series
     // actually entering the DP — the operand the k² bound is ABOUT),
-    // replacing the former separate distinct-count pass over the raw
-    // tick stream; the guard still throws at call time, before any DP
-    // task can run.
+    // and throws at call time, before any DP task can run. The raw key
+    // count is checked first as a fast-fail: one column-pruned distinct
+    // count, so an over-budget input throws before the window build and
+    // its two shuffles run at all.
+    requirePairBudget(t, maxPairs, "dtwMatrixOrdered")
     val s = seriesOf(t, window).localCheckpoint(false)
     val tok = bucketTokens(buckets)
     // WEIGHTED bucketing (round 18): equal sid-RANGES would load the
@@ -692,8 +694,8 @@ object Augurs {
     *
     *  - eps-edges stay a DataFrame off [[dtwMatrix]] (one pass, no sort);
     *  - degree/core = one aggregate over the symmetrized edges;
-    *  - components ride [[graft.ops.Graph.connectedComponents]] — but CC's
-    *    sum-convergence needs NUMERIC labels while this family's cluster
+    *  - components ride [[graft.ops.Graph.connectedComponents]] — but CC
+    *    labels are long vertex ids while this family's cluster
     *    ids are LEXICOGRAPHIC min sids (the union-find's String ordering,
     *    mirrored by the oracle's VARCHAR min), so sids map through their
     *    lex RANK first (order-isomorphic longs: min-rank == min-lex-sid)
@@ -731,23 +733,16 @@ object Augurs {
     // OUTPUT-sized (near-pairs only, the k²-row matrix dies inside the
     // join stage). The budget guard's count is free off the
     // materialized frame.
-    val dbg = sys.env.contains("GRAFT_CC_ROUNDS")
-    var lt0 = System.nanoTime()
-    def lap(what: String): Unit = if (dbg) {
-      System.err.println(f"[cluster] $what ${(System.nanoTime() - lt0) / 1e9}%.2f s")
-      lt0 = System.nanoTime()
-    }
     // LAZY checkpoints throughout (round 21, guide §1.2 — job fixed
     // costs): plan truncation is immediate, block materialization rides
     // the next full action — ser's rides the budget count below, half's
-    // and rankedB's ride CC's first convergence aggregate (whose plan
+    // and rankedB's ride the stage jobs of CC's edge read (whose plan
     // reads both), so the eager per-frame materialization jobs disappear
     // while every pin/consistency contract keeps holding: each frame is
     // ONE fixed RDD from creation (range-partitioner sampling runs once,
     // at RDD build), and its first action computes every partition.
     val ser = seriesOf(t, window).localCheckpoint(false)
     requirePairBudget(ser.count(), maxPairs, "clusterDtwDistributed")
-    lap("series build")
     val sids = ser.select("sid")
     // the eps-graph needs only the DECISION dtw<=eps, so the DP is
     // kernel-DISPATCHED on the window size (round 20, r19 verdict #5):
@@ -766,7 +761,6 @@ object Augurs {
       .where(org.apache.spark.sql.GraftColumns.dtwBandLeAuto(
         col("a.series"), col("b.series"), band, eps, window))
       .select(col("a.sid").as("sid_a"), col("b.sid").as("sid_b")).localCheckpoint(false)
-    lap("pair DP (early-abandon, lazy)")
     val edges = half.union(half.select(col("sid_b"), col("sid_a"))).toDF("u", "v")
     val deg = sids.as("s").join(edges, col("s.sid") === col("u"), "left_outer")
       .groupBy(col("s.sid").as("sid")).agg((count(col("v")) + lit(1)).as("nn"))
@@ -774,7 +768,6 @@ object Augurs {
     // two-phase lex rank: checkpoint phase 1 so offsets and the final
     // join see ONE sampled bucket assignment (k-row blocks)
     val rankedB = lexRankPhase1(sids, buckets = 32).localCheckpoint(false)
-    lap("lex rank phase 1 (lazy)")
     val ranked = rankedB.join(broadcast(lexRankOffsets(rankedB)), "b")
       .select(col("sid"), (col("off") + col("rk")).as("rid"))
     val coreR = core.join(ranked, "sid")
@@ -783,9 +776,8 @@ object Augurs {
       .join(coreR.select(col("sid").as("v"), col("rid").as("rv")), "v")
       .select("ru", "rv")
     // `edges` carries both directions by construction, so ce is already
-    // symmetric — CC skips its symmetrization shuffle
+    // symmetric — CC skips adding the reversed copy
     val comps = graft.ops.Graph.connectedComponents(ce, symmetric = true)
-    lap("CC total")
     val coreRoots = coreR.join(comps, coreR("rid") === comps("id"), "left_outer")
       .select(col("sid"), coalesce(col("component"), col("rid")).as("rootRid"))
     val coreOut = coreRoots

@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftFrames}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import scala.collection.mutable.LongMap
 
 /** Distributed graph primitives for the dedup pipeline. Near-dup detection
   * (MinHash/SimHash/cosine LSH) emits PAIRS; a training-data pipeline needs
@@ -16,134 +23,126 @@ object Graph {
     * survivor under the keep-lowest-id convention used across the dedup
     * family).
     *
-    * Returns (id, component) for every vertex that appears in `edges`
-    * (isolated vertices are their own trivial component — union them in at
-    * the call site if needed).
+    * Returns (id, component), both long (integral ids are cast), for every
+    * vertex that appears in `edges` (isolated vertices are their own
+    * trivial component — union them in at the call site if needed). Edges
+    * with a null end are dropped.
     *
-    * Scale shape: each round is one equi-join of the label frame with the
-    * (persisted) undirected edge list, one hash-aggregate, and one label-
-    * on-label pointer jump (label(id) := label(label(id))) — all shuffle
-    * on vertex id, and AQE coalesces/splits as needed. The jump halves
-    * remaining chain depth per round, so rounds = O(log diameter) (the
-    * same contraction large-star/small-star gets, Kiveris et al.,
-    * "Connected Components in MapReduce", without the re-rooting
-    * bookkeeping); init is seeded at min(id, neighbors), folding the
-    * first propagation into frame construction. Convergence is detected
-    * with one cheap aggregate per round: labels only ever DECREASE
-    * (propagation and jump both take minima), so an unchanged label sum
-    * (exact DECIMAL(38,0) — no Long overflow at any id range) means the
-    * round function hit its fixpoint, which is a fixpoint of plain
-    * propagation too (the jump never raises a label).
+    * Scale shape — GraphX (OSDI 2014): the edges are partitioned once and
+    * only vertex values move. The edge list is symmetrized, hash-
+    * partitioned by source ONCE and persisted; the labels live on the same
+    * partitioner. A round is a plain RDD step — no Catalyst planning,
+    * codegen or AQE stage job per round:
+    *  - each vertex v sends a request to its label's partition (the only
+    *    per-round data movement besides the messages: vertex-sized);
+    *  - each partition joins its labels NARROWLY with its own edges and
+    *    with the requests it received, answering label(s) to every edge
+    *    target (propagation) and label(label(v)) to every requester v (the
+    *    pointer jump, which halves the remaining chain depth per round:
+    *    rounds = O(log diameter), Kiveris et al., "Connected Components in
+    *    MapReduce");
+    *  - one `reduceByKey(min)` on the same partitioner.
+    * Init is seeded at min(id, neighbors) off the edge partitions, folding
+    * the first propagation round in.
     *
-    * Each round's frame is `localCheckpoint`ed, NOT merely persisted:
-    * the round recurrence references `labels` twice (join + union), so
-    * without lineage truncation the logical plan DOUBLES per round —
-    * 2^rounds analysis cost that OOMs the driver near round ~8 even on a
-    * 9-node chain (persist caches data but Catalyst still re-analyzes the
-    * full tree). Checkpointing replaces the plan with a LogicalRDD each
-    * round, keeping analysis O(1) per round — the same discipline
-    * GraphFrames applies to its iterative algorithms. localCheckpoint
-    * (executor-local blocks) over checkpoint (HDFS) because rounds are
-    * single-digit and re-running the whole job on executor loss is
-    * cheaper than per-round HDFS writes; flip to `checkpoint` on an
-    * unreliable cluster. The driver-side loop is inherent to iterative
-    * graph algorithms on Spark (same contract as Feedback.iterateEpochs).
+    * Two rounds form a cycle, and a cycle is ONE job: the count that
+    * materializes the cycle's pinned labels also counts, through an
+    * accumulator, the labels its second round lowered. None lowered means
+    * the first round's labels are a fixpoint of the round — so of plain
+    * propagation too (labels only ever decrease) — and the iteration ends.
+    * A re-executed task can only over-count: one more cycle, never a
+    * wrong label.
     *
-    * Storage hygiene: each round's blocks are freed as soon as the next
-    * round materializes (localCheckpoint caches OUTSIDE the CacheManager,
-    * so `clearCache()` never reclaims them — a long-lived session calling
-    * this repeatedly would otherwise accumulate executor storage). Only
-    * the RETURNED label frame stays cached; callers that are done with it
-    * can free it with [[freeCheckpoint]]. */
-  /** `symmetric = true` promises `edges` already contains both directions
+    * Pinning truncates each cycle's lineage, so the driver never replays
+    * the iteration. By default it is `localCheckpoint` (executor-local,
+    * non-replicated blocks: losing an executor kills the job, and re-
+    * running it is cheaper than a per-cycle write at single-digit cycles).
+    * When `sparkContext.getCheckpointDir` is set, the edges and every
+    * cycle's labels use a reliable `checkpoint()` instead, persisted first
+    * so each write re-reads blocks, not the cycle.
+    *
+    * Storage hygiene: the edge blocks and each cycle's label blocks are
+    * freed as soon as the next cycle materializes (pinned RDDs live
+    * outside the CacheManager, so `clearCache()` never reclaims them).
+    * Only the RETURNED frame stays cached: a checkpointed `Scan
+    * ExistingRDD` leaf declaring `hashpartitioning(id)` — the partitioner
+    * places ids exactly where that exchange would — so downstream joins on
+    * `id` plan no exchange. Free it with [[freeCheckpoint]].
+    *
+    * `symmetric = true` promises `edges` already contains both directions
     * of every edge (the aug_cluster path builds them that way): the
-    * union+distinct symmetrization pass is skipped — one less shuffle over
-    * the (potentially huge) edge frame. Correctness is unaffected either
-    * way; duplicates are harmless to min-propagation (the seeded init and
-    * every round take minima), so only the balance/cost changes. */
+    * reversed copy is skipped, halving the edge shuffle. Duplicate edges
+    * are harmless to min-propagation either way. */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50,
       symmetric: Boolean = false): DataFrame = {
-    val dbg = sys.env.contains("GRAFT_CC_ROUNDS")
-    var t0 = System.nanoTime()
-    def lap(what: String): Unit = if (dbg) {
-      System.err.println(f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      t0 = System.nanoTime()
+    val spark = edges.sparkSession
+    val sc = spark.sparkContext
+    val part = new IdPartitioner(GraftFrames.shufflePartitions(spark))
+    val reliable = sc.getCheckpointDir.isDefined
+    def pin[T](r: RDD[T]): RDD[T] =
+      if (reliable) { r.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(); r }
+      else r.localCheckpoint()
+    val Seq(s, t) = edges.columns.take(2).toSeq
+    val und = edges.select(col(s).cast("long"), col(t).cast("long")).queryExecution.toRdd
+      .flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Nil
+        else if (symmetric) List((r.getLong(0), r.getLong(1)))
+        else List((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
+      }.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    if (reliable) { und.checkpoint(); und.count() }
+    // seeded init: label = min(id, neighbors), one narrow pass
+    var labels: RDD[(Long, Long)] = und.mapPartitions({ es =>
+      val m = new LongMap[Long]
+      es.foreach { case (v, n) => m(v) = math.min(m.getOrElse(v, v), n) }
+      m.iterator
+    }, preservesPartitioning = true)
+    // edges (s, t) and requests (label(v), v) both mean "send the label
+    // of the first to the second"; own labels ride as (label, old) so the
+    // reduced value tells whether this round lowered the label
+    def round(ls: RDD[(Long, Long)]): RDD[(Long, (Long, Long))] = {
+      val asks = ls.map { case (v, c) => (c, v) }.partitionBy(part)
+      ls.zipPartitions(und, asks) { (own, out, ask) =>
+        val m = LongMap.from(own)
+        m.iterator.map { case (v, c) => (v, (c, c)) } ++
+          (out ++ ask).map { case (u, v) => (v, (m.getOrElse(u, u), Long.MaxValue)) }
+      }.reduceByKey(part, (a, b) => (math.min(a._1, b._1), math.min(a._2, b._2)))
     }
-    val Seq(srcCol, dstCol) = edges.columns.take(2).toSeq
-    // the distinct doubles as the partition-balancer, and the repartition
-    // on `s` pins the checkpoint's partitioning to the per-round JOIN KEY:
-    // localCheckpoint preserves outputPartitioning, and the label frame is
-    // checkpointed off its own groupBy("id") hash exchange, so every
-    // round's labels⋈edges join is zero-exchange on the edge side — the
-    // (potentially huge) edge list shuffles ONCE here, not once per round
-    val sym =
-      if (symmetric) edges.select(col(srcCol).as("s"), col(dstCol).as("t"))
-      else edges.select(col(srcCol).as("s"), col(dstCol).as("t"))
-        .union(edges.select(col(dstCol).as("s"), col(srcCol).as("t")))
-        .distinct()
-    // LAZY localCheckpoints (round 21, guide §1.2 — driver/job fixed
-    // costs): eager=false still truncates the plan to a LogicalRDD at
-    // build time but defers block materialization to the FIRST action,
-    // so the labelSum convergence aggregate below materializes `und` and
-    // the label frame in the SAME job — one job per cycle instead of two
-    // (checkpoint-count + sum), halving CC's per-round fixed cost. The
-    // lazy-checkpoint contract (first action must compute EVERY
-    // partition or uncomputed ones are lost with the truncated lineage)
-    // holds by construction: every first action here is a full
-    // aggregate. At bench scale the job fixed cost dominated aug_cluster
-    // (79 jobs); at data scale this also removes one full cached-block
-    // read per cycle.
-    val und = sym.repartition(col("s")).localCheckpoint(false)
-    // seeded init: label = min(id, neighbors) — the first propagation
-    // round folded into the frame construction (one agg, no join)
-    var labels = und.groupBy(col("s").as("id"))
-      .agg(least(col("id"), min(col("t"))).as("component")).localCheckpoint(false)
-    lap("labels init (lazy)")
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val v = df.agg(sum(col("component").cast("decimal(38,0)"))).head.get(0)
-      if (v == null) java.math.BigDecimal.ZERO
-      else v.asInstanceOf[java.math.BigDecimal]
-    }
-    var prevSum = labelSum(labels)
+    val lowered = sc.longAccumulator("connectedComponents.lowered")
+    var pinned: RDD[InternalRow] = null
     var it = 0
-    var done = false // empty/converged inputs settle in one cheap round
-    // neighbor-min propagation + pointer jump in ONE join: the current
-    // labels ride along as extra directed edges component -> id, so the
-    // same equi-join that floods neighbor minima also delivers
-    // label(label(id)) to id (component values are always vertex ids,
-    // so the lookup always lands). The jump halves remaining chain
-    // depth per round — O(log diameter) rounds — at the cost of one
-    // union with an already-materialized LogicalRDD, not a second join.
-    def round(ls: DataFrame): DataFrame = {
-      val labelEdges = ls.select(col("component").as("s"), col("id").as("t"))
-      val prop = ls.join(und.unionByName(labelEdges), col("id") === col("s"))
-        .select(col("t").as("id"), col("component"))
-      ls.select("id", "component").unionByName(prop)
-        .groupBy("id").agg(min("component").as("component"))
-    }
+    var done = false
     while (!done && it < maxIter) {
-      // TWO rounds per materialization cycle: the checkpoint + convergence
-      // aggregate are the per-cycle fixed cost (a full Spark job each),
-      // and round() is a pure frame transform off a LogicalRDD leaf, so
-      // composing it keeps the plan O(1)-sized while halving the job
-      // count. Convergence is still exact — a converged label frame is a
-      // fixpoint of round(), so the extra composed round is a no-op, and
-      // labels only ever decrease, so equal sums mean equal frames.
-      val next = round(round(labels)).localCheckpoint(false)
-      val nextSum = labelSum(next) // materializes next's blocks too (full agg)
-      freeCheckpoint(labels) // next is materialized; last round's blocks are dead
-      labels = next
-      done = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
+      lowered.reset()
+      val next = pin(round(round(labels).mapValues(_._1)).mapPartitions(_.map {
+        case (v, (c, old)) => if (c < old) lowered.add(1); InternalRow(v, c)
+      }, preservesPartitioning = true))
+      next.count() // the cycle's one job: materializes its blocks, counts lowered labels
+      if (pinned != null) pinned.unpersist(blocking = false) // last cycle's blocks are dead
+      pinned = next
+      labels = next.mapPartitions(_.map(r => (r.getLong(0), r.getLong(1))),
+        preservesPartitioning = true)
+      done = lowered.value == 0
       it += 2
-      lap(s"rounds ${it - 1}-$it")
     }
-    freeCheckpoint(und)
-    if (sys.env.contains("GRAFT_CC_ROUNDS"))
-      System.err.println(s"[cc] converged in $it rounds")
-    require(done || it < maxIter,
-      s"connectedComponents: no fixpoint after $maxIter rounds (diameter > $maxIter?)")
-    labels
+    und.unpersist(blocking = false)
+    require(done, s"connectedComponents: no fixpoint after $maxIter rounds (diameter > $maxIter?)")
+    GraftFrames.hashPartitioned(spark, pinned, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("component", LongType, nullable = false))), part.numPartitions)
+  }
+
+  /** Places a long key where Spark SQL's `hashpartitioning(key, n)` puts
+    * it, pmod(murmur3(key, seed 42), n), so the planner can rely on it. */
+  private final class IdPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = {
+      val h = Murmur3_x86_32.hashLong(key.asInstanceOf[Long], 42) % numPartitions
+      if (h < 0) h + numPartitions else h
+    }
+    override def equals(o: Any): Boolean = o match {
+      case p: IdPartitioner => p.numPartitions == numPartitions
+      case _ => false
+    }
+    override def hashCode: Int = numPartitions
   }
 
   /** Drop the executor blocks behind a `localCheckpoint`ed frame.

@@ -50,6 +50,15 @@ class BenchSpec extends SparkSuite {
         s"reported wall is a quiet reading): $line")
   }
 
+  test("SlowWatch threshold: a malformed GRAFT_SLOWDUMP_MS falls back to 30 s") {
+    val t = Bench.SlowWatch.thresholdOf _
+    assert(t(None) == 30000L)
+    assert(t(Some("5000")) == 5000L)
+    assert(t(Some("30s")) == 30000L, "malformed value must not throw")
+    assert(t(Some("")) == 30000L && t(Some("-1")) == 30000L,
+      "empty and non-positive values fall back too (Timer rejects a negative delay)")
+  }
+
   test("selectKept: fastest steal-quiet attempt wins; uncertified is never quiet; certified-stolen falls back to min wall") {
     import Bench.Reading
     // a stolen pass won the min wall — the kept reading must be the

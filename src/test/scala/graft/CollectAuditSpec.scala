@@ -104,9 +104,9 @@ class CollectAuditSpec extends AnyFunSuite {
       "scala take(k)/head on the per-row neighbor list inside the state proc"),
     "graft/streaming/HeavyHittersStream.scala" -> (2,
       "scala take(k) on the <=cap candidate list inside the state proc"),
-    "graft/ops/Graph.scala" -> (2,
-      "scala columns.take(2) (edge column split); single-row .head on the " +
-        "convergence sum aggregate - one row per CC cycle"),
+    "graft/ops/Graph.scala" -> (1,
+      "scala columns.take(2) (edge column split); convergence is an " +
+        "accumulator read off each cycle's count, no driver rows"),
     "graft/GraftExtensions.scala" -> (2,
       "scala children.head in Expression builders - AST nodes, not data"),
     "graft/streaming/StateProcs.scala" -> (1,

@@ -67,6 +67,23 @@ class FallibilitySpec extends SparkSuite {
     assert(graft.ops.Augurs.dtwMatrix(t, window = 4).count() == 6L)
   }
 
+  test("dtwMatrixOrdered: an over-budget input is rejected before the series build") {
+    val rows = Seq("s1", "s2", "s3", "s4")
+      .flatMap(k => (0 until 4).map(i => (k, i * 10L, i.toLong, i.toDouble)))
+    val t = graft.core.Timeline(rows.toDF("k", "ts", "seq", "value"), keys = Seq("k"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ex = intercept[IllegalArgumentException] {
+      graft.ops.Augurs.dtwMatrixOrdered(t, window = 4, maxPairs = 5L)
+    }
+    assert(ex.getMessage.contains("dtwMatrixOrdered: 4 series make 6 DTW pairs"),
+      s"guard must name the op and the pair count: ${ex.getMessage}")
+    // the series frame is checkpointed as soon as it is built: nothing
+    // new pinned means the raw key count threw before seriesOf ran
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+      "the fast-fail must throw before the series frame is built")
+    assert(graft.ops.Augurs.dtwMatrixOrdered(t, window = 4, maxPairs = 6L).count() == 6L)
+  }
+
   test("join3 quiet until all three sides have ticked; one emission per instant") {
     val c = Seq(12L -> 100.0, 30L -> 200.0)
     val got = tl(a).join3(tl(b), tl(c), "x", "y", "z").df

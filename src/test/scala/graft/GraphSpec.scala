@@ -91,4 +91,69 @@ class GraphSpec extends SparkSuite {
       .as[(Long, Long)].collect().toMap
     assert(got == want)
   }
+
+  /** The golden's LCG edge stream, for the tests below. */
+  private def lcgEdges(n: Int): Seq[(Long, Long)] = {
+    var st = 12345L
+    def nxt(): Long = { st = st * 6364136223846793005L + 1442695040888963407L; (st >>> 33) % 2000L }
+    Seq.fill(n)((nxt(), nxt()))
+  }
+
+  /** The golden's union-find reference, for the tests below. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(v => v -> find(v)).toMap
+  }
+
+  test("symmetric = true on a both-directions edge list matches the default path") {
+    val edges = lcgEdges(2000)
+    val both = (edges ++ edges.map(_.swap)).distinct
+    val sym = Graph.connectedComponents(both.toDF("src", "dst"), symmetric = true)
+    val got = sym.as[(Long, Long)].collect().toMap
+    assert(got == components(edges: _*), "symmetric path differs from the default path")
+    assert(got == unionFind(edges), "symmetric path differs from the union-find reference")
+    Graph.freeCheckpoint(sym)
+  }
+
+  test("the label frame sits where its declared hashpartitioning(id) says") {
+    // downstream joins on id plan no exchange on the label side, so each
+    // row must be in the partition Spark's own hash exchange would pick
+    val out = Graph.connectedComponents(lcgEdges(500).toDF("src", "dst"))
+    val n = out.rdd.getNumPartitions
+    val misplaced = out.where(spark_partition_id() =!= pmod(hash(col("id")), lit(n))).count()
+    assert(misplaced == 0, s"$misplaced rows outside their hash partition")
+    val p = out.join(out.select(col("id"), col("component").as("c2")), "id")
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), s"a self-join on id must plan no exchange:\n$p")
+    Graph.freeCheckpoint(out)
+  }
+
+  test("with a checkpoint directory set, the labels end in a reliable checkpoint") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt")
+    try {
+      val edges = lcgEdges(1000)
+      org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, dir.toString) {
+        val out = Graph.connectedComponents(edges.toDF("src", "dst"))
+        val rdd = out.queryExecution.logical
+          .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
+        assert(rdd.isCheckpointed && rdd.getCheckpointFile.isDefined,
+          s"label lineage must end in a reliable checkpoint:\n${rdd.toDebugString}")
+        assert(out.as[(Long, Long)].collect().toMap == unionFind(edges))
+        Graph.freeCheckpoint(out)
+      }
+    } finally {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(p => java.nio.file.Files.delete(p))
+      finally walk.close()
+    }
+  }
 }
