@@ -25,8 +25,10 @@ import scala.collection.mutable.ArrayBuffer
 final class Channel(spark: SparkSession) {
   import spark.implicits._
 
-  private val mem = MemoryStream[Ev](
-    org.apache.spark.sql.catalyst.encoders.encoderFor[Ev], spark.sqlContext)
+  // one input partition per trigger, however many flushes it covers (the
+  // default plans one scan task per `addData` block); row order is kept
+  private val mem = MemoryStream[Ev](spark, 1)(
+    org.apache.spark.sql.catalyst.encoders.encoderFor[Ev])
   private val pending = ArrayBuffer.empty[Ev]
   private var autoSeq = 0L
 

@@ -63,9 +63,22 @@ object RunMode {
 
   /** Live mode: the same processor via flatMapGroupsWithState; per-key
     * state persists across micro-batches (rows within a batch are sorted;
-    * cross-batch order is the source's append order). */
+    * cross-batch order is the source's append order).
+    *
+    * Every trigger writes several atomic checkpoint files: the offset log
+    * (WAL), the commit log and one state delta per shuffle partition.
+    * Without libhadoop's native code, Hadoop's default local filesystem
+    * starts 10 `chmod`/`readlink` processes per file (about 45 ms), so
+    * this installs [[ForkFreeLocalFs]] (the same `.crc`-checked files, no
+    * processes) as the session's `fs.AbstractFileSystem.file.impl`, only
+    * while that key still holds Hadoop's default: a deployment's own
+    * choice stays. Queries started afterwards in the session use it. */
   def streaming[S](ds: Dataset[Ev], proc: BurstProc[S])(implicit ct: ClassTag[S]): Dataset[Out] = {
-    import ds.sparkSession.implicits._
+    val spark = ds.sparkSession
+    import spark.implicits._
+    import ForkFreeLocalFs.{ConfKey, HadoopDefault}
+    val fileFs = spark.conf.getOption(ConfKey).getOrElse(spark.sparkContext.hadoopConfiguration.get(ConfKey))
+    if (fileFs == HadoopDefault) spark.conf.set(ConfKey, classOf[ForkFreeLocalFs].getName)
     implicit val sEnc: Encoder[S] = Encoders.kryo[S](ct)
     ds.groupByKey(_.key)
       .flatMapGroupsWithState[S, Out](OutputMode.Append, GroupStateTimeout.NoTimeout) {

@@ -34,6 +34,25 @@ class ChannelSpec extends SparkSuite {
       ("b", 10L, 10.0), ("b", 30L, 15.0)))
   }
 
+  test("a trigger covering many flushes plans one input partition, rows in send order") {
+    val ch = new Channel(spark)
+    val parts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val rows = new java.util.concurrent.ConcurrentLinkedQueue[Ev]()
+    val sink: (org.apache.spark.sql.Dataset[Ev], Long) => Unit = { (ds, _) =>
+      parts.add(ds.rdd.getNumPartitions)
+      ds.collect().foreach(rows.add)
+    }
+    // 30 flushes (30 MemoryStream blocks) queued before the first trigger
+    (1 to 30).foreach { t =>
+      ch.sendAt("b", t.toLong, -t.toDouble); ch.sendAt("a", t.toLong, t.toDouble); ch.flush()
+    }
+    val q = ch.toDS.writeStream.foreachBatch(sink).start()
+    q.processAllAvailable(); q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(parts.asScala.toSeq == Seq(1), "one trigger, one scan task")
+    assert(rows.asScala.toSeq.map(_.seq) == (1L to 60L), "send order kept across flushes")
+  }
+
   test("produceAsync: bounded look-ahead chunks replay deterministically (async_source.rs)") {
     val ch = Channel.external(spark) // external ≡ thread-fed channel ingress
     val q = RunMode.streaming(ch.toDS, StateProcs.ewma(ScanOps.PerTick(0.5)))

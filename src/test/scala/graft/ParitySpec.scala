@@ -359,6 +359,76 @@ class ParitySpec extends SparkSuite {
       "the quiet samples must not flag")
   }
 
+  // restart fixture: three keys over 60 instants, a two-event burst every
+  // 7th instant, fed as 7 micro-batches of 10 instants each
+  private val restartBatches: Seq[Seq[Ev]] = {
+    val r = new scala.util.Random(11)
+    val evs = for {
+      t <- 1 to 60; k <- Seq("a", "b", "c"); _ <- 0 until (if (t % 7 == 0) 2 else 1)
+    } yield (k, t.toLong, if (r.nextInt(20) == 0) 40.0 else r.nextInt(9).toDouble)
+    evs.zipWithIndex.map { case ((k, t, v), i) => Ev(k, t, i + 1L, 0, v) }
+      .groupBy(_.ts / 10).toSeq.sortBy(_._1).map(_._2)
+  }
+
+  /** `outlierMad(16)` live over [[restartBatches]] on one checkpoint, one
+    * query per leg: a leg `(upTo, fs)` feeds batches up to `upTo` and
+    * stops; `fs` pins the leg's `file:` AbstractFileSystem (set after
+    * `RunMode.streaming`, which would otherwise install its own). Returns
+    * each batch's rows, sorted, by batch id. */
+  private def liveLegs(ckpt: String, legs: Seq[(Int, Option[String])]): Seq[(Long, Seq[Row4])] = {
+    import graft.streaming.ForkFreeLocalFs.ConfKey
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Row4])]()
+    val sink: (org.apache.spark.sql.Dataset[Out], Long) => Unit =
+      (ds, id) => out.add((id, norm(ds.collect().toSeq)))
+    val before = spark.conf.getOption(ConfKey)
+    var next = 0
+    try legs.foreach { case (upTo, fs) =>
+      val live = RunMode.streaming(mem.toDS(), P.outlierMad(16))
+      fs.foreach(spark.conf.set(ConfKey, _))
+      val q = live.writeStream.option("checkpointLocation", ckpt).foreachBatch(sink).start()
+      while (next < upTo) { mem.addData(restartBatches(next)); q.processAllAvailable(); next += 1 }
+      q.stop()
+    } finally before.fold(spark.conf.unset(ConfKey))(spark.conf.set(ConfKey, _))
+    import scala.jdk.CollectionConverters._
+    out.asScala.toSeq.sortBy(_._1)
+  }
+
+  test("outlier MAD live leg: stop after batch k, restart from the checkpoint == uninterrupted == batch") {
+    val n = restartBatches.length
+    def ckpt() = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    val whole = liveLegs(ckpt(), Seq(n -> None))
+    val restarted = liveLegs(ckpt(), Seq(3 -> None, n -> None))
+    val b = norm(RunMode.batch(spark.createDataset(restartBatches.flatten), P.outlierMad(16))
+      .collect().toSeq)
+    assert(whole.map(_._1) == (0L until n.toLong), "one micro-batch per fed batch")
+    assert(restarted == whole, "the restarted query resumes at batch 3 with the same state")
+    assert(restarted.flatMap(_._2).sorted == b, "the live leg equals the batch replay")
+    assert(b.count(r => r._3 > r._4 * (3.0 * 1.4826)) > 0, "fixture must flag an outlier")
+  }
+
+  test("outlier MAD live leg: a checkpoint moves between Hadoop's LocalFs and ForkFreeLocalFs") {
+    // LocalFs writes batches 0-1, ForkFreeLocalFs resumes and writes 2-4,
+    // LocalFs resumes again: each reads the other's .crc-checked offset
+    // log, commit log and state deltas
+    val n = restartBatches.length
+    val local = Some(graft.streaming.ForkFreeLocalFs.HadoopDefault)
+    val dir = java.nio.file.Files.createTempDirectory("graft_restart_fs")
+    val mixed = liveLegs(dir.toString, Seq(2 -> local, 5 -> None, n -> local))
+    val whole = liveLegs(java.nio.file.Files.createTempDirectory("graft_restart").toString,
+      Seq(n -> None))
+    assert(mixed == whole, "the same rows, batch by batch, whichever filesystem wrote the checkpoint")
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(dir).iterator().asScala
+      .filter(java.nio.file.Files.isRegularFile(_)).toSeq
+    val data = files.filterNot(_.getFileName.toString.endsWith(".crc"))
+    val deltas = data.filter(_.getFileName.toString.endsWith(".delta"))
+    assert(deltas.size == 4 * n, s"one state delta per shuffle partition and batch: ${deltas.size}")
+    val noCrc = data.filterNot(f => java.nio.file.Files.exists(f.resolveSibling(s".${f.getFileName}.crc")))
+    assert(noCrc.isEmpty, s"every checkpoint file has its .crc sidecar; missing for $noCrc")
+  }
+
   test("ETS forecast: batch == streaming == Augurs window form (augurs.rs:248)") {
     // third §2.8 live leg (r15 verdict item 6): per-tick sliding-refit
     // 1-step ETS, v1 = forecast, v2 = residual sigma. window=8, season=2
