@@ -2,6 +2,14 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
 
+  /** Where [[main]] writes its full run record when SPARK_GRAFT_BENCH_OUT
+    * is unset. Not BENCH_LOCAL.json: that file is the pin BASELINE.md's
+    * operative record renders from, and [[PinSelect]] (min of N such run
+    * records) is its only writer. A default run that wrote the pin put
+    * one unselected run in place of the selected pin and broke
+    * BenchSpec's record gate three times (r15, r20, r21). */
+  val RunOut = "BENCH_RUN.json"
+
   /** Iterations of the control probe's xorshift loop — calibrated to ~1 s
     * of single-core work on this container's quiet-box JVM. */
   private val CtlIters = 400 * 1000 * 1000
@@ -130,7 +138,7 @@ object Bench {
     * makes self-load a constant, so if run B's wall is 1.2× run A's
     * and its chunk p50 is correspondingly higher, the premium is the
     * box — demonstrated, not attributed. Per-query means land in
-    * BENCH_LOCAL.json (`cap`/`capm`); the stdout line carries the
+    * the run record (`cap`/`capm`); the stdout line carries the
     * run's [cpu_p50, cpu_p90, mem_p50, mem_p90]. Diagnostic-only this
     * round: no degraded-gate threshold until a few rounds calibrate
     * the self-load band.
@@ -164,7 +172,7 @@ object Bench {
     * a trend line, which is all cross-run attribution needs (the 20 Hz
     * rate was never load-bearing). GRAFT_TRACER=full restores the r18
     * behavior for A/B self-load measurement; =off disables entirely.
-    * The mode lands in BENCH_LOCAL.json (`trc`) so every record states
+    * The mode lands in the run record (`trc`) so every record states
     * which instrument ran — the r18 records' unknown tracer tax can
     * never recur silently. */
   private[graft] final class CapacityTracer(duty: Double = 0.05) {
@@ -419,7 +427,7 @@ object Bench {
   /** `ctlb` = the continuous tracer's [p50, p90] chunk seconds over the
     * whole run (empty if the tracer produced no samples); `cap` = per-
     * query mean chunk seconds while that query ran (both passes), the
-    * per-query attribution surface (BENCH_LOCAL only — see
+    * per-query attribution surface (run record only — see
     * [[CapacityTracer]] for the cross-run reading discipline). */
   /** `ctls`/`ctli` = per-pass hypervisor steal / iowait fractions from
     * /proc/stat (empty off-Linux); `caps` = per-query steal fraction,
@@ -447,7 +455,7 @@ object Bench {
     * = the compiler-disabled failure mode), `jitq` = per-query WORST
     * single-attempt compilation seconds, recorded only when > 0.5 s — a
     * slow instance then carries its own JIT certificate next to its
-    * steal/GC ones. BENCH_LOCAL.json only, never the stdout line. */
+    * steal/GC ones. Run record only, never the stdout line. */
   final case class Probes(ctl: Seq[Double], ctlp: Seq[Double], ctld: Seq[Double],
       ctlb: Seq[Double] = Seq.empty, cap: Map[String, Double] = Map.empty,
       capm: Map[String, Double] = Map.empty, ctls: Seq[Double] = Seq.empty,
@@ -475,7 +483,7 @@ object Bench {
     * full-code-cache compiler shutdown shows occupancy pinned at the
     * reserve with compilation time FLAT (the round-12–14 "CodeCache is
     * full" failure that motivated ReservedCodeCacheSize=1g). Recorded
-    * per pass and per query in BENCH_LOCAL.json so a slow instance
+    * per pass and per query in the run record so a slow instance
     * carries its own JIT certificate. */
   private[graft] def jitStat(): (Long, Long) = {
     import scala.jdk.CollectionConverters._
@@ -819,7 +827,7 @@ object Bench {
     * basename, the pass count lives in COVERAGE.md (min over 2 passes),
     * and the empty errors map is omitted. BenchSpec projects the line
     * length for the full registry; queries past the budget live in
-    * BENCH_LOCAL.json (see [[writeLocal]]), never on the line. */
+    * the run record (see [[writeLocal]]), never on the line. */
   def formatLine(results: Map[String, Double], errors: Map[String, String],
       probes: Probes, sfDir: String): String = {
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + qv(v) }
@@ -827,7 +835,8 @@ object Bench {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // Round 21 (r20 verdict #1): the LINE form of every certificate is
     // its gate-feeding scalars only — the full per-pass arrays live in
-    // BENCH_LOCAL.json (writeLocal), which every gate and PinRecord read.
+    // the run record (writeLocal); the pin every gate and PinRecord read
+    // is one such record, picked by PinSelect.
     // The r20 line ran 1957/2000 chars of the driver's tail window; the
     // compressed forms below (+ the StdoutOutput fix in build.sbt) keep
     // the whole line inside the window with headroom.
@@ -848,8 +857,8 @@ object Bench {
     // gate-feeding p50s only ([cpu_p50, mem_p50] of the full
     // [cpu_p50, cpu_p90, mem_p50, mem_p90] 4-tuple): 2-decimal (a
     // quiet-self-loaded chunk is ~0.05-0.2 s — 1dp would flatten it),
-    // ~11 chars of line budget. The p90s stay in BENCH_LOCAL.json at
-    // 4dp — the record every gate and PinRecord actually read; the
+    // ~11 chars of line budget. The p90s stay in the run record at
+    // 4dp, as in the pin every gate and PinRecord read; the
     // round-20 qq field bought its line budget here.
     val ctlbLine = if (probes.ctlb.size >= 4)
       Seq(probes.ctlb(0), probes.ctlb(2)) else probes.ctlb
@@ -870,7 +879,8 @@ object Bench {
       s""""qq":$qq,"queries":$qs,${errJson(errors)}"sf":"${sfName(sfDir)}"}"""
   }
 
-  /** Full-precision per-query record, written to `path` every run — the
+  /** Full-precision per-query run record, written to `path` every run
+    * (SPARK_GRAFT_BENCH_OUT, else [[RunOut]]; never the pin) — the
     * un-budgeted superset of the stdout line (every timed query at 3
     * decimals, including the [[SparkEntry.nonBenchQueries]] line-budget
     * exclusions), so adding a registry query never again costs stdout
@@ -979,7 +989,7 @@ object Bench {
     val qs = SparkEntry.queries.filter { case (n, _) => names(n) }
     val passes = 2
     val (results, errors, probes) = run(spark, sfDir, qs, passes)
-    writeLocal(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"),
+    writeLocal(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", RunOut),
       results, errors, probes, sfDir, passes)
     // the stdout line carries the headline set only (registry minus the
     // documented nonBenchQueries line-budget exclusions); a restricted

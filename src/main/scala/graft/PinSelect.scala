@@ -7,12 +7,15 @@ import java.nio.file.{Files, Paths}
   * the r18 pin was min-of-8 where earlier pins were min-of-2/3, and the
   * record never said so — best-of-N bias grows with N, so cross-round
   * pin comparisons silently gained a downward drift. This tool makes the
-  * selection auditable: given N candidate BENCH_LOCAL-format files (each
-  * a full fresh-JVM run), it picks the min-total candidate, injects
-  * `"pinN": N` into the JSON, writes it to BENCH_LOCAL.json, and
-  * regenerates BASELINE.md's operative record — which now renders the
-  * candidate count and selection rule (see [[PinRecord]]). BenchSpec
-  * gates that a post-r19 pin carries the field.
+  * selection auditable: given N candidate run-record files (each the
+  * [[Bench.writeLocal]] output of a full fresh-JVM `graft.Bench` run,
+  * written to SPARK_GRAFT_BENCH_OUT or [[Bench.RunOut]]), it picks the
+  * min-total candidate, injects `"pinN": N` into the JSON, writes it to
+  * BENCH_LOCAL.json, and regenerates BASELINE.md's operative record —
+  * which now renders the candidate count and selection rule (see
+  * [[PinRecord]]). BenchSpec gates that a post-r19 pin carries the
+  * field. This is the only writer of BENCH_LOCAL.json (the pin): no
+  * bench run writes it, so a run can never replace a selected pin.
   *
   * Usage: `sbt "runMain graft.PinSelect run1.json run2.json ..."`.
   * Selection rule: min of the files' `value` (total seconds) — the same

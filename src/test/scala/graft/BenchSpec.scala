@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * the JSON line and fails the run — never silently timed as ~0 s (a
   * regression masquerading as a speedup); the line certifies its own
   * noise level via the fixed-cost ctl probe; and the full registry is
-  * recorded to BENCH_LOCAL.json regardless of the line's budget. */
+  * recorded to the run-record file regardless of the line's budget. */
 class BenchSpec extends SparkSuite {
 
   private def lineFor(qs: Map[String, (SparkSession, String) => DataFrame])
@@ -334,6 +334,17 @@ class BenchSpec extends SparkSuite {
       "BASELINE.md operative record matches neither the working-tree nor " +
         "the committed BENCH_LOCAL.json — run `sbt \"runMain graft.PinRecord\"` " +
         "after recording the new pin")
+  }
+
+  test("a default bench run writes its run record, never the pin") {
+    // r15, r20 and r21: main's default output was BENCH_LOCAL.json, so
+    // every plain run (the sf0.001 smoke run included) replaced the
+    // PinSelect-chosen pin with one unselected run and the record gate
+    // above went red. PinSelect is the pin's only writer.
+    import java.nio.file.Paths
+    assert(Paths.get(Bench.RunOut).toAbsolutePath.normalize !=
+      Paths.get("BENCH_LOCAL.json").toAbsolutePath.normalize,
+      s"Bench.RunOut (${Bench.RunOut}) must not be the pin file")
   }
 
   test("working-tree BENCH_LOCAL.json carries the full registry (no truncated ONLY-run pin)") {
