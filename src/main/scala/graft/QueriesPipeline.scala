@@ -185,79 +185,88 @@ object QueriesPipeline {
 
   private[graft] val DsirBuckets = 1024L
 
-  /** (doc_id, source, bucket) hashed unigram+bigram feature rows —
-    * grams become 8-byte bucket ids AT the explode projection, so no
-    * downstream exchange carries a string. */
-  private def dsirFeats(g: DataFrame): DataFrame = {
-    val t = g.select(col("doc_id"), col("source"),
-      TF.tokens(col("text")).as("toks"))
-    t.select(col("doc_id"), col("source"), explode(col("toks")).as("g"))
-      .unionByName(t.where(size(col("toks")) >= 2)
-        .select(col("doc_id"), col("source"),
-          explode(TF.ngrams(col("toks"), 2)).as("g")))
-      .select(col("doc_id"), col("source"),
-        pmod(TF.hash60(col("g")), lit(DsirBuckets)).as("b"))
+  /** (doc_id, source, bk): each doc's hashed unigram+bigram buckets from
+    * ONE tokenization ([[TF.dsirBucketsJvm]]) — grams are 8-byte bucket
+    * ids from the scan projection on, so no exchange carries a string. */
+  private def dsirBucketed(g: DataFrame): DataFrame =
+    g.select(col("doc_id"), col("source"),
+      TF.dsirBuckets(col("text"), DsirBuckets).as("bk"))
+
+  /** Per-bucket (raw count qc, target count pc) — ONE ≤B-row aggregate
+    * over the exploded buckets feeds both models; `tgt` is computed per
+    * doc, before the explode. `explode_outer` + a NULL-bucket filter, not
+    * `explode`: Catalyst infers `size(bk) > 0` from a plain explode and
+    * pushes it under the bucket projection, re-running the tokenize+md5
+    * UDF per doc twice more inside that filter. */
+  private def dsirLr(bucketed: DataFrame, targets: Seq[String]): DataFrame =
+    bucketed.select(col("source").isin(targets: _*).as("tgt"),
+        explode_outer(col("bk")).as("b"))
+      .where(col("b").isNotNull)
+      .groupBy("b").agg(count(lit(1)).cast("double").as("qc"),
+        count(when(col("tgt"), lit(1))).cast("double").as("pc"))
+
+  /** The fitted λ model as ONE row over lr (a global aggregate of ≤B
+    * rows, so lr itself is computed once): `lam` is the dense B-entry
+    * array λ_b = ln p̂_b − ln q̂_b (add-0.5 smoothing), with the
+    * all-smoothing default λ₀ = ln((qn+0.5B)/(pn+0.5B)) in every bucket
+    * no gram hit; `lam0` is λ₀; `hit` lists the buckets lr holds. On an
+    * empty corpus `hit` is empty (and `lam` all null). */
+  private def dsirModel(lr: DataFrame): DataFrame = {
+    val half = lit(0.5 * DsirBuckets)
+    val (qn, pn, m) = (col("qn"), col("pn"), col("m"))
+    val lam0 = log((qn + half) / (pn + half))
+    lr.agg(sum("qc").as("qn"), sum("pc").as("pn"),
+        map_from_entries(collect_list(struct(col("b"), struct(col("qc"), col("pc")))))
+          .as("m"))
+      .select(
+        transform(sequence(lit(0L), lit(DsirBuckets - 1)), i =>
+          coalesce(log((m(i)("pc") + 0.5) / (pn + half)) -
+            log((m(i)("qc") + 0.5) / (qn + half)), lam0)).as("lam"),
+        lam0.as("lam0"), map_keys(m).as("hit"))
   }
 
-  /** Per-bucket (raw count, target count) — ONE ≤2B-key aggregate
-    * feeds both models. */
-  private def dsirLr(feats: DataFrame, targets: Seq[String]): DataFrame =
-    feats.withColumn("tgt", col("source").isin(targets: _*))
-      .groupBy("b", "tgt").agg(count(lit(1)).cast("double").as("c"))
-      .groupBy("b").agg(sum("c").as("qc"),
-        sum(when(col("tgt"), col("c")).otherwise(lit(0.0))).as("pc"))
+  /** The per-row DSIR scoring kernel shared by `doc_dsir` and
+    * [[graft.streaming.DsirStream]]: (doc_id, bk) rows → (doc_id,
+    * n_feats, logw) with n_feats = #buckets and logw = r4(mean λ over the
+    * doc's buckets), summed in bucket order, λ read from the dense array
+    * `lam`. A doc with no buckets keeps its row with a NULL logw; each
+    * caller drops those rows where it is cheapest. No explode, no λ
+    * join, no per-doc aggregate: exchange-free at any scale. */
+  private[graft] def dsirScore(bucketed: DataFrame, lam: Column): DataFrame = {
+    val bk = col("bk")
+    val n = size(bk)
+    bucketed.select(col("doc_id"), n.cast("long").as("n_feats"),
+      when(n > 0, r4(aggregate(bk, lit(0.0), (s, b) => s + lam(b.cast("int"))) / n))
+        .as("logw"))
+  }
 
   private[graft] def dsirForTest(g: DataFrame, targets: Seq[String]): DataFrame = {
-    val B = DsirBuckets
-    def feats = dsirFeats(g)
-    val lr = dsirLr(feats, targets)
-    // (qn, pn) RIDE THE PLAN as a broadcast 1-row aggregate over lr
-    // (round 20; the lm-ppl vocab-scalar discipline, guide §1.2/§2.4):
-    // the old eager `lr.agg(...).head` ran the full feats pipeline —
-    // scan + tokenize + two explodes + md5 per gram — as a separate
-    // build-time job, so every execution paid THREE feats passes (the
-    // eager totals, the λ subtree, the scoring join side). In-plan, the
-    // totals subtree and the λ subtree share lr's final aggregate
-    // exchange (same canonical subtree → ReusedExchange), so feats runs
-    // TWICE per execution and the totals cost one broadcast of one row.
-    // Arithmetic is unchanged bit-for-bit: `col("qn") + lit(0.5 * B)`
-    // adds the same two doubles the old `lit(qn + 0.5 * B)` added on
-    // the driver. Empty corpus: lr is empty, so λ and the scoring join
-    // are empty and the frame keeps the (doc_id, n_feats, logw) schema —
-    // the old eager-branch behavior, now without the eager pass
-    // (PipelineSpec's empty-corpus gate pins it; mirrors the oracle's
-    // `tot` CTE exactly).
-    val tot = lr.agg(sum("qc").as("qn"), sum("pc").as("pn"))
-    val lam = lr.crossJoin(broadcast(tot)).select(col("b"),
-      (log((col("pc") + lit(0.5)) / (col("pn") + lit(0.5 * B))) -
-        log((col("qc") + lit(0.5)) / (col("qn") + lit(0.5 * B)))).as("lam"))
-    feats.join(broadcast(lam), "b")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_feats"),
-        (sum("lam") / count(lit(1))).as("a"))
-      .select(col("doc_id"), col("n_feats"), r4(col("a")).as("logw"))
+    val fb = dsirBucketed(g)
+    // λ rides the plan as one broadcast row; lr runs once, inside it
+    val model = broadcast(dsirModel(dsirLr(fb, targets)).select("lam"))
+    // zero-bucket docs (NULL logw) sort last, so dropping them AFTER the
+    // top-50 keeps exactly the rows a filter before it would; a filter
+    // below the limit would be pushed under the bucket projection and
+    // run the tokenize+md5 UDF a second time per doc
+    dsirScore(fb.select("doc_id", "bk").crossJoin(model), col("lam"))
       .orderBy(col("logw").desc, col("doc_id")).limit(50)
+      .where(col("n_feats") > 0)
   }
 
-  /** The frozen λ model for [[graft.streaming.DsirStream]]: bucket → log
-    * importance ratio (≤B entries, model-sized driver collect — the
-    * kmeans-model discipline) plus the add-0.5 all-smoothing default
-    * λ₀ = ln((qn+0.5B)/(pn+0.5B)) for buckets no training gram hit (an
-    * ARRIVING doc can carry unseen grams; a batch-scored doc cannot —
-    * every doc it scores is in the fit). None on an empty corpus. */
+  /** The frozen λ model for [[graft.streaming.DsirStream]]: bucket → λ
+    * for every bucket the fit saw, plus λ₀ for the rest (an ARRIVING doc
+    * can carry unseen grams; a batch-scored doc cannot — every doc it
+    * scores is in the fit). The same lr and λ arithmetic as `doc_dsir`,
+    * collected as its one model row (≤B entries — the kmeans-model
+    * discipline). None on an empty corpus. */
   private[graft] def dsirFit(g: DataFrame, targets: Seq[String])
       : Option[(Map[Long, Double], Double)] = {
-    val B = DsirBuckets
-    val rows = dsirLr(dsirFeats(g), targets).collect()
-    if (rows.isEmpty) None
+    val Array(r) = dsirModel(dsirLr(dsirBucketed(g), targets)).collect()
+    val hit = r.getSeq[Long](2)
+    if (hit.isEmpty) None
     else {
-      val qn = rows.map(_.getDouble(1)).sum
-      val pn = rows.map(_.getDouble(2)).sum
-      val lam = rows.map { r =>
-        r.getLong(0) -> (math.log((r.getDouble(2) + 0.5) / (pn + 0.5 * B)) -
-          math.log((r.getDouble(1) + 0.5) / (qn + 0.5 * B)))
-      }.toMap
-      Some((lam, math.log((qn + 0.5 * B) / (pn + 0.5 * B))))
+      val lam = r.getSeq[Double](0)
+      Some((hit.map(b => b -> lam(b.toInt)).toMap, r.getDouble(1)))
     }
   }
 
@@ -1575,13 +1584,16 @@ object QueriesPipeline {
     // same-argument transcendentals, not an unbounded sum). Top-50 by
     // weight = the deterministic top-k variant of the paper's
     // Gumbel-top-k resampling (exact-oracle-able; the sampled form is
-    // one salted-hash tie-break away). Scale shape: grams are hashed to
-    // 8-byte bucket ids AT the explode (minhash-shingle discipline);
-    // both models come from ONE ≤2B-row (bucket, is-target) aggregate;
-    // λ is a ≤B-row broadcast; the scoring join + doc rollup ride one
-    // doc_id exchange. feats is recomputed per consumer — the
-    // doc_lm_ppl measurement (persist = memory risk at the 1000×
-    // decade, recompute = embarrassingly parallel scan work).
+    // one salted-hash tie-break away). Scale shape: each doc is
+    // tokenized once per pass and its grams hashed to 8-byte bucket ids
+    // in the scan projection (TF.dsirBuckets); both models come from ONE
+    // ≤B-row bucket aggregate, computed once; λ rides the plan as one
+    // broadcast row holding the dense B-entry array; every doc is then
+    // scored in place (dsirScore) — no explode, join or doc_id
+    // aggregate on the scoring side, so no exchange. The buckets are
+    // recomputed per pass (fit, score) — the doc_lm_ppl measurement
+    // (persist = memory risk at the 1000× decade, recompute =
+    // embarrassingly parallel scan work).
     "doc_dsir" -> Q(
       (s, d) => dsirForTest(docs(s, d), Seq("src0", "src1", "src2", "src3")),
       Some(s"""WITH t AS (SELECT doc_id, source, $TOKS AS toks FROM documents),

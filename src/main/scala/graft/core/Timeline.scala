@@ -486,12 +486,9 @@ final case class Timeline(
   //   median: even count averages the two middle values → percentile 0.5
   //   time windows: inclusive lower bound (rangeBetween is inclusive).
 
-  /** Exact median over a window frame: Spark's `median` aggregate rejects
-    * window frames, so collect-sort-pick; even count averages the two middle
-    * values (reference `stats.rs:53-55`). Memory ∝ frame size — same bound
-    * as the reference's recompute-per-tick median (`stats.rs:82-85`). */
-  private def medianOver(c: Column, frame: WindowSpec): Column = {
-    val arr = sort_array(collect_list(c).over(frame))
+  /** Exact median of a sorted array column: even count averages the two
+    * middle values (reference `stats.rs:53-55`). */
+  private def medianOf(arr: Column): Column = {
     val n = size(arr)
     val mid = floor((n + lit(1)) / 2).cast("int") // Column./ is double division
     val lo = floor(n / 2).cast("int")
@@ -507,33 +504,36 @@ final case class Timeline(
     // 0.0 until two samples (stats.rs:43-46)
     case "var"    => coalesce(var_samp(c).over(frame), lit(0.0))
     case "std"    => coalesce(stddev_samp(c).over(frame), lit(0.0))
-    case "median" => medianOver(c, frame)
   }
+
+  /** Each (stat, out) over the value column in `frame`. The median has no
+    * window aggregate (Spark's `median` rejects frames), so it is the
+    * collect-sort-pick over the frame — memory ∝ frame size, the same
+    * bound as the reference's recompute-per-tick median
+    * (`stats.rs:82-85`). The sorted frame list is ONE temporary column
+    * the median reads: inlined into each of [[medianOf]]'s uses, the
+    * Window node evaluated one `collect_list` and one sort per use. */
+  private def withStats(frame: WindowSpec, stats: Seq[(String, String)]): Timeline =
+    withKeyedDf(stats.foldLeft(spreadDf(df)) {
+      case (d, ("median", out)) =>
+        val tmp = s"__sorted_$out"
+        d.withColumn(tmp, sort_array(collect_list(v).over(frame)))
+          .withColumn(out, medianOf(col(tmp))).drop(tmp)
+      case (d, (stat, out)) => d.withColumn(out, statOver(stat, v, frame))
+    })
 
   /** `rolling_*` (reference `ops.rs:984-1309`): last-N-values window. */
-  def rolling(n: Int, stats: (String, String)*): Timeline = {
-    val frame = wRows(-(n - 1).toLong, 0)
-    withKeyedDf(stats.foldLeft(spreadDf(df)) { case (d, (stat, out)) =>
-      d.withColumn(out, statOver(stat, v, frame))
-    })
-  }
+  def rolling(n: Int, stats: (String, String)*): Timeline =
+    withStats(wRows(-(n - 1).toLong, 0), stats)
 
   /** `cumulative_*` (reference `ops.rs:1339-1596`): expanding window. */
-  def cumulative(stats: (String, String)*): Timeline = {
-    val frame = wRows(Window.unboundedPreceding, Window.currentRow)
-    withKeyedDf(stats.foldLeft(spreadDf(df)) { case (d, (stat, out)) =>
-      d.withColumn(out, statOver(stat, v, frame))
-    })
-  }
+  def cumulative(stats: (String, String)*): Timeline =
+    withStats(wRows(Window.unboundedPreceding, Window.currentRow), stats)
 
   /** `time_windowed_*` (reference `ops.rs:1597-2114`): last-Δt window on the
     * ns clock; an entry exactly `windowNs` old is retained (stats.rs:87-89). */
-  def timeWindowed(windowNs: Long, stats: (String, String)*): Timeline = {
-    val frame = wRange(windowNs)
-    withKeyedDf(stats.foldLeft(spreadDf(df)) { case (d, (stat, out)) =>
-      d.withColumn(out, statOver(stat, v, frame))
-    })
-  }
+  def timeWindowed(windowNs: Long, stats: (String, String)*): Timeline =
+    withStats(wRange(windowNs), stats)
 
   // ───────────────────────── topology (§2.5/2.11) ─────────────────────────
 

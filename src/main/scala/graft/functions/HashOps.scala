@@ -7,8 +7,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StringType}
 
 /** The 60-bit portable-hash kernel (first 60 bits of md5) as one static
   * JVM call — shared by the interpreted eval path, generated code and the
-  * per-doc n-gram loop ([[TextFunctions.ngramHashesJvm]]), so the hash
-  * exists exactly once (the [[VecOps]] discipline). */
+  * per-doc n-gram loops ([[TextFunctions.ngramHashesJvm]],
+  * [[TextFunctions.dsirBucketsJvm]]), so the hash exists exactly once
+  * (the [[VecOps]] discipline). */
 object HashOps {
   /** MD5 instances are not thread-safe and `getInstance` allocates; one
     * per task thread, reset per call. */

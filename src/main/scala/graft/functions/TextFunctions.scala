@@ -56,41 +56,53 @@ object TextFunctions {
     f(text)
   }
 
-  /** The [[ngramHashes]] loop as a plain JVM function — shared with the
-    * streaming twins that score per-arrival in a flatMap (DsirStream)
-    * so the tokenizer/hash chain cannot drift between the batch Column
-    * form and the stream-side closure (both are pinned bit-identical to
-    * tokens/ngrams/hash60 by PipelineSpec). */
   /** The [[tokens]] chain as a plain JVM function (lower + `\W+` split +
-    * drop empties) — shared with stream-side closures (BpeStream,
-    * DsirStream via [[ngramHashesJvm]]) so the tokenizer cannot drift
-    * between the batch Column form and streaming twins; pinned
-    * bit-identical to the Column chain by PipelineSpec. */
+    * drop empties) — shared with stream-side closures (BpeStream) and the
+    * per-doc loops below, so the tokenizer cannot drift between the
+    * batch Column form and streaming twins; pinned bit-identical to the
+    * Column chain by PipelineSpec. */
   def tokensJvm(t: String): Array[String] =
     if (t == null) Array.empty[String]
     else t.toLowerCase(java.util.Locale.ROOT).split("\\W+").filter(_.nonEmpty)
 
-  def ngramHashesJvm(t: String, n: Int): Array[Long] = {
-    if (t == null) Array.empty[Long]
+  /** The [[ngramHashes]] loop as a plain JVM function. */
+  def ngramHashesJvm(t: String, n: Int): Array[Long] = gramHashes(tokensJvm(t), n)
+
+  /** hash60 of every n-token window of `toks`, each window joined by
+    * single spaces in one reused buffer. */
+  private def gramHashes(toks: Array[String], n: Int): Array[Long] =
+    if (toks.length < n) Array.empty[Long]
     else {
-      val toks = tokensJvm(t)
-      if (toks.length < n) Array.empty[Long]
-      else {
-        val sb = new java.lang.StringBuilder
-        Array.tabulate(toks.length - n + 1) { i =>
-          sb.setLength(0)
-          var j = 0
-          while (j < n) {
-            if (j > 0) sb.append(' ')
-            sb.append(toks(i + j)); j += 1
-          }
-          // first 15 hex chars = bytes 0-6 + the high nibble of byte 7 —
-          // the ONE kernel copy (HashOps), shared with the Md5Prefix60
-          // expression the Column-side hash60 plans
-          HashOps.md5Prefix60(sb.toString.getBytes("UTF-8"))
+      val sb = new java.lang.StringBuilder
+      Array.tabulate(toks.length - n + 1) { i =>
+        sb.setLength(0)
+        var j = 0
+        while (j < n) {
+          if (j > 0) sb.append(' ')
+          sb.append(toks(i + j)); j += 1
         }
+        // first 15 hex chars = bytes 0-6 + the high nibble of byte 7 —
+        // the ONE kernel copy (HashOps), shared with the Md5Prefix60
+        // expression the Column-side hash60 plans
+        HashOps.md5Prefix60(sb.toString.getBytes("UTF-8"))
       }
     }
+
+  /** A doc's hashed unigram+bigram feature buckets (the DSIR featurizer)
+    * from ONE tokenization: every unigram's bucket in token order, then
+    * every bigram's, each `floorMod(hash60(gram), buckets)`. Bit-identical,
+    * order included, to `pmod(hash60(g), buckets)` over the Column
+    * [[tokens]] then `ngrams(toks, 2)` (PipelineSpec pins it). Null or
+    * zero-token text → empty; one token → one bucket. */
+  def dsirBucketsJvm(t: String, buckets: Long): Array[Long] = {
+    val toks = tokensJvm(t)
+    (gramHashes(toks, 1) ++ gramHashes(toks, 2)).map(java.lang.Math.floorMod(_, buckets))
+  }
+
+  /** [[dsirBucketsJvm]] over a text Column: `array<bigint>`, never null. */
+  def dsirBuckets(text: Column, buckets: Long): Column = {
+    val f = org.apache.spark.sql.functions.udf((t: String) => dsirBucketsJvm(t, buckets))
+    f(text)
   }
 
   /** Word n-gram shingles ("a b c" strings). Empty when fewer than n tokens. */

@@ -61,9 +61,10 @@ object VecOps {
     * r19 verdict #5): at or above this window the early-abandoning
     * [[DtwBandLe]] kernel wins; below it the plain [[DtwBand]]` <= eps`
     * form does, because the running row-min bookkeeping costs more than
-    * the whole DP it might abandon. Measured (DtwWinProbe, min-of-5
+    * the whole DP it might abandon. Measured by the one-shot DtwWinProbe
+    * A/B main (since removed; its record is in COVERAGE.md), min-of-5
     * kernel µs/pair over 4560 p10-eps pairs; Spark eps-graph wall over
-    * 319,600 pairs at local[32]):
+    * 319,600 pairs at local[32]:
     *
     *   window  8/band 4:  kernel 0.75× (dtwLe LOSES), wall 1.05×
     *   window 16/band 4:  kernel 1.21×, wall 1.67×

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import graft.QueriesPipeline
 import graft.functions.TextFunctions
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.functions.{col, typedLit}
 
 /** One arriving document to score. */
 final case class DocArrival(doc_id: Long, text: String)
@@ -13,44 +15,29 @@ final case class DsirScore(doc_id: Long, n_feats: Long, logw: Double)
   * third decision family with a live leg, after SemDeDup and
   * kNN-classify): the hashed-n-gram λ model is FROZEN from the batch fit
   * (QueriesPipeline.dsirFit — ≤1024 bucket→λ entries + the add-0.5
-  * all-smoothing default for buckets no training gram hit), documents
+  * all-smoothing default λ₀ for buckets no training gram hit), documents
   * arrive on a stream, and every micro-batch scores its arrivals with the
-  * batch op's exact arithmetic: mean per-feature λ over the doc's hashed
-  * unigrams+bigrams, rounded to the shared 4dp grid (Spark `round`
-  * HALF_UP semantics, replicated via BigDecimal).
+  * batch op's own kernel ([[QueriesPipeline.dsirScore]] over
+  * [[TextFunctions.dsirBuckets]]): the frozen model is densified into the
+  * same B-entry λ array the batch plan broadcasts, so the arithmetic and
+  * the rounding exist once.
   *
-  * Scale shape: map-ONLY — the model rides each task's closure (≤16 KB),
-  * the per-arrival cost is O(#grams), and no exchange exists at all (the
-  * batch op's groupBy collapses to a per-doc loop because an arrival's
-  * features never leave its row). That is the natural production form:
-  * score today's crawl as it lands, at scan parallelism, no state. The
-  * gram→hash chain is [[TextFunctions.ngramHashesJvm]] — the same JVM
-  * loop the batch Column path is spec-pinned to, so tokenizer drift
-  * between the legs is impossible. */
+  * Scale shape: map-ONLY — the λ array rides the plan as a literal
+  * (≤8 KB), the per-arrival cost is O(#grams), and no exchange exists at
+  * all. That is the natural production form: score today's crawl as it
+  * lands, at scan parallelism, no state. */
 object DsirStream {
 
   /** arrivals → one [[DsirScore]] per doc with ≥1 feature (the batch op
-    * drops zero-token docs the same way: explode emits no rows). */
+    * drops zero-token docs the same way). */
   def scores(arrivals: Dataset[DocArrival],
       lam: Map[Long, Double], lamDefault: Double): Dataset[DsirScore] = {
-    val spark = arrivals.sparkSession
-    import spark.implicits._
-    val b = graft.QueriesPipeline.DsirBuckets
-    arrivals.flatMap { a =>
-      val hs = TextFunctions.ngramHashesJvm(a.text, 1) ++
-        TextFunctions.ngramHashesJvm(a.text, 2)
-      if (hs.isEmpty) Iterator.empty
-      else {
-        var s = 0.0
-        var i = 0
-        while (i < hs.length) {
-          s += lam.getOrElse(java.lang.Math.floorMod(hs(i), b), lamDefault)
-          i += 1
-        }
-        val v = java.math.BigDecimal.valueOf(s / hs.length + 1e-9)
-          .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
-        Iterator.single(DsirScore(a.doc_id, hs.length.toLong, v))
-      }
-    }
+    import arrivals.sparkSession.implicits._
+    val b = QueriesPipeline.DsirBuckets
+    val dense = Array.tabulate(b.toInt)(i => lam.getOrElse(i.toLong, lamDefault))
+    QueriesPipeline.dsirScore(
+      arrivals.select(col("doc_id"), TextFunctions.dsirBuckets(col("text"), b).as("bk")),
+      typedLit(dense))
+      .where(col("n_feats") > 0).as[DsirScore]
   }
 }

@@ -493,9 +493,16 @@ class BenchSpec extends SparkSuite {
     //    round-20 spread fix (Tables.spread now actually spreads; the
     //    (h1,h2) cc aggregate emits per-partition partials). Buys the
     //    whole tokenize+md5 pipeline its parallelism; wall halved.
-    //  - doc_dsir 588071→483725: the (qn,pn) totals ride the plan, so
-    //    lr's aggregation shuffles ONCE (AQE stage reuse) where the old
-    //    eager `.head` job shuffled it separately from the λ subtree.
+    //  - doc_dsir 588071→483725: the (qn,pn) totals ride the plan
+    //    instead of an eager `.head` job. lr still shuffled TWICE: the
+    //    totals side lacked the λ side's inferred isnotnull filter, so
+    //    the two copies never canonicalized equal and AQE shared neither.
+    // Re-pin (doc_dsir as one per-row kernel): doc_dsir 483725→227117.
+    //    lr is ONE bucket-keyed aggregate folded into the broadcast λ
+    //    row, and scoring is in place, so the scoring side's gram rows
+    //    and the second lr copy no longer shuffle; what remains is the
+    //    two scan-side doc_id spreads, lr's one exchange and the ≤B-row
+    //    model gather.
     val budgets: Map[String, Long] = Map(
       "aug_cluster" -> 32683L,
       "aug_dtw" -> 28601L,
@@ -504,7 +511,7 @@ class BenchSpec extends SparkSuite {
       "emb_semdedup_inc" -> 164669L,
       "doc_lm_ppl" -> 315917L,
       "doc_curate_e2e" -> 259927L,
-      "doc_dsir" -> 483725L,
+      "doc_dsir" -> 227117L,
       "emb_decontam_hier" -> 1013835L,
       "doc_winnow" -> 109237L,
       // round 20 (r19 what's-wrong #1): the semdedup/decontam cell-

@@ -25,7 +25,7 @@ class CollectAuditSpec extends AnyFunSuite {
         "QuantizerModelMaxDoubles), per-cell stats <= cells, frozen eval-probe " +
         "models - all plan-time model artifacts, never corpus rows"),
     "graft/QueriesPipeline.scala" -> (3,
-      "dsir lambda table <= 1024 hashed-bucket rows; certified quantile " +
+      "dsir lambda model: one row holding <= 1024-entry bucket arrays; certified quantile " +
         "boundaries <= requested percentile count; doc_hybrid_rrf's single " +
         "query-vector row"),
     "graft/ops/Augurs.scala" -> (2,
@@ -69,10 +69,11 @@ class CollectAuditSpec extends AnyFunSuite {
       "probeDim's take(1)+headOption = ONE probe row; 4 scala heads on " +
         "model-sized seqs (centroid argmax, level frames, widths); top-k " +
         "take on a <=nCent candidate list inside an executor closure"),
-    "graft/QueriesPipeline.scala" -> (7,
-      "6 single-row .head on global aggregates (bm25 corpus stats, ppl " +
-        "totals, shingle avg, pair-count guard, vocab size) + 1 scala " +
-        "head on the collected 1-row query-vector array"),
+    "graft/QueriesPipeline.scala" -> (6,
+      "2 single-row .head on global aggregates (shingle avg, pair-count " +
+        "guard) + 2 scala heads (the agg-column Seq, the collected 1-row " +
+        "query-vector array) + 2 .head mentions in comment prose (the " +
+        "bm25 stats and lm-ppl vocab heads they replaced)"),
     "graft/market/OrderBook.scala" -> (6,
       "executor-side book-state reads inside the per-key scan: sorted-map " +
         "headOption (best bid/ask) and take(depth) - scala collections"),
@@ -124,15 +125,7 @@ class CollectAuditSpec extends AnyFunSuite {
       "10-field /proc/stat jiffy line (round 19 - guest-field exclusion); " +
       "SlowWatch thread-dump takes (round 21, r20 verdict #3): take(40) " +
       "on the JVM's own ThreadInfo array and take(12) on a stack trace - " +
-      "thread/frame-count-bounded driver diagnostics, never Spark data"),
-    "graft/DtwWinProbe.scala" -> (2, "diagnostic main: argv headOption; " +
-      "scala take(20000) on the driver-built calibration pair sample " +
-      "(eps pinning, never Spark data)"),
-    "graft/LmVocabProbe.scala" -> (3, "diagnostic main: argv headOption; " +
-      "single-row .head on the measurement-only r18-shape eager vocab " +
-      "aggregate (the very build-time action the r19 rewrite deleted - " +
-      "kept verbatim so the A/B measures it); one .head mention in its " +
-      "scaladoc prose"))
+      "thread/frame-count-bounded driver diagnostics, never Spark data"))
 
   private def countPattern(pattern: String): Map[String, Int] = {
     import scala.jdk.CollectionConverters._

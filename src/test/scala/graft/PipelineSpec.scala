@@ -80,6 +80,45 @@ class PipelineSpec extends SparkSuite {
     assert(rows.exists(_._2.isEmpty), "and the empty/short paths")
   }
 
+  test("dsirBuckets is bit-identical, order included, to pmod(hash60) over tokens then bigrams") {
+    // the one-tokenization DSIR featurizer against the Column chain the
+    // doc_dsir oracle mirrors: unigram buckets in token order, then
+    // bigram buckets, each pmod(hash60(gram), B), on the whole corpus
+    val B = QueriesPipeline.DsirBuckets
+    val toks = TF.tokens(col("text"))
+    def buckets(grams: org.apache.spark.sql.Column) =
+      transform(grams, g => pmod(TF.hash60(g), lit(B)))
+    val rows = Tables.documents(spark, "/root/testdata/sf0.001")
+      .where(col("text").isNotNull)
+      .select(col("doc_id"), TF.dsirBuckets(col("text"), B).as("udf"),
+        concat(buckets(toks), buckets(TF.ngrams(toks, 2))).as("col"))
+      .as[(Long, Seq[Long], Seq[Long])].collect()
+    assert(rows.length == 500, "the whole sf0.001 corpus is compared")
+    rows.foreach { case (id, u, c) =>
+      assert(u == c, s"doc $id: dsirBuckets $u != Column form $c")
+    }
+  }
+
+  test("dsirBuckets: null/zero-token text → no buckets and no doc_dsir row; one token → one bucket") {
+    val B = QueriesPipeline.DsirBuckets
+    assert(TF.dsirBucketsJvm(null, B).isEmpty && TF.dsirBucketsJvm("", B).isEmpty &&
+      TF.dsirBucketsJvm("!!! ??? ... ---", B).isEmpty)
+    val one = TF.dsirBucketsJvm("  Hello! ", B).toSeq
+    assert(one == Seq(java.lang.Math.floorMod(TF.ngramHashesJvm("hello", 1).head, B)),
+      s"one token is one unigram bucket and no bigram, got $one")
+    val corpus = Seq(
+      (1L, "tgt", "alpha beta gamma"),
+      (2L, "raw", null.asInstanceOf[String]),
+      (3L, "raw", "!!! ??? ..."),
+      (4L, "raw", "Hello!"),
+      (5L, "raw", "beta delta")
+    ).toDF("doc_id", "source", "text")
+    val got = QueriesPipeline.dsirForTest(corpus, Seq("tgt"))
+      .as[(Long, Long, Double)].collect().map(r => r._1 -> r._2).toMap
+    assert(got == Map(1L -> 5L, 4L -> 1L, 5L -> 3L),
+      s"null and zero-token docs emit no row; n_feats = #buckets, got $got")
+  }
+
   test("tokens / ngrams / jaccard") {
     val r = docs.where(col("doc_id") === 1)
       .select(

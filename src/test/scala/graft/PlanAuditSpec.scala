@@ -33,11 +33,12 @@ class PlanAuditSpec extends SparkSuite {
       // scalar riding the plan instead of an eager countDistinct().head
       // that re-ran a full corpus pass at every plan build) — a 1-row
       // build side is a constant attach at scan speed, not all-pairs.
-      // Round 20 extended the 1-row-rider family: doc_dsir's (qn, pn)
-      // totals and doc_bm25/doc_hybrid_rrf's (N, avgdl) corpus stats now
-      // ride the plan as broadcast single-row aggregates (the same shape
-      // as lm-ppl's vocab scalar) instead of eager build-time `.head`
-      // jobs that re-ran a full tokenize pass per execution.
+      // Round 20 extended the 1-row-rider family: doc_bm25/doc_hybrid_rrf's
+      // (N, avgdl) corpus stats ride the plan as broadcast single-row
+      // aggregates (the same shape as lm-ppl's vocab scalar) instead of
+      // eager build-time `.head` jobs that re-ran a full tokenize pass per
+      // execution; doc_dsir's fitted model is such a row too (the dense
+      // λ array every doc is scored against).
       if (p.contains("BroadcastNestedLoopJoin"))
         assert(Set("emb_cosine_topk", "aug_dtw", "aug_cluster",
           "doc_lm_ppl", "doc_ppl_buckets", "doc_curate_e2e",
@@ -133,8 +134,16 @@ class PlanAuditSpec extends SparkSuite {
     //   mix/cap aggregates; the ONE single-partition exchange is the
     //   ppl-bucket boundary window over ≤1024 bucket-count rows
     //   (bounded by construction, never corpus rows).
-    // doc_dsir 6h/0r/0s/0g — hashed-gram importance weights: bounded
-    //   λ-bucket aggregates + per-partition top-k; no sort anywhere.
+    // doc_dsir 3h/0r/1s/0g — hashed-gram importance weights scored in
+    //   place: the fit and the score pass each read the corpus through
+    //   its scan-side doc_id spread (2h); the fit is ONE bucket-keyed lr
+    //   aggregate (1h) whose ≤B rows fold into the one-row λ model (the
+    //   1s global aggregate, broadcast to the scoring side). Scoring has
+    //   no exchange; top-50 is per-partition; no sort anywhere. Was
+    //   10h/1s while the totals side re-ran a second copy of lr (its
+    //   inferred isnotnull filter kept the two subtrees from
+    //   canonicalizing equal, so AQE never shared them) and the scoring
+    //   side re-exploded every gram into a λ join + doc_id rollup.
     // emb_decontam_hier 10h/1r/0s/1g — hier descent on the corpus side
     //   only; eval split stays broadcast (never shuffles).
     // doc_winnow 1h/1r/0s/1g — winnowing fingerprints aggregate on ONE
@@ -147,18 +156,7 @@ class PlanAuditSpec extends SparkSuite {
       "emb_semdedup_inc" -> ((3, 1, 0, 1)),
       "doc_lm_ppl" -> ((9, 1, 1, 1)),
       "doc_curate_e2e" -> ((12, 1, 1, 1)),
-      // doc_dsir 10h/1s (round 20): the (qn, pn) totals ride the plan as
-      //   a broadcast 1-row aggregate (replacing the eager build-time
-      //   `.head` that re-ran the full feats pipeline as a separate job
-      //   every execution). The +1 single-partition exchange is that
-      //   global aggregate (the lm-ppl vocab shape); the +4 hash
-      //   exchanges are the totals subtree's STATIC copy of lr's
-      //   aggregation — column pruning de-canonicalizes it from the λ
-      //   subtree so the static planner prints both, but AQE's runtime
-      //   stage cache shares them: measured shuffle bytes DROPPED
-      //   588071 → 483725 (the old budget carried the eager job's own
-      //   lr shuffle), which is only possible if lr materializes once.
-      "doc_dsir" -> ((10, 0, 1, 0)),
+      "doc_dsir" -> ((3, 0, 1, 0)),
       "emb_decontam_hier" -> ((10, 1, 0, 1)),
       "doc_winnow" -> ((1, 1, 0, 1)))
     budgets.toSeq.sortBy(_._1).foreach { case (name, (h, r, s, g)) =>
@@ -289,6 +287,15 @@ class PlanAuditSpec extends SparkSuite {
     assert(exchanges == 1, s"expected 1 user_id exchange, got $exchanges")
     val sorts = p.linesIterator.count(_.trim.startsWith("Sort ["))
     assert(sorts <= 2, s"window chain + output orderBy need <=2 sorts, got $sorts")
+    // the median's sorted frame list is computed once: one collect_list
+    // window function (and one sort_array) feeds every pick, not one per
+    // use of the list
+    val windows = p.linesIterator.filter(_.trim.startsWith("+- Window [")).toSeq
+    assert(windows.size == 1, s"expected one Window node, got ${windows.size}:\n$p")
+    val lists = "collect_list\\(".r.findAllMatchIn(windows.head).size
+    assert(lists == 1, s"the median must collect its frame once, got $lists collect_list:\n$p")
+    assert("sort_array\\(".r.findAllMatchIn(p).size == 1,
+      s"the frame list must be sorted once:\n$p")
   }
 
   test("cumulative stats: window chain + KeyedScan median plan exactly 2 hash exchanges") {
@@ -723,18 +730,59 @@ class PlanAuditSpec extends SparkSuite {
   }
 
   test("doc_dsir: λ broadcasts, top-k per-partition, grams hashed before any exchange") {
-    // the ≤1024-row λ table must broadcast into the scoring join (a
-    // shuffled join would move the whole feature stream on the bucket
-    // key), the top-50 must be TakeOrderedAndProject, and no exchange
-    // may carry the gram STRING — buckets are 8-byte ids from the
-    // explode projection onward
-    val p = plan("doc_dsir")
-    assert(p.contains("BroadcastHashJoin"), "λ join must broadcast")
-    assert(p.contains("TakeOrderedAndProject"),
-      "top-50 must be per-partition TakeOrderedAndProject")
-    val badExchange = p.linesIterator.exists(l =>
-      l.contains("Exchange hashpartitioning") && l.contains("g#"))
-    assert(!badExchange, "a gram string crossed an exchange — hash at the explode")
+    // pinned on the FINAL AQE plan (what executes): the fit is ONE
+    // bucket-keyed lr aggregate folded into a one-row dense λ model that
+    // broadcasts to the scoring side; every doc is scored in place — no
+    // Generate, no aggregate, no exchange between the scan-side spread
+    // and the top-50 — and the only explode is the fit's
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.types.StringType
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val df = reg("doc_dsir").fn(spark, d)
+    df.collect()
+    val all = nodes(df.queryExecution.executedPlan)
+    val fin = all.collectFirst { case a: AdaptiveSparkPlanExec => a.executedPlan.toString }.get
+    val scoring = all.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(scoring.size == 1, s"expected the one λ broadcast join:\n$fin")
+    val j = scoring.head
+    val (streamed, built) = j.buildSide match {
+      case org.apache.spark.sql.catalyst.optimizer.BuildRight => (j.left, j.right)
+      case _ => (j.right, j.left)
+    }
+    assert(j.condition.isEmpty && built.output.map(_.name) == Seq("lam") &&
+      nodes(built).exists(_.isInstanceOf[BroadcastExchangeExec]),
+      s"λ must reach scoring as one broadcast row (conditionless):\n$fin")
+    val scoreSide = nodes(streamed)
+    assert(!scoreSide.exists(n => n.isInstanceOf[GenerateExec] ||
+        n.isInstanceOf[BaseAggregateExec]),
+      s"the scoring side must not explode or aggregate:\n$fin")
+    assert(all.count(_.isInstanceOf[GenerateExec]) == 1,
+      s"only the fit explodes buckets:\n$fin")
+    assert(!all.exists {
+        case a: BaseAggregateExec => a.groupingExpressions.exists(_.references.exists(_.name == "doc_id"))
+        case _ => false },
+      s"no doc_id-keyed aggregate anywhere:\n$fin")
+    val shuffles = all.collect { case e: ShuffleExchangeExec => e }
+    val lrExchanges = shuffles.count(_.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.flatMap(_.references).map(_.name) == Seq("b")
+      case _ => false })
+    assert(lrExchanges == 1, s"lr's bucket exchange must run once, got $lrExchanges:\n$fin")
+    shuffles.foreach { e =>
+      val strings = e.output.filter(_.dataType == StringType).map(_.name).toSet
+      assert(strings.subsetOf(Set("text", "source")),
+        s"a gram string crossed an exchange ($strings):\n$fin")
+    }
+    assert(all.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+      s"top-50 must be per-partition TakeOrderedAndProject:\n$fin")
   }
 
   test("doc_dedup_bloom: Bloom prefilter sits on the corpus scan below the anti-join") {

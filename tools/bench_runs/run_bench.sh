@@ -2,7 +2,7 @@
 # One fresh-JVM full-registry bench run at sf0.1; writes BENCH-format JSON
 # to the given output file. Usage: run_bench.sh <out.json> [GRAFT_TRACER]
 set -e
-cd /root/repo
+cd "$(dirname "$0")/../.."
 export SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1
 export SPARK_GRAFT_BENCH_OUT="$1"
 export GRAFT_TRACER="${2:-duty}"
