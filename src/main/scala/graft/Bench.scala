@@ -306,6 +306,15 @@ object Bench {
     for ((s0, w0, t0) <- a; (s1, w1, t1) <- b if t1 > t0)
       yield (((s1 - s0).toDouble / (t1 - t0)), ((w1 - w0).toDouble / (t1 - t0)))
 
+  /** What [[ShuffleTally]] sums for one job group: shuffle-write bytes,
+    * jobs started, stage attempts completed, their tasks and their summed
+    * task `executorRunTime` (ms). */
+  private[graft] final case class GroupTally(bytes: Long = 0, jobs: Long = 0,
+      stages: Long = 0, tasks: Long = 0, runMs: Long = 0) {
+    def +(o: GroupTally): GroupTally = GroupTally(bytes + o.bytes, jobs + o.jobs,
+      stages + o.stages, tasks + o.tasks, runMs + o.runMs)
+  }
+
   /** Per-query SHUFFLE-WRITE byte tally (round 19, r18 verdict #3): the
     * volume analog of PlanAuditSpec's exchange-count gates, and box-proof
     * where wall clocks are not — a lost broadcast or a resurrected
@@ -317,11 +326,15 @@ object Bench {
     * [[SparkListenerJobStart]], so the listener bus's async delivery can
     * never credit a late-arriving stage to the wrong query — a fixed
     * end-of-run drain sleep bounds only the TAIL undercount, not
-    * attribution. Stage retries sum (they are real bytes moved). */
+    * attribution. Stage retries sum (they are real bytes moved). The
+    * same keying tallies each group's jobs, stages, tasks and executor
+    * run time ([[GroupTally]]), the scheduling and executor layers of
+    * the run record. */
   private[graft] final class ShuffleTally extends org.apache.spark.scheduler.SparkListener {
     private val stageGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]
     private val jobStages = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]
-    private val groupBytes = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+    private val groups = new java.util.concurrent.ConcurrentHashMap[String, GroupTally]
+    private def add(g: String, t: GroupTally): Unit = groups.merge(g, t, (a, b) => a + b)
     // monotone event counter — the drain() quiescence signal
     @volatile private var events = 0L
     override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -330,6 +343,7 @@ object Bench {
       if (g != null) {
         j.stageIds.foreach(id => stageGroup.put(id, g))
         jobStages.put(j.jobId, j.stageIds)
+        add(g, GroupTally(jobs = 1))
       }
       events += 1
     }
@@ -338,11 +352,11 @@ object Bench {
       // NOT evicted here: a stage RETRY re-fires this event for the same
       // stage id, and retry bytes are real bytes moved — eviction waits
       // for the owning job's end (below), when no attempt can remain
-      val g = stageGroup.get(s.stageInfo.stageId)
+      val i = s.stageInfo
+      val g = stageGroup.get(i.stageId)
       if (g != null)
-        groupBytes.merge(g,
-          java.lang.Long.valueOf(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten),
-          (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
+        add(g, GroupTally(bytes = i.taskMetrics.shuffleWriteMetrics.bytesWritten,
+          stages = 1, tasks = i.numTasks, runMs = i.taskMetrics.executorRunTime))
       events += 1
     }
     override def onJobEnd(j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
@@ -350,13 +364,14 @@ object Bench {
       // per-listener in order, so every stage event of this job has
       // already been applied — without this the map grew one entry per
       // stage for the listener's whole lifetime (round-19 advisor).
-      // groupBytes itself stays: one entry per query#pass group, bounded
-      // by the registry — it IS the record being collected.
+      // groups itself stays: one entry per query#pass group, bounded by
+      // the registry — it IS the record being collected.
       Option(jobStages.remove(j.jobId)).foreach(_.foreach(stageGroup.remove))
       events += 1
     }
-    def bytes(group: String): Long =
-      Option(groupBytes.get(group)).map(_.longValue).getOrElse(0L)
+    def tally(group: String): GroupTally =
+      Option(groups.get(group)).getOrElse(GroupTally())
+    def bytes(group: String): Long = tally(group).bytes
     /** Bounded listener-bus drain: polls the event counter until it has
       * been stable for 3 consecutive 50 ms ticks (all posted events
       * applied — the bus delivers to each listener in order, so once OUR
@@ -464,14 +479,28 @@ object Bench {
       att: Map[String, Int] = Map.empty,
       shufx: Map[String, Seq[Long]] = Map.empty,
       jitp: Seq[Double] = Seq.empty, ccm: Seq[Double] = Seq.empty,
-      jitq: Map[String, Double] = Map.empty)
+      jitq: Map[String, Double] = Map.empty, layers: Map[String, Layers] = Map.empty)
+
+  /** One query's kept attempt split by layer, recorded under
+    * `BENCHMARK.json`'s `per_layer` names: `queries.build_s` (the
+    * `fn(spark, dir)` call, timed apart from the write), `sched.jobs`,
+    * `sched.stages` and `sched.tasks` of its job group, `exec.run_s`
+    * (summed task `executorRunTime`) and `jvm.gc_s` (JVM collection time
+    * over the attempt; driver and executors share the JVM). */
+  final case class Layers(buildS: Double, jobs: Long, stages: Long, tasks: Long,
+      runS: Double, gcS: Double) {
+    def fields: Seq[(String, String)] = Seq("queries.build_s" -> rd(buildS, 3),
+      "sched.jobs" -> jobs.toString, "sched.stages" -> stages.toString,
+      "sched.tasks" -> tasks.toString, "exec.run_s" -> rd(runS, 3),
+      "jvm.gc_s" -> rd(gcS, 3))
+  }
 
   /** One timed execution of one query: its wall, the hypervisor steal
     * fraction of exactly its window (None when /proc/stat is absent or
-    * the window spanned no jiffies), and the job-group key its shuffle
-    * bytes were tallied under. */
+    * the window spanned no jiffies), the job-group key its shuffle
+    * bytes were tallied under, its build seconds and its GC seconds. */
   private[graft] final case class Reading(wall: Double, steal: Option[Double],
-      group: String)
+      group: String, build: Double = 0.0, gc: Double = 0.0)
 
   /** JIT-compiler telemetry (round 21, r20 verdict #3 — naming the
     * probabilistic slow mode): cumulative JIT compilation milliseconds
@@ -494,6 +523,13 @@ object Bench {
       .filter(_.getName.startsWith("CodeHeap"))
       .map(p => Option(p.getUsage).map(_.getUsed).getOrElse(0L)).sum
     (compMs, ccBytes)
+  }
+
+  /** Cumulative GC milliseconds over every collector of this JVM. */
+  private[graft] def gcMs(): Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+      .asScala.map(_.getCollectionTime).sum
   }
 
   /** Slow-instance watchdog (round 21, r20 verdict #3): a daemon timer
@@ -523,12 +559,9 @@ object Bench {
     }
     private def dump(name: String): Unit = {
       val (compMs, ccBytes) = jitStat()
-      import scala.jdk.CollectionConverters._
-      val gcMs = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
       val sb = new StringBuilder
       sb.append(s"[slowwatch] $name still running after ${thresholdMs} ms: ")
-        .append(s"jitCompMs=$compMs codeCacheUsedMB=${ccBytes >> 20} gcMs=$gcMs\n")
+        .append(s"jitCompMs=$compMs codeCacheUsedMB=${ccBytes >> 20} gcMs=${gcMs()}\n")
       val infos = java.lang.management.ManagementFactory.getThreadMXBean
         .dumpAllThreads(false, false)
       infos.filter(i => i.getThreadName.startsWith("Executor task launch") ||
@@ -681,12 +714,20 @@ object Bench {
       // tallied to this key no matter when the listener event lands
       spark.sparkContext.setJobGroup(group, desc, interruptOnCancel = false)
       val watch = SlowWatch.arm(s"$desc")
+      val gc0 = gcMs()
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case e: Throwable =>
+      var built = 0L
+      try {
+        val df = fn(spark, sfDir)
+        built = System.nanoTime()
+        df.write.format("noop").mode("overwrite").save()
+      } catch { case e: Throwable =>
         errors += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).takeWhile(_ != '\n').take(200)}"
       } finally watch.cancel()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val t1 = System.nanoTime()
+      val wall = (t1 - t0) / 1e9
+      val build = ((if (built > 0) built else t1) - t0) / 1e9
+      val gc = (gcMs() - gc0) / 1e3
       spark.sparkContext.clearJobGroup()
       val steal = for ((s0, _, tj0) <- qSt0; (s1, _, tj1) <- procStatSteal()
         if tj1 > tj0) yield (s1 - s0).toDouble / (tj1 - tj0)
@@ -697,7 +738,7 @@ object Bench {
         val sec = (jc1 - jc0) / 1e3
         if (sec > 0.5 && sec > jitq.getOrElse(name, 0.0)) jitq(name) = sec
       }
-      readings(name) = readings(name) :+ Reading(wall, steal, group)
+      readings(name) = readings(name) :+ Reading(wall, steal, group, build, gc)
     }
     val jitp = scala.collection.mutable.ArrayBuffer.empty[Double]
     val ccm = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -787,6 +828,10 @@ object Bench {
     val results = kept.map { case (n, r) => n -> r.wall }
     val caps = kept.flatMap { case (n, r) => r.steal.map(n -> _) }
     val shuf = kept.map { case (n, r) => n -> tally.bytes(r.group) }
+    val layers = kept.map { case (n, r) =>
+      val t = tally.tally(r.group)
+      n -> Layers(r.build, t.jobs, t.stages, t.tasks, t.runMs / 1e3, r.gc)
+    }
     // cross-pass byte-equality record (r19 verdict what's-wrong #1): a
     // fixed plan over fixed data writes the same shuffle bytes every
     // pass, so passes that DISAGREE (>5% and >4 KiB) are recorded with
@@ -800,7 +845,7 @@ object Bench {
     }.toMap
     (results, errors, Probes(ctl.toSeq, ctlp.toSeq, ctld.toSeq, ctlb, cap, capm,
       ctls.toSeq, ctli.toSeq, caps, shuf, mode, att.toMap, shufx,
-      jitp.toSeq, ccm.toSeq, jitq.toMap))
+      jitp.toSeq, ccm.toSeq, jitq.toMap, layers))
   }
 
   private def rd(v: Double, scale: Int): String = BigDecimal(v)
@@ -924,6 +969,11 @@ object Bench {
     val jitqJson = probes.jitq.toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + rd(v, 2) }
       .mkString("{", ",", "}")
+    // the kept attempt's per-layer split, one object per query
+    val layersJson = probes.layers.toSeq.sortBy(_._1)
+      .map { case (k, l) => s"\"" + k + "\":" +
+        l.fields.map { case (f, v) => s"\"$f\":$v" }.mkString("{", ",", "}") }
+      .mkString("{", ",", "}")
     val json =
       s"""{"metric":"total","value":${rd(total, 3)},"unit":"sec","passes":$passes,""" +
         s""""trc":"${probes.trc}",""" +
@@ -932,7 +982,7 @@ object Bench {
         s""""cap":${capJson(probes.cap)},"capm":${capJson(probes.capm)},""" +
         s""""caps":${capJson(probes.caps)},"shuf":$shufJson,""" +
         s""""att":$attJson,"shufx":$shufxJson,""" +
-        s""""jitp":$jitpJson,"ccm":$ccmJson,"jitq":$jitqJson,""" +
+        s""""jitp":$jitpJson,"ccm":$ccmJson,"jitq":$jitqJson,"layers":$layersJson,""" +
         s""""queries":$qs,${errJson(errors)}"sf":"${sfName(sfDir)}"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(path), json + "\n")
   }
@@ -947,25 +997,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // hot LSH band buckets (template-heavy corpora) split at runtime
-      // under standard AQE skew handling. forceOptimizeSkewedJoin stays
-      // OFF: the round-4 "cost-free" A/B conclusion was falsified by the
-      // driver's own bench — doc_ngram_jaccard went 2.65 s -> 4.41 s on
-      // BYTE-IDENTICAL query code when force=on landed, and interleaved
-      // re-A/B in round 5 reproduced force=off as consistently faster.
-      // Mechanism: forcing inserts extra shuffles to split partitions
-      // even when the plan must then re-exchange, which also defeats
-      // ReusedExchange across the two sides of the banded SELF-joins.
-      // Un-forced AQE still splits skew wherever no extra shuffle is
-      // needed — the case hot band keys actually hit.
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forSf(sfDir, GraftSession.cores(4), "WARN")
     // untimed warmup: first job pays JIT + codegen-compiler + Hadoop-path
     // init (~6s) regardless of which query runs first; absorb it here so
     // per-query numbers reflect steady state

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit harness: `runMain graft.Explain <sfDir> <query...>` prints
   * each query's formatted physical plan — the per-round check that filters
   * reach the scans (PushedFilters), small sides broadcast, window chains
@@ -10,13 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else Seq("q03_shipping_priority")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(4, "ERROR")
     val reg = Queries.registry.toMap
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-test data generator: replicate an sf directory's documents +
@@ -200,13 +200,7 @@ object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(src, out, factorS) = args.take(3)
     val factor = factorS.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(GraftSession.cores(16), "WARN")
     // 5th arg (optional): comma-separated sources held at replica-0 size
     // (production-shaped eval decade — see scaleDocuments' scaladoc).
     // Named form also accepted anywhere past arg 3 ("sources=src19",

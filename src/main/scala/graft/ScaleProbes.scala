@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Deterministic scale-probe runner: `runMain graft.ScaleProbes <sfDir>`
   * prints the mechanism numbers the COVERAGE scale tables rest on —
   * quantities that are pure functions of the input (candidate counts,
@@ -11,12 +9,7 @@ import org.apache.spark.sql.SparkSession
 object ScaleProbes {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(32, "ERROR")
     val (cand, meanSet) = QueriesPipeline.minhashProbe(spark, sfDir)
     println(f"[probe] $sfDir minhash_banded_candidates=$cand mean_shingle_set=$meanSet%.1f")
     val (multiH, pairRows) = QueriesPipeline.overlapProbe(spark, sfDir)

@@ -44,21 +44,29 @@ object RunMode {
   def batch[S](ds: Dataset[Ev], proc: BurstProc[S]): Dataset[Out] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.key).flatMapSortedGroups(col("ts"), col("seq")) { (k, rows) =>
-      var s = proc.init()
-      val out = ArrayBuffer.empty[Out]
-      val buf = ArrayBuffer.empty[Ev]
-      var curTs = Long.MinValue
-      def flush(): Unit = if (buf.nonEmpty) {
-        val (s2, o) = proc.onBurst(s, k, curTs, buf.toSeq)
-        s = s2; out ++= o; buf.clear()
-      }
-      rows.foreach { ev =>
-        if (ev.ts != curTs) { flush(); curTs = ev.ts }
-        buf += ev
-      }
-      flush()
-      out.iterator
+      foldBursts(proc, proc.init(), k, rows)._2.iterator
     }
+  }
+
+  /** One key's rows, already in (ts, seq) order, folded burst at a time:
+    * each run of rows sharing a `ts` is one `onBurst` call. Both runners
+    * call this; returns the final state and every output row. */
+  private def foldBursts[S](proc: BurstProc[S], s0: S, key: String,
+      rows: Iterator[Ev]): (S, ArrayBuffer[Out]) = {
+    var s = s0
+    val out = ArrayBuffer.empty[Out]
+    val buf = ArrayBuffer.empty[Ev]
+    var curTs = Long.MinValue
+    def flush(): Unit = if (buf.nonEmpty) {
+      val (s2, o) = proc.onBurst(s, key, curTs, buf.toSeq)
+      s = s2; out ++= o; buf.clear()
+    }
+    rows.foreach { ev =>
+      if (ev.ts != curTs) { flush(); curTs = ev.ts }
+      buf += ev
+    }
+    flush()
+    (s, out)
   }
 
   /** Live mode: the same processor via flatMapGroupsWithState; per-key
@@ -83,22 +91,8 @@ object RunMode {
     ds.groupByKey(_.key)
       .flatMapGroupsWithState[S, Out](OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (k: String, rows: Iterator[Ev], gs: GroupState[S]) =>
-          var s = if (gs.exists) gs.get else proc.init()
-          val out = ArrayBuffer.empty[Out]
-          rows.toSeq.sortBy(e => (e.ts, e.seq)).foldLeft((Long.MinValue, ArrayBuffer.empty[Ev])) {
-            case ((curTs, buf), ev) =>
-              if (ev.ts != curTs && buf.nonEmpty) {
-                val (s2, o) = proc.onBurst(s, k, curTs, buf.toSeq)
-                s = s2; out ++= o; buf.clear()
-              }
-              buf += ev
-              (ev.ts, buf)
-          } match {
-            case (curTs, buf) if buf.nonEmpty =>
-              val (s2, o) = proc.onBurst(s, k, curTs, buf.toSeq)
-              s = s2; out ++= o
-            case _ => ()
-          }
+          val (s, out) = foldBursts(proc, if (gs.exists) gs.get else proc.init(), k,
+            rows.toSeq.sortBy(e => (e.ts, e.seq)).iterator)
           gs.update(s)
           out.iterator
       }

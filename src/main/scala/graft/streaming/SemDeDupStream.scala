@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.VecOps.dot
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
@@ -64,26 +65,17 @@ object SemDeDupStream {
   private def round4(x: Double): Double =
     BigDecimal(x + 1e-9).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Packed-unit dot = cosine (vectors are unit-normalized at pack). */
-  private def dotP(a: Array[Byte], b: Array[Byte]): Double = {
-    val ba = java.nio.ByteBuffer.wrap(a).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    var d = 0.0
-    var i = 0
-    val n = math.min(a.length, b.length) / 8
-    while (i < n) { d += ba.getDouble(i * 8) * bb.getDouble(i * 8); i += 1 }
-    d
-  }
-
   /** One cell's micro-batch step — the single definition both the
-    * streaming runner and the spec's replay use. */
+    * streaming runner and the spec's replay use. Cosine is the packed
+    * dot (vectors are unit-normalized at pack), the same kernel the
+    * batch op's `dot_packed` runs. */
   private[graft] def step(kept: Seq[Array[Byte]], arrivals: Seq[VecArrival],
       tau: Double): (Seq[Array[Byte]], Seq[VecDecision]) = {
     val arr = arrivals.sortBy(a => a.id)
     val decisions = arr.map { x =>
-      val corpusDrop = kept.exists(k => round4(dotP(k, x.vp)) >= tau)
+      val corpusDrop = kept.exists(k => round4(dot(k, x.vp)) >= tau)
       val batchDrop = arr.exists(o => o.id != x.id &&
-        round4(dotP(o.vp, x.vp)) >= tau &&
+        round4(dot(o.vp, x.vp)) >= tau &&
         (o.aff < x.aff || (o.aff == x.aff && o.id < x.id)))
       VecDecision(x.id, x.cell, x.aff, !(corpusDrop || batchDrop))
     }

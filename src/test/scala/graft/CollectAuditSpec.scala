@@ -95,10 +95,6 @@ class CollectAuditSpec extends AnyFunSuite {
         "forecast vector heads (incl. the round-18 scan vehicle's fc.head " +
         "on the 1-element horizon inside the executor fold) - no Spark " +
         "actions"),
-    "graft/QDecomp.scala" -> (2,
-      "measurement main only (round 20): argv headOption; scala " +
-        "Array.take(8) on the /proc/stat jiffy line (the Bench steal-probe " +
-        "form) - never query data"),
     "graft/ScaleProbes.scala" -> (4,
       "diagnostic main: 2 single-row avg aggregates, 2 argv headOptions"),
     "graft/streaming/KnnClassifyStream.scala" -> (2,
@@ -116,7 +112,6 @@ class CollectAuditSpec extends AnyFunSuite {
     "graft/SparkEntry.scala" -> (1, "scala registry.head - query map entry"),
     "graft/Queries.scala" -> (1,
       "single-row .head on the global avg aggregate (threshold scalar)"),
-    "graft/Profile.scala" -> (1, "argv headOption"),
     "graft/PinRecord.scala" -> (1, "scala take(5) on the sorted worst-query seq"),
     "graft/Explain.scala" -> (1, "argv headOption"),
     "graft/Bench.scala" -> (5, "scala String.take(200) - error message trim; " +

@@ -10,21 +10,21 @@ class ScaleProbeSpec extends SparkSuite {
 
   private val d = "/root/testdata/sf0.001"
 
-  test("Profile's scaling shuffle-partition default: floor at bench SFs, grows ~bytes/32MiB") {
-    // the deployment default behind the 1000× minhash A/B (608→569 s wall,
-    // GC 37.5→31.1 s at 256 partitions): partitions scale with input so
-    // each sort fits the executor pool. At the bench SFs the formula must
-    // FLOOR at 32 — local records stay comparable across rounds.
-    assert(Profile.scaledShufflePartitions("/root/testdata/sf0.1") == 32,
+  test("GraftSession's input-scaled shuffle partitions: cores at bench SFs, grow ~bytes/32MiB") {
+    // the policy behind the 1000× minhash A/B (608→569 s wall, GC
+    // 37.5→31.1 s at 256 partitions): partitions scale with input so
+    // each sort fits the executor pool. At the bench SFs the rule must
+    // floor at the core count — local records stay comparable.
+    assert(GraftSession.partitionsFor("/root/testdata/sf0.1", 32) == 32,
       "17 MB input floors at 32")
-    assert(Profile.scaledShufflePartitions("/does/not/exist") == 32,
+    assert(GraftSession.partitionsFor("/does/not/exist", 32) == 32,
       "missing dir floors, never throws")
     // synthesize the arithmetic via a temp file of known size: 3 GiB of
     // input → 96 partitions; the 1024 cap holds at petabyte arguments
     val f = java.nio.file.Files.createTempDirectory("psp").toFile
     val raf = new java.io.RandomAccessFile(new java.io.File(f, "x.parquet"), "rw")
     raf.setLength(3L << 30); raf.close() // sparse — no real 3 GiB written
-    assert(Profile.scaledShufflePartitions(f.getAbsolutePath) == 96,
+    assert(GraftSession.partitionsFor(f.getAbsolutePath, 32) == 96,
       "3 GiB input -> 96 partitions (bytes/32MiB)")
     f.listFiles().foreach(_.delete()); f.delete()
   }

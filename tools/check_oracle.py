@@ -14,8 +14,12 @@ con = duckdb.connect()
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
     p = f"{sf_dir}/{t}.parquet"
-    if os.path.exists(p):
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    # a table stored as a directory of parquet files is read through a glob
+    if os.path.isdir(p):
+        p = f"{p}/*.parquet"
+    elif not os.path.exists(p):
+        continue
+    con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 fails, passes, skips = [], [], []
