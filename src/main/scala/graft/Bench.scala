@@ -35,18 +35,20 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** PARALLEL noise probe (round 17): the same xorshift loop on 32
-    * threads at once — wall = the slowest thread, so quiet ≈ the scalar
-    * probe's ~1 s and every missing core of host capacity stretches it
-    * proportionally. Exists because the scalar probe measures only
-    * single-thread grants and MISSES co-tenant PARALLEL pressure: the
-    * round-17 re-pin window read ctl 0.81 ("mildly noisy") while a
-    * 32-process calibration measured 22/32 effective cores and every
-    * 32-thread query ran ~1.4× — a record carrying only scalar ctl
-    * would have laundered that into per-query numbers exactly like
-    * BENCH_r08 did with scalar load. Quiet-box contract: ctlp/ctl ≈
+  /** PARALLEL noise probe (round 17): the same xorshift loop on one
+    * thread per session core (`threads` = the session's
+    * defaultParallelism) at once — wall = the slowest thread, so quiet ≈
+    * the scalar probe's ~1 s and every missing core of host capacity
+    * stretches it proportionally (more threads than cores would read
+    * threads/cores × ctl on a quiet box). Exists because the scalar
+    * probe measures only single-thread grants and MISSES co-tenant
+    * PARALLEL pressure: the round-17 re-pin window read ctl 0.81
+    * ("mildly noisy") while a 32-process calibration measured 22/32
+    * effective cores and every 32-thread query ran ~1.4× — a record
+    * carrying only scalar ctl would have laundered that into per-query
+    * numbers exactly like BENCH_r08 did with scalar load. Quiet-box contract: ctlp/ctl ≈
     * 1.0–1.3 (SMT + scheduler); ≥1.5 = the window is not pin-grade. */
-  private[graft] def controlProbeParallel(threads: Int = 32): Double = {
+  private[graft] def controlProbeParallel(threads: Int): Double = {
     val t0 = System.nanoTime()
     val ts = (0 until threads).map { t =>
       val th = new Thread(() => {
@@ -745,7 +747,7 @@ object Bench {
     (0 until passes).foreach { p =>
       drained()
       ctl += controlProbe()
-      ctlp += controlProbeParallel()
+      ctlp += controlProbeParallel(spark.sparkContext.defaultParallelism)
       ctld += controlProbeDisk()
       resumed()
       val (passJc0, passCc0) = jitStat()
@@ -780,7 +782,7 @@ object Bench {
       ccm += passCc1 / 1048576.0
       drained()
       ctl += controlProbe()
-      ctlp += controlProbeParallel()
+      ctlp += controlProbeParallel(spark.sparkContext.defaultParallelism)
       resumed()
     }
     // ---- per-query steal-aware retries (round 20, r19 verdict #1) ----

@@ -1,9 +1,10 @@
 package graft
 
 import graft.core.Timeline
+import graft.functions.HalfUp.r4
 import graft.ops.ScanOps
 import graft.streaming.{DynamicGroup, RunMode}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Query registry: every SURVEY §2 operator exposed as a named query over
@@ -23,12 +24,6 @@ object Queries {
 
   private val HOUR = 3600L * 1000000000L
   private val DAY = 24L * HOUR
-
-  /** Cross-engine stable rounding: +1e-9 pushes exact half-boundary values
-    * (common: inputs have 2 decimals, so means/vars land on 4dp halves where
-    * each engine's summation-order noise flips the side) consistently up.
-    * The DuckDB oracles apply the identical shift. */
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
 
   /** Common DuckDB prelude: events with the ns clock + total order. */
   private val E = "SELECT user_id, epoch_ns(ts) AS ts, event_id AS seq, event_type, value FROM events"

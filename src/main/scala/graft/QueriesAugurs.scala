@@ -1,6 +1,7 @@
 package graft
 
 import graft.Queries.Q
+import graft.functions.HalfUp.r4
 import graft.ops.Augurs
 import org.apache.spark.sql.functions._
 
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * are derived from the 4dp-ROUNDED statistics on BOTH engines so boundary
   * comparisons cannot flip on summation-order noise. */
 object QueriesAugurs {
-
-  private def r4c(c: org.apache.spark.sql.Column) = round(c + lit(1e-9), 4)
 
   /** Registry escape hatch for the DTW pair budget (BASELINE.md's
     * maxPairs × decade-row rule): decade measurements past events×8 (72M
@@ -30,8 +29,8 @@ object QueriesAugurs {
       (s, d) => {
         val o = Augurs.outlierMad(Tables.events(s, d), 20)
         o.df.select(col("user_id"), col("ts"),
-          r4c(col("med")).as("med"), r4c(col("mad")).as("mad"),
-          r4c(col("score")).as("score"))
+          r4(col("med")).as("med"), r4(col("mad")).as("mad"),
+          r4(col("score")).as("score"))
           .withColumn("is_outlier", col("score") > col("mad") * (3.0 * 1.4826))
           .orderBy("user_id", "ts")
       },
@@ -79,7 +78,7 @@ object QueriesAugurs {
     "aug_changepoint" -> Q(
       (s, d) => {
         val c = Augurs.changepointMeanShift(Tables.events(s, d), 10)
-        c.df.select(col("user_id"), col("ts"), r4c(col("z")).as("z"))
+        c.df.select(col("user_id"), col("ts"), r4(col("z")).as("z"))
           .withColumn("is_cp", col("z") > 3.0)
           .orderBy("user_id", "ts")
       },
@@ -101,8 +100,8 @@ object QueriesAugurs {
     "aug_forecast" -> Q(
       (s, d) => Augurs.forecastSeasonalNaive(Tables.events(s, d),
         window = 28, season = 7, horizon = 4)
-        .select(col("user_id"), col("step"), r4c(col("forecast")).as("forecast"),
-          r4c(col("lo")).as("lo"), r4c(col("hi")).as("hi"))
+        .select(col("user_id"), col("step"), r4(col("forecast")).as("forecast"),
+          r4(col("lo")).as("lo"), r4(col("hi")).as("hi"))
         .orderBy("user_id", "step"),
       Some(s"""WITH a AS (SELECT user_id, list(value ORDER BY ts, seq) AS fl
              |  FROM ($E) GROUP BY 1),
@@ -133,8 +132,8 @@ object QueriesAugurs {
     "aug_ets" -> Q(
       (s, d) => Augurs.forecastEts(Tables.events(s, d),
         window = 28, season = 7, horizon = 4)
-        .select(col("user_id"), col("step"), r4c(col("forecast")).as("forecast"),
-          r4c(col("lo")).as("lo"), r4c(col("hi")).as("hi"))
+        .select(col("user_id"), col("step"), r4(col("forecast")).as("forecast"),
+          r4(col("lo")).as("lo"), r4(col("hi")).as("hi"))
         .orderBy("user_id", "step"),
       Some(s"""WITH RECURSIVE a AS (SELECT user_id, list(value ORDER BY ts, seq) AS fl
              |  FROM ($E) GROUP BY 1),
@@ -189,7 +188,7 @@ object QueriesAugurs {
       (s, d) => Augurs.forecastEtsRollingScan(Tables.events(s, d),
         window = 28, season = 7)
         .select(col("user_id"), col("ts"), col("seq"),
-          r4c(col("forecast")).as("forecast"), r4c(col("sigma")).as("sigma"))
+          r4(col("forecast")).as("forecast"), r4(col("sigma")).as("sigma"))
         .orderBy("user_id", "ts", "seq"),
       Some(s"""WITH RECURSIVE a AS (SELECT user_id, list(value ORDER BY ts, seq) AS fl,
              |    list(ts ORDER BY ts, seq) AS tl, list(seq ORDER BY ts, seq) AS ql
@@ -239,8 +238,8 @@ object QueriesAugurs {
     "aug_mstl" -> Q(
       (s, d) => Augurs.forecastMstl(Tables.events(s, d),
         window = 28, seasons = Seq(4, 7), horizon = 4)
-        .select(col("user_id"), col("step"), r4c(col("forecast")).as("forecast"),
-          r4c(col("lo")).as("lo"), r4c(col("hi")).as("hi"))
+        .select(col("user_id"), col("step"), r4(col("forecast")).as("forecast"),
+          r4(col("lo")).as("lo"), r4(col("hi")).as("hi"))
         .orderBy("user_id", "step"),
       Some(s"""WITH a AS (SELECT user_id, list(value ORDER BY ts, seq) AS fl
              |  FROM ($E) GROUP BY 1),
@@ -388,7 +387,7 @@ object QueriesAugurs {
         // evaluates exactly once, above the sort, with nothing persisted
         Augurs.dtwMatrixOrdered(t16, window = 16, band = 4,
           maxPairs = dtwMaxPairs)
-          .select(col("sid_a"), col("sid_b"), r4c(col("dtw")).as("dtw"))
+          .select(col("sid_a"), col("sid_b"), r4(col("dtw")).as("dtw"))
       },
       Some(s"""WITH RECURSIVE a AS (SELECT user_id, list(value ORDER BY ts, seq) AS fl
              |  FROM ($E) GROUP BY 1),

@@ -1,6 +1,7 @@
 package graft
 
 import graft.Queries.Q
+import graft.functions.HalfUp.r4
 import graft.market.{BookUpdateIn, MarketEventRow, MarketEvents, OrderBookOp}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -93,8 +94,7 @@ object QueriesMarket {
         val w = Window.partitionBy("user_id").orderBy("ts", "seq")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         t.withColumn("vwap",
-            round(sum(col("price") * col("qty")).over(w) / sum(col("qty")).over(w)
-              + lit(1e-9), 4))
+            r4(sum(col("price") * col("qty")).over(w) / sum(col("qty")).over(w)))
           .select("user_id", "ts", "seq", "vwap").orderBy("user_id", "seq")
       },
       Some("""WITH t AS (SELECT user_id, epoch_ns(ts) AS ts, event_id AS seq,

@@ -1,6 +1,7 @@
 package graft
 
 import graft.Queries.Q
+import graft.functions.HalfUp.r4
 import graft.multimodal.Multimodal
 import org.apache.spark.sql.functions._
 
@@ -9,8 +10,6 @@ import org.apache.spark.sql.functions._
   * feature projection, and the frame-sampling arithmetic are real and
   * oracle-verified byte-for-byte. */
 object QueriesMultimodal {
-
-  private def r4(c: org.apache.spark.sql.Column) = round(c + lit(1e-9), 4)
 
   val entries: Seq[(String, Q)] = Seq(
 

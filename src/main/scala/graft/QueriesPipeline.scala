@@ -2,6 +2,7 @@ package graft
 
 import graft.Queries.Q
 import graft.functions.{Similarity, TextFunctions => TF}
+import graft.functions.HalfUp.r4
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,8 +11,6 @@ import org.apache.spark.sql.functions._
   * search. Hashes are md5-derived so every stage is replicated exactly in
   * the DuckDB oracle (`hash60` ≡ ('0x'||substr(md5(x),1,15))::BIGINT). */
 object QueriesPipeline {
-
-  private def r4(c: Column): Column = round(c + lit(1e-9), 4)
 
   /** DuckDB token-list snippet (mirrors TextFunctions.tokens). */
   private val TOKS =
@@ -1829,7 +1828,7 @@ object QueriesPipeline {
         val k = math.max(1, math.ceil(
           e.count().toDouble / Similarity.DedupCellOccupancy).toInt)
         val nn = Similarity.ivfTopK(e.where(col("vec_id") % 10 === 0), e, 5,
-          nCent = k, nProbe = 6, dimHint = AnnDim, loopAssign = true)
+          nCent = k, nProbe = 6, dimHint = AnnDim)
         val lab = e.select(col("vec_id").as("nid"), col("label").as("nlabel"))
         val votes = nn.join(lab, "nid")
           .groupBy("qid", "nlabel")
@@ -2080,7 +2079,7 @@ object QueriesPipeline {
         val k = math.max(1, math.ceil(
           n.toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(e, nCent = k, iters = 2,
-          dimHint = AnnDim, loopAssign = true)
+          dimHint = AnnDim)
         Similarity.cosineDedupIvf(e, 0.4, nProbe = 6, dimHint = AnnDim,
           model = trained).orderBy("a", "b")
       },
@@ -2131,7 +2130,7 @@ object QueriesPipeline {
         val k = math.max(1, math.ceil(
           n.toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(e, nCent = k, iters = 2,
-          dimHint = AnnDim, loopAssign = true)
+          dimHint = AnnDim)
         Similarity.semDedup(e, 0.4, trained, dimHint = AnnDim).orderBy("vec_id")
       },
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2242,7 +2241,7 @@ object QueriesPipeline {
         val k = math.max(1, math.ceil(
           old.count().toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(old, nCent = k, iters = 2,
-          dimHint = AnnDim, loopAssign = true)
+          dimHint = AnnDim)
         // the stored state a production run reads back: kept rows with
         // their prior-run cell assignments and vectors
         val kept = Similarity.semDedup(old, 0.4, trained, dimHint = AnnDim)
@@ -2408,7 +2407,7 @@ object QueriesPipeline {
         val k = math.max(1, math.ceil(
           corpus.count().toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(corpus, nCent = k, iters = 2,
-          dimHint = AnnDim, loopAssign = true)
+          dimHint = AnnDim)
         Similarity.semanticDecontaminate(corpus, ev, 0.4, trained,
           nProbe = 4, dimHint = AnnDim).orderBy("vec_id")
       },
@@ -2537,7 +2536,7 @@ object QueriesPipeline {
         val k = math.max(1, math.ceil(
           old.count().toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(old, nCent = k, iters = 2,
-          dimHint = AnnDim, loopAssign = true)
+          dimHint = AnnDim)
         val probes = Similarity.evalProbeFrame(ev, trained, nProbe = 4,
           dimHint = AnnDim)
         Similarity.semanticDecontaminateIncremental(batch, probes, 0.4,
@@ -2957,8 +2956,9 @@ object QueriesPipeline {
     // Cluster-balanced sampling — the topic-balance quota over the
     // TRAINED k-means cells (the embedding-space counterpart of
     // doc_source_cap's domain cap: no one semantic cluster may dominate
-    // the corpus). Assignment is the broadcast-model loop the other
-    // kmeans consumers share; the per-cell quota is the CapKAgg typed
+    // the corpus). Assignment is kmeansAssign's plan-time-model loop —
+    // the model rides the UDF closure, one JIT'd argmax per row, no
+    // exchange and no window; the per-cell quota is the CapKAgg typed
     // Aggregator — its associative ≤K-pair buffer prunes to ≤ K rows
     // per (cell × partition) map-side, so the exchange carries
     // ≤ K·cells·partitions rows where the canonical row_number window
@@ -2991,12 +2991,13 @@ object QueriesPipeline {
     // cell, a vector is far when its centroid affinity sits more than
     // 1.5 cell-standard-deviations below the cell mean (the affinity
     // distribution is right-skewed — at 2 sigma the cut sits below the
-    // minimum on the synthetic tables and the flag is vacuous). Rides the SAME
-    // broadcast-model assignment the other kmeans consumers share (the
-    // oracle rides the same replayed CTE chain), so the corpus-sized
-    // work is one scan + one cell exchange for the window stats; both
-    // engines derive the flag from the 4dp-ROUNDED (mu, sd) so the
-    // boundary comparison cannot flip on summation-order noise.
+    // minimum on the synthetic tables and the flag is vacuous). Rides
+    // kmeansAssign's plan-time-model loop (a per-row Project, no
+    // exchange; the oracle replays the same Lloyd chain in SQL), so the
+    // only corpus-sized exchanges are the scan-side spreads — the stats
+    // exchange carries ≤ partitions × nCent partial rows; both engines
+    // derive the flag from the 4dp-ROUNDED (mu, sd) so the boundary
+    // comparison cannot flip on summation-order noise.
     "emb_outlier" -> Q(
       (s, d) => {
         // (mu, sd) via a map-side-combined 8-row aggregate + broadcast

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import HalfUp.r4
 
 /** Embedding similarity primitives. Vectors are `array<float>` columns
   * (cast to double at the boundary). The LSH path is the 100 TB strategy:
@@ -101,8 +102,7 @@ object Similarity {
     i = 0
     while (i < kk) {
       if (raw(i) >= thresh)
-        cand += ((cents(i)._1, BigDecimal(raw(i) + 1e-9)
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble))
+        cand += ((cents(i)._1, HalfUp.rd(raw(i))))
       i += 1
     }
     cand.sortBy { case (cid, cs) => (-cs, cid) }.take(nTop).toSeq
@@ -190,13 +190,8 @@ object Similarity {
   def bruteTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("vec_id").as("qid"), toDouble(col("embedding")).as("qv"))
     val c = candidates.select(col("vec_id").as("nid"), toDouble(col("embedding")).as("nv"))
-    val sims = q.join(c, col("qid") =!= col("nid"))
-      .withColumn("sim", cosLoop(col("qv"), col("nv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(round(col("sim") + lit(1e-9), 4).desc, col("nid"))
-    sims.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim") + lit(1e-9), 4).as("sim"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(q.join(c, col("qid") =!= col("nid"))
+      .withColumn("sim", cosLoop(col("qv"), col("nv"))), k)
   }
 
   /** (id, table, bucket) rows for `nTables` independent LSH tables (table t
@@ -273,8 +268,8 @@ object Similarity {
     val ba = bk.select(col("table"), col("bucket"), col("id").as("a"), col("vp").as("pa"))
     val bb = bk.select(col("table"), col("bucket"), col("id").as("b"), col("vp").as("pb"))
     ba.join(bb, Seq("table", "bucket")).where(col("a") < col("b"))
-      .withColumn("cos", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("pa"), col("pb")) + lit(1e-9), 4))
+      .withColumn("cos",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("pa"), col("pb"))))
       .where(col("cos") >= tau)
       .select("a", "b", "cos")
       .dropDuplicates("a", "b")
@@ -338,20 +333,16 @@ object Similarity {
         .otherwise(raise_error(concat(lit(s"cosineDedupIvf: expected dim $dim, got "),
           coalesce(size(vec).cast("string"), lit("NULL")))))
     val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    // assignment via a plan-time model + ONE JIT'd loop per row — NOT the
-    // [[cellAffinity]] exploded join: n/occ centroids put n×nCent×dim
-    // ROWS through that join (182M at the 10× check, measured 127 s vs
-    // ~13 s for this loop doing the same flops). The model is nCent×dim
-    // doubles (25 KB at 20k vectors) serialized into the closure — the
+    // assignment via a plan-time model + ONE JIT'd loop per row — NOT an
+    // exploded (row, centroid, dim) broadcast join: n/occ centroids put
+    // n×nCent×dim ROWS through that join (182M at the 10× check,
+    // measured 127 s vs ~13 s for this loop doing the same flops). The
+    // model is nCent×dim doubles (25 KB at 20k vectors) serialized into
+    // the closure — the
     // same broadcast-model discipline as [[pqEncoders]]/[[kmeansModel]];
     // norms precomputed once. Rounded 4dp (shared +1e-9 HALF_UP) BEFORE
     // the (cs desc, cid) ranking so the oracle replays probe sets
     // exactly.
-    def withNorm(cid: Long, w: Array[Double]): (Long, Array[Double], Double) = {
-      var nw = 0.0; var i = 0
-      while (i < w.length) { nw += w(i) * w(i); i += 1 }
-      (cid, w, math.sqrt(nw))
-    }
     // a trained kmeansModel drops in for the sample quantizer unchanged.
     // The sample is SALTED — ordered by hash60(id), not by id — so an id
     // order that correlates with cluster structure (append-time ordering,
@@ -364,14 +355,14 @@ object Similarity {
     // at 100 TB the old unconditional vecs.count() was a full pass spent
     // computing a number the model branch never read
     val cents: Array[(Long, Array[Double], Double)] =
-      if (model.nonEmpty) model.map { case (cid, w) => withNorm(cid, w) }.toArray
+      if (model.nonEmpty) model.map { case (cid, w) => withNorm3(cid, w) }.toArray
       else {
         val k = if (nCent > 0) nCent else {
           val n = if (nHint > 0) nHint else vecs.count()
           math.max(1, math.ceil(n.toDouble / DedupCellOccupancy).toInt)
         }
         cv.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id")).limit(k)
-          .collect().map(r => withNorm(r.getLong(0), r.getSeq[Double](1).toArray))
+          .collect().map(r => withNorm3(r.getLong(0), r.getSeq[Double](1).toArray))
       }
     require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
       s"cosineDedupIvf: quantizer model ${cents.length} centroids x $dim dims exceeds " +
@@ -398,8 +389,8 @@ object Similarity {
     val probers = packed.select(explode(col("pcs")).as("cell"),
       col("id").as("p"), col("vp").as("pp"))
     homes.join(probers, "cell").where(col("m") =!= col("p"))
-      .withColumn("cos", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("pm"), col("pp")) + lit(1e-9), 4))
+      .withColumn("cos",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("pm"), col("pp"))))
       .where(col("cos") >= tau)
       .select(least(col("m"), col("p")).as("a"),
         greatest(col("m"), col("p")).as("b"), col("cos"))
@@ -504,8 +495,8 @@ object Similarity {
     val others = asg.select(col("cell"), col("id").as("oid"),
       col("aff").as("oaff"), col("vp").as("ovp"))
     mine.join(others, "cell").where(col("id") =!= col("oid"))
-      .withColumn("cos", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("ovp")) + lit(1e-9), 4))
+      .withColumn("cos",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("ovp"))))
       .where(col("cos") >= tau)
       .where(col("oaff") < col("aff") ||
         (col("oaff") === col("aff") && col("oid") < col("id")))
@@ -610,8 +601,8 @@ object Similarity {
       checked("semDedupIncremental.existing"))
     val corpusDrops = asg.select(col("cell"), col("id"), col("vp"))
       .join(ex, "cell")
-      .withColumn("cos", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("ovp")) + lit(1e-9), 4))
+      .withColumn("cos",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("ovp"))))
       .where(col("cos") >= tau)
       .select(col("id")).distinct()
     // leg (b): the standard within-cell prune over the batch alone
@@ -653,8 +644,8 @@ object Similarity {
       checked("semDedupIncrementalHier.existing"))
     val corpusDrops = asg.select(col("cell"), col("id"), col("vp"))
       .join(ex, "cell")
-      .withColumn("cos", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("ovp")) + lit(1e-9), 4))
+      .withColumn("cos",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("ovp"))))
       .where(col("cos") >= tau)
       .select(col("id")).distinct()
     val drops = semDedupDrops(asg, tau).union(corpusDrops).distinct()
@@ -749,8 +740,8 @@ object Similarity {
   private def decontamHits(asg: DataFrame, evalProbes: DataFrame,
       tau: Double): DataFrame =
     asg.select(col("cell"), col("id"), col("vp")).join(evalProbes, "cell")
-      .withColumn("cos", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("evp")) + lit(1e-9), 4))
+      .withColumn("cos",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("evp"))))
       .where(col("cos") >= tau)
       .select(col("id")).distinct()
 
@@ -902,12 +893,7 @@ object Similarity {
       model: Seq[(Long, Array[Double])], nProbe: Int, dimHint: Int): DataFrame = {
     val cv = vecs.select(col("vec_id").as("id"),
       toDouble(col("embedding")).as("v"))
-    val cents = model.map { case (cid, w) =>
-      var nw = 0.0; var i = 0
-      while (i < w.length) { nw += w(i) * w(i); i += 1 }
-      (cid, w, math.sqrt(nw))
-    }.toArray
-    ivfProbeFrame(cv, cents, nProbe)
+    ivfProbeFrame(cv, model.map { case (cid, w) => withNorm3(cid, w) }.toArray, nProbe)
   }
 
   /** Two-level coarse quantizer: the scale path past the flat model's
@@ -961,7 +947,7 @@ object Similarity {
       dimHint: Int = -1): HierQuantizer = {
     require(nTop > 0 && occupancy > 0 && iters > 0,
       s"hierQuantizer: nTop=$nTop occupancy=$occupancy iters=$iters must be positive")
-    val top = kmeansModel(vecs, nTop, iters, dimHint, loopAssign = true)
+    val top = kmeansModel(vecs, nTop, iters, dimHint)
     val dim = if (dimHint > 0) dimHint else probeDim(vecs)
     if (dim == 0)
       return HierQuantizer(Nil, vecs.sparkSession.emptyDataFrame
@@ -1062,8 +1048,8 @@ object Similarity {
     val pp = probes.join(packed, col("p") === col("id"))
       .select(col("cell"), col("p"), col("vp").as("pp"))
     hp.join(pp, "cell").where(col("m") =!= col("p"))
-      .withColumn("cos", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("pm"), col("pp")) + lit(1e-9), 4))
+      .withColumn("cos",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("pm"), col("pp"))))
       .where(col("cos") >= tau)
       .select(least(col("m"), col("p")).as("a"),
         greatest(col("m"), col("p")).as("b"), col("cos"))
@@ -1230,7 +1216,7 @@ object Similarity {
       iters: Int, dimHint: Int = -1): DeepQuantizer = {
     require(nTop > 0 && iters > 0 && occupancies.nonEmpty && occupancies.forall(_ > 0),
       s"deepQuantizer: nTop=$nTop iters=$iters occupancies=$occupancies must be positive")
-    val top = kmeansModel(vecs, nTop, iters, dimHint, loopAssign = true)
+    val top = kmeansModel(vecs, nTop, iters, dimHint)
     val dim = if (dimHint > 0) dimHint else probeDim(vecs)
     def emptyLvl = vecs.sparkSession.emptyDataFrame
       .select(lit(0L).as("parent"), lit(0L).as("cid"),
@@ -1469,52 +1455,36 @@ object Similarity {
       topByRounded(cents, va, math.sqrt(n2), keep)
     }
 
-  /** Cell affinity for the IVF coarse quantizer: cosine of every row in
-    * `df` to every centroid, as (idCol, cid, cs) with cs 4dp-rounded
-    * (both engines rank on the ROUNDED value, ties to the lowest cid).
-    *
-    * Shape: posexplode the vector, broadcast-equi-join the exploded
-    * centroid components on the dimension index, one hash-aggregate per
-    * (row, centroid) — BroadcastHashJoin + codegen'd agg, never a
-    * nested-loop join (the registry-wide cartesian gate stays clean).
-    * Cost O(rows × dim × nCent) — the inherent IVF assignment cost. */
-  private def cellAffinity(df: DataFrame, idCol: String, vecCol: String,
-      centExploded: DataFrame): DataFrame =
-    df.select(col(idCol), posexplode(col(vecCol))).toDF(idCol, "i", "x")
-      .join(broadcast(centExploded), "i")
-      .groupBy(col(idCol), col("cid"))
-      .agg(sum(col("x") * col("w")).as("d"),
-        sum(col("x") * col("x")).as("nx"),
-        sum(col("w") * col("w")).as("nc"))
-      .withColumn("cs", round(when(col("nx") === 0.0 || col("nc") === 0.0, 0.0)
-        .otherwise(col("d") / (sqrt(col("nx")) * sqrt(col("nc")))) + lit(1e-9), 4))
-      .select(col(idCol), col("cid"), col("cs"))
-
   /** IVF-Flat approximate top-k — the coarse-quantizer counterpart to the
     * hyperplane-LSH [[annTopK]]: `nCent` centroids partition the corpus
     * into cells (every candidate lives in exactly ONE cell — its nearest
     * centroid by rounded cosine, ties to the lowest centroid id); a query
     * probes its `nProbe` nearest cells and ranks exactly within them.
     *
-    * Centroids are a deterministic SALTED data sample (the `nCent`
-    * lowest hash60(vec_id), id tie-break) — a k-means-style trained
-    * quantizer would drop in here unchanged (swap the centroid frame),
-    * but the sample keeps the whole index a pure function of the input,
-    * so the DuckDB oracle replays assignment, probing, and ranking
-    * EXACTLY.
+    * The quantizer is a trained [[kmeansModel]] when `model` is given
+    * (nCent is then the model's size), else a deterministic SALTED data
+    * sample: the `nCent` lowest hash60(vec_id), id tie-break, not the
+    * `nCent` lowest ids — an id order that correlates with cluster
+    * structure (append-time ordering, label-sorted exports) would
+    * otherwise concentrate every centroid in one region. Either way the
+    * index is a pure function of the input, so the DuckDB oracle replays
+    * assignment, probing, and ranking EXACTLY.
     *
-    * Scale shape: assignment is one broadcast equi-join + aggregate (the
-    * centroid table is the broadcast model, nCent×dim doubles); the
-    * probe→cell join runs on BARE ids co-partitioned by cell — a
-    * candidate pair costs two longs in the shuffle, and because each
-    * candidate has exactly one cell there are no duplicate pairs and no
-    * dedup exchange (vs. the LSH path's nTables-way dedup). Vectors
-    * re-attach to survivors only. Per query the exact work is
-    * ~nProbe/nCent of the corpus — the IVF-Flat contract. */
+    * Scale shape: the model is collected at plan time (nCent×dim doubles,
+    * capped by [[QuantizerModelMaxDoubles]]) and assignment is ONE JIT'd
+    * [[topByRounded]] loop per row ([[ivfProbeFrame]], [[cosineDedupIvf]]'s
+    * discipline) — no per-(row × centroid × dim) join rows, so the cell
+    * count may grow with the corpus (constant occupancy). Rows cross the
+    * cell-keyed shuffle once each WITH their packed unit vector, and pairs
+    * are scored by the codegen'd DotPacked inside the join's streamed
+    * output: because each candidate has exactly one cell there are no
+    * duplicate pairs and no dedup exchange (vs. the LSH path's
+    * nTables-way dedup), and no per-PAIR vector re-attach join. Per query
+    * the exact work is ~nProbe/nCent of the corpus — the IVF-Flat
+    * contract. */
   def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int, nCent: Int,
       nProbe: Int, dimHint: Int = -1,
-      model: Seq[(Long, Array[Double])] = Nil,
-      loopAssign: Boolean = false): DataFrame = {
+      model: Seq[(Long, Array[Double])] = Nil): DataFrame = {
     val dim = if (dimHint > 0) dimHint
       else probeDim(candidates)
     if (dim == 0)
@@ -1525,96 +1495,35 @@ object Similarity {
       when(size(vec) === dim, toDouble(vec))
         .otherwise(raise_error(concat(lit(s"ivfTopK: expected dim $dim, got "),
           coalesce(size(vec).cast("string"), lit("NULL")))))
-    val qv = queries.select(col("vec_id").as("qid"), checked(col("embedding")).as("qv"))
-    val cv = candidates.select(col("vec_id").as("nid"), checked(col("embedding")).as("nv"))
-    // coarse quantizer: a trained [[kmeansModel]] when provided (nCent is
-    // then the model's size), else a SALTED data sample — the nCent
-    // lowest hash60(vec_id), id tie-break, not the nCent lowest ids: an
-    // id order that correlates with cluster structure (append-time
-    // ordering, label-sorted exports) would otherwise concentrate every
-    // centroid in one region (the same bias [[cosineDedupIvf]]'s sample
-    // path was salted against in round 8). Still a pure function of the
-    // input, so the oracle replays it; both forms are small, so the
-    // exploded frame broadcasts.
-    //
-    // loopAssign = true swaps the exploded cellAffinity join for the
-    // plan-time-model JIT loop ([[cosineDedupIvf]]'s discipline —
-    // identical rounded values, same lowest-cid ties): REQUIRED once
-    // nCent grows with the corpus (constant-occupancy cell counts), where
-    // the exploded join is n×nCent×dim ROWS — 40G at 200k vectors/3125
-    // cells, measured 615 s vs ~20 s for the loop doing the same flops.
-    // The default exploded join stays for the small-fixed-nCent entries
-    // whose model the driver should not hold.
-    //
-    // The two assignment strategies are separate complete pipelines each
-    // ending in [[rankTopK]] — a plain if/else dispatch, not a shared
-    // (cells, probes) binding (the loop branch scores pairs packed inside
-    // the cell join and never produces bare cell frames).
-    def loopAssignedTopK(): DataFrame = {
-      val cents: Array[(Long, Array[Double], Double)] =
-        if (model.nonEmpty) model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-        else cv.orderBy(TextFunctions.hash60(col("nid").cast("string")), col("nid"))
-          .limit(nCent)
-          .collect().map(r => withNorm3(r.getLong(0), r.getSeq[Double](1).toArray))
-      require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-        s"ivfTopK: quantizer model ${cents.length} centroids x $dim dims exceeds the " +
-          s"$QuantizerModelMaxDoubles-double driver/closure cap — use ivfTopKHier")
-      // rows cross the cell shuffle WITH their packed unit vector (the
-      // cosineDedupIvf verify shape): pairs are scored by the codegen'd
-      // DotPacked inside the join's streamed output. The legacy branch's
-      // per-PAIR payload re-attach (bare-id candidates joined back to
-      // both vector tables) is fine for its fixed tiny query batches but
-      // is candidates × dim×8 bytes of join I/O once the query set grows
-      // with the corpus — the round-7 dedup lesson, measured again here
-      // (157 s → 45 s at the 100× check).
-      val cellsF = ivfProbeFrame(cv.toDF("id", "v"), cents, 1)
-        .select(element_at(col("pcs"), 1).as("cell"), col("id").as("nid"),
-          col("vp").as("pn"))
-      val probesF = ivfProbeFrame(qv.toDF("id", "v"), cents, nProbe)
-        .select(explode(col("pcs")).as("cell"), col("id").as("qid"),
-          col("vp").as("pq"))
-      val sims = probesF.join(cellsF, "cell").where(col("qid") =!= col("nid"))
-        .withColumn("sim",
-          org.apache.spark.sql.GraftColumns.dotPacked(col("pq"), col("pn")))
-      rankTopK(sims, k)
-    }
-    def explodedTopK(): DataFrame = {
-      val centEx = if (model.nonEmpty) {
-        val spark = candidates.sparkSession
-        import spark.implicits._
-        model.flatMap { case (cid, ws) =>
-          ws.iterator.zipWithIndex.map { case (x, i) => (cid, i, x) } }
-          .toDF("cid", "i", "w")
-      } else candidates
-        .orderBy(TextFunctions.hash60(col("vec_id").cast("string")), col("vec_id"))
+    val qv = queries.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
+    val cv = candidates.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
+    val cents: Array[(Long, Array[Double], Double)] =
+      if (model.nonEmpty) model.map { case (cid, w) => withNorm3(cid, w) }.toArray
+      else cv.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id"))
         .limit(nCent)
-        .select(col("vec_id").as("cid"), posexplode(toDouble(col("embedding"))))
-        .toDF("cid", "i", "w")
-      val wNear = org.apache.spark.sql.expressions.Window
-        .partitionBy("nid").orderBy(col("cs").desc, col("cid"))
-      val cellsF = cellAffinity(cv, "nid", "nv", centEx)
-        .withColumn("rn", row_number().over(wNear)).where(col("rn") === 1)
-        .select(col("nid"), col("cid").as("cell"))
-      val wProbe = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("cs").desc, col("cid"))
-      val probesF = cellAffinity(qv, "qid", "qv", centEx)
-        .withColumn("rn", row_number().over(wProbe)).where(col("rn") <= nProbe)
-        .select(col("qid"), col("cid").as("cell"))
-      val cand = probesF.join(cellsF, "cell").where(col("qid") =!= col("nid"))
-        .select("qid", "nid")
-        .join(qv, "qid").join(cv, "nid")
-      rankTopK(cand.withColumn("sim", cosLoop(col("qv"), col("nv"))), k)
-    }
-    if (loopAssign) loopAssignedTopK() else explodedTopK()
+        .collect().map(r => withNorm3(r.getLong(0), r.getSeq[Double](1).toArray))
+    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
+      s"ivfTopK: quantizer model ${cents.length} centroids x $dim dims exceeds the " +
+        s"$QuantizerModelMaxDoubles-double driver/closure cap — use ivfTopKHier")
+    val cellsF = ivfProbeFrame(cv, cents, 1)
+      .select(element_at(col("pcs"), 1).as("cell"), col("id").as("nid"),
+        col("vp").as("pn"))
+    val probesF = ivfProbeFrame(qv, cents, nProbe)
+      .select(explode(col("pcs")).as("cell"), col("id").as("qid"),
+        col("vp").as("pq"))
+    val sims = probesF.join(cellsF, "cell").where(col("qid") =!= col("nid"))
+      .withColumn("sim",
+        org.apache.spark.sql.GraftColumns.dotPacked(col("pq"), col("pn")))
+    rankTopK(sims, k)
   }
 
-  /** Shared (qid, nid, sim) → rounded top-k tail of [[ivfTopK]]'s two
-    * assignment branches: rank on (4dp-rounded sim DESC, nid). */
+  /** The (qid, nid, sim) → rounded top-k tail shared by [[bruteTopK]],
+    * [[annTopK]] and [[ivfTopK]]: rank on (4dp-rounded sim DESC, nid). */
   private def rankTopK(sims: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(round(col("sim") + lit(1e-9), 4).desc, col("nid"))
+      .partitionBy("qid").orderBy(r4(col("sim")).desc, col("nid"))
     sims.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim") + lit(1e-9), 4).as("sim"),
+      .select(col("qid"), col("nid"), r4(col("sim")).as("sim"),
         col("rank").cast("long").as("rank"))
   }
 
@@ -1652,35 +1561,30 @@ object Similarity {
     val cand = q.join(c, Seq("table", "bucket")).where(col("qid") =!= col("nid"))
       .select("qid", "nid").dropDuplicates("qid", "nid")
       .join(qv, "qid").join(cv, "nid")
-    val sims = cand.withColumn("sim", cosLoop(col("qv"), col("nv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("qid").orderBy(round(col("sim") + lit(1e-9), 4).desc, col("nid"))
-    sims.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-      .select(col("qid"), col("nid"), round(col("sim") + lit(1e-9), 4).as("sim"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(cand.withColumn("sim", cosLoop(col("qv"), col("nv"))), k)
   }
 
   /** Lloyd k-means over the embedding column: `iters` assignment passes
     * with a centroid update between each — the TRAINED coarse quantizer
-    * (vs [[ivfTopK]]'s data-sample one; its scaladoc's "a trained
-    * quantizer would drop in here unchanged" slot is this). Returns the
-    * final assignment (vec_id, cell, aff) with `aff` the 4dp-rounded
-    * cosine to the winning centroid.
+    * (vs [[ivfTopK]]'s data-sample one, which takes this model in its
+    * `model` slot). Returns the final assignment (vec_id, cell, aff) with
+    * `aff` the 4dp-rounded cosine to the winning centroid.
     *
     * Fully deterministic, so the DuckDB oracle replays every pass
-    * exactly: init = the embeddings of the `nCent` lowest vec_ids;
-    * assignment = argmax of ROUNDED cosine, ties to the lowest centroid
-    * id; update = per-dimension mean over members (cells that lose all
-    * members keep their previous centroid, k never shrinks).
+    * exactly: init = the embeddings of the `nCent` lowest hash60(vec_id)s
+    * (id tie-break); assignment = argmax of ROUNDED cosine, ties to the
+    * lowest centroid id; update = per-dimension mean over members (cells
+    * that lose all members keep their previous centroid, k never
+    * shrinks).
     *
     * Scale shape (the MLlib KMeans discipline): the MODEL lives on the
-    * driver — nCent×dim doubles, collected once per pass — and ships
-    * back as a broadcast of exploded (cid, i, w) rows; the DATA never
-    * moves. Assignment is [[cellAffinity]]'s broadcast-join aggregate;
+    * driver — nCent×dim doubles, collected once per pass — and ships in
+    * the assignment UDF's closure; the DATA never moves. Assignment is
+    * ONE JIT'd [[topByRounded]] loop per row, so a pass adds no exchange;
     * the update's posexplode+avg hash-aggregates with map-side partials,
     * so its shuffle carries #partitions × nCent × dim partial sums, not
-    * N×dim member rows. Driver loop = `iters` rounds, same bounded-
-    * iteration contract as Graph.connectedComponents. */
+    * N×dim member rows. Driver loop = `iters` rounds, same
+    * bounded-iteration contract as Graph.connectedComponents. */
   def kmeansAssign(vecs: DataFrame, nCent: Int, iters: Int,
       dimHint: Int = -1): DataFrame = {
     require(nCent > 0 && iters > 0, s"kmeansAssign: nCent=$nCent iters=$iters must be positive")
@@ -1698,26 +1602,19 @@ object Similarity {
     * ready to drop into [[ivfTopK]]'s / [[cosineDedupIvf]]'s `model` slot
     * as the coarse quantizer. Runs `iters` Lloyd passes like
     * [[kmeansAssign]] (the final assignment is discarded; only the update
-    * after pass `iters - 1` matters, so training cost is identical).
-    *
-    * `loopAssign = true` swaps [[cellAffinity]]'s exploded broadcast-join
-    * assignment for the same plan-time-model JIT'd loop
-    * [[cosineDedupIvf]] probes with: identical rounded values (shared
-    * +1e-9 HALF_UP 4dp, ties to the lowest cid), but the per-pass cost is
-    * one loop per row instead of n×nCent×dim JOIN ROWS — at √n-scale
-    * centroid counts the exploded join is the formulation the 10× check
-    * measured at 127 s vs ~13 s for the loop. Oracles replay either
-    * path unchanged. */
+    * after pass `iters - 1` matters, so training cost is identical). The
+    * per-pass cost is one JIT'd loop per row whatever nCent is, so
+    * √n- and n/occupancy-scale centroid counts train in the same shape. */
   def kmeansModel(vecs: DataFrame, nCent: Int, iters: Int,
-      dimHint: Int = -1, loopAssign: Boolean = false): Seq[(Long, Array[Double])] = {
+      dimHint: Int = -1): Seq[(Long, Array[Double])] = {
     require(nCent > 0 && iters > 0, s"kmeansModel: nCent=$nCent iters=$iters must be positive")
     val dim = if (dimHint > 0) dimHint
       else probeDim(vecs)
-    if (dim == 0) Nil else kmeansLoop(vecs, nCent, iters, dim, loopAssign)._2
+    if (dim == 0) Nil else kmeansLoop(vecs, nCent, iters, dim)._2
   }
 
   private def kmeansLoop(vecs: DataFrame, nCent: Int, iters: Int,
-      dim: Int, loopAssign: Boolean = false): (DataFrame, Seq[(Long, Array[Double])]) = {
+      dim: Int): (DataFrame, Seq[(Long, Array[Double])]) = {
     val spark = vecs.sparkSession
     import spark.implicits._
     def checked(vec: Column): Column =
@@ -1734,37 +1631,19 @@ object Similarity {
     var model: Seq[(Long, Array[Double])] =
       cv.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id")).limit(nCent)
         .as[(Long, Array[Double])].collect().toSeq
-    def centFrame: DataFrame = model
-      .flatMap { case (cid, ws) => ws.iterator.zipWithIndex.map { case (x, i) => (cid, i, x) } }
-      .toDF("cid", "i", "w")
-    val wA = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("cs").desc, col("cid"))
-    // loopAssign: argmax over the current model inside ONE JIT'd loop per
-    // row — numerically identical to cellAffinity+window (same rounding,
-    // same lowest-cid tie-break), minus the n×nCent×dim exploded join
-    def loopAssigned: DataFrame = {
-      val cents = model.map { case (cid, ws) =>
-        var nw = 0.0; var i = 0
-        while (i < ws.length) { nw += ws(i) * ws(i); i += 1 }
-        (cid, ws, math.sqrt(nw))
-      }.toArray
-      // argmax via [[topByRounded]]'s primitive scoring loop + exact
-      // rounded ranking over the provably-sufficient candidate set —
-      // identical (cell, aff) to rounding every centroid, minus the
-      // per-(row × centroid) BigDecimal the 100× check measured dominant
-      val bestU = bestCellAffUdf(cents)
-      cv.withColumn("bc", bestU(col("v")))
-        .select(col("id"), col("bc._1").as("cell"), col("bc._2").as("aff"))
-    }
     var asg: DataFrame = null
     for (pass <- 1 to iters) {
-      asg = if (loopAssign) loopAssigned
-      else cellAffinity(cv, "id", "v", centFrame)
-        .withColumn("rn", row_number().over(wA)).where(col("rn") === 1)
-        .select(col("id"), col("cid").as("cell"), col("cs").as("aff"))
+      // argmax over the current model via [[topByRounded]]'s primitive
+      // scoring loop + exact rounded ranking over the provably-sufficient
+      // candidate set: (cell, aff) as if every centroid were rounded,
+      // minus the per-(row × centroid) BigDecimal
+      val bestU = bestCellAffUdf(model.map { case (cid, w) => withNorm3(cid, w) }.toArray)
+      val scored = cv.withColumn("bc", bestU(col("v")))
+      asg = scored.select(col("id"), col("bc._1").as("cell"), col("bc._2").as("aff"))
       if (pass < iters) {
-        val means = asg.join(cv, "id")
-          .select(col("cell"), posexplode(col("v")))
+        // the update reads each member's vector off the row it was
+        // assigned on — no join back to the corpus
+        val means = scored.select(col("bc._1").as("cell"), posexplode(col("v")))
           .groupBy("cell", "pos").agg(avg("col").as("m"))
           .collect()
           .groupBy(_.getLong(0))
@@ -1851,7 +1730,7 @@ object Similarity {
     val adc = codes.join(broadcast(qTable), Seq("j", "c"))
       .where(col("qid") =!= col("nid"))
       .groupBy("qid", "nid")
-      .agg(round(sum(col("d2")) + lit(1e-9), 4).as("adist"))
+      .agg(r4(sum(col("d2"))).as("adist"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("adist").asc, col("nid").asc)
     adc.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
@@ -1883,9 +1762,6 @@ object Similarity {
     require(cb.forall(_.length == dim),
       s"pqEncoders: codebook vectors must all have dim $dim")
     val kEff = cb.length // < ksub only when the corpus is smaller than ksub
-    // rounded per-subspace squared L2 — the cross-engine argmin/sum value
-    def r4d(x: Double): Double =
-      BigDecimal(x + 1e-9).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
     // one boxed→primitive copy per ROW (the encode loop otherwise reads
     // the boxed Seq m×kEff×dsub = dim×kEff times per row — the same
     // boxing tax the 100× scale check measured dominant in the IVF
@@ -1895,7 +1771,7 @@ object Similarity {
       while (i < dsub) {
         val dd = v(j * dsub + i) - cb(c)(j * dsub + i); ss += dd * dd; i += 1
       }
-      r4d(ss)
+      HalfUp.rd(ss) // the cross-engine argmin/sum value
     }
     val codesU = udf { v: Seq[Double] =>
       val va = v.toArray
@@ -1939,9 +1815,8 @@ object Similarity {
         .otherwise(raise_error(concat(lit(s"ivfPqTopK: expected dim $dim, got "),
           coalesce(size(vec).cast("string"), lit("NULL")))))
     // cell assignment via a plan-time centroid model + one JIT'd loop per
-    // row (same discipline as the PQ encode; the exploded-join
-    // cellAffinity shape that ivfTopK keeps measured ~1.5 s more here) —
-    // identical math: rounded cosine argmax, ties to the lowest cid.
+    // row (same discipline as the PQ encode and [[ivfTopK]]; an exploded
+    // (row, centroid, dim) join measured ~1.5 s more here) — identical math: rounded cosine argmax, ties to the lowest cid.
     // Centroids are the SALTED sample (hash60(vec_id) order, id
     // tie-break), matching [[ivfTopK]]/[[pqEncoders]].
     val cents: Array[(Long, Array[Double])] = candidates
@@ -1958,11 +1833,7 @@ object Similarity {
     // the 100× scale check measured dominant in the dedup's twin loop).
     // topByRounded ranks ties by cid VALUE (not array position), so the
     // salted — non-cid-ascending — centroid order is tie-safe.
-    val centsN: Array[(Long, Array[Double], Double)] = cents.map { case (cid, w) =>
-      var nw = 0.0; var i = 0
-      while (i < w.length) { nw += w(i) * w(i); i += 1 }
-      (cid, w, math.sqrt(nw))
-    }
+    val centsN = cents.map { case (cid, w) => withNorm3(cid, w) }
     val bestCellU = bestCellUdf(centsN)
     val probeCellsU = topCellsUdf(centsN, nProbe)
     val cells = candidates
@@ -1981,7 +1852,7 @@ object Similarity {
     val adc = pairs.join(codes, "nid")
       .join(broadcast(qTable), Seq("qid", "j", "c"))
       .groupBy("qid", "nid")
-      .agg(round(sum(col("d2")) + lit(1e-9), 4).as("adist"))
+      .agg(r4(sum(col("d2"))).as("adist"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("adist").asc, col("nid").asc)
     adc.withColumn("rank", row_number().over(w)).where(col("rank") <= k)

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.core.Timeline
+import graft.functions.HalfUp
+import graft.functions.HalfUp.r4
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -816,7 +818,7 @@ object Augurs {
     val c = pairs.groupBy((t.keys.map(col) :+ col("lag")): _*)
       .agg(corr(col("x"), col("y")).as("c"), count(lit(1)).as("n"))
       .where(col("n") >= minPairs && col("c").isNotNull)
-      .withColumn("cr", round(col("c") + lit(1e-9), 4))
+      .withColumn("cr", r4(col("c")))
     val wBest = org.apache.spark.sql.expressions.Window
       .partitionBy(t.keys.map(col): _*).orderBy(col("cr").desc, col("lag"))
     c.withColumn("__rk", row_number().over(wBest)).where(col("__rk") === 1)
@@ -856,8 +858,7 @@ object Augurs {
         if (vx > 0.0 && vy > 0.0) {
           val c = (sxy - sx * sy / n) / math.sqrt(vx * vy)
           if (java.lang.Double.isFinite(c)) {
-            val cr = BigDecimal(c + 1e-9)
-              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+            val cr = HalfUp.rd(c)
             if (cr > bestCr) { bestCr = cr; bestLag = lag }
           }
         }
@@ -903,9 +904,6 @@ object Augurs {
     private var n = 0L // total values appended
     def append(v: Double): Unit = { ring((n % window).toInt) = v; n += 1 }
     def len: Int = math.min(n, window.toLong).toInt
-    /** v at global position `pos` (must be within the trailing window). */
-    def at(pos: Long): Double = ring((pos % window).toInt)
-    def total: Long = n
     /** The current trailing window, oldest-first. The returned array is
       * REUSED across calls — consume before the next append. */
     def snapshot(): Array[Double] = {
@@ -942,98 +940,6 @@ object Augurs {
         acfBestLagCore(
           scala.collection.immutable.ArraySeq.unsafeWrapArray(ring.snapshot()),
           maxLag, minPairs).map { case (lag, cr) => Seq(lag.toDouble, cr) }
-      }
-    }
-    scanned.select((t.keys.map(col) :+ col("ts") :+ col("seq") :+
-      col("__lag").cast("long").as("best_lag") :+
-      col("__cr").as("best_corr")): _*)
-  }
-
-  /** TRUE O(maxLag)-per-row incremental rolling seasons: per-lag running
-    * sums (Σx, Σy, Σx², Σy², Σxy) maintained by adding the entering pair
-    * and subtracting the expiring pair at each window edge, with
-    * [[acfBestLagCore]]'s exact rounding + tie-break replayed over the
-    * sums. NOT the registry form, by measurement and by contract:
-    *
-    *  - CONTRACT: running-sum add/subtract re-associates the float
-    *    additions, so emissions are NOT bit-identical to the refit core —
-    *    AugursSpec measures the drift on the ParitySpec fixture (4dp
-    *    emissions agree on every row there, but low-bit sum drift is
-    *    unbounded over an arbitrarily long stream, so a 4dp flip at a
-    *    .00005 boundary is a when-not-if at scale). The oracle gate needs
-    *    determinism at every SF, so the bit-identical refit scan keeps
-    *    the registry slot (the documented negative result r17 item 5
-    *    anticipated).
-    *  - MEASUREMENT: at the registry's window=24/maxLag=6 the refit is
-    *    ~10² flops/row — vehicle overhead dominates, and this form
-    *    measures within noise of [[seasonsRollingScan]]. It exists for
-    *    the large-window/large-lag regime (window ≫ maxLag ≫ 10²), where
-    *    O(maxLag) beats O(window·maxLag) asymptotically. */
-  def seasonsRollingIncremental(t: Timeline, window: Int, maxLag: Int,
-      minPairs: Int = 10): DataFrame = {
-    require(window > maxLag, s"seasonsRollingIncremental: window ($window) must exceed maxLag ($maxLag)")
-    val nLags = maxLag - 1 // lags 2..maxLag
-    val scanned = graft.core.KeyedScan.scanDouble(
-      t.ticks, t.keys, t.valueCol, Seq("__lag", "__cr")) { () =>
-      val ring = new Ring(window)
-      val sx = new Array[Double](nLags); val sy = new Array[Double](nLags)
-      val sxx = new Array[Double](nLags); val syy = new Array[Double](nLags)
-      val sxy = new Array[Double](nLags)
-      (_: Long, v: Double) => {
-        val p = ring.total // global 0-based position of the incoming value
-        // expire BEFORE the ring slot for p (= the slot of p-window) is
-        // overwritten: when the window start advances from s_old = p-window
-        // to s = p-window+1, pair (x = v[s_old+lag], y = v[s_old]) leaves
-        if (p >= window) {
-          val sOld = p - window
-          val yOld = ring.at(sOld)
-          var li = 0
-          while (li < nLags) {
-            val lag = li + 2
-            val xOld = ring.at(sOld + lag)
-            sx(li) -= xOld; sy(li) -= yOld
-            sxx(li) -= xOld * xOld; syy(li) -= yOld * yOld
-            sxy(li) -= xOld * yOld
-            li += 1
-          }
-        }
-        ring.append(v)
-        val s = math.max(0L, p - window + 1)
-        var li = 0
-        while (li < nLags) {
-          val lag = li + 2
-          if (p - lag >= s) { // entering pair (x = v[p], y = v[p-lag])
-            val y = ring.at(p - lag)
-            sx(li) += v; sy(li) += y
-            sxx(li) += v * v; syy(li) += y * y
-            sxy(li) += v * y
-          }
-          li += 1
-        }
-        // replay acfBestLagCore's selection exactly: same rounding, same
-        // (cr max, smallest lag) tie-break, same vx/vy/finite guards
-        val len = ring.len
-        var bestLag = -1
-        var bestCr = Double.NegativeInfinity
-        li = 0
-        while (li < nLags) {
-          val lag = li + 2
-          val n = len - lag
-          if (n >= minPairs) {
-            val vx = sxx(li) - sx(li) * sx(li) / n
-            val vy = syy(li) - sy(li) * sy(li) / n
-            if (vx > 0.0 && vy > 0.0) {
-              val c = (sxy(li) - sx(li) * sy(li) / n) / math.sqrt(vx * vy)
-              if (java.lang.Double.isFinite(c)) {
-                val cr = BigDecimal(c + 1e-9)
-                  .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-                if (cr > bestCr) { bestCr = cr; bestLag = lag }
-              }
-            }
-          }
-          li += 1
-        }
-        if (bestLag < 0) None else Some(Seq(bestLag.toDouble, bestCr))
       }
     }
     scanned.select((t.keys.map(col) :+ col("ts") :+ col("seq") :+

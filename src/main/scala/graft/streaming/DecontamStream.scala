@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.HalfUp.r4
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -35,8 +36,7 @@ object DecontamStream {
     val a = arrivals.toDF()
     val p = evalProbes.select(col("cell").as("pcell"), col("evp"))
     a.join(p, a("cell") === p("pcell") &&
-        round(org.apache.spark.sql.GraftColumns.dotPacked(a("vp"), p("evp"))
-          + lit(1e-9), 4) >= tau,
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(a("vp"), p("evp"))) >= tau,
         "left_outer")
       .select(col("id").as("vec_id"), col("cell"), col("aff"),
         col("evp").isNull.as("keep"))

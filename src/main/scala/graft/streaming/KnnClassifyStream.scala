@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.HalfUp.r4
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -44,8 +45,8 @@ object KnnClassifyStream {
     import spark.implicits._
     val a = arrivals.select(col("qid"), explode(col("probes")).as("cell"), col("qp"))
     val cand = a.join(corpusCells, "cell").where(col("qid") =!= col("nid"))
-      .withColumn("sim", round(
-        org.apache.spark.sql.GraftColumns.dotPacked(col("qp"), col("np")) + lit(1e-9), 4))
+      .withColumn("sim",
+        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("qp"), col("np"))))
       .select(col("qid"), col("nid"), col("nlabel"), col("sim"))
       .as[(Long, Long, Long, Double)]
     val kk = k

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Similarity
+import graft.functions.HalfUp.r4
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -17,10 +18,9 @@ final case class OutlierModel(model: Seq[(Long, Array[Double])], dim: Int,
   * statistics FREEZE over the stored corpus ([[fit]] — the steady-state
   * discipline of DsirStream's frozen λ and KnnClassifyStream's frozen
   * index), then arriving vectors score STATELESSLY per micro-batch:
-  * the shared JIT assignment loop (identical rounded affinities and
-  * lowest-cid ties as the batch op's exploded join —
-  * [[Similarity.incrementalAssignFrame]], the one definition both
-  * execution modes use), a broadcast join against the ≤nCent-row stats
+  * the shared JIT assignment loop (the batch op's kmeans kernel —
+  * [[Similarity.incrementalAssignFrame]] runs the same rounded-argmax,
+  * lowest-cid-tie loop), a broadcast join against the ≤nCent-row stats
   * table, and the same rounded-boundary comparison. No state, no
   * watermark; an arrival's flag is final the moment it lands — the
   * irrevocability contract every live twin keeps.
@@ -38,8 +38,8 @@ object OutlierStream {
     val model = Similarity.kmeansModel(corpus, nCent, iters, dimHint = dim)
     val asg = Similarity.incrementalAssignFrame(corpus, model, dim)
     val stats = asg.groupBy("cell")
-      .agg(round(avg(col("aff")) + lit(1e-9), 4).as("mu"),
-        round(coalesce(stddev_samp(col("aff")), lit(0.0)) + lit(1e-9), 4).as("sd"))
+      .agg(r4(avg(col("aff"))).as("mu"),
+        r4(coalesce(stddev_samp(col("aff")), lit(0.0))).as("sd"))
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     OutlierModel(model, dim, stats, nSigma)
   }

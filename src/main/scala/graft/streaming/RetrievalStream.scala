@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
-import graft.functions.Similarity
+import graft.functions.{HalfUp, Similarity}
+import graft.functions.HalfUp.r4
 
 /** One arriving hybrid-retrieval query: its sparse term set and its
   * dense embedding (already double-typed). */
@@ -83,9 +84,6 @@ object RetrievalStream {
     SparseIndex(tf.join(df, "tok").join(dls, "id").persist(), n, avgdl)
   }
 
-  private def rdp(x: Double, scale: Int): Double =
-    BigDecimal(x + 1e-9).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** arrivals ⋈ frozen index → ≤ `kOut` [[RetrievalHit]]s per arrival.
     * `dense` is the frozen (nid, nv: Array[Double]) embedding frame. */
   def hits(arrivals: Dataset[RetrievalQuery], idx: SparseIndex, dense: DataFrame,
@@ -105,7 +103,7 @@ object RetrievalStream {
     val denseCand = arrivals.select(col("qid"), col("qv"))
       .join(dense, col("qid") =!= col("nid"))
       .select(col("qid"), col("nid").as("id"), lit(1).as("leg"),
-        round(Similarity.cosLoop(col("qv"), col("nv")) + lit(1e-9), 4).as("v"))
+        r4(Similarity.cosLoop(col("qv"), col("nv"))).as("v"))
       .as[Cand]
     // local top-kLeg per arrival before the shuffle: a superset of the
     // global top-kLeg survives any partitioning, so the group sees every
@@ -132,7 +130,7 @@ object RetrievalStream {
           // groupBy), round to the grid, rank (score DESC, id ASC)
           val sums = mutable.Map.empty[Long, Double]
           sp.foreach(c => sums.update(c.id, sums.getOrElse(c.id, 0.0) + c.v))
-          val rs = sums.toSeq.map { case (id, s) => (id, rdp(s, 4)) }
+          val rs = sums.toSeq.map { case (id, s) => (id, HalfUp.rd(s)) }
             .sortBy { case (id, s) => (-s, id) }.take(kL)
             .zipWithIndex.map { case ((id, _), i) => id -> (i + 1L) }.toMap
           val rd = dn.sortBy(c => (-c.v, c.id)).take(kL)
@@ -140,7 +138,7 @@ object RetrievalStream {
           val fused = (rs.keySet ++ rd.keySet).toSeq.map { id =>
             val f = rs.get(id).map(r => 1.0 / (60.0 + r)).getOrElse(0.0) +
               rd.get(id).map(r => 1.0 / (60.0 + r)).getOrElse(0.0)
-            RetrievalHit(qid, id, rs.get(id), rd.get(id), rdp(f, 6))
+            RetrievalHit(qid, id, rs.get(id), rd.get(id), HalfUp.rd(f, 6))
           }
           fused.sortBy(h => (-h.rrf, h.id)).take(kO).iterator
       }

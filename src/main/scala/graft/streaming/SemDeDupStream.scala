@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.HalfUp
 import graft.functions.VecOps.dot
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
@@ -62,9 +63,6 @@ final case class CellKept(vps: Seq[Array[Byte]])
   * at constant occupancy; state is occ packed vectors per cell. */
 object SemDeDupStream {
 
-  private def round4(x: Double): Double =
-    BigDecimal(x + 1e-9).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** One cell's micro-batch step — the single definition both the
     * streaming runner and the spec's replay use. Cosine is the packed
     * dot (vectors are unit-normalized at pack), the same kernel the
@@ -73,9 +71,9 @@ object SemDeDupStream {
       tau: Double): (Seq[Array[Byte]], Seq[VecDecision]) = {
     val arr = arrivals.sortBy(a => a.id)
     val decisions = arr.map { x =>
-      val corpusDrop = kept.exists(k => round4(dot(k, x.vp)) >= tau)
+      val corpusDrop = kept.exists(k => HalfUp.rd(dot(k, x.vp)) >= tau)
       val batchDrop = arr.exists(o => o.id != x.id &&
-        round4(dot(o.vp, x.vp)) >= tau &&
+        HalfUp.rd(dot(o.vp, x.vp)) >= tau &&
         (o.aff < x.aff || (o.aff == x.aff && o.id < x.id)))
       VecDecision(x.id, x.cell, x.aff, !(corpusDrop || batchDrop))
     }

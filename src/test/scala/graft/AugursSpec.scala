@@ -74,10 +74,7 @@ class AugursSpec extends SparkSuite {
     // KeyedScan vehicle in round 18 (~3× throughput) on the strength of
     // bit-identical-by-shared-core; this gate proves it on the full
     // sf0.001 events table at the exact registry parameters, every
-    // emission, not just the ParitySpec fixture. The incremental-sums
-    // seasons form is compared too: its 4dp emissions agree HERE (real
-    // data, thousands of rows) — empirical, not a contract; the
-    // re-association scaladoc is why it still isn't the registry form.
+    // emission, not just the ParitySpec fixture.
     val t = Tables.events(spark, "/root/testdata/sf0.001")
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select(col("user_id").cast("string"), col("ts"), col("seq"),
@@ -87,8 +84,6 @@ class AugursSpec extends SparkSuite {
     assert(seasonsWin.nonEmpty, "non-vacuous")
     assert(rows(Augurs.seasonsRollingScan(t, 24, 6, 8)) == seasonsWin,
       "seasons scan vehicle must match the window form on every emission")
-    assert(rows(Augurs.seasonsRollingIncremental(t, 24, 6, 8)) == seasonsWin,
-      "incremental sums 4dp emissions must match on the sf0.001 events")
     val etsWin = rows(Augurs.forecastEtsRolling(t, 28, 7))
     assert(etsWin.nonEmpty, "non-vacuous")
     assert(rows(Augurs.forecastEtsRollingScan(t, 28, 7)) == etsWin,

@@ -498,15 +498,6 @@ class ParitySpec extends SparkSuite {
       .as[(String, Long, Double, Double)].collect().toSeq.sorted
     assert(scanForm == tlForm,
       "scan vehicle must replay the window form double-exactly (shared core)")
-    // the O(maxLag)/row running-sums form: 4dp EMISSIONS agree on this
-    // fixture (what the collected tuples are), though its sums are NOT
-    // bit-identical to the refit core — the documented re-association
-    // contract that keeps it out of the registry (Augurs scaladoc)
-    val incForm = Augurs.seasonsRollingIncremental(tl(fe), 16, 5, 4)
-      .select(col("key"), col("ts"), col("best_lag").cast("double"), col("best_corr"))
-      .as[(String, Long, Double, Double)].collect().toSeq.sorted
-    assert(incForm == tlForm,
-      "incremental sums must agree at the 4dp emission contract on the fixture")
     assert(agreed.count(_._1 == "a") >= 8 && agreed.count(_._1 == "b") >= 5,
       "both keys must emit (non-vacuous)")
     // the signals must actually be detected: final best lag = the period
@@ -630,9 +621,10 @@ class ParitySpec extends SparkSuite {
     // ninth live decision family: quantizer + per-cell (mu, sd) freeze
     // over the stored corpus; arrivals score statelessly. Feeding the
     // SAME corpus back as arrivals must reproduce the oracle-gated
-    // emb_outlier rows exactly — which also proves the JIT assignment
-    // loop and kmeansModel's returned centroids match the batch op's
-    // exploded-join assignment bit-for-bit after the shared rounding.
+    // emb_outlier rows exactly — the stream re-assigns every vector
+    // against kmeansModel's returned centroids, so this ties the frozen
+    // model to the batch op's final pass; the DuckDB oracle, which
+    // replays every Lloyd pass in SQL, is the reference for both.
     import graft.streaming.OutlierStream
     implicit val sqlCtx = spark.sqlContext
     val d = "/root/testdata/sf0.001"
@@ -673,7 +665,7 @@ class ParitySpec extends SparkSuite {
     val old = e.where(col("vec_id") % 5 =!= 0)
     val batch = e.where(col("vec_id") % 5 === 0)
     val k = math.max(1, math.ceil(old.count() / 64.0).toInt)
-    val model = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64, loopAssign = true)
+    val model = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64)
     val kept = Similarity.semDedup(old, 0.4, model, dimHint = 64)
       .where(col("keep")).select(col("vec_id"), col("cell"))
       .join(old.select(col("vec_id"), col("embedding")), "vec_id")
@@ -713,7 +705,7 @@ class ParitySpec extends SparkSuite {
     val batch = e.where(col("label") =!= 9 && col("vec_id") % 5 === 0)
     val ev = e.where(col("label") === 9)
     val k = math.max(1, math.ceil(old.count() / 64.0).toInt)
-    val model = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64, loopAssign = true)
+    val model = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64)
     val probes = Similarity.evalProbeFrame(ev, model, nProbe = 4, dimHint = 64)
     val batchDec = Similarity
       .semanticDecontaminateIncremental(batch, probes, 0.4, model, dimHint = 64)

@@ -15,6 +15,27 @@ class PipelineSpec extends SparkSuite {
     (4L, "The quick brown fox jumps over the lazy cat")    // near-dup of 1
   ).toDF("doc_id", "text")
 
+  test("HalfUp: the JVM rounding equals the Column form, x.xxxx5 boundaries included") {
+    // streaming state and UDF loops emit HalfUp.rd where the batch op
+    // emits HalfUp.r4 — one value must come out of both on every double,
+    // above all at the 4dp half boundaries (and 1e-9 either side of
+    // them, where the nudge decides the side) and on negatives
+    val halves = (-20000 to 20000).map(i => i * 1e-4 + 5e-5)
+    val grid = (halves ++ halves.map(_ - 1e-9) ++ halves.map(_ - 2e-9) ++
+      halves.map(_ + 1e-9) ++ (-2000 to 2000).map(_ * 1e-4) ++
+      Seq(0.0, -0.0, 1e-9, -1e-9, 5e-10, 123456.78905, -123456.78905, 0.99995,
+        1.0 / 3, -2.0 / 3, math.Pi, 1e6 + 5e-5))
+    val got = grid.toDF("x").select(col("x"), graft.functions.HalfUp.r4(col("x")).as("r"))
+      .as[(Double, Double)].collect()
+    assert(got.length == grid.length)
+    val bad = got.filter { case (x, r) => graft.functions.HalfUp.rd(x) != r }
+    assert(bad.isEmpty, s"JVM and Column rounding disagree on ${bad.take(5).toSeq}")
+    // the nudge breaks an exact half toward +inf on both signs
+    assert(graft.functions.HalfUp.rd(0.00005) == 0.0001 &&
+      graft.functions.HalfUp.rd(-0.00005) == 0.0 &&
+      graft.functions.HalfUp.rd(0.12345, 6) == 0.12345)
+  }
+
   test("fingerprint is word-order invariant, content sensitive") {
     val fp = docs.select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
       .as[(Long, String)].collect().toMap
@@ -312,15 +333,14 @@ class PipelineSpec extends SparkSuite {
 
   test("IVF cosine dedup with the trained quantizer (the registry config) beats the sample") {
     // exactly the emb_dedup_cosine registry wiring: one Lloyd refinement
-    // (iters=2, loopAssign) over the n/occupancy lowest-id init, then the
+    // (iters=2) over the n/occupancy lowest-id init, then the
     // 6-probe dedup
     val d = "/root/testdata/sf0.001"
     val e = Tables.embeddings(spark, d)
     val n = e.count()
     val k = math.max(1, math.ceil(
       n.toDouble / Similarity.DedupCellOccupancy).toInt)
-    val trained = Similarity.kmeansModel(e, nCent = k, iters = 2, dimHint = 64,
-      loopAssign = true)
+    val trained = Similarity.kmeansModel(e, nCent = k, iters = 2, dimHint = 64)
     val found = Similarity.cosineDedupIvf(e, 0.4, nProbe = 6, dimHint = 64,
       model = trained).select("a", "b").as[(Long, Long)].collect().toSet
     // every reported pair is still a true pair (verify is exact regardless
@@ -639,7 +659,7 @@ class PipelineSpec extends SparkSuite {
       val old = in.where(col("vec_id") % 5 =!= 0)
       val batch = in.where(col("vec_id") % 5 === 0)
       val k = math.max(1, math.ceil(old.count() / 64.0).toInt)
-      val m = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64, loopAssign = true)
+      val m = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64)
       val kept = Similarity.semDedup(old, 0.4, m, dimHint = 64)
         .where(col("keep")).select(col("vec_id"), col("cell"))
         .join(old.select(col("vec_id"), col("embedding")), "vec_id")
@@ -1090,7 +1110,7 @@ class PipelineSpec extends SparkSuite {
     val corpus = e.where(col("label") =!= 9)
     val ev = e.where(col("label") === 9)
     val k = math.max(1, math.ceil(corpus.count() / 64.0).toInt)
-    val model = Similarity.kmeansModel(corpus, k, iters = 2, dimHint = 64, loopAssign = true)
+    val model = Similarity.kmeansModel(corpus, k, iters = 2, dimHint = 64)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
     val boot = rows(Similarity.semanticDecontaminate(corpus, ev, 0.4, model,

@@ -367,15 +367,21 @@ class PlanAuditSpec extends SparkSuite {
     assert(p.contains("HashAggregate"), "plane dots via hash aggregate")
   }
 
-  test("kmeans assignment: broadcast model join, group-limit in the argmax window") {
-    val p = plan("emb_kmeans")
-    // the model ships as a broadcast of exploded (cid, i, w) rows — the
-    // assignment must be BroadcastHashJoin + hash aggregate, never a
-    // nested loop over centroids
-    assert(p.contains("BroadcastHashJoin"),
-      "centroid model no longer broadcasts into the assignment join")
-    assert(p.contains("WindowGroupLimit"),
-      "argmax rn = 1 no longer pushes a group limit into the window")
+  test("kmeans assignment: the plan-time-model loop — no centroid join, no argmax window") {
+    // the model rides the assignment UDF's closure and the argmax runs
+    // inside that loop, so the final pass adds no operator beyond a
+    // Project: no BroadcastHashJoin against an exploded (cid, i, w)
+    // centroid frame (joined on the dimension index i), no row_number
+    // argmax Window, no nested loop over centroids
+    for (q <- Seq("emb_kmeans", "emb_cluster_cap", "emb_outlier")) {
+      val p = plan(q)
+      assert(!p.linesIterator.exists(l =>
+          l.contains("BroadcastHashJoin") && l.contains("[i#")),
+        s"$q: centroids joined back in as exploded (cid, i, w) rows:\n$p")
+      assert(!p.contains("Window"), s"$q: assignment grew an argmax window:\n$p")
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+        s"$q: assignment degenerated to a nested loop:\n$p")
+    }
   }
 
   test("incremental dedup: anti-join on the fingerprint key, no text in the exchange") {
@@ -387,13 +393,16 @@ class PlanAuditSpec extends SparkSuite {
 
   test("IVF ANN: equi-join candidates, group-limit pushed into the rank windows") {
     val p = plan("emb_ann_ivf")
-    // centroid assignment must be the broadcast equi-join + aggregate
-    // shape, never a nested loop (registry-wide gate repeats this), and
-    // the probe->cell candidate join must stay a keyed join
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-      "probe->cell candidate generation lost its equi-join")
-    // rn = 1 / rn <= nProbe / rank <= k must plan as WindowGroupLimit —
-    // per-partition top-k pruning before the full window sort
+    // centroid assignment and probing are the plan-time-model loop (a
+    // Project, never a nested loop — the registry-wide gate repeats
+    // this), and the probe->cell candidate join must stay a join keyed
+    // on the cell id: shuffled at scale, broadcast while the packed
+    // cell side is small (500 rows at this SF)
+    assert(p.linesIterator.exists(l =>
+        "(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \\[cell#".r.findFirstIn(l).isDefined),
+      s"probe->cell candidate generation lost its equi-join on cell:\n$p")
+    // rank <= k must plan as WindowGroupLimit — per-partition top-k
+    // pruning before the full window sort
     assert(p.contains("WindowGroupLimit"),
       "rank filters no longer push a group limit into the window")
   }
@@ -623,7 +632,7 @@ class PlanAuditSpec extends SparkSuite {
     // unambiguous in the plan text.
     val e = Tables.embeddings(spark, d)
     val model = graft.functions.Similarity.kmeansModel(e, nCent = 4, iters = 1,
-      dimHint = 64, loopAssign = true)
+      dimHint = 64)
     val dir = java.nio.file.Files.createTempDirectory("sdinc").toString
     e.select(col("vec_id"), (col("vec_id") % 4).as("cell"), col("embedding"))
       .write.mode("overwrite").parquet(s"$dir/corpus")
@@ -650,7 +659,7 @@ class PlanAuditSpec extends SparkSuite {
     // parquet path so the scan count is unambiguous in the plan text.
     val e = Tables.embeddings(spark, d)
     val model = graft.functions.Similarity.kmeansModel(e.where(col("label") =!= 9),
-      nCent = 4, iters = 1, dimHint = 64, loopAssign = true)
+      nCent = 4, iters = 1, dimHint = 64)
     val dir = java.nio.file.Files.createTempDirectory("decinc").toString
     graft.functions.Similarity.evalProbeFrame(e.where(col("label") === 9),
       model, nProbe = 4, dimHint = 64)

@@ -94,7 +94,7 @@ class ScaleProbeSpec extends SparkSuite {
     val k = math.max(1, math.ceil(
       n.toDouble / graft.functions.Similarity.DedupCellOccupancy).toInt)
     val model = graft.functions.Similarity.kmeansModel(e, nCent = k, iters = 2,
-      dimHint = 64, loopAssign = true)
+      dimHint = 64)
     val pf = graft.functions.Similarity.probeFrameForTest(e, model, nProbe = 6,
       dimHint = 64).cache()
     try {
@@ -116,7 +116,7 @@ class ScaleProbeSpec extends SparkSuite {
     // job at all (the count would show up here as one).
     val e = Tables.embeddings(spark, d)
     val model = graft.functions.Similarity.kmeansModel(e, nCent = 8, iters = 1,
-      dimHint = 64, loopAssign = true)
+      dimHint = 64)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
