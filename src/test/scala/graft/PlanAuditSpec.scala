@@ -367,7 +367,7 @@ class PlanAuditSpec extends SparkSuite {
     assert(p.contains("HashAggregate"), "plane dots via hash aggregate")
   }
 
-  test("kmeans assignment: the plan-time-model loop — no centroid join, no argmax window") {
+  test("kmeans assignment: plan-time-model loop, no centroid join, no argmax window") {
     // the model rides the assignment UDF's closure and the argmax runs
     // inside that loop, so the final pass adds no operator beyond a
     // Project: no BroadcastHashJoin against an exploded (cid, i, w)
