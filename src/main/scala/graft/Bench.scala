@@ -139,9 +139,8 @@ object Bench {
     * quiet certificate. The signal is CROSS-RUN: byte-identical code
     * makes self-load a constant, so if run B's wall is 1.2× run A's
     * and its chunk p50 is correspondingly higher, the premium is the
-    * box — demonstrated, not attributed. Per-query means land in
-    * the run record (`cap`/`capm`); the stdout line carries the
-    * run's [cpu_p50, cpu_p90, mem_p50, mem_p90]. Diagnostic-only this
+    * box — demonstrated, not attributed. The stdout line and the run
+    * record carry the run's [cpu_p50, cpu_p90, mem_p50, mem_p90]. Diagnostic-only this
     * round: no degraded-gate threshold until a few rounds calibrate
     * the self-load band.
     *
@@ -244,17 +243,8 @@ object Bench {
       parked = true
     }, "graft-capacity-tracer")
     def start(): this.type = { th.setDaemon(true); th.start(); this }
-    private def sumCount(q: java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double])
-        : (Int, Double) = {
-      var n = 0; var s = 0.0
-      val it = q.iterator()
-      while (it.hasNext) { s += it.next(); n += 1 }
-      (n, s)
-    }
-    /** ((cpu n, cpu sum), (mem n, mem sum)) so far — cheap snapshots for
-      * per-query windows. */
-    def snapshot(): ((Int, Double), (Int, Double)) =
-      (sumCount(cpuDurs), sumCount(memDurs))
+    /** (cpu, mem) chunks completed so far. */
+    def chunks: (Int, Int) = (cpuDurs.size, memDurs.size)
     private def pcts(q: java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double])
         : Seq[Double] = {
       val a = q.toArray(new Array[java.lang.Double](0)).map(_.doubleValue).sorted
@@ -270,7 +260,7 @@ object Bench {
     }
   }
 
-  /** Cumulative (steal, iowait, total) jiffies from /proc/stat's
+  /** Cumulative (steal, total) jiffies from /proc/stat's
     * aggregate cpu line — the HYPERVISOR'S own account of co-tenant
     * theft (round 18): `steal` counts time this VM's vCPUs were
     * runnable but the host ran someone else, which is invisible to
@@ -279,7 +269,7 @@ object Bench {
     * the ratio stays flat — precisely the blind spot runs 1–6 hit:
     * walls swinging 199→278 s on flat ctl AND flat tracer chunks).
     * Returns None off-Linux (recorded as absent, never fabricated). */
-  private[graft] def procStatSteal(): Option[(Long, Long, Long)] =
+  private[graft] def procStatSteal(): Option[(Long, Long)] =
     try {
       // readAllLines (not a Files.lines stream): the r18 form leaked the
       // stream's file descriptor on every call — twice per query per pass,
@@ -297,16 +287,15 @@ object Bench {
         // guest time and deflates the steal fraction right at the 1%
         // quiet gate (round-19 advisor)
         if (f.length < 8) None
-        else Some((f(7), f(4), f.take(8).sum))
+        else Some((f(7), f.take(8).sum))
       }
     } catch { case _: Throwable => None }
 
-  /** Steal and iowait FRACTIONS of total cpu jiffies between two
-    * [[procStatSteal]] snapshots. */
-  private[graft] def stealFrac(a: Option[(Long, Long, Long)],
-      b: Option[(Long, Long, Long)]): Option[(Double, Double)] =
-    for ((s0, w0, t0) <- a; (s1, w1, t1) <- b if t1 > t0)
-      yield (((s1 - s0).toDouble / (t1 - t0)), ((w1 - w0).toDouble / (t1 - t0)))
+  /** Steal FRACTION of total cpu jiffies between two [[procStatSteal]]
+    * snapshots. */
+  private[graft] def stealFrac(a: Option[(Long, Long)],
+      b: Option[(Long, Long)]): Option[Double] =
+    for ((s0, t0) <- a; (s1, t1) <- b if t1 > t0) yield (s1 - s0).toDouble / (t1 - t0)
 
   /** What [[ShuffleTally]] sums for one job group: shuffle-write bytes,
     * jobs started, stage attempts completed, their tasks and their summed
@@ -442,11 +431,9 @@ object Bench {
     * boundary step, where the round-17 start/end-only sampling was blind
     * to anything that recovered before the final reading). */
   /** `ctlb` = the continuous tracer's [p50, p90] chunk seconds over the
-    * whole run (empty if the tracer produced no samples); `cap` = per-
-    * query mean chunk seconds while that query ran (both passes), the
-    * per-query attribution surface (run record only — see
+    * whole run (empty if the tracer produced no samples; see
     * [[CapacityTracer]] for the cross-run reading discipline). */
-  /** `ctls`/`ctli` = per-pass hypervisor steal / iowait fractions from
+  /** `ctls` = per-pass hypervisor steal fractions from
     * /proc/stat (empty off-Linux); `caps` = per-query steal fraction,
     * KEPT-READING-MATCHED (r18 verdict #4, extended by the round-20
     * retry discipline) — each entry is the steal fraction of exactly
@@ -474,9 +461,8 @@ object Bench {
     * slow instance then carries its own JIT certificate next to its
     * steal/GC ones. Run record only, never the stdout line. */
   final case class Probes(ctl: Seq[Double], ctlp: Seq[Double], ctld: Seq[Double],
-      ctlb: Seq[Double] = Seq.empty, cap: Map[String, Double] = Map.empty,
-      capm: Map[String, Double] = Map.empty, ctls: Seq[Double] = Seq.empty,
-      ctli: Seq[Double] = Seq.empty, caps: Map[String, Double] = Map.empty,
+      ctlb: Seq[Double] = Seq.empty, ctls: Seq[Double] = Seq.empty,
+      caps: Map[String, Double] = Map.empty,
       shuf: Map[String, Long] = Map.empty, trc: String = "duty",
       att: Map[String, Int] = Map.empty,
       shufx: Map[String, Seq[Long]] = Map.empty,
@@ -686,12 +672,7 @@ object Bench {
     val ctl = scala.collection.mutable.ArrayBuffer.empty[Double]
     val ctlp = scala.collection.mutable.ArrayBuffer.empty[Double]
     val ctld = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val capN = scala.collection.mutable.Map.empty[String, Int]
-    val capS = scala.collection.mutable.Map.empty[String, Double]
-    val capMN = scala.collection.mutable.Map.empty[String, Int]
-    val capMS = scala.collection.mutable.Map.empty[String, Double]
     val ctls = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val ctli = scala.collection.mutable.ArrayBuffer.empty[Double]
     val mode = tracerMode()
     val tracer: Option[CapacityTracer] = mode match {
       case "off"  => None
@@ -731,8 +712,7 @@ object Bench {
       val build = ((if (built > 0) built else t1) - t0) / 1e9
       val gc = (gcMs() - gc0) / 1e3
       spark.sparkContext.clearJobGroup()
-      val steal = for ((s0, _, tj0) <- qSt0; (s1, _, tj1) <- procStatSteal()
-        if tj1 > tj0) yield (s1 - s0).toDouble / (tj1 - tj0)
+      val steal = stealFrac(qSt0, procStatSteal())
       // worst single-attempt JIT compilation seconds, recorded past 0.5 s
       // (see Probes.jitq — the slow-mode adjudication surface)
       val (jc1, _) = jitStat()
@@ -760,23 +740,9 @@ object Bench {
         // the RDD-layer sweep also drops leaked localCheckpoint blocks
         // (see [[isolate]]) so no query pays for a predecessor's storage
         isolate(spark)
-        val snap0 = tracer.map(_.snapshot())
         timeOne(name, fn, s"$name#$p", s"bench $name pass $p")
-        snap0.zip(tracer.map(_.snapshot())).foreach {
-          case (((cn0, cs0), (mn0, ms0)), ((cn1, cs1), (mn1, ms1))) =>
-            if (cn1 > cn0) {
-              capN(name) = capN.getOrElse(name, 0) + (cn1 - cn0)
-              capS(name) = capS.getOrElse(name, 0.0) + (cs1 - cs0)
-            }
-            if (mn1 > mn0) {
-              capMN(name) = capMN.getOrElse(name, 0) + (mn1 - mn0)
-              capMS(name) = capMS.getOrElse(name, 0.0) + (ms1 - ms0)
-            }
-        }
       }
-      stealFrac(passSt0, procStatSteal()).foreach { case (s, w) =>
-        ctls += s; ctli += w
-      }
+      ctls ++= stealFrac(passSt0, procStatSteal())
       val (passJc1, passCc1) = jitStat()
       if (passJc0 >= 0 && passJc1 >= passJc0) jitp += (passJc1 - passJc0) / 1e3
       ccm += passCc1 / 1048576.0
@@ -821,8 +787,6 @@ object Bench {
     tally.drain() // bounded quiescence poll — see ShuffleTally.drain
     spark.sparkContext.removeSparkListener(tally) // repeated run() calls
     // (specs share one session) must not stack tally listeners
-    val cap = capN.keys.map(n => n -> capS(n) / capN(n)).toMap
-    val capm = capMN.keys.map(n => n -> capMS(n) / capMN(n)).toMap
     // kept reading per query (fastest steal-quiet attempt, else min wall):
     // results/caps/shuf all report exactly THAT attempt's wall, steal
     // fraction, and shuffle bytes — one attempt, one story
@@ -845,8 +809,8 @@ object Bench {
         Some(n -> perPass)
       else None
     }.toMap
-    (results, errors, Probes(ctl.toSeq, ctlp.toSeq, ctld.toSeq, ctlb, cap, capm,
-      ctls.toSeq, ctli.toSeq, caps, shuf, mode, att.toMap, shufx,
+    (results, errors, Probes(ctl.toSeq, ctlp.toSeq, ctld.toSeq, ctlb,
+      ctls.toSeq, caps, shuf, mode, att.toMap, shufx,
       jitp.toSeq, ccm.toSeq, jitq.toMap, layers))
   }
 
@@ -947,7 +911,6 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val ctlsJson = probes.ctls.map(rd(_, 4)).mkString("[", ",", "]")
-    val ctliJson = probes.ctli.map(rd(_, 4)).mkString("[", ",", "]")
     // per-query shuffle-write bytes from the kept attempt — the volume
     // record the ±20% byte budgets (BenchSpec) and cross-round shuffle
     // regressions read; exact longs, no rounding
@@ -980,8 +943,7 @@ object Bench {
       s"""{"metric":"total","value":${rd(total, 3)},"unit":"sec","passes":$passes,""" +
         s""""trc":"${probes.trc}",""" +
         s""""ctl":$ctlJson,"ctlp":$ctlpJson,"ctld":$ctldJson,""" +
-        s""""ctlb":$ctlbJson,"ctls":$ctlsJson,"ctli":$ctliJson,""" +
-        s""""cap":${capJson(probes.cap)},"capm":${capJson(probes.capm)},""" +
+        s""""ctlb":$ctlbJson,"ctls":$ctlsJson,""" +
         s""""caps":${capJson(probes.caps)},"shuf":$shufJson,""" +
         s""""att":$attJson,"shufx":$shufxJson,""" +
         s""""jitp":$jitpJson,"ccm":$ccmJson,"jitq":$jitqJson,"layers":$layersJson,""" +

@@ -2,6 +2,7 @@ package graft
 
 import graft.Queries.Q
 import graft.functions.{Similarity, TextFunctions => TF}
+import graft.functions.Similarity.Quantizer
 import graft.functions.HalfUp.r4
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1889,8 +1890,8 @@ object QueriesPipeline {
         val nTop = math.max(8, math.round(math.sqrt(e.count() / 64.0)).toInt)
         val hq = Similarity.hierQuantizer(e, nTop = nTop, occupancy = 64,
           iters = 2, dimHint = AnnDim)
-        val nn = Similarity.ivfTopKHier(e.where(col("vec_id") % 10 === 0), e, 5,
-          hq, nProbe = 8, nProbeTop = 4, dimHint = AnnDim)
+        val nn = Similarity.ivfTopK(e.where(col("vec_id") % 10 === 0), e, 5,
+          Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8, dimHint = AnnDim)
         val lab = e.select(col("vec_id").as("nid"), col("label").as("nlabel"))
         val votes = nn.join(lab, "nid")
           .groupBy("qid", "nlabel")
@@ -2080,8 +2081,8 @@ object QueriesPipeline {
           n.toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(e, nCent = k, iters = 2,
           dimHint = AnnDim)
-        Similarity.cosineDedupIvf(e, 0.4, nProbe = 6, dimHint = AnnDim,
-          model = trained).orderBy("a", "b")
+        Similarity.cosineDedupIvf(e, 0.4, Quantizer.Flat(trained), nProbe = 6,
+          dimHint = AnnDim).orderBy("a", "b")
       },
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT
@@ -2131,7 +2132,8 @@ object QueriesPipeline {
           n.toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(e, nCent = k, iters = 2,
           dimHint = AnnDim)
-        Similarity.semDedup(e, 0.4, trained, dimHint = AnnDim).orderBy("vec_id")
+        Similarity.semDedup(e, 0.4, Quantizer.Flat(trained), dimHint = AnnDim)
+          .orderBy("vec_id")
       },
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT
@@ -2175,7 +2177,8 @@ object QueriesPipeline {
         val nTop = math.max(8, math.round(math.sqrt(e.count() / 64.0)).toInt)
         val hq = Similarity.hierQuantizer(e, nTop = nTop, occupancy = 64,
           iters = 2, dimHint = AnnDim)
-        Similarity.semDedupHier(e, 0.4, hq, dimHint = AnnDim).orderBy("vec_id")
+        Similarity.semDedup(e, 0.4, Quantizer.Hier(hq), dimHint = AnnDim)
+          .orderBy("vec_id")
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
@@ -2240,8 +2243,8 @@ object QueriesPipeline {
         val batch = e.where(col("vec_id") % 5 === 0)
         val k = math.max(1, math.ceil(
           old.count().toDouble / Similarity.DedupCellOccupancy).toInt)
-        val trained = Similarity.kmeansModel(old, nCent = k, iters = 2,
-          dimHint = AnnDim)
+        val trained = Quantizer.Flat(Similarity.kmeansModel(old, nCent = k, iters = 2,
+          dimHint = AnnDim))
         // the stored state a production run reads back: kept rows with
         // their prior-run cell assignments and vectors
         val kept = Similarity.semDedup(old, 0.4, trained, dimHint = AnnDim)
@@ -2302,9 +2305,9 @@ object QueriesPipeline {
     // >8M-vector twin of emb_semdedup_inc: the flat form's trained
     // n/64-cell model is the measured O(n²·dim/occ) assignment wall
     // (278 s at 300×); here the frozen hq was trained on the old corpus,
-    // the prior run's decisions come from semDedupHier, and each
-    // arrival's home cell is the shared greedy descent (~2√k scored
-    // centroids). Drop legs identical to the flat twin.
+    // the prior run's decisions come from semDedup through the same hq,
+    // and each arrival's home cell is the shared greedy descent (~2√k
+    // scored centroids). Drop legs identical to the flat twin.
     "emb_semdedup_inc_hier" -> Q(
       (s, d) => {
         val e = cached(emb(s, d))
@@ -2313,10 +2316,10 @@ object QueriesPipeline {
         val nTop = math.max(8, math.round(math.sqrt(old.count() / 64.0)).toInt)
         val hq = Similarity.hierQuantizer(old, nTop = nTop, occupancy = 64,
           iters = 2, dimHint = AnnDim)
-        val kept = Similarity.semDedupHier(old, 0.4, hq, dimHint = AnnDim)
+        val kept = Similarity.semDedup(old, 0.4, Quantizer.Hier(hq), dimHint = AnnDim)
           .where(col("keep")).select(col("vec_id"), col("cell"))
           .join(old.select(col("vec_id"), col("embedding")), "vec_id")
-        Similarity.semDedupIncrementalHier(kept, batch, 0.4, hq,
+        Similarity.semDedupIncremental(kept, batch, 0.4, Quantizer.Hier(hq),
           dimHint = AnnDim).orderBy("vec_id")
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2408,7 +2411,7 @@ object QueriesPipeline {
           corpus.count().toDouble / Similarity.DedupCellOccupancy).toInt)
         val trained = Similarity.kmeansModel(corpus, nCent = k, iters = 2,
           dimHint = AnnDim)
-        Similarity.semanticDecontaminate(corpus, ev, 0.4, trained,
+        Similarity.semanticDecontaminate(corpus, ev, 0.4, Quantizer.Flat(trained),
           nProbe = 4, dimHint = AnnDim).orderBy("vec_id")
       },
       Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2457,8 +2460,8 @@ object QueriesPipeline {
         val nTop = math.max(8, math.round(math.sqrt(corpus.count() / 64.0)).toInt)
         val hq = Similarity.hierQuantizer(corpus, nTop = nTop, occupancy = 64,
           iters = 2, dimHint = AnnDim)
-        Similarity.semanticDecontaminateHier(corpus, ev, 0.4, hq,
-          nProbe = 4, nProbeTop = 2, dimHint = AnnDim).orderBy("vec_id")
+        Similarity.semanticDecontaminate(corpus, ev, 0.4, Quantizer.Hier(hq, nProbeTop = 2),
+          nProbe = 4, dimHint = AnnDim).orderBy("vec_id")
       },
       Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
              |eo AS (SELECT * FROM e WHERE label <> 9),
@@ -2535,8 +2538,8 @@ object QueriesPipeline {
         val ev = e.where(col("label") === 9)
         val k = math.max(1, math.ceil(
           old.count().toDouble / Similarity.DedupCellOccupancy).toInt)
-        val trained = Similarity.kmeansModel(old, nCent = k, iters = 2,
-          dimHint = AnnDim)
+        val trained = Quantizer.Flat(Similarity.kmeansModel(old, nCent = k, iters = 2,
+          dimHint = AnnDim))
         val probes = Similarity.evalProbeFrame(ev, trained, nProbe = 4,
           dimHint = AnnDim)
         Similarity.semanticDecontaminateIncremental(batch, probes, 0.4,
@@ -2579,7 +2582,7 @@ object QueriesPipeline {
     // Incremental decontamination through the HIERARCHICAL quantizer —
     // the >8M-vector daily path (flat frozen model = the measured
     // 235 s-at-300× assignment wall): the frozen hq was trained on the
-    // old corpus, the frozen eval probes come from evalProbeFrameHier's
+    // old corpus, the frozen eval probes come from evalProbeFrame's
     // (2, 4) descent fan over the SAME hq, and each arrival homes via
     // the shared width-1 greedy descent — which ranks over the
     // LEAF-BEARING top only, so the oracle's batch side ranks over centb
@@ -2594,10 +2597,10 @@ object QueriesPipeline {
         val nTop = math.max(8, math.round(math.sqrt(old.count() / 64.0)).toInt)
         val hq = Similarity.hierQuantizer(old, nTop = nTop, occupancy = 64,
           iters = 2, dimHint = AnnDim)
-        val probes = Similarity.evalProbeFrameHier(ev, hq, nProbe = 4,
-          nProbeTop = 2, dimHint = AnnDim)
-        Similarity.semanticDecontaminateIncrementalHier(batch, probes, 0.4,
-          hq, dimHint = AnnDim).orderBy("vec_id")
+        val probes = Similarity.evalProbeFrame(ev, Quantizer.Hier(hq, nProbeTop = 2),
+          nProbe = 4, dimHint = AnnDim)
+        Similarity.semanticDecontaminateIncremental(batch, probes, 0.4,
+          Quantizer.Hier(hq), dimHint = AnnDim).orderBy("vec_id")
       },
       Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
              |eold AS (SELECT * FROM e WHERE label <> 9 AND vec_id % 5 <> 0),
@@ -2682,7 +2685,7 @@ object QueriesPipeline {
         val nTop = math.max(8, math.round(math.sqrt(e.count() / 32.0)).toInt)
         val hq = Similarity.hierQuantizer(e, nTop = nTop, occupancy = 32,
           iters = 2, dimHint = AnnDim)
-        Similarity.cosineDedupIvfHier(e, 0.4, hq, nProbe = 8, nProbeTop = 4,
+        Similarity.cosineDedupIvf(e, 0.4, Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8,
           dimHint = AnnDim).orderBy("a", "b")
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2736,7 +2739,7 @@ object QueriesPipeline {
              |  FROM cand JOIN e ea ON ea.vec_id = a JOIN e eb ON eb.vec_id = b)
              |SELECT a, b, cos FROM vv WHERE cos >= 0.4 ORDER BY 1, 2""".stripMargin)),
 
-    // IVF-Flat ANN through the SAME hierarchical quantizer (ivfTopKHier):
+    // IVF-Flat ANN through the SAME hierarchical quantizer (ivfTopK, Quantizer.Hier):
     // candidates land in their greedy-descent home cell, queries probe
     // the top leaves across their best branches, pairs flow as bare ids
     // through the cell equi-join. Shares emb_dedup_hier's trained-top +
@@ -2748,8 +2751,8 @@ object QueriesPipeline {
         val nTop = math.max(8, math.round(math.sqrt(ec.count() / 32.0)).toInt)
         val hq = Similarity.hierQuantizer(ec, nTop = nTop, occupancy = 32,
           iters = 2, dimHint = AnnDim)
-        Similarity.ivfTopKHier(ec.where(col("vec_id") < 10), ec, 3, hq,
-          nProbe = 8, nProbeTop = 4, dimHint = AnnDim)
+        Similarity.ivfTopK(ec.where(col("vec_id") < 10), ec, 3,
+          Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8, dimHint = AnnDim)
           .orderBy("qid", "rank")
       },
       Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
@@ -2827,8 +2830,9 @@ object QueriesPipeline {
         val c = math.max(4, math.round(math.cbrt(k)).toInt)
         val dq = Similarity.deepQuantizer(ec, nTop = c,
           occupancies = Seq(8 * c, 8), iters = 2, dimHint = AnnDim)
-        Similarity.ivfTopKDeep(ec.where(col("vec_id") < 10), ec, 3, dq,
-          widths = Seq(4, 16, 24), dimHint = AnnDim).orderBy("qid", "rank")
+        Similarity.ivfTopK(ec.where(col("vec_id") < 10), ec, 3,
+          Quantizer.Deep(dq, widths = Seq(4, 16, 24)), dimHint = AnnDim)
+          .orderBy("qid", "rank")
       },
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               |par AS (SELECT greatest(4, CAST(round(pow(ceil(count(*) / 8.0), 1.0/3.0)) AS BIGINT)) AS c FROM e),

@@ -39,13 +39,55 @@ object Similarity {
     * not silently balloon the driver and every task closure. */
   val QuantizerModelMaxDoubles: Long = 8L * 1024 * 1024
 
-  def toDouble(vec: Column): Column = transform(vec, x => x.cast("double"))
+  /** Widen a vector to `array<double>` with a plain Cast — codegen'd, and
+    * exact (float → double widening), unlike a per-element
+    * `transform(v, x -> cast(x as double))` lambda, which runs in the
+    * interpreted evaluator and keeps its Project out of whole-stage
+    * codegen. */
+  def toDouble(vec: Column): Column = vec.cast("array<double>")
+
+  /** The fixed-dim vector check every op applies at its boundary:
+    * `vec` as `array<double>` when it has exactly `dim` elements, else the
+    * row aborts the query with "`op`: expected dim `dim`, got n" (or
+    * "got NULL") — mixed-dimension input would otherwise score silently
+    * against a wrong-length model or plane. */
+  private[graft] def dimChecked(op: String, dim: Int)(vec: Column): Column =
+    when(size(vec) === dim, toDouble(vec))
+      .otherwise(raise_error(concat(lit(s"$op: expected dim $dim, got "),
+        // coalesce: a NULL embedding would otherwise null out the whole
+        // concat and raise_error would throw with a null message
+        coalesce(size(vec).cast("string"), lit("NULL")))))
+
+  /** `(id, v)`: each row's vec_id and its [[dimChecked]] vector. */
+  private def idVecs(df: DataFrame, op: String, dim: Int): DataFrame =
+    df.select(col("vec_id").as("id"), dimChecked(op, dim)(col("embedding")).as("v"))
+
+  /** `(id, v)` unchecked — the sample source of the PQ codebooks. */
+  private def rawVecs(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("id"), toDouble(col("embedding")).as("v"))
+
+  /** The caller's dim when known, else [[probeDim]]. */
+  private def dimOf(df: DataFrame, dimHint: Int): Int =
+    if (dimHint > 0) dimHint else probeDim(df)
+
+  /** The empty result of an op on empty input: `cols` typed, no rows. */
+  private def emptyFrame(df: DataFrame, cols: Column*): DataFrame =
+    df.sparkSession.emptyDataFrame.select(cols: _*).where(lit(false))
+  private def noPairs(df: DataFrame): DataFrame =
+    emptyFrame(df, lit(0L).as("a"), lit(0L).as("b"), lit(0.0).as("cos"))
+  private def noRanks(df: DataFrame): DataFrame =
+    emptyFrame(df, lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("sim"), lit(0L).as("rank"))
+  private def noAdc(df: DataFrame): DataFrame =
+    emptyFrame(df, lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("adist"), lit(0L).as("rank"))
+  private def noDecisions(df: DataFrame): DataFrame =
+    emptyFrame(df, lit(0L).as("vec_id"), lit(0L).as("cell"),
+      lit(0.0).as("aff"), lit(true).as("keep"))
 
   /** Probe the vector dimension from the frame's first row, NULL-safely.
     * An empty frame probes 0 (callers short-circuit to an empty result);
     * a NULL or empty first `embedding` aborts with a readable message —
     * `size(NULL)` is null, and reading it unguarded throws a bare
-    * NullPointerException while every downstream `checked` path already
+    * NullPointerException while every downstream [[dimChecked]] already
     * renders NULL sizes readably. */
   private[graft] def probeDim(df: DataFrame): Int =
     df.select(coalesce(size(col("embedding")), lit(-1))).take(1).headOption
@@ -251,17 +293,9 @@ object Similarity {
     * so both engines agree at the boundary. */
   def cosineDedupLsh(vecs: DataFrame, tau: Double, nPlanes: Int,
       nTables: Int = 8, dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(vecs)
-    if (dim == 0)
-      return vecs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("a"), lit(0L).as("b"), lit(0.0).as("cos"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"cosineDedupLsh: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
+    val dim = dimOf(vecs, dimHint)
+    if (dim == 0) return noPairs(vecs)
+    val cv = idVecs(vecs, "cosineDedupLsh", dim)
     // unit-normalize + pack once per bucket row: cosine then = plain dot
     val cvn = cv.withColumn("vp", packUnit(col("v"))).select("id", "vp")
     val bk = tableBucketRows(cv, "id", "v", nPlanes, nTables, dim).join(cvn, "id")
@@ -275,6 +309,185 @@ object Similarity {
       .dropDuplicates("a", "b")
   }
 
+  /** The salted sample behind every sample model in this file (IVF/dedup
+    * cells, the k-means init, the PQ codebook): the `n` rows of an
+    * `(id, v)` frame with the lowest hash60(id), id tie-break — NOT the
+    * `n` lowest ids: an id order that correlates with cluster structure
+    * (append-time ordering, label-sorted exports) would otherwise put
+    * every centroid in one region. A pure function of the input, so the
+    * DuckDB oracle replays it exactly. */
+  private def saltedSample(cv: DataFrame, n: Int): Seq[(Long, Array[Double])] =
+    cv.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id")).limit(n)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+
+  /** The coarse quantizer every IVF op runs through: it picks each
+    * vector's HOME cell and the cells it PROBES. Every op ([[cosineDedupIvf]],
+    * [[semDedup]], [[semDedupIncremental]], [[semanticDecontaminate]],
+    * [[semanticDecontaminateIncremental]], [[evalProbeFrame]], [[ivfTopK]])
+    * is written once against these frames; the quantizer decides only how
+    * they are computed. All ranking is on 4dp-rounded cosines with
+    * lowest-cid ties, so the DuckDB oracle replays every cell choice.
+    *
+    * Frames (over an `(id, v)` input of checked double vectors):
+    *  - [[homes]]: `(id, cell, aff)` — one row per id, aff the rounded
+    *    cosine to the home centroid — and the same rows with the packed
+    *    unit vector `vp`;
+    *  - [[probes]]: `(id, cell, vp)` — the `nProbe` probed cells per id;
+    *  - [[cellsAndProbes]]: the home `(id, cell, vp)` and probe frames of
+    *    the same rows, from one pass where the quantizer has one. */
+  sealed trait Quantizer {
+    /** No cells (an empty training corpus): the ops return their empty frame. */
+    private[functions] def isEmpty: Boolean
+    private[functions] def homes(cv: DataFrame): (DataFrame, DataFrame)
+    private[functions] def probes(cv: DataFrame, nProbe: Int): DataFrame
+    private[functions] def cells(cv: DataFrame): DataFrame =
+      homes(cv)._2.select("id", "cell", "vp")
+    private[functions] def cellsAndProbes(cv: DataFrame,
+        nProbe: Int): (DataFrame, DataFrame) = (cells(cv), probes(cv, nProbe))
+    /** This quantizer, or — for an empty [[Quantizer.Flat]] — the flat
+      * salted sample of `k` rows of `cv` ([[cosineDedupIvf]]/[[ivfTopK]]'s
+      * no-model path; `k` is evaluated only then). */
+    private[functions] def orSample(cv: DataFrame, k: => Int): Quantizer = this
+  }
+
+  object Quantizer {
+    /** A flat model held on the driver: `model` is `(cid, weights)` — a
+      * trained [[kmeansModel]] or the salted sample. Home cell and
+      * probes come from ONE JIT'd [[topByRounded]] loop per row over the
+      * model in the UDF closure (no exploded (row, centroid, dim) join:
+      * n/occ centroids put n×nCent×dim ROWS through one — 182M at the
+      * 10× check, measured 127 s vs ~13 s for the loop doing the same
+      * flops); the packed unit vector rides the same projection, so the
+      * cell joins need no payload join. Cost: nCent×dim doubles on the
+      * driver and in every closure, and n×nCent×dim assignment flops —
+      * at constant occupancy O(n²·dim/occ). Both wall near 8M vectors at
+      * dim 64, so the model is capped at [[QuantizerModelMaxDoubles]]
+      * here, loudly; past it use [[Hier]]. */
+    final case class Flat(model: Seq[(Long, Array[Double])]) extends Quantizer {
+      private val doubles = model.iterator.map(_._2.length.toLong).sum
+      require(doubles <= QuantizerModelMaxDoubles,
+        s"Quantizer.Flat: model ${model.size} centroids ($doubles doubles) exceeds " +
+          s"the $QuantizerModelMaxDoubles-double driver/closure cap — train a smaller " +
+          "kmeansModel, or switch to Quantizer.Hier (the driver then holds only " +
+          "the top level; leaves stay distributed)")
+      private[functions] val cents = centsOf(model)
+      private[functions] def isEmpty: Boolean = model.isEmpty
+      private[functions] def homes(cv: DataFrame): (DataFrame, DataFrame) = {
+        val assignU = bestCellAffUdf(cents)
+        val asg = cv.withColumn("bc", assignU(col("v")))
+          .select(col("id"), col("bc._1").as("cell"), col("bc._2").as("aff"),
+            packUnit(col("v")).as("vp"))
+        (asg.select("id", "cell", "aff"), asg)
+      }
+      private[functions] def probes(cv: DataFrame, nProbe: Int): DataFrame =
+        ivfProbeFrame(cv, cents, nProbe)
+          .select(explode(col("pcs")).as("cell"), col("id"), col("vp"))
+      override private[functions] def cells(cv: DataFrame): DataFrame =
+        cellsAndProbes(cv, 1)._1
+      // home = the first probe: one probe list per row feeds both frames
+      override private[functions] def cellsAndProbes(cv: DataFrame,
+          nProbe: Int): (DataFrame, DataFrame) = {
+        val packed = ivfProbeFrame(cv, cents, nProbe)
+        (packed.select(element_at(col("pcs"), 1).as("cell"), col("id"), col("vp")),
+          packed.select(explode(col("pcs")).as("cell"), col("id"), col("vp")))
+      }
+      override private[functions] def orSample(cv: DataFrame, k: => Int): Quantizer =
+        if (model.nonEmpty) this else Flat(saltedSample(cv, k))
+    }
+
+    /** A [[HierQuantizer]] — the >8M-vector path: one JIT'd loop over the
+      * driver-held top model picks a row's `nProbeTop` best branches, and
+      * the row scores ONLY those branches' leaves, fetched by a linear
+      * equi-join on `branch` ([[hierDescent]]; ~2√k scored centroids per
+      * vector instead of k, leaves never in a closure). Home cell = best
+      * leaf of the home branch (the width-1 descent: exactly one row per
+      * id); probes = global top `nProbe` leaves across the `nProbeTop`
+      * branches; `vp` attaches by one id join. With nTop=1 every op agrees
+      * bit-for-bit with [[Flat]] over the leaf model (spec-pinned). */
+    final case class Hier(hq: HierQuantizer, nProbeTop: Int = 2) extends Quantizer {
+      private[functions] def isEmpty: Boolean = hq.top.isEmpty
+      private[functions] def homes(cv: DataFrame): (DataFrame, DataFrame) =
+        descentHomes(hierDescent(cv, hq, 1, 1), cv)
+      private[functions] def probes(cv: DataFrame, nProbe: Int): DataFrame =
+        withVp(topCells(hierDescent(cv, hq, nProbeTop, nProbe), nProbe), cv)
+      // ONE shared id-partitioned window pass ranks the probe cells AND
+      // flags the home row (the first slot-0 row in the same (cs desc,
+      // cell) order — identical to ranking the slot-0 subset alone): both
+      // consumers then read the SAME exchange, so the descent (branch join
+      // + leaf scoring, the dominant phase) computes ONCE (ReusedExchange),
+      // not once per consumer — filtering slot=0 below a second window
+      // would have re-run it. The running count keeps the window free of
+      // a group-limit, so a home cell outside the global top-nProbe is
+      // still found.
+      override private[functions] def cellsAndProbes(cv: DataFrame,
+          nProbe: Int): (DataFrame, DataFrame) = {
+        val wAll = org.apache.spark.sql.expressions.Window
+          .partitionBy("id").orderBy(col("cs").desc, col("cell"))
+        val wRun = wAll.rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+        val ranked = hierDescent(cv, hq, nProbeTop, nProbe)
+          .withColumn("rn", row_number().over(wAll))
+          .withColumn("h0", sum(when(col("slot") === 0, 1).otherwise(0)).over(wRun))
+        // each consumer's filter references BOTH window columns (one side
+        // via an always-true guard): column pruning would otherwise drop
+        // the unused column from that branch's Window node,
+        // de-canonicalizing the two subtrees so NO planner could ever
+        // share them. With the guards the static planner's
+        // ReuseExchangeAndSubquery computes the descent ONCE (AQE's
+        // runtime stage cache currently misses across cached-relation-
+        // rooted stages — reuse-eligibility is still the right shape to
+        // pin, and PlanAuditSpec gates both properties)
+        val probes = ranked.where(col("rn") <= nProbe && col("h0") >= 0)
+          .select(col("id"), col("cell"))
+        val homes = ranked.where(col("slot") === 0 && col("h0") === 1 && col("rn") >= 1)
+          .select(col("id"), col("cell"))
+        (withVp(homes, cv), withVp(probes, cv))
+      }
+    }
+
+    /** A [[DeepQuantizer]] — [[Hier]] generalized to L levels: the home
+      * cell is the width-1 chain's leaf, and the probes descend with
+      * `widths` (`widths(0)` top branches, then `widths(i+1)` cells per
+      * level — one width per level of the model plus the top); the probe
+      * count is `widths.last`, so an op's `nProbe` does not apply. */
+    final case class Deep(dq: DeepQuantizer, widths: Seq[Int]) extends Quantizer {
+      private[functions] def isEmpty: Boolean = dq.top.isEmpty
+      private[functions] def homes(cv: DataFrame): (DataFrame, DataFrame) =
+        descentHomes(deepDescent(cv, dq, Seq.fill(dq.levels.length + 1)(1)), cv)
+      private[functions] def probes(cv: DataFrame, nProbe: Int): DataFrame =
+        withVp(topCells(deepDescent(cv, dq, widths), widths.last), cv)
+    }
+
+    /** A width-1 descent's `(id, cell, cs)` rows — already one per id, so
+      * no window — as the home frame, plus its `vp` id join. */
+    private def descentHomes(descent: DataFrame,
+        cv: DataFrame): (DataFrame, DataFrame) = {
+      val homes = descent.select(col("id"), col("cell"), col("cs").as("aff"))
+      (homes, withVp(homes, cv))
+    }
+
+    /** Attach each row's packed unit vector by id. */
+    private def withVp(rows: DataFrame, cv: DataFrame): DataFrame =
+      rows.join(cv.select(col("id"), packUnit(col("v")).as("vp")), "id")
+  }
+
+  /** Per id, the top `n` scored `(id, cell, cs)` rows by (cs DESC, cell). */
+  private def topCells(scored: DataFrame, n: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("id").orderBy(col("cs").desc, col("cell"))
+    scored.withColumn("rn", row_number().over(w)).where(col("rn") <= n)
+      .select(col("id"), col("cell"))
+  }
+
+  /** The sample model's cell count: `nCent`, else ⌈n / occupancy⌉ with
+    * n = `nHint`, else a count of `vecs`. */
+  private def sampleCells(vecs: DataFrame, nCent: Int, nHint: Long): Int =
+    if (nCent > 0) nCent else {
+      val n = if (nHint > 0) nHint else vecs.count()
+      math.max(1, math.ceil(n.toDouble / DedupCellOccupancy).toInt)
+    }
+
   /** IVF cell-bucketed cosine near-dup pairs — the SCALE flavor of
     * [[cosineDedupLsh]] (which is asymptotically n²/2^nPlanes: fixed
     * planes mean fixed buckets, so occupancy — and with it candidate
@@ -284,14 +497,14 @@ object Similarity {
     * 10× scale check: 17× wall on 10× rows).
     *
     * Here the bucket count GROWS with the corpus so OCCUPANCY stays
-    * CONSTANT: nCent = ⌈n / [[DedupCellOccupancy]]⌉ sample centroids (the
-    * nCent lowest hash60(vec_id)s — same pure-function-of-input quantizer as
-    * [[ivfTopK]], so the DuckDB oracle replays assignment exactly; a
-    * trained [[kmeansModel]] drops in unchanged). Every vector lives in
-    * its nearest cell (rounded cosine, ties to the lowest cid) and probes
-    * its `nProbe` nearest; a pair is a candidate when either side's HOME
-    * cell is probed by the other. Verified pairs = rounded packed-dot
-    * cosine ≥ tau, exactly like the LSH flavor.
+    * CONSTANT. With an empty [[Quantizer.Flat]] model the cells are
+    * ⌈n / [[DedupCellOccupancy]]⌉ salted sample centroids (`nCent`
+    * overrides the count; `nHint` skips the sizing count), a trained
+    * [[kmeansModel]] or a [[Quantizer.Hier]] drops in unchanged. Every
+    * vector lives in its home cell and probes its `nProbe` nearest; a
+    * pair is a candidate when either side's HOME cell is probed by the
+    * other. Verified pairs = rounded packed-dot cosine ≥ tau, exactly
+    * like the LSH flavor.
     *
     * Scale shape — both halves LINEAR in n (the round-7 √n-centroid
     * formulation was O(n^1.5) and the round-8 100× check measured it
@@ -304,91 +517,32 @@ object Similarity {
     *    packed vector ONCE through the cell-keyed shuffle (n and
     *    n×nProbe rows — linear), the per-cell pair expansion happens
     *    INSIDE the join's streamed output straight into the codegen'd
-    *    dot + tau filter, and distinct() runs only over pairs that
-    *    already passed tau (the true near-dups). The round-7 shape
-    *    instead distinct'd ~n×occ×nProbe candidate ids (535M rows at the
-    *    100× check) and re-attached a 8·dim-byte payload per pair
-    *    (~280 GB through the verify join — the measured OOM).
-    * A skewed cell (one giant near-dup cluster) concentrates one task;
-    * AQE skew-join splitting handles it on a real cluster, and the
-    * trained quantizer keeps cells balanced by construction. Cost: the
-    * flat plan-time model is nCent×dim doubles = n/occupancy×dim — under
-    * [[QuantizerModelMaxDoubles]] to ~8M vectors at dim 64; beyond, pass
-    * a coarser trained model (higher occupancy + more probes) or a
-    * hierarchical quantizer with the same frame contract — the loud
-    * `require` routes there. Recall is a cluster-coherence bet rather
-    * than a random-hyperplane bet — gated against brute force like every
-    * ANN entry. */
-  def cosineDedupIvf(vecs: DataFrame, tau: Double, nProbe: Int = 2,
-      nCent: Int = -1, dimHint: Int = -1,
-      model: Seq[(Long, Array[Double])] = Nil, nHint: Long = -1L): DataFrame = {
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(vecs)
-    if (dim == 0)
-      return vecs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("a"), lit(0L).as("b"), lit(0.0).as("cos"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"cosineDedupIvf: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    // assignment via a plan-time model + ONE JIT'd loop per row — NOT an
-    // exploded (row, centroid, dim) broadcast join: n/occ centroids put
-    // n×nCent×dim ROWS through that join (182M at the 10× check,
-    // measured 127 s vs ~13 s for this loop doing the same flops). The
-    // model is nCent×dim doubles (25 KB at 20k vectors) serialized into
-    // the closure — the
-    // same broadcast-model discipline as [[pqEncoders]]/[[kmeansModel]];
-    // norms precomputed once. Rounded 4dp (shared +1e-9 HALF_UP) BEFORE
-    // the (cs desc, cid) ranking so the oracle replays probe sets
-    // exactly.
-    // a trained kmeansModel drops in for the sample quantizer unchanged.
-    // The sample is SALTED — ordered by hash60(id), not by id — so an id
-    // order that correlates with cluster structure (append-time ordering,
-    // label-sorted exports) cannot skew the centroids toward one region;
-    // the hash tie-breaks to id, keeping the sample a pure, oracle-
-    // replayable function of the input.
-    // the cell count (and hence the sizing count() when no nCent/nHint is
-    // given) is needed ONLY on the sample path: with a caller-supplied
-    // model this query runs zero extra corpus scans before useful work —
-    // at 100 TB the old unconditional vecs.count() was a full pass spent
-    // computing a number the model branch never read
-    val cents: Array[(Long, Array[Double], Double)] =
-      if (model.nonEmpty) model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-      else {
-        val k = if (nCent > 0) nCent else {
-          val n = if (nHint > 0) nHint else vecs.count()
-          math.max(1, math.ceil(n.toDouble / DedupCellOccupancy).toInt)
-        }
-        cv.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id")).limit(k)
-          .collect().map(r => withNorm3(r.getLong(0), r.getSeq[Double](1).toArray))
-      }
-    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-      s"cosineDedupIvf: quantizer model ${cents.length} centroids x $dim dims exceeds " +
-        s"the $QuantizerModelMaxDoubles-double driver/closure cap — train a smaller " +
-        "kmeansModel, or switch to hierQuantizer + cosineDedupIvfHier (the " +
-        "driver then holds only the top level; leaves stay distributed)")
-    // verify via the cell-keyed self-join, exactly [[cosineDedupLsh]]'s
-    // (table, bucket) shape: each row crosses the shuffle WITH its packed
-    // vector — once on the home side (n rows) and once per probe
-    // (n×nProbe rows), both linear — and the per-cell home×probe pair
-    // expansion only ever exists inside the join's streamed output,
-    // flowing straight into the codegen'd packed-dot + tau filter. The
-    // dedup (same pair via both directions or several shared cells) runs
-    // AFTER the filter, over true near-dup pairs only. dotPacked is
-    // symmetric bit-for-bit (same products, same summation order), so
-    // duplicates agree on cos and dropDuplicates keeps result semantics
-    // exact. Round 7 instead distinct'd the (a,b) candidate-id set
-    // (n×occ×nProbe rows — 535M at the 100× check) and re-attached the
-    // packed payload per PAIR through a second join (~280 GB of shuffle
-    // at 100× — the measured OOM + 54×-per-decade wall).
-    val packed = ivfProbeFrame(cv, cents, nProbe)
-    val homes = packed.select(element_at(col("pcs"), 1).as("cell"),
-      col("id").as("m"), col("vp").as("pm"))
-    val probers = packed.select(explode(col("pcs")).as("cell"),
-      col("id").as("p"), col("vp").as("pp"))
-    homes.join(probers, "cell").where(col("m") =!= col("p"))
+    *    dot + tau filter, and the dedup (same pair via both directions or
+    *    several shared cells) runs only over pairs that already passed
+    *    tau (the true near-dups). dotPacked is symmetric bit-for-bit, so
+    *    duplicates agree on cos. The round-7 shape instead distinct'd
+    *    ~n×occ×nProbe candidate ids (535M rows at the 100× check) and
+    *    re-attached a 8·dim-byte payload per pair (~280 GB through the
+    *    verify join — the measured OOM).
+    * The sizing count runs ONLY on the sample path: with a supplied
+    * model the op runs zero corpus scans before useful work. A skewed
+    * cell (one giant near-dup cluster) concentrates one task; AQE
+    * skew-join splitting handles it on a real cluster, and the trained
+    * quantizer keeps cells balanced by construction. Recall is a
+    * cluster-coherence bet rather than a random-hyperplane bet — gated
+    * against brute force like every ANN entry. */
+  def cosineDedupIvf(vecs: DataFrame, tau: Double,
+      q: Quantizer = Quantizer.Flat(Nil), nProbe: Int = 2, nCent: Int = -1,
+      dimHint: Int = -1, nHint: Long = -1L): DataFrame = {
+    val dim = dimOf(vecs, dimHint)
+    if (dim == 0) return noPairs(vecs)
+    val cv = idVecs(vecs, "cosineDedupIvf", dim)
+    val qq = q.orSample(cv, sampleCells(vecs, nCent, nHint))
+    if (qq.isEmpty) return noPairs(vecs)
+    val (homes, probes) = qq.cellsAndProbes(cv, nProbe)
+    homes.select(col("cell"), col("id").as("m"), col("vp").as("pm"))
+      .join(probes.select(col("cell"), col("id").as("p"), col("vp").as("pp")), "cell")
+      .where(col("m") =!= col("p"))
       .withColumn("cos",
         r4(org.apache.spark.sql.GraftColumns.dotPacked(col("pm"), col("pp"))))
       .where(col("cos") >= tau)
@@ -397,14 +551,13 @@ object Similarity {
       .dropDuplicates("a", "b")
   }
 
-  /** The (id, pcs, vp) probe frame behind [[cosineDedupIvf]]: per row,
+  /** The (id, pcs, vp) probe frame behind [[Quantizer.Flat]]: per row,
     * the [[topByRounded]] nProbe-cell probe list plus the packed unit
     * vector. Package-visible so scale probes can time this pass in
     * isolation. */
   private[graft] def ivfProbeFrame(cv: DataFrame,
       cents: Array[(Long, Array[Double], Double)], nProbe: Int): DataFrame = {
-    val nP = nProbe
-    val probeU = topCellsUdf(cents, nP)
+    val probeU = topCellsUdf(cents, nProbe)
     cv.withColumn("pcs", probeU(col("v")))
       .withColumn("vp", packUnit(col("v")))
   }
@@ -427,69 +580,41 @@ object Similarity {
     * formulation — cross-cluster duplicates are the quantizer's job to
     * co-locate), returning a decision row per input vector.
     *
-    * Scale shape: the model is plan-time (nCent×dim doubles, capped by
-    * [[QuantizerModelMaxDoubles]] — past ~8M vectors train a coarser
-    * model, i.e. raise the occupancy, exactly as the require says);
-    * assignment is
-    * one JIT'd loop per row; the pairwise stage is the constant-occupancy
-    * cell-keyed self-join (O(n·occupancy) pairs, vectors packed into the
-    * join rows — no per-pair payload re-attach), and the drop set rides
-    * the same cell exchange. Everything ranks on 4dp-rounded values with
-    * id tie-breaks, so the DuckDB oracle replays training, assignment,
-    * and every keep/drop decision exactly.
+    * Scale shape: home assignment is the quantizer's ([[Quantizer.Flat]]:
+    * one JIT'd loop per row, a flat model must be passed — an empty one
+    * fails loudly; [[Quantizer.Hier]]: the width-1 descent past ~8M
+    * vectors); the pairwise stage is the constant-occupancy cell-keyed
+    * self-join (O(n·occupancy) pairs, vectors packed into the join rows —
+    * no per-pair payload re-attach), and the drop set rides the same
+    * cell exchange. Everything ranks on 4dp-rounded values with id
+    * tie-breaks, so the DuckDB oracle replays training, assignment, and
+    * every keep/drop decision exactly.
     *
     * Returns (vec_id, cell, aff, keep) — one row per input vector.
     * Reference semantics: the reference engine has no embedding ops; this
     * extends the dedup family per the builder brief (SemDeDup is the
     * published cluster-then-prune recipe used on LAION/C4-scale corpora). */
-  def semDedup(vecs: DataFrame, tau: Double,
-      model: Seq[(Long, Array[Double])], dimHint: Int = -1): DataFrame = {
-    require(model.nonEmpty, "semDedup: pass a trained quantizer model (kmeansModel)")
-    val dim = if (dimHint > 0) dimHint else probeDim(vecs)
-    if (dim == 0)
-      return vecs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"semDedup: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val cents = model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-      s"semDedup: quantizer model ${cents.length} centroids x $dim dims exceeds the " +
-        s"$QuantizerModelMaxDoubles-double driver/closure cap — train a smaller model " +
-        "or assign cells via hierQuantizer descent")
-    // home cell + centroid affinity in ONE JIT'd loop per row (the
-    // kmeansLoop/cosineDedupIvf assignment discipline), packed unit
-    // vector alongside so the pairwise join needs no second payload join
-    val assignU = bestCellAffUdf(cents)
-    val asg = cv.withColumn("bc", assignU(col("v")))
-      .select(col("id"), col("bc._1").as("cell"), col("bc._2").as("aff"),
-        packUnit(col("v")).as("vp"))
-    semDedupPrune(asg, asg.select("id", "cell", "aff"), tau)
+  def semDedup(vecs: DataFrame, tau: Double, q: Quantizer,
+      dimHint: Int = -1): DataFrame = {
+    q match {
+      case Quantizer.Flat(model) =>
+        require(model.nonEmpty, "semDedup: pass a trained quantizer model (kmeansModel)")
+      case _ =>
+    }
+    val dim = dimOf(vecs, dimHint)
+    if (dim == 0 || q.isEmpty) return noDecisions(vecs)
+    val (homes, asg) = q.homes(idVecs(vecs, "semDedup", dim))
+    attachKeep(homes, semDedupDrops(asg, tau))
   }
 
-  /** The SemDeDup within-cell pairwise prune + keep rule, shared verbatim
-    * by [[semDedup]] and [[semDedupHier]] so the decision semantics
-    * cannot drift between the flat and hier paths (the nTop=1
-    * flat≡hier spec pins only one config; the shared code pins all).
-    *
-    * `asg` is (id, cell, aff, vp): both sides hash-partition on cell
-    * (constant occupancy ⇒ O(n·occ) streamed pairs), cosine scored by the
-    * codegen'd DotPacked inside the join output, the outranking filter
-    * ((aff ASC, id ASC) — any outranking dup ⇒ drop) fused before
-    * anything materializes. `decisions` is the (id, cell, aff) frame the
-    * keep flag lands on — passed separately so the hier caller can hand
-    * its pre-vp-join assignment and keep the final leg free of the
-    * payload join. Returns (vec_id, cell, aff, keep). */
-  private def semDedupPrune(asg: DataFrame, decisions: DataFrame,
-      tau: Double): DataFrame =
-    attachKeep(decisions, semDedupDrops(asg, tau))
-
-  /** The drop set of the within-cell pairwise prune: distinct ids with an
-    * outranking same-cell duplicate. */
+  /** The drop set of the SemDeDup within-cell pairwise prune, shared by
+    * [[semDedup]] and [[semDedupIncremental]] so the decision semantics
+    * cannot drift between them: distinct ids with an outranking
+    * same-cell duplicate. `asg` is (id, cell, aff, vp): both sides
+    * hash-partition on cell (constant occupancy ⇒ O(n·occ) streamed
+    * pairs), cosine scored by the codegen'd DotPacked inside the join
+    * output, the outranking filter ((aff ASC, id ASC) — any outranking
+    * dup ⇒ drop) fused before anything materializes. */
   private def semDedupDrops(asg: DataFrame, tau: Double): DataFrame = {
     val mine = asg.select(col("cell"), col("id"), col("aff"), col("vp"))
     val others = asg.select(col("cell"), col("id").as("oid"),
@@ -503,48 +628,12 @@ object Similarity {
       .select(col("id")).distinct()
   }
 
-  /** keep = id ∉ drops, attached to the (id, cell, aff) decision frame. */
+  /** keep = id ∉ drops, attached to the (id, cell, aff) decision frame —
+    * the quantizer's home frame, so the final leg carries no payload. */
   private def attachKeep(decisions: DataFrame, drops: DataFrame): DataFrame =
     decisions.join(drops.withColumn("dropped", lit(true)), Seq("id"), "left")
       .select(col("id").as("vec_id"), col("cell"), col("aff"),
         coalesce(!col("dropped"), lit(true)).as("keep"))
-
-  /** [[semDedup]] through a [[HierQuantizer]] — the >8M-vector SemDeDup
-    * path. The flat variant's model is nCent×dim driver-held doubles with
-    * O(n·nCent·dim) assignment flops — at constant occupancy that is
-    * O(n²·dim/occ), the same two walls [[cosineDedupIvf]] hits near 8M
-    * vectors. Here home-cell assignment is the shared greedy descent
-    * ([[hierDescent]] with nProbeTop=1, nPerBranch=1): one JIT'd loop
-    * over the driver-held top model picks the home branch, a linear
-    * equi-join on `branch` scores ONLY that branch's leaves, and the best
-    * leaf is the home cell with its 4dp-rounded cosine as the affinity —
-    * ~2√k scored centroids per vector instead of k, leaves never in a
-    * closure. The within-cell prune and the keep rule are IDENTICAL to
-    * [[semDedup]] (same rounding, same (aff ASC, id ASC) outranking), so
-    * with nTop=1 the two paths agree bit-for-bit (spec-pinned) and the
-    * DuckDB oracle replays every decision.
-    *
-    * Returns (vec_id, cell, aff, keep) — one row per input vector. */
-  def semDedupHier(vecs: DataFrame, tau: Double, hq: HierQuantizer,
-      dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(vecs)
-    if (dim == 0 || hq.top.isEmpty)
-      return vecs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"semDedupHier: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    // home assignment: best leaf of the home branch (slot 0 with
-    // nProbeTop=1), exactly the home rule of [[cosineDedupIvfHier]]
-    val asgFlat = hierDescent(cv, hq, nProbeTop = 1, nPerBranch = 1)
-      .select(col("id"), col("cell"), col("cs").as("aff"))
-    val asg = asgFlat.join(cv.select(col("id"), packUnit(col("v")).as("vp")), "id")
-    semDedupPrune(asg, asgFlat, tau)
-  }
 
   /** Incremental (daily-batch) [[semDedup]] — the form a production
     * pipeline actually runs: the corpus was deduplicated once, its
@@ -552,9 +641,9 @@ object Similarity {
     * batch is judged against the frozen quantizer and the kept corpus.
     * Nothing about the existing corpus is recomputed: `existing` is the
     * stored kept frame `(vec_id, cell, embedding)` (cells from the prior
-    * run), touched exactly once as a cell-keyed projection feeding the
-    * batch-cell equi-join — no re-assignment pass, no corpus-wide window,
-    * no old×old pairs.
+    * run through the SAME frozen quantizer), touched exactly once as a
+    * cell-keyed projection feeding the batch-cell equi-join — no
+    * re-assignment pass, no corpus-wide window, no old×old pairs.
     *
     * Keep rule (documented extension of Abbas et al. 2023 to the
     * incremental setting): a batch vector is dropped iff (a) ANY kept
@@ -566,39 +655,22 @@ object Similarity {
     * rides 4dp-rounded cosines, so the DuckDB oracle replays the frozen
     * model, both drop legs, and every decision.
     *
-    * Scale shape: batch assignment is one plan-time-model JIT loop per
-    * NEW row (zero corpus flops); both drop legs hash-partition on cell —
-    * the corpus side ships only (cell, packed-unit) at constant
-    * occupancy, so the day's cost is O(|batch|·occ), independent of
-    * corpus size except for the one stored-frame scan.
+    * Scale shape: batch assignment touches only NEW rows (zero corpus
+    * flops); both drop legs hash-partition on cell — the corpus side
+    * ships only (cell, packed-unit) at constant occupancy, so the day's
+    * cost is O(|batch|·occ), independent of corpus size except for the
+    * one stored-frame scan. An empty model (the prior corpus was empty)
+    * degrades to the empty decision frame.
     *
     * Returns (vec_id, cell, aff, keep) — one row per BATCH vector. */
   def semDedupIncremental(existing: DataFrame, batch: DataFrame, tau: Double,
-      model: Seq[(Long, Array[Double])], dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(batch)
-    // empty frozen model (prior corpus was empty) degrades to the
-    // family's empty decision frame, like the hq.top.isEmpty siblings
-    if (dim == 0 || model.isEmpty)
-      return batch.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(op: String)(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"$op: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = batch.select(col("vec_id").as("id"),
-      checked("semDedupIncremental")(col("embedding")).as("v"))
-    val cents = model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-      s"semDedupIncremental: quantizer model ${cents.length} centroids x $dim dims " +
-        s"exceeds the $QuantizerModelMaxDoubles-double driver/closure cap — train a " +
-        "smaller model or assign cells via hierQuantizer descent")
-    val asg = incrementalAssign(cv, cents)
+      q: Quantizer, dimHint: Int = -1): DataFrame = {
+    val dim = dimOf(batch, dimHint)
+    if (dim == 0 || q.isEmpty) return noDecisions(batch)
+    val (homes, asg) = q.homes(idVecs(batch, "semDedupIncremental", dim))
     // leg (a): the ONE touch of the corpus — (cell, packed-unit)
     // projection equi-joined to the batch's cells
-    val ex = incrementalCorpus(existing,
-      checked("semDedupIncremental.existing"))
+    val ex = incrementalCorpus(existing, dimChecked("semDedupIncremental.existing", dim))
     val corpusDrops = asg.select(col("cell"), col("id"), col("vp"))
       .join(ex, "cell")
       .withColumn("cos",
@@ -607,136 +679,31 @@ object Similarity {
       .select(col("id")).distinct()
     // leg (b): the standard within-cell prune over the batch alone
     val drops = semDedupDrops(asg, tau).union(corpusDrops).distinct()
-    attachKeep(asg.select("id", "cell", "aff"), drops)
-  }
-
-  /** [[semDedupIncremental]] through a [[HierQuantizer]] — the >8M-vector
-    * incremental path: the flat form trains an n/64-centroid model whose
-    * assignment is the measured O(n²·dim/occ) wall (278 s at 300× for the
-    * registry config); here the batch's home cells come from the shared
-    * greedy descent (~2√k scored centroids per arrival, leaves never
-    * collected) and BOTH drop legs are identical to the flat op — the
-    * corpus leg reads the same stored (cell, packed-unit) projection, the
-    * within-batch leg is the shared [[semDedupDrops]] prune. The stored
-    * corpus cells must come from the SAME frozen hq (the prior
-    * [[semDedupHier]] run), exactly as the flat twin's come from its
-    * frozen flat model. Returns (vec_id, cell, aff, keep) per BATCH row. */
-  def semDedupIncrementalHier(existing: DataFrame, batch: DataFrame,
-      tau: Double, hq: HierQuantizer, dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(batch)
-    if (dim == 0 || hq.top.isEmpty)
-      return batch.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(op: String)(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"$op: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = batch.select(col("vec_id").as("id"),
-      checked("semDedupIncrementalHier")(col("embedding")).as("v"))
-    // home = best leaf of the home branch (nProbeTop=1, nPerBranch=1 ⇒
-    // exactly one row per id, the semDedupHier home rule)
-    val asgFlat = hierDescent(cv, hq, nProbeTop = 1, nPerBranch = 1)
-      .select(col("id"), col("cell"), col("cs").as("aff"))
-    val asg = asgFlat.join(cv.select(col("id"), packUnit(col("v")).as("vp")), "id")
-    val ex = incrementalCorpus(existing,
-      checked("semDedupIncrementalHier.existing"))
-    val corpusDrops = asg.select(col("cell"), col("id"), col("vp"))
-      .join(ex, "cell")
-      .withColumn("cos",
-        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("vp"), col("ovp"))))
-      .where(col("cos") >= tau)
-      .select(col("id")).distinct()
-    val drops = semDedupDrops(asg, tau).union(corpusDrops).distinct()
-    attachKeep(asgFlat, drops)
-  }
-
-  /** [[semanticDecontaminate]] through a [[HierQuantizer]] — the
-    * >8M-vector decontamination path (the flat form's trained model is
-    * the measured 235 s-at-300× assignment wall). Corpus vectors home via
-    * the width-1 descent; the small eval side descends with
-    * (nProbeTop, nProbe) fan and takes its global top-nProbe cells; the
-    * cross check is the same packed-unit cell equi-join. Returns
-    * (vec_id, cell, aff, keep) over the CORPUS. */
-  def semanticDecontaminateHier(corpus: DataFrame, evalSet: DataFrame,
-      tau: Double, hq: HierQuantizer, nProbe: Int = 4, nProbeTop: Int = 2,
-      dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(corpus)
-    if (dim == 0 || hq.top.isEmpty)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(op: String)(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"$op: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cvC = corpus.select(col("vec_id").as("id"),
-      checked("semanticDecontaminateHier")(col("embedding")).as("v"))
-    val homes = hierDescent(cvC, hq, nProbeTop = 1, nPerBranch = 1)
-      .select(col("id"), col("cell"), col("cs").as("aff"))
-    val asg = homes.join(cvC.select(col("id"), packUnit(col("v")).as("vp")), "id")
-    val probes = evalProbeFrameHier(evalSet, hq, nProbe, nProbeTop, dim)
-    attachKeep(homes, decontamHits(asg, probes, tau))
+    attachKeep(homes, drops)
   }
 
   /** The frozen eval-probe projection — (cell, evp): each eval vector's
-    * `nProbe` probed cells with its packed unit vector. In the
-    * incremental/streaming setting this frame is computed ONCE from the
-    * frozen quantizer + frozen eval suite and STORED; every daily batch
-    * equi-joins against it without touching the eval set again (the
-    * eval-side twin of [[incrementalCorpus]]'s one-touch projection). */
-  def evalProbeFrame(evalSet: DataFrame, model: Seq[(Long, Array[Double])],
+    * `nProbe` probed cells with its packed unit vector (the eval side is
+    * small by construction, so the probe fan costs eval×nProbe rows). In
+    * the incremental/streaming setting this frame is computed ONCE from
+    * the frozen quantizer + frozen eval suite and STORED; every daily
+    * batch equi-joins against it without touching the eval set again
+    * (the eval-side twin of [[incrementalCorpus]]'s one-touch
+    * projection). */
+  def evalProbeFrame(evalSet: DataFrame, q: Quantizer,
       nProbe: Int = 4, dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(evalSet)
-    if (dim == 0 || model.isEmpty)
-      return evalSet.sparkSession.emptyDataFrame
-        .select(lit(0L).as("cell"), lit(Array.empty[Byte]).as("evp"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"evalProbeFrame: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cents = model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-      s"evalProbeFrame: quantizer model ${cents.length} centroids x $dim dims " +
-        s"exceeds the $QuantizerModelMaxDoubles-double driver/closure cap")
-    ivfProbeFrame(
-      evalSet.select(col("vec_id").as("id"), checked(col("embedding")).as("v")),
-      cents, nProbe)
-      .select(explode(col("pcs")).as("cell"), col("vp").as("evp"))
-  }
-
-  /** [[evalProbeFrame]] through a [[HierQuantizer]]: the eval side
-    * descends with (nProbeTop, nProbe) fan and keeps its global
-    * top-`nProbe` cells. Same (cell, evp) contract. */
-  def evalProbeFrameHier(evalSet: DataFrame, hq: HierQuantizer,
-      nProbe: Int = 4, nProbeTop: Int = 2, dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(evalSet)
-    if (dim == 0 || hq.top.isEmpty)
-      return evalSet.sparkSession.emptyDataFrame
-        .select(lit(0L).as("cell"), lit(Array.empty[Byte]).as("evp"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"evalProbeFrameHier: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cvE = evalSet.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val wCell = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("cs").desc, col("cell"))
-    hierDescent(cvE, hq, nProbeTop, nProbe)
-      .withColumn("rn", row_number().over(wCell)).where(col("rn") <= nProbe)
-      .select(col("id").as("eid"), col("cell"))
-      .join(cvE.select(col("id").as("eid"), packUnit(col("v")).as("evp")), "eid")
-      .select(col("cell"), col("evp"))
+    val dim = dimOf(evalSet, dimHint)
+    if (dim == 0 || q.isEmpty)
+      return emptyFrame(evalSet, lit(0L).as("cell"), lit(Array.empty[Byte]).as("evp"))
+    q.probes(idVecs(evalSet, "evalProbeFrame", dim), nProbe)
+      .select(col("cell"), col("vp").as("evp"))
   }
 
   /** The decontamination hit set: corpus/batch rows reached by an eval
     * probe in their home cell at rounded cosine ≥ tau — ONE definition
-    * shared by the bootstrap, hier, and incremental ops so the decision
-    * semantics cannot drift (the [[semDedupPrune]] discipline). `asg` is
-    * (id, cell, vp); `evalProbes` is [[evalProbeFrame]]'s (cell, evp). */
+    * shared by the bootstrap and incremental ops so the decision
+    * semantics cannot drift. `asg` is (id, cell, vp); `evalProbes` is
+    * [[evalProbeFrame]]'s (cell, evp). */
   private def decontamHits(asg: DataFrame, evalProbes: DataFrame,
       tau: Double): DataFrame =
     asg.select(col("cell"), col("id"), col("vp")).join(evalProbes, "cell")
@@ -747,67 +714,26 @@ object Similarity {
 
   /** Incremental (daily-batch) [[semanticDecontaminate]] — the form a
     * production pipeline actually runs: the quantizer and the eval suite
-    * are FROZEN, the eval probes were computed once ([[evalProbeFrame]])
-    * and stored, and each day only the NEW batch is screened. Batch rows
-    * home via the frozen-model JIT loop (zero eval-side work); the only
-    * join is the batch-cell equi-join against the stored probe frame —
-    * the day's cost is O(|batch|·occ + |hits|), independent of both the
-    * historical corpus and the eval set's size beyond the one stored-
-    * frame scan. Arrivals never affect each other (the eval set alone
-    * decides), so the op is embarrassingly incremental — the streaming
-    * twin ([[graft.streaming.DecontamStream]]) is STATELESS, unlike the
-    * dedup family's. With batch = the full corpus this reduces
-    * bit-for-bit to [[semanticDecontaminate]] (spec-pinned).
+    * are FROZEN, the eval probes were computed once ([[evalProbeFrame]],
+    * same quantizer) and stored, and each day only the NEW batch is
+    * screened. Batch rows home through the frozen quantizer (zero
+    * eval-side work); the only join is the batch-cell equi-join against
+    * the stored probe frame — the day's cost is O(|batch|·occ + |hits|),
+    * independent of both the historical corpus and the eval set's size
+    * beyond the one stored-frame scan. Arrivals never affect each other
+    * (the eval set alone decides), so the op is embarrassingly
+    * incremental — the streaming twin ([[graft.streaming.DecontamStream]])
+    * is STATELESS, unlike the dedup family's. With batch = the full
+    * corpus this reduces bit-for-bit to [[semanticDecontaminate]]
+    * (spec-pinned).
     *
     * Returns (vec_id, cell, aff, keep) per BATCH row — keep = false
     * means contaminated. */
   def semanticDecontaminateIncremental(batch: DataFrame, evalProbes: DataFrame,
-      tau: Double, model: Seq[(Long, Array[Double])],
-      dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(batch)
-    if (dim == 0 || model.isEmpty)
-      return batch.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(
-          lit(s"semanticDecontaminateIncremental: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cents = model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-      s"semanticDecontaminateIncremental: quantizer model ${cents.length} centroids x " +
-        s"$dim dims exceeds the $QuantizerModelMaxDoubles-double driver/closure cap")
-    val asg = incrementalAssign(
-      batch.select(col("vec_id").as("id"), checked(col("embedding")).as("v")), cents)
-    attachKeep(asg.select("id", "cell", "aff"), decontamHits(asg, evalProbes, tau))
-  }
-
-  /** [[semanticDecontaminateIncremental]] through a [[HierQuantizer]] —
-    * the >8M-vector incremental path: arrivals home via the shared
-    * width-1 greedy descent (~2√k scored centroids, leaves never
-    * collected) against the FROZEN hq; the stored probe frame comes from
-    * [[evalProbeFrameHier]] over the same hq. Returns (vec_id, cell,
-    * aff, keep) per BATCH row. */
-  def semanticDecontaminateIncrementalHier(batch: DataFrame,
-      evalProbes: DataFrame, tau: Double, hq: HierQuantizer,
-      dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(batch)
-    if (dim == 0 || hq.top.isEmpty)
-      return batch.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(
-          lit(s"semanticDecontaminateIncrementalHier: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = batch.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val homes = hierDescent(cv, hq, nProbeTop = 1, nPerBranch = 1)
-      .select(col("id"), col("cell"), col("cs").as("aff"))
-    val asg = homes.join(cv.select(col("id"), packUnit(col("v")).as("vp")), "id")
+      tau: Double, q: Quantizer, dimHint: Int = -1): DataFrame = {
+    val dim = dimOf(batch, dimHint)
+    if (dim == 0 || q.isEmpty) return noDecisions(batch)
+    val (homes, asg) = q.homes(idVecs(batch, "semanticDecontaminateIncremental", dim))
     attachKeep(homes, decontamHits(asg, evalProbes, tau))
   }
 
@@ -816,52 +742,21 @@ object Similarity {
     * 4-gram but sits next to it in embedding space, so a corpus vector is
     * dropped when a PROBING eval vector reaches it at rounded cosine ≥
     * tau. Same machinery as the dedup family: corpus vectors home into
-    * their trained-quantizer cell (one plan-time-model loop per row),
-    * eval vectors probe their `nProbe` nearest cells (the eval side is
-    * small by construction — a benchmark suite — so the extra probe fan
-    * costs eval×nProbe rows, not corpus work), and the cross check is one
-    * cell equi-join scoring packed units with the codegen'd DotPacked.
-    * Everything rides 4dp-rounded cosines, so the DuckDB oracle replays
-    * the model, both assignments, and every decision.
+    * their quantizer cell, eval vectors probe their `nProbe` cells
+    * ([[evalProbeFrame]]), and the cross check is one cell equi-join
+    * scoring packed units with the codegen'd DotPacked. Everything rides
+    * 4dp-rounded cosines, so the DuckDB oracle replays the model, both
+    * assignments, and every decision. An empty model (kmeansModel of an
+    * empty corpus) degrades to the empty decision frame.
     *
     * Returns (vec_id, cell, aff, keep) over the CORPUS — keep = false
     * means contaminated. */
   def semanticDecontaminate(corpus: DataFrame, evalSet: DataFrame, tau: Double,
-      model: Seq[(Long, Array[Double])], nProbe: Int = 4,
-      dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(corpus)
-    // empty model (kmeansModel of an empty corpus returns Nil) degrades
-    // to the family's empty decision frame, like hq.top.isEmpty siblings
-    if (dim == 0 || model.isEmpty)
-      return corpus.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"),
-          lit(0.0).as("aff"), lit(true).as("keep"))
-        .where(lit(false))
-    def checked(op: String)(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"$op: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cents = model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-      s"semanticDecontaminate: quantizer model ${cents.length} centroids x $dim dims " +
-        s"exceeds the $QuantizerModelMaxDoubles-double driver/closure cap")
-    val asg = incrementalAssign(
-      corpus.select(col("vec_id").as("id"),
-        checked("semanticDecontaminate")(col("embedding")).as("v")), cents)
-    val evalProbes = evalProbeFrame(evalSet, model, nProbe, dim)
-    attachKeep(asg.select("id", "cell", "aff"), decontamHits(asg, evalProbes, tau))
-  }
-
-  /** [[semDedupIncremental]]'s batch-assignment frame — (id, cell, aff,
-    * vp) via the frozen-model JIT loop + packed unit vector. Shared with
-    * the streaming twin ([[graft.streaming.SemDeDupStream]]) so both
-    * execution modes assign identically. */
-  private[graft] def incrementalAssign(cv: DataFrame,
-      cents: Array[(Long, Array[Double], Double)]): DataFrame = {
-    val assignU = bestCellAffUdf(cents)
-    cv.withColumn("bc", assignU(col("v")))
-      .select(col("id"), col("bc._1").as("cell"), col("bc._2").as("aff"),
-        packUnit(col("v")).as("vp"))
+      q: Quantizer, nProbe: Int = 4, dimHint: Int = -1): DataFrame = {
+    val dim = dimOf(corpus, dimHint)
+    if (dim == 0 || q.isEmpty) return noDecisions(corpus)
+    val (homes, asg) = q.homes(idVecs(corpus, "semanticDecontaminate", dim))
+    attachKeep(homes, decontamHits(asg, evalProbeFrame(evalSet, q, nProbe, dim), tau))
   }
 
   /** The stored corpus as its (cell, packed-unit) projection — the one
@@ -872,28 +767,23 @@ object Similarity {
     existing.select(col("cell"), check(col("embedding")).as("ov"))
       .select(col("cell"), packUnit(col("ov")).as("ovp"))
 
-  /** Public helpers for the streaming twin's spec/driver glue: build the
-    * frozen-model closure array and the assignment frame from raw
-    * (vec_id, embedding) rows. */
+  /** [[semDedupIncremental]]'s flat batch-assignment frame — (id, cell,
+    * aff, vp) from raw (vec_id, embedding) rows through the frozen model.
+    * Shared with the streaming twins ([[graft.streaming.SemDeDupStream]],
+    * [[graft.streaming.OutlierStream]]) so both execution modes assign
+    * identically. */
   private[graft] def incrementalAssignFrame(batch: DataFrame,
       model: Seq[(Long, Array[Double])], dim: Int): DataFrame = {
     require(model.nonEmpty,
       "incrementalAssignFrame: pass the frozen quantizer model (kmeansModel)")
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"incrementalAssignFrame: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = batch.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    incrementalAssign(cv, model.map { case (cid, w) => withNorm3(cid, w) }.toArray)
+    Quantizer.Flat(model).homes(idVecs(batch, "incrementalAssignFrame", dim))._2
   }
 
   /** [[ivfProbeFrame]] from a raw embeddings frame + trained model (the
     * scale-probe entry point). */
   private[graft] def probeFrameForTest(vecs: DataFrame,
       model: Seq[(Long, Array[Double])], nProbe: Int, dimHint: Int): DataFrame = {
-    val cv = vecs.select(col("vec_id").as("id"),
-      toDouble(col("embedding")).as("v"))
-    ivfProbeFrame(cv, model.map { case (cid, w) => withNorm3(cid, w) }.toArray, nProbe)
+    ivfProbeFrame(rawVecs(vecs), centsOf(model), nProbe)
   }
 
   /** Two-level coarse quantizer: the scale path past the flat model's
@@ -907,7 +797,8 @@ object Similarity {
     * flops); here the driver holds √k-ish centroids and a vector scores
     * nTop + Σ|leaves(probed branches)| centroids — √-growth per decade
     * instead of linear (recursing the same construction over `leaves`
-    * gives log-depth constant work; not needed below ~10^10 vectors). */
+    * gives log-depth constant work: [[DeepQuantizer]]). The IVF ops take
+    * it as [[Quantizer.Hier]]. */
   case class HierQuantizer(top: Seq[(Long, Array[Double])], leaves: DataFrame) {
     @transient @volatile private var released0 = false
     /** True once [[unpersist]] ran — the quantizer must no longer be used. */
@@ -930,6 +821,11 @@ object Similarity {
     (cid, w, math.sqrt(nw))
   }
 
+  /** A driver-held model with its centroid norms precomputed — the input
+    * of every [[topByRounded]] closure. */
+  private def centsOf(model: Seq[(Long, Array[Double])]): Array[(Long, Array[Double], Double)] =
+    model.map { case (cid, w) => withNorm3(cid, w) }.toArray
+
   /** Train a [[HierQuantizer]]: top level = the seeded Lloyd trainer
     * ([[kmeansModel]], JIT'd loop assignment — init is the nTop lowest
     * hash60(vec_id)s, so the DuckDB oracle replays every pass); leaf level = a
@@ -941,25 +837,19 @@ object Similarity {
     * Scale shape: the only collect is the top model (nTop×dim doubles).
     * Branch assignment is one JIT'd loop per row against that model; the
     * leaf sample is a per-branch window row_number + count — one hash
-    * exchange on `branch`, reused by [[cosineDedupIvfHier]]'s leaf join.
+    * exchange on `branch`, reused by [[hierDescent]]'s leaf join.
     * Nothing downstream depends on n through the driver. */
   def hierQuantizer(vecs: DataFrame, nTop: Int, occupancy: Int, iters: Int,
       dimHint: Int = -1): HierQuantizer = {
     require(nTop > 0 && occupancy > 0 && iters > 0,
       s"hierQuantizer: nTop=$nTop occupancy=$occupancy iters=$iters must be positive")
     val top = kmeansModel(vecs, nTop, iters, dimHint)
-    val dim = if (dimHint > 0) dimHint else probeDim(vecs)
+    val dim = dimOf(vecs, dimHint)
     if (dim == 0)
-      return HierQuantizer(Nil, vecs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("branch"), lit(0L).as("cid"),
-          array().cast("array<double>").as("cw")).where(lit(false)))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"hierQuantizer: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val topArr = top.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    val branchU = bestCellUdf(topArr)
+      return HierQuantizer(Nil, emptyFrame(vecs, lit(0L).as("branch"), lit(0L).as("cid"),
+        array().cast("array<double>").as("cw")))
+    val cv = idVecs(vecs, "hierQuantizer", dim)
+    val branchU = bestCellUdf(centsOf(top))
     val asg = cv.withColumn("branch", branchU(col("v")))
     val wIn = org.apache.spark.sql.expressions.Window.partitionBy("branch")
     val wSalt = wIn.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id"))
@@ -983,94 +873,19 @@ object Similarity {
     HierQuantizer(top.filter { case (cid, _) => nonEmpty(cid) }, leaves)
   }
 
-  /** [[cosineDedupIvf]] through a [[HierQuantizer]] — the >8M-vector
-    * dedup path. Per row: ONE JIT'd loop over the driver-held top model
-    * picks the `nProbeTop` best branches (rounded 4dp cosine desc, cid
-    * ties — the greedy IVF tree descent); the row then scores ONLY those
-    * branches' leaves, fetched by a linear equi-join on `branch` against
-    * the distributed leaf frame (grouped once per branch; the leaf model
-    * never enters a closure). Home cell = best leaf of the FIRST (home)
-    * branch; probe cells = global top `nProbe` leaves across the probed
-    * branches (per-branch top-nProbe truncation is lossless for that
-    * ranking). Verify = the same streamed cell-keyed self-join as
-    * [[cosineDedupIvf]]: payloads cross once per row, pairs exist only
-    * inside the join's streamed output, dedup runs after the tau filter.
-    *
-    * All ranking is on 4dp-rounded cosines with lowest-cid ties, and the
-    * leaf sample/trained top are pure functions of the input, so the
-    * DuckDB oracle replays branch descent, leaf probing, and verify
-    * EXACTLY. */
-  def cosineDedupIvfHier(vecs: DataFrame, tau: Double, hq: HierQuantizer,
-      nProbe: Int = 4, nProbeTop: Int = 2, dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(vecs)
-    if (dim == 0 || hq.top.isEmpty)
-      return vecs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("a"), lit(0L).as("b"), lit(0.0).as("cos"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"cosineDedupIvfHier: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val flat = hierDescent(cv, hq, nProbeTop, nProbe)
-    val wAll = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("cs").desc, col("cell"))
-    val wRun = wAll.rowsBetween(
-      org.apache.spark.sql.expressions.Window.unboundedPreceding,
-      org.apache.spark.sql.expressions.Window.currentRow)
-    // ONE shared id-partitioned window pass ranks the probe cells AND
-    // flags the home row (the first slot-0 row in the same (cs desc,
-    // cell) order — identical to ranking the slot-0 subset alone): both
-    // consumers then read the SAME exchange, so the descent (branch join
-    // + leaf scoring, the dominant phase) computes ONCE (ReusedExchange),
-    // not once per consumer — filtering slot=0 below a second window
-    // would have re-run it. The running count keeps the window free of
-    // a group-limit, so a home cell outside the global top-nProbe is
-    // still found.
-    val ranked = flat
-      .withColumn("rn", row_number().over(wAll))
-      .withColumn("h0", sum(when(col("slot") === 0, 1).otherwise(0)).over(wRun))
-    // each consumer's filter references BOTH window columns (one side via
-    // an always-true guard): column pruning would otherwise drop the
-    // unused column from that branch's Window node, de-canonicalizing the
-    // two subtrees so NO planner could ever share them. With the guards
-    // the static planner's ReuseExchangeAndSubquery computes the descent
-    // ONCE (AQE's runtime stage cache currently misses across
-    // cached-relation-rooted stages — reuse-eligibility is still the
-    // right shape to pin, and PlanAuditSpec gates both properties)
-    val probes = ranked.where(col("rn") <= nProbe && col("h0") >= 0)
-      .select(col("id").as("p"), col("cell"))
-    val homes = ranked.where(col("slot") === 0 && col("h0") === 1 && col("rn") >= 1)
-      .select(col("id").as("m"), col("cell"))
-    val packed = cv.select(col("id"), packUnit(col("v")).as("vp"))
-    val hp = homes.join(packed, col("m") === col("id"))
-      .select(col("cell"), col("m"), col("vp").as("pm"))
-    val pp = probes.join(packed, col("p") === col("id"))
-      .select(col("cell"), col("p"), col("vp").as("pp"))
-    hp.join(pp, "cell").where(col("m") =!= col("p"))
-      .withColumn("cos",
-        r4(org.apache.spark.sql.GraftColumns.dotPacked(col("pm"), col("pp"))))
-      .where(col("cos") >= tau)
-      .select(least(col("m"), col("p")).as("a"),
-        greatest(col("m"), col("p")).as("b"), col("cos"))
-      .dropDuplicates("a", "b")
-  }
-
-  /** The greedy two-level descent shared by [[cosineDedupIvfHier]] and
-    * [[ivfTopKHier]]: for each `(id, v)` row, ONE JIT'd loop over the
-    * driver-held top model picks the `nProbeTop` best branches (slot 0 =
-    * the home branch); the row then scores ONLY those branches' leaves —
-    * fetched by a linear equi-join on `branch` against the distributed
-    * leaf frame, grouped once per branch with precomputed norms — and
-    * keeps the per-branch top `nPerBranch`. Output: (id, slot, cell, cs)
-    * leaf-score rows, every cs 4dp-rounded, ready for the home/probe
-    * window ranks. The leaf model never enters a closure. */
+  /** The greedy two-level descent behind [[Quantizer.Hier]]: for each
+    * `(id, v)` row, ONE JIT'd loop over the driver-held top model picks
+    * the `nProbeTop` best branches (slot 0 = the home branch); the row
+    * then scores ONLY those branches' leaves — fetched by a linear
+    * equi-join on `branch` against the distributed leaf frame, grouped
+    * once per branch with precomputed norms — and keeps the per-branch
+    * top `nPerBranch`. Output: (id, slot, cell, cs) leaf-score rows,
+    * every cs 4dp-rounded, ready for the home/probe window ranks. The
+    * leaf model never enters a closure. */
   private def hierDescent(cv: DataFrame, hq: HierQuantizer, nProbeTop: Int,
       nPerBranch: Int): DataFrame = {
     hq.requireLive("hierDescent")
-    val topArr = hq.top.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    val nPT = nProbeTop
-    val branchesU = topCellsUdf(topArr, nPT)
+    val branchesU = topCellsUdf(centsOf(hq.top), nProbeTop)
     val ex = cv.withColumn("pbs", branchesU(col("v")))
       .select(col("id"), col("v"), posexplode(col("pbs")))
       .toDF("id", "v", "slot", "branch")
@@ -1094,69 +909,17 @@ object Similarity {
       .select(col("id"), col("slot"), col("cc._1").as("cell"), col("cc._2").as("cs"))
   }
 
-  /** IVF-Flat ANN top-k through a [[HierQuantizer]] — [[ivfTopK]] for the
-    * >8M-vector regime, same contract (exact rounded-cosine rank within
-    * the probed cells, ties to the lowest nid): candidates land in their
-    * greedy-descent home cell, queries probe the global top `nProbe`
-    * leaves across their `nProbeTop` best branches, candidate pairs flow
-    * as BARE ids through the cell equi-join, and vectors re-attach to
-    * survivors only. Driver/closure cost is nTop×dim doubles — the leaf
-    * model stays a distributed frame. */
-  def ivfTopKHier(queries: DataFrame, candidates: DataFrame, k: Int,
-      hq: HierQuantizer, nProbe: Int = 4, nProbeTop: Int = 2,
-      dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(candidates)
-    if (dim == 0 || hq.top.isEmpty)
-      return candidates.sparkSession.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("sim"), lit(0L).as("rank"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"ivfTopKHier: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val qv = queries.select(col("vec_id").as("qid"), checked(col("embedding")).as("qv"))
-    val cv = candidates.select(col("vec_id").as("nid"), checked(col("embedding")).as("nv"))
-    val wCell = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("cs").desc, col("cell"))
-    // candidates descend to their single home cell (slot 0 branch, best
-    // leaf); nPerBranch=1 suffices for a rank-1 pick
-    val cells = hierDescent(cv.select(col("nid").as("id"), col("nv").as("v")),
-        hq, 1, 1)
-      .withColumn("rn", row_number().over(wCell)).where(col("rn") === 1)
-      .select(col("id").as("nid"), col("cell"))
-    val probes = hierDescent(qv.select(col("qid").as("id"), col("qv").as("v")),
-        hq, nProbeTop, nProbe)
-      .withColumn("rn", row_number().over(wCell)).where(col("rn") <= nProbe)
-      .select(col("id").as("qid"), col("cell"))
-    // vectors attach per ROW (packed unit form, one id-join each side),
-    // then pairs are scored by the codegen'd DotPacked inside the cell
-    // join's streamed output — never a per-PAIR payload re-attach (the
-    // round-7 dedup lesson: with a query set that grows with the corpus,
-    // bare-id pairs joined back to the vector tables are candidates ×
-    // dim×8 bytes of join I/O)
-    val sims = probes
-      .join(qv.select(col("qid"), packUnit(col("qv")).as("pq")), "qid")
-      .join(cells.join(cv.select(col("nid"), packUnit(col("nv")).as("pn")), "nid"), "cell")
-      .where(col("qid") =!= col("nid"))
-      .withColumn("sim",
-        org.apache.spark.sql.GraftColumns.dotPacked(col("pq"), col("pn")))
-    rankTopK(sims, k)
-  }
-
-  /** Per-row leaf-centroid scoring count of [[cosineDedupIvfHier]]'s
-    * descent (the scale-probe entry point): a row additionally scores
-    * `hq.top.size` top-level centroids in-closure; this frame counts the
-    * leaf side — (id, scored) with scored = Σ |leaves(probed branches)|.
+  /** Per-row leaf-centroid scoring count of [[hierDescent]] (the
+    * scale-probe entry point): a row additionally scores `hq.top.size`
+    * top-level centroids in-closure; this frame counts the leaf side —
+    * (id, scored) with scored = Σ |leaves(probed branches)|.
     * ScaleProbeSpec measures this across a GenScale decade to pin the
     * √-growth claim the hierarchical path rests on. */
   private[graft] def hierScoredLeaves(vecs: DataFrame, hq: HierQuantizer,
       nProbeTop: Int, dimHint: Int): DataFrame = {
     hq.requireLive("hierScoredLeaves")
-    val cv = vecs.select(col("vec_id").as("id"), toDouble(col("embedding")).as("v"))
-    val topArr = hq.top.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    val nPT = nProbeTop
-    val branchesU = topCellsUdf(topArr, nPT)
-    val ex = cv.withColumn("pbs", branchesU(col("v")))
+    val branchesU = topCellsUdf(centsOf(hq.top), nProbeTop)
+    val ex = rawVecs(vecs).withColumn("pbs", branchesU(col("v")))
       .select(col("id"), explode(col("pbs")).as("branch"))
     val bc = hq.leaves.groupBy("branch").agg(count(lit(1)).as("nl"))
     ex.join(bc, "branch").groupBy("id").agg(sum("nl").as("scored"))
@@ -1217,18 +980,12 @@ object Similarity {
     require(nTop > 0 && iters > 0 && occupancies.nonEmpty && occupancies.forall(_ > 0),
       s"deepQuantizer: nTop=$nTop iters=$iters occupancies=$occupancies must be positive")
     val top = kmeansModel(vecs, nTop, iters, dimHint)
-    val dim = if (dimHint > 0) dimHint else probeDim(vecs)
-    def emptyLvl = vecs.sparkSession.emptyDataFrame
-      .select(lit(0L).as("parent"), lit(0L).as("cid"),
-        array().cast("array<double>").as("cw")).where(lit(false))
-    if (dim == 0) return DeepQuantizer(Nil, occupancies.map(_ => emptyLvl))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"deepQuantizer: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val topArr = top.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    val branchU = bestCellUdf(topArr)
+    val dim = dimOf(vecs, dimHint)
+    if (dim == 0)
+      return DeepQuantizer(Nil, occupancies.map(_ => emptyFrame(vecs, lit(0L).as("parent"),
+        lit(0L).as("cid"), array().cast("array<double>").as("cw"))))
+    val cv = idVecs(vecs, "deepQuantizer", dim)
+    val branchU = bestCellUdf(centsOf(top))
     var asg = cv.withColumn("parent", branchU(col("v")))
     val wIn = org.apache.spark.sql.expressions.Window.partitionBy("parent")
     val wSalt = wIn.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id"))
@@ -1236,7 +993,7 @@ object Similarity {
       // each level frame is PERSISTED and eagerly materialized: it is the
       // distributed half of the MODEL (1/occ-th of its parent population
       // — k^(i/L)-ish rows, not the corpus), and its consumers — the next
-      // level's re-home plus both of [[ivfTopKDeep]]'s descents — would
+      // level's re-home plus both of [[Quantizer.Deep]]'s descents — would
       // otherwise each recompute the whole Lloyd + sample + re-home
       // lineage (the unpersisted form measured ~5 recomputes and 50
       // window nodes in one emb_ann_deep plan). Bench/Verify clear the
@@ -1303,20 +1060,15 @@ object Similarity {
     dq.requireLive("deepDescent")
     require(widths.length == dq.levels.length + 1 && widths.forall(_ > 0),
       s"deepDescent: need ${dq.levels.length + 1} positive widths, got $widths")
-    val topArr = dq.top.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    val w0 = widths.head
-    val branchesU = topCellsUdf(topArr, w0)
+    val branchesU = topCellsUdf(centsOf(dq.top), widths.head)
     val init = cv.withColumn("pbs", branchesU(col("v")))
       .select(col("id"), col("v"), explode(col("pbs")).as("parent"))
     val last = dq.levels.length - 1
-    val wId = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("cs").desc, col("cell"))
     dq.levels.zip(widths.tail).zipWithIndex.foldLeft(init) {
       case (cur, ((lvl, wNext), li)) =>
-        val scored = scoreChildren(cur, lvl, wNext)
-        if (li == last) scored.select("id", "cell", "cs")
-        else scored.select("id", "cell", "cs")
-          .withColumn("rn", row_number().over(wId)).where(col("rn") <= wNext)
+        val scored = scoreChildren(cur, lvl, wNext).select("id", "cell", "cs")
+        if (li == last) scored
+        else topCells(scored, wNext)
           .select(col("id"), col("cell").as("parent"))
           .join(cv, "id")
           .select(col("id"), col("v"), col("parent"))
@@ -1332,13 +1084,8 @@ object Similarity {
   private[graft] def deepScoredHome(vecs: DataFrame, dq: DeepQuantizer,
       dimHint: Int): DataFrame = {
     dq.requireLive("deepScoredHome")
-    def checked(vec: Column): Column =
-      when(size(vec) === dimHint, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"deepScoredHome: expected dim $dimHint, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val topArr = dq.top.map { case (cid, w) => withNorm3(cid, w) }.toArray
-    val branchU = bestCellUdf(topArr)
+    val cv = idVecs(vecs, "deepScoredHome", dimHint)
+    val branchU = bestCellUdf(centsOf(dq.top))
     var cur = cv.withColumn("parent", branchU(col("v")))
     var acc = cur.select(col("id"), lit(dq.top.size.toLong).as("scored"))
     dq.levels.zipWithIndex.foreach { case (lvl, li) =>
@@ -1350,46 +1097,6 @@ object Similarity {
           .select(col("id"), col("v"), col("cell").as("parent"))
     }
     acc
-  }
-
-  /** IVF-Flat ANN top-k through a [[DeepQuantizer]] — [[ivfTopKHier]]
-    * generalized to L levels, same contract (exact rounded-cosine rank
-    * within the probed cells, ties to the lowest nid): candidates descend
-    * the width-1 home chain to their single home cell, queries descend
-    * with `widths` (per-level probe fan), candidate pairs flow as BARE
-    * ids through the cell equi-join with packed-unit payloads attached
-    * per ROW, and [[rankTopK]] finishes. Driver/closure cost is nTop×dim
-    * doubles; every level stays a distributed frame. */
-  def ivfTopKDeep(queries: DataFrame, candidates: DataFrame, k: Int,
-      dq: DeepQuantizer, widths: Seq[Int], dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint else probeDim(candidates)
-    if (dim == 0 || dq.top.isEmpty)
-      return candidates.sparkSession.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("sim"), lit(0L).as("rank"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"ivfTopKDeep: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val qv = queries.select(col("vec_id").as("qid"), checked(col("embedding")).as("qv"))
-    val cv = candidates.select(col("vec_id").as("nid"), checked(col("embedding")).as("nv"))
-    val wCell = org.apache.spark.sql.expressions.Window
-      .partitionBy("id").orderBy(col("cs").desc, col("cell"))
-    val cells = deepDescent(cv.select(col("nid").as("id"), col("nv").as("v")),
-        dq, Seq.fill(dq.levels.length + 1)(1))
-      .withColumn("rn", row_number().over(wCell)).where(col("rn") === 1)
-      .select(col("id").as("nid"), col("cell"))
-    val probes = deepDescent(qv.select(col("qid").as("id"), col("qv").as("v")),
-        dq, widths)
-      .withColumn("rn", row_number().over(wCell)).where(col("rn") <= widths.last)
-      .select(col("id").as("qid"), col("cell"))
-    val sims = probes
-      .join(qv.select(col("qid"), packUnit(col("qv")).as("pq")), "qid")
-      .join(cells.join(cv.select(col("nid"), packUnit(col("nv")).as("pn")), "nid"), "cell")
-      .where(col("qid") =!= col("nid"))
-      .withColumn("sim",
-        org.apache.spark.sql.GraftColumns.dotPacked(col("pq"), col("pn")))
-    rankTopK(sims, k)
   }
 
   /** Unit-normalize a double vector and pack it little-endian into bytes
@@ -1456,62 +1163,44 @@ object Similarity {
     }
 
   /** IVF-Flat approximate top-k — the coarse-quantizer counterpart to the
-    * hyperplane-LSH [[annTopK]]: `nCent` centroids partition the corpus
-    * into cells (every candidate lives in exactly ONE cell — its nearest
-    * centroid by rounded cosine, ties to the lowest centroid id); a query
-    * probes its `nProbe` nearest cells and ranks exactly within them.
+    * hyperplane-LSH [[annTopK]]: the quantizer partitions the corpus into
+    * cells (every candidate lives in exactly ONE cell — its home cell); a
+    * query probes its `nProbe` cells and ranks exactly within them (rounded
+    * cosine, ties to the lowest nid).
     *
-    * The quantizer is a trained [[kmeansModel]] when `model` is given
-    * (nCent is then the model's size), else a deterministic SALTED data
-    * sample: the `nCent` lowest hash60(vec_id), id tie-break, not the
-    * `nCent` lowest ids — an id order that correlates with cluster
-    * structure (append-time ordering, label-sorted exports) would
-    * otherwise concentrate every centroid in one region. Either way the
-    * index is a pure function of the input, so the DuckDB oracle replays
-    * assignment, probing, and ranking EXACTLY.
+    * The quantizer is a trained [[kmeansModel]] in a [[Quantizer.Flat]],
+    * or — with an empty flat model — a deterministic SALTED data sample
+    * of `nCent` candidates ([[saltedSample]]); past the flat model's
+    * [[QuantizerModelMaxDoubles]] cap, a [[Quantizer.Hier]] or
+    * [[Quantizer.Deep]] descent whose driver/closure cost is nTop×dim
+    * doubles. Either way the index is a pure function of the input, so
+    * the DuckDB oracle replays assignment, probing, and ranking EXACTLY.
     *
-    * Scale shape: the model is collected at plan time (nCent×dim doubles,
-    * capped by [[QuantizerModelMaxDoubles]]) and assignment is ONE JIT'd
-    * [[topByRounded]] loop per row ([[ivfProbeFrame]], [[cosineDedupIvf]]'s
-    * discipline) — no per-(row × centroid × dim) join rows, so the cell
+    * Scale shape: no per-(row × centroid × dim) join rows, so the cell
     * count may grow with the corpus (constant occupancy). Rows cross the
     * cell-keyed shuffle once each WITH their packed unit vector, and pairs
     * are scored by the codegen'd DotPacked inside the join's streamed
     * output: because each candidate has exactly one cell there are no
     * duplicate pairs and no dedup exchange (vs. the LSH path's
-    * nTables-way dedup), and no per-PAIR vector re-attach join. Per query
-    * the exact work is ~nProbe/nCent of the corpus — the IVF-Flat
-    * contract. */
-  def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int, nCent: Int,
-      nProbe: Int, dimHint: Int = -1,
-      model: Seq[(Long, Array[Double])] = Nil): DataFrame = {
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(candidates)
-    if (dim == 0)
-      return candidates.sparkSession.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("sim"), lit(0L).as("rank"))
-        .where(lit(false))
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"ivfTopK: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val qv = queries.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val cv = candidates.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    val cents: Array[(Long, Array[Double], Double)] =
-      if (model.nonEmpty) model.map { case (cid, w) => withNorm3(cid, w) }.toArray
-      else cv.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id"))
-        .limit(nCent)
-        .collect().map(r => withNorm3(r.getLong(0), r.getSeq[Double](1).toArray))
-    require(cents.length.toLong * dim <= QuantizerModelMaxDoubles,
-      s"ivfTopK: quantizer model ${cents.length} centroids x $dim dims exceeds the " +
-        s"$QuantizerModelMaxDoubles-double driver/closure cap — use ivfTopKHier")
-    val cellsF = ivfProbeFrame(cv, cents, 1)
-      .select(element_at(col("pcs"), 1).as("cell"), col("id").as("nid"),
-        col("vp").as("pn"))
-    val probesF = ivfProbeFrame(qv, cents, nProbe)
-      .select(explode(col("pcs")).as("cell"), col("id").as("qid"),
-        col("vp").as("pq"))
-    val sims = probesF.join(cellsF, "cell").where(col("qid") =!= col("nid"))
+    * nTables-way dedup), and no per-PAIR vector re-attach join (the
+    * round-7 dedup lesson: with a query set that grows with the corpus,
+    * bare-id pairs joined back to the vector tables are candidates ×
+    * dim×8 bytes of join I/O). Per query the exact work is ~nProbe/nCent
+    * of the corpus — the IVF-Flat contract. */
+  def ivfTopK(queries: DataFrame, candidates: DataFrame, k: Int,
+      q: Quantizer = Quantizer.Flat(Nil), nProbe: Int = 4, nCent: Int = -1,
+      dimHint: Int = -1): DataFrame = {
+    val dim = dimOf(candidates, dimHint)
+    if (dim == 0) return noRanks(candidates)
+    val qv = idVecs(queries, "ivfTopK", dim)
+    val cv = idVecs(candidates, "ivfTopK", dim)
+    val qq = q.orSample(cv, sampleCells(candidates, nCent, -1L))
+    if (qq.isEmpty) return noRanks(candidates)
+    val cells = qq.cells(cv)
+      .select(col("cell"), col("id").as("nid"), col("vp").as("pn"))
+    val probes = qq.probes(qv, nProbe)
+      .select(col("cell"), col("id").as("qid"), col("vp").as("pq"))
+    val sims = probes.join(cells, "cell").where(col("qid") =!= col("nid"))
       .withColumn("sim",
         org.apache.spark.sql.GraftColumns.dotPacked(col("pq"), col("pn")))
     rankTopK(sims, k)
@@ -1537,18 +1226,9 @@ object Similarity {
       nTables: Int = 8, dimHint: Int = -1): DataFrame = {
     // dim from the caller when known; otherwise inferred from the first
     // candidate (empty input → empty result, not NoSuchElementException)
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(candidates)
-    if (dim == 0)
-      return candidates.sparkSession.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("sim"), lit(0L).as("rank"))
-        .where(lit(false))
-    // mixed-dimension input would silently hash against a wrong-length
-    // plane — fail loudly instead
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"annTopK: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
+    val dim = dimOf(candidates, dimHint)
+    if (dim == 0) return noRanks(candidates)
+    val checked = dimChecked("annTopK", dim) _
     val qv = queries.select(col("vec_id").as("qid"), checked(col("embedding")).as("qv"))
     val cv = candidates.select(col("vec_id").as("nid"), checked(col("embedding")).as("nv"))
     // candidate generation runs on BARE ids: the (table, bucket) equi-join
@@ -1566,8 +1246,8 @@ object Similarity {
 
   /** Lloyd k-means over the embedding column: `iters` assignment passes
     * with a centroid update between each — the TRAINED coarse quantizer
-    * (vs [[ivfTopK]]'s data-sample one, which takes this model in its
-    * `model` slot). Returns the final assignment (vec_id, cell, aff) with
+    * (vs [[ivfTopK]]'s data-sample one; [[kmeansModel]] feeds a
+    * [[Quantizer.Flat]]). Returns the final assignment (vec_id, cell, aff) with
     * `aff` the 4dp-rounded cosine to the winning centroid.
     *
     * Fully deterministic, so the DuckDB oracle replays every pass
@@ -1588,19 +1268,15 @@ object Similarity {
   def kmeansAssign(vecs: DataFrame, nCent: Int, iters: Int,
       dimHint: Int = -1): DataFrame = {
     require(nCent > 0 && iters > 0, s"kmeansAssign: nCent=$nCent iters=$iters must be positive")
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(vecs)
+    val dim = dimOf(vecs, dimHint)
     if (dim == 0)
-      return vecs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("vec_id"), lit(0L).as("cell"), lit(0.0).as("aff"))
-        .where(lit(false))
+      return emptyFrame(vecs, lit(0L).as("vec_id"), lit(0L).as("cell"), lit(0.0).as("aff"))
     kmeansLoop(vecs, nCent, iters, dim)._1
       .select(col("id").as("vec_id"), col("cell"), col("aff"))
   }
 
   /** The trained centroid model alone — (cid, weights) on the driver,
-    * ready to drop into [[ivfTopK]]'s / [[cosineDedupIvf]]'s `model` slot
-    * as the coarse quantizer. Runs `iters` Lloyd passes like
+    * ready to drop into a [[Quantizer.Flat]] as the coarse quantizer. Runs `iters` Lloyd passes like
     * [[kmeansAssign]] (the final assignment is discarded; only the update
     * after pass `iters - 1` matters, so training cost is identical). The
     * per-pass cost is one JIT'd loop per row whatever nCent is, so
@@ -1608,36 +1284,23 @@ object Similarity {
   def kmeansModel(vecs: DataFrame, nCent: Int, iters: Int,
       dimHint: Int = -1): Seq[(Long, Array[Double])] = {
     require(nCent > 0 && iters > 0, s"kmeansModel: nCent=$nCent iters=$iters must be positive")
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(vecs)
+    val dim = dimOf(vecs, dimHint)
     if (dim == 0) Nil else kmeansLoop(vecs, nCent, iters, dim)._2
   }
 
   private def kmeansLoop(vecs: DataFrame, nCent: Int, iters: Int,
       dim: Int): (DataFrame, Seq[(Long, Array[Double])]) = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"kmeans: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
-    val cv = vecs.select(col("vec_id").as("id"), checked(col("embedding")).as("v"))
-    // Lloyd INIT is SALTED — the nCent lowest hash60(id) vectors, id
-    // tie-break — matching every sample model in the family: id order
-    // correlated with cluster structure (append-time ordering,
-    // label-sorted exports) would seed every centroid in one region, and
-    // two Lloyd passes attenuate but don't erase that skew. Still a pure,
-    // oracle-replayable function of the input.
-    var model: Seq[(Long, Array[Double])] =
-      cv.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id")).limit(nCent)
-        .as[(Long, Array[Double])].collect().toSeq
+    val cv = idVecs(vecs, "kmeans", dim)
+    // Lloyd INIT is the salted sample, like every sample model in the
+    // family: two Lloyd passes attenuate but don't erase an id-order skew
+    var model = saltedSample(cv, nCent)
     var asg: DataFrame = null
     for (pass <- 1 to iters) {
       // argmax over the current model via [[topByRounded]]'s primitive
       // scoring loop + exact rounded ranking over the provably-sufficient
       // candidate set: (cell, aff) as if every centroid were rounded,
       // minus the per-(row × centroid) BigDecimal
-      val bestU = bestCellAffUdf(model.map { case (cid, w) => withNorm3(cid, w) }.toArray)
+      val bestU = bestCellAffUdf(centsOf(model))
       val scored = cv.withColumn("bc", bestU(col("v")))
       asg = scored.select(col("id"), col("bc._1").as("cell"), col("bc._2").as("aff"))
       if (pass < iters) {
@@ -1707,19 +1370,10 @@ object Similarity {
       s"pqTopK: ADC broadcast table would be $adcRows rows " +
       s"(#queries=$nQueries x m=$m x ksub=$ksub) > cap $PqAdcBroadcastRowCap " +
       "(~40 B/row). Feed a bounded query batch, or shuffle-join instead of broadcasting.")
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(candidates)
-    if (dim == 0)
-      return candidates.sparkSession.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("adist"), lit(0L).as("rank"))
-        .where(lit(false))
+    val dim = dimOf(candidates, dimHint)
+    if (dim == 0) return noAdc(candidates)
     require(dim % m == 0, s"pqTopK: dim $dim must divide into $m subspaces")
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"pqTopK: expected dim $dim, got "),
-          // coalesce: a NULL embedding would otherwise null out the whole
-          // concat and raise_error would throw with a null message
-          coalesce(size(vec).cast("string"), lit("NULL")))))
+    val checked = dimChecked("pqTopK", dim) _
     val (codesU, qdU) = pqEncoders(candidates, m, ksub, dim)
     val codes = candidates
       .select(col("vec_id").as("nid"), posexplode(codesU(checked(col("embedding")))))
@@ -1748,16 +1402,9 @@ object Similarity {
       : (org.apache.spark.sql.expressions.UserDefinedFunction,
          org.apache.spark.sql.expressions.UserDefinedFunction) = {
     val dsub = dim / m
-    // SALTED sample codebook (ksub lowest hash60(vec_id), id tie-break):
-    // code index c = position in the salted order. First-N-by-id would
-    // let an id order correlated with cluster structure pick all
-    // codewords from one region — the round-8 dedup-sample lesson
-    // applied to the PQ codebook.
-    val cb: Array[Array[Double]] = candidates
-      .orderBy(TextFunctions.hash60(col("vec_id").cast("string")), col("vec_id"))
-      .limit(ksub)
-      .select(toDouble(col("embedding"))).collect()
-      .map(_.getSeq[Double](0).toArray)
+    // [[saltedSample]] codebook: code index c = position in the salted
+    // order (the round-8 dedup-sample lesson applied to the PQ codebook)
+    val cb: Array[Array[Double]] = saltedSample(rawVecs(candidates), ksub).map(_._2).toArray
     require(cb.nonEmpty, "pqEncoders: candidates must be non-empty to build a codebook")
     require(cb.forall(_.length == dim),
       s"pqEncoders: codebook vectors must all have dim $dim")
@@ -1803,27 +1450,15 @@ object Similarity {
     * passes. */
   def ivfPqTopK(queries: DataFrame, candidates: DataFrame, k: Int,
       nCent: Int, nProbe: Int, m: Int, ksub: Int, dimHint: Int = -1): DataFrame = {
-    val dim = if (dimHint > 0) dimHint
-      else probeDim(candidates)
-    if (dim == 0)
-      return candidates.sparkSession.emptyDataFrame
-        .select(lit(0L).as("qid"), lit(0L).as("nid"), lit(0.0).as("adist"), lit(0L).as("rank"))
-        .where(lit(false))
+    val dim = dimOf(candidates, dimHint)
+    if (dim == 0) return noAdc(candidates)
     require(dim % m == 0, s"ivfPqTopK: dim $dim must divide into $m subspaces")
-    def checked(vec: Column): Column =
-      when(size(vec) === dim, toDouble(vec))
-        .otherwise(raise_error(concat(lit(s"ivfPqTopK: expected dim $dim, got "),
-          coalesce(size(vec).cast("string"), lit("NULL")))))
+    val checked = dimChecked("ivfPqTopK", dim) _
     // cell assignment via a plan-time centroid model + one JIT'd loop per
     // row (same discipline as the PQ encode and [[ivfTopK]]; an exploded
     // (row, centroid, dim) join measured ~1.5 s more here) — identical math: rounded cosine argmax, ties to the lowest cid.
-    // Centroids are the SALTED sample (hash60(vec_id) order, id
-    // tie-break), matching [[ivfTopK]]/[[pqEncoders]].
-    val cents: Array[(Long, Array[Double])] = candidates
-      .orderBy(TextFunctions.hash60(col("vec_id").cast("string")), col("vec_id"))
-      .limit(nCent)
-      .select(col("vec_id"), toDouble(col("embedding"))).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+    // Centroids are the [[saltedSample]], matching [[ivfTopK]]/[[pqEncoders]].
+    val cents = saltedSample(rawVecs(candidates), nCent)
     require(cents.nonEmpty, "ivfPqTopK: candidates must be non-empty to build centroids")
     // assignment/probing via [[topByRounded]]: primitive scoring loop with
     // precomputed centroid norms and one boxed→array copy per row, exact
@@ -1833,7 +1468,7 @@ object Similarity {
     // the 100× scale check measured dominant in the dedup's twin loop).
     // topByRounded ranks ties by cid VALUE (not array position), so the
     // salted — non-cid-ascending — centroid order is tie-safe.
-    val centsN = cents.map { case (cid, w) => withNorm3(cid, w) }
+    val centsN = centsOf(cents)
     val bestCellU = bestCellUdf(centsN)
     val probeCellsU = topCellsUdf(centsN, nProbe)
     val cells = candidates

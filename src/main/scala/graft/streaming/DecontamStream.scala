@@ -5,12 +5,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Streaming twin of [[graft.functions.Similarity
-  * .semanticDecontaminateIncremental]] — the live form of the daily
-  * decontamination batch: arrivals stream in, each already put through
-  * the FROZEN quantizer's assignment loop (the [[VecArrival]] contract
+  * .semanticDecontaminateIncremental]] through a frozen
+  * [[graft.functions.Similarity.Quantizer.Flat]] — the live form of the
+  * daily decontamination batch: arrivals stream in, each already put
+  * through the flat model's assignment loop (the [[VecArrival]] contract
   * shared with [[SemDeDupStream]]), and every micro-batch screens them
   * against the FROZEN eval-probe frame ([[graft.functions.Similarity
-  * .evalProbeFrame]], computed once and stored).
+  * .evalProbeFrame]] through the same quantizer, computed once and
+  * stored — any quantizer's probe frame has the same (cell, evp) shape).
   *
   * Unlike the dedup twin this leg needs NO custom state: the eval suite
   * alone decides, so arrivals never affect each other and the whole

@@ -6,8 +6,9 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 /** One assigned arrival: a new vector already put through the FROZEN
-  * quantizer's JIT assignment loop ([[graft.functions.Similarity
-  * .incrementalAssignFrame]]) — home cell, 4dp-rounded centroid affinity,
+  * flat quantizer's JIT assignment loop ([[graft.functions.Similarity
+  * .incrementalAssignFrame]], the [[graft.functions.Similarity.Quantizer
+  * .Flat]] home frame) — home cell, 4dp-rounded centroid affinity,
   * unit-normalized little-endian packed vector. Assignment is stateless,
   * so it runs in the streaming query's map stage; only the keep/drop
   * decision needs state. */
@@ -34,8 +35,9 @@ final case class VecDecision(vec_id: Long, cell: Long, aff: Double, keep: Boolea
   * an executor OOM. */
 final case class CellKept(vps: Seq[Array[Byte]])
 
-/** Streaming twin of [[graft.functions.Similarity.semDedupIncremental]] —
-  * the live form of the daily-batch SemDeDup: arrivals stream in, state
+/** Streaming twin of [[graft.functions.Similarity.semDedupIncremental]]
+  * through a frozen [[graft.functions.Similarity.Quantizer.Flat]] — the
+  * live form of the daily-batch SemDeDup: arrivals stream in, state
   * holds each cell's kept corpus, and every micro-batch applies EXACTLY
   * the batch op's two-leg rule (same +1e-9 HALF_UP 4dp rounding, same
   * outranking):

@@ -20,10 +20,12 @@ class CollectAuditSpec extends AnyFunSuite {
       "capped-model discipline: per-partition MG summaries <= (cap+1)*partitions, " +
         "histogram round boundaries <= buckets, certified-range value collects " +
         "gated by the explicit cap require()s"),
-    "graft/functions/Similarity.scala" -> (8,
-      "quantizer/k-means model collects (<= nCent or branch rows, capped by " +
-        "QuantizerModelMaxDoubles), per-cell stats <= cells, frozen eval-probe " +
-        "models - all plan-time model artifacts, never corpus rows"),
+    "graft/functions/Similarity.scala" -> (4,
+      "the one salted-sample model collect (<= nCent/ksub rows, capped by " +
+        "QuantizerModelMaxDoubles) shared by the IVF/dedup cells, the k-means " +
+        "init and the PQ codebooks; per-cell k-means means <= cells x dim; the " +
+        "hier/deep non-empty-branch sets <= nTop - all plan-time model " +
+        "artifacts, never corpus rows"),
     "graft/QueriesPipeline.scala" -> (3,
       "dsir lambda model: one row holding <= 1024-entry bucket arrays; certified quantile " +
         "boundaries <= requested percentile count; doc_hybrid_rrf's single " +

@@ -95,4 +95,38 @@ class FallibilitySpec extends SparkSuite {
       (30L, 3.0, 20.0, 200.0)),
       "ts=30: x and z tick the same instant -> ONE emission carrying both")
   }
+
+  test("IVF ops: a wrong-dim or NULL vector aborts with the op's dim message") {
+    // the fixed-dim check every IVF op applies at its boundary: a 64-dim
+    // corpus carrying one 3-element row (or one NULL row) must abort the
+    // query naming the op, the expected dim and what it got — through a
+    // flat model (semDedup) and a hier descent (ivfTopK) alike
+    import graft.functions.Similarity
+    import graft.functions.Similarity.Quantizer
+    val e = Tables.embeddings(spark, "/root/testdata/sf0.001").select("vec_id", "embedding")
+    val short = e.unionByName(Seq((100000L, Option(Seq(1f, 2f, 3f))))
+      .toDF("vec_id", "embedding"))
+    val nul = e.unionByName(Seq((100001L, Option.empty[Seq[Float]]))
+      .toDF("vec_id", "embedding"))
+    val model = Quantizer.Flat(Similarity.kmeansModel(e, nCent = 4, iters = 1, dimHint = 64))
+    val hier = Quantizer.Hier(Similarity.hierQuantizer(e, nTop = 2, occupancy = 32,
+      iters = 1, dimHint = 64))
+    def abort(df: => org.apache.spark.sql.DataFrame): String =
+      intercept[Exception](df.collect()).getMessage
+    for ((bad, got) <- Seq(short -> "got 3", nul -> "got NULL")) {
+      val sd = abort(Similarity.semDedup(bad, 0.4, model, dimHint = 64))
+      assert(sd.contains(s"semDedup: expected dim 64, $got"), sd)
+      val ann = abort(Similarity.ivfTopK(bad.where(col("vec_id") < 10), bad, 3, hier,
+        nProbe = 2, dimHint = 64))
+      assert(ann.contains(s"ivfTopK: expected dim 64, $got"), ann)
+    }
+  }
+
+  test("probeDim: a NULL first embedding aborts with its readable message") {
+    val df = Seq((1L, Option.empty[Seq[Float]]), (2L, Option(Seq(1f, 2f))))
+      .toDF("vec_id", "embedding")
+    val ex = intercept[IllegalArgumentException](graft.functions.Similarity.probeDim(df))
+    assert(ex.getMessage.contains("probeDim: first row's embedding is NULL or empty"),
+      ex.getMessage)
+  }
 }

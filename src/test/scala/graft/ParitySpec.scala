@@ -666,10 +666,11 @@ class ParitySpec extends SparkSuite {
     val batch = e.where(col("vec_id") % 5 === 0)
     val k = math.max(1, math.ceil(old.count() / 64.0).toInt)
     val model = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64)
-    val kept = Similarity.semDedup(old, 0.4, model, dimHint = 64)
+    val kept = Similarity.semDedup(old, 0.4, Similarity.Quantizer.Flat(model), dimHint = 64)
       .where(col("keep")).select(col("vec_id"), col("cell"))
       .join(old.select(col("vec_id"), col("embedding")), "vec_id")
-    val batchDec = Similarity.semDedupIncremental(kept, batch, 0.4, model, dimHint = 64)
+    val batchDec = Similarity.semDedupIncremental(kept, batch, 0.4,
+      Similarity.Quantizer.Flat(model), dimHint = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
     val init: Seq[(Long, CellKept)] = Similarity
       .incrementalCorpus(kept, Similarity.toDouble)
@@ -706,9 +707,11 @@ class ParitySpec extends SparkSuite {
     val ev = e.where(col("label") === 9)
     val k = math.max(1, math.ceil(old.count() / 64.0).toInt)
     val model = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64)
-    val probes = Similarity.evalProbeFrame(ev, model, nProbe = 4, dimHint = 64)
+    val probes = Similarity.evalProbeFrame(ev, Similarity.Quantizer.Flat(model),
+      nProbe = 4, dimHint = 64)
     val batchDec = Similarity
-      .semanticDecontaminateIncremental(batch, probes, 0.4, model, dimHint = 64)
+      .semanticDecontaminateIncremental(batch, probes, 0.4, Similarity.Quantizer.Flat(model),
+        dimHint = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
     val arrivals = Similarity.incrementalAssignFrame(batch, model, 64)
       .as[VecArrival].collect().sortBy(_.id).toSeq

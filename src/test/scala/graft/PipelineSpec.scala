@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{Similarity, TextFunctions => TF}
+import graft.functions.Similarity.Quantizer
 import org.apache.spark.sql.functions._
 
 /** Text/dedup/similarity primitives — semantics the DuckDB oracle can't
@@ -341,8 +342,8 @@ class PipelineSpec extends SparkSuite {
     val k = math.max(1, math.ceil(
       n.toDouble / Similarity.DedupCellOccupancy).toInt)
     val trained = Similarity.kmeansModel(e, nCent = k, iters = 2, dimHint = 64)
-    val found = Similarity.cosineDedupIvf(e, 0.4, nProbe = 6, dimHint = 64,
-      model = trained).select("a", "b").as[(Long, Long)].collect().toSet
+    val found = Similarity.cosineDedupIvf(e, 0.4, Quantizer.Flat(trained), nProbe = 6,
+      dimHint = 64).select("a", "b").as[(Long, Long)].collect().toSet
     // every reported pair is still a true pair (verify is exact regardless
     // of the quantizer), and training must not LOSE recall vs the sample
     val ev = e.select(col("vec_id").as("a"), Similarity.toDouble(col("embedding")).as("va"))
@@ -400,7 +401,7 @@ class PipelineSpec extends SparkSuite {
     val brute = Similarity.bruteTopK(q, e, 3)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     def recallOf(model: Seq[(Long, Array[Double])]): Double = {
-      val ivf = Similarity.ivfTopK(q, e, 3, nCent = 16, nProbe = 4, model = model)
+      val ivf = Similarity.ivfTopK(q, e, 3, Quantizer.Flat(model), nProbe = 4)
         .select("qid", "nid").as[(Long, Long)].collect().toSet
       (ivf & brute).size.toDouble / brute.size
     }
@@ -476,8 +477,8 @@ class PipelineSpec extends SparkSuite {
     val e = Tables.embeddings(spark, d)
     val hq = Similarity.hierQuantizer(e, nTop = 8, occupancy = 32, iters = 2,
       dimHint = 64)
-    val found = Similarity.cosineDedupIvfHier(e, 0.4, hq, nProbe = 8,
-      nProbeTop = 4, dimHint = 64)
+    val found = Similarity.cosineDedupIvf(e, 0.4, Quantizer.Hier(hq, nProbeTop = 4),
+      nProbe = 8, dimHint = 64)
       .select("a", "b").as[(Long, Long)].collect().toSet
     val ev = e.select(col("vec_id").as("a"), Similarity.toDouble(col("embedding")).as("va"))
     val ev2 = e.select(col("vec_id").as("b"), Similarity.toDouble(col("embedding")).as("vb"))
@@ -503,7 +504,7 @@ class PipelineSpec extends SparkSuite {
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val hq = Similarity.hierQuantizer(e, nTop = 8, occupancy = 32, iters = 2,
       dimHint = 64)
-    val ann = Similarity.ivfTopKHier(q, e, 3, hq, nProbe = 8, nProbeTop = 4,
+    val ann = Similarity.ivfTopK(q, e, 3, Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8,
       dimHint = 64)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val recall = (ann & brute).size.toDouble / brute.size
@@ -526,8 +527,8 @@ class PipelineSpec extends SparkSuite {
       dimHint = 64)
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val hier = asSet(Similarity.cosineDedupIvfHier(e, 0.4, hq, nProbe = 4,
-      nProbeTop = 1, dimHint = 64))
+    val hier = asSet(Similarity.cosineDedupIvf(e, 0.4, Quantizer.Hier(hq, nProbeTop = 1),
+      nProbe = 4, dimHint = 64))
     val flat = asSet(Similarity.cosineDedupIvf(e, 0.4, nProbe = 4, nCent = k,
       dimHint = 64))
     assert(hier == flat,
@@ -549,7 +550,7 @@ class PipelineSpec extends SparkSuite {
       (4L, Seq(0.0, 0.0, 1.0, 0.0))
     ).toDF("vec_id", "embedding")
     val model = Seq(0L -> Array(1.0, 0.0, 0.0, 0.0), 1L -> Array(0.0, 1.0, 0.0, 0.0))
-    val r = Similarity.semDedup(vecs, 0.6, model, dimHint = 4)
+    val r = Similarity.semDedup(vecs, 0.6, Quantizer.Flat(model), dimHint = 4)
       .orderBy("vec_id").as[(Long, Long, Double, Boolean)].collect()
     assert(r.map(x => x._1 -> x._4).toMap ==
       Map(1L -> false, 2L -> true, 3L -> true, 4L -> true))
@@ -598,7 +599,8 @@ class PipelineSpec extends SparkSuite {
       .toDF("vec_id", "cell", "embedding")
     val batch = Seq((10L, unit(0)), (11L, unit(2)), (12L, unit(3)), (13L, unit(3)))
       .toDF("vec_id", "embedding")
-    val out = Similarity.semDedupIncremental(existing, batch, 0.4, model, dimHint = 4)
+    val out = Similarity.semDedupIncremental(existing, batch, 0.4, Quantizer.Flat(model),
+      dimHint = 4)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(3))).toMap
     assert(out(10L) == (1L, false), "exact corpus dup must be dropped by the corpus leg")
     assert(out(11L)._2, "orthogonal arrival is kept")
@@ -608,8 +610,8 @@ class PipelineSpec extends SparkSuite {
     val none = Seq.empty[(Long, Long, Seq[Double])].toDF("vec_id", "cell", "embedding")
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
-    assert(asSet(Similarity.semDedupIncremental(none, batch, 0.4, model, dimHint = 4)) ==
-      asSet(Similarity.semDedup(batch, 0.4, model, dimHint = 4)),
+    assert(asSet(Similarity.semDedupIncremental(none, batch, 0.4, Quantizer.Flat(model),
+      dimHint = 4)) == asSet(Similarity.semDedup(batch, 0.4, Quantizer.Flat(model), dimHint = 4)),
       "with no corpus the incremental op must reduce exactly to flat semDedup")
   }
 
@@ -626,8 +628,8 @@ class PipelineSpec extends SparkSuite {
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toSeq
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
-    val hier = asSet(Similarity.semDedupHier(e, 0.4, hq, dimHint = 64))
-    val flat = asSet(Similarity.semDedup(e, 0.4, model, dimHint = 64))
+    val hier = asSet(Similarity.semDedup(e, 0.4, Quantizer.Hier(hq), dimHint = 64))
+    val flat = asSet(Similarity.semDedup(e, 0.4, Quantizer.Flat(model), dimHint = 64))
     assert(hier == flat,
       s"nTop=1 hier semdedup diverged: only-hier=${hier -- flat}, only-flat=${flat -- hier}")
     assert(hier.exists(!_._4), "the reduction check must exercise real drops")
@@ -650,16 +652,16 @@ class PipelineSpec extends SparkSuite {
     def deep(in: org.apache.spark.sql.DataFrame) = {
       val dq = Similarity.deepQuantizer(in, nTop = 4, occupancies = Seq(32, 8),
         iters = 2, dimHint = 64)
-      Similarity.ivfTopKDeep(in.where(col("vec_id") < 10), in, 3, dq,
-        widths = Seq(4, 16, 24), dimHint = 64)
+      Similarity.ivfTopK(in.where(col("vec_id") < 10), in, 3,
+        Quantizer.Deep(dq, widths = Seq(4, 16, 24)), dimHint = 64)
     }
-    assert(rows(deep(e)) == rows(deep(e7)), "ivfTopKDeep must ignore physical layout")
+    assert(rows(deep(e)) == rows(deep(e7)), "ivfTopK through Quantizer.Deep must ignore physical layout")
     // incremental SemDeDup at the registry config
     def inc(in: org.apache.spark.sql.DataFrame) = {
       val old = in.where(col("vec_id") % 5 =!= 0)
       val batch = in.where(col("vec_id") % 5 === 0)
       val k = math.max(1, math.ceil(old.count() / 64.0).toInt)
-      val m = Similarity.kmeansModel(old, k, iters = 2, dimHint = 64)
+      val m = Quantizer.Flat(Similarity.kmeansModel(old, k, iters = 2, dimHint = 64))
       val kept = Similarity.semDedup(old, 0.4, m, dimHint = 64)
         .where(col("keep")).select(col("vec_id"), col("cell"))
         .join(old.select(col("vec_id"), col("embedding")), "vec_id")
@@ -1031,7 +1033,7 @@ class PipelineSpec extends SparkSuite {
     // an out-of-training arrival must still receive a decision row
     val batch = Seq((10L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("vec_id", "embedding")
     val none = Seq.empty[(Long, Long, Seq[Double])].toDF("vec_id", "cell", "embedding")
-    val dec = Similarity.semDedupIncrementalHier(none, batch, 0.4, hq, dimHint = 4).collect()
+    val dec = Similarity.semDedupIncremental(none, batch, 0.4, Quantizer.Hier(hq), dimHint = 4).collect()
     assert(dec.length == 1 && dec.head.getBoolean(3),
       "out-of-training arrival decided (kept — orthogonal to everything)")
     val dq = Similarity.deepQuantizer(dup, nTop = 3, occupancies = Seq(2), iters = 1, dimHint = 4)
@@ -1051,13 +1053,15 @@ class PipelineSpec extends SparkSuite {
     val hq = Similarity.hierQuantizer(old, nTop = 1, occupancy = 64, iters = 1, dimHint = 64)
     val model = hq.leaves.select("cid", "cw").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toSeq
-    val kept = Similarity.semDedupHier(old, 0.4, hq, dimHint = 64)
+    val kept = Similarity.semDedup(old, 0.4, Quantizer.Hier(hq), dimHint = 64)
       .where(col("keep")).select(col("vec_id"), col("cell"))
       .join(old.select(col("vec_id"), col("embedding")), "vec_id")
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
-    val hier = asSet(Similarity.semDedupIncrementalHier(kept, batch, 0.4, hq, dimHint = 64))
-    val flat = asSet(Similarity.semDedupIncremental(kept, batch, 0.4, model, dimHint = 64))
+    val hier = asSet(Similarity.semDedupIncremental(kept, batch, 0.4, Quantizer.Hier(hq),
+      dimHint = 64))
+    val flat = asSet(Similarity.semDedupIncremental(kept, batch, 0.4, Quantizer.Flat(model),
+      dimHint = 64))
     assert(hier == flat,
       s"hier(nTop=1) != flat: only-hier=${hier -- flat}, only-flat=${flat -- hier}")
     assert(hier.exists(!_._4), "the reduction must exercise real drops")
@@ -1073,9 +1077,9 @@ class PipelineSpec extends SparkSuite {
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toSeq
     def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
-    val hier = asSet(Similarity.semanticDecontaminateHier(corpus, ev, 0.4, hq,
-      nProbe = 4, nProbeTop = 1, dimHint = 64))
-    val flat = asSet(Similarity.semanticDecontaminate(corpus, ev, 0.4, model,
+    val hier = asSet(Similarity.semanticDecontaminate(corpus, ev, 0.4,
+      Quantizer.Hier(hq, nProbeTop = 1), nProbe = 4, dimHint = 64))
+    val flat = asSet(Similarity.semanticDecontaminate(corpus, ev, 0.4, Quantizer.Flat(model),
       nProbe = 4, dimHint = 64))
     assert(hier == flat,
       s"hier(nTop=1) != flat: only-hier=${hier -- flat}, only-flat=${flat -- hier}")
@@ -1088,15 +1092,17 @@ class PipelineSpec extends SparkSuite {
     val corpus = Seq((1L, unit(0)), (2L, unit(1)), (3L, unit(2)))
       .toDF("vec_id", "embedding")
     val ev = Seq((100L, unit(0))).toDF("vec_id", "embedding")
-    val out = Similarity.semanticDecontaminate(corpus, ev, 0.4, model, nProbe = 4, dimHint = 4)
+    val out = Similarity.semanticDecontaminate(corpus, ev, 0.4, Quantizer.Flat(model),
+      nProbe = 4, dimHint = 4)
       .collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
     assert(out == Map(1L -> false, 2L -> true, 3L -> true),
       s"exact eval dup dropped, orthogonal corpus kept: $out")
     // empty model (empty training corpus) degrades to the empty frame
-    assert(Similarity.semanticDecontaminate(corpus, ev, 0.4, Nil, dimHint = 4).count() == 0)
+    assert(Similarity.semanticDecontaminate(corpus, ev, 0.4, Quantizer.Flat(Nil),
+      dimHint = 4).count() == 0)
     assert(Similarity.semDedupIncremental(corpus.limit(0)
       .select(col("vec_id"), lit(0L).as("cell"), col("embedding")),
-      corpus, 0.4, Nil, dimHint = 4).count() == 0)
+      corpus, 0.4, Quantizer.Flat(Nil), dimHint = 4).count() == 0)
   }
 
   test("incremental decontamination with batch = corpus reduces EXACTLY to the bootstrap op") {
@@ -1110,7 +1116,7 @@ class PipelineSpec extends SparkSuite {
     val corpus = e.where(col("label") =!= 9)
     val ev = e.where(col("label") === 9)
     val k = math.max(1, math.ceil(corpus.count() / 64.0).toInt)
-    val model = Similarity.kmeansModel(corpus, k, iters = 2, dimHint = 64)
+    val model = Quantizer.Flat(Similarity.kmeansModel(corpus, k, iters = 2, dimHint = 64))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getBoolean(3))).toSet
     val boot = rows(Similarity.semanticDecontaminate(corpus, ev, 0.4, model,
@@ -1122,12 +1128,12 @@ class PipelineSpec extends SparkSuite {
     assert(boot.exists(!_._4), "the reduction must exercise real drops")
     val hq = Similarity.hierQuantizer(corpus, nTop = 8, occupancy = 32,
       iters = 2, dimHint = 64)
-    val bootH = rows(Similarity.semanticDecontaminateHier(corpus, ev, 0.4, hq,
-      nProbe = 4, nProbeTop = 2, dimHint = 64))
-    val probesH = Similarity.evalProbeFrameHier(ev, hq, nProbe = 4,
-      nProbeTop = 2, dimHint = 64)
-    val incH = rows(Similarity.semanticDecontaminateIncrementalHier(corpus,
-      probesH, 0.4, hq, dimHint = 64))
+    val bootH = rows(Similarity.semanticDecontaminate(corpus, ev, 0.4,
+      Quantizer.Hier(hq, nProbeTop = 2), nProbe = 4, dimHint = 64))
+    val probesH = Similarity.evalProbeFrame(ev, Quantizer.Hier(hq, nProbeTop = 2),
+      nProbe = 4, dimHint = 64)
+    val incH = rows(Similarity.semanticDecontaminateIncremental(corpus,
+      probesH, 0.4, Quantizer.Hier(hq), dimHint = 64))
     assert(incH == bootH, s"hier reduction: only-inc=${incH -- bootH}, only-boot=${bootH -- incH}")
   }
 
@@ -1149,8 +1155,10 @@ class PipelineSpec extends SparkSuite {
     val q = e.where(col("vec_id") < 10)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3))).toSet
-    val deep = rows(Similarity.ivfTopKDeep(q, e, 3, dq, widths = Seq(4, 8), dimHint = 64))
-    val hier = rows(Similarity.ivfTopKHier(q, e, 3, hq, nProbe = 8, nProbeTop = 4, dimHint = 64))
+    val deep = rows(Similarity.ivfTopK(q, e, 3, Quantizer.Deep(dq, widths = Seq(4, 8)),
+      dimHint = 64))
+    val hier = rows(Similarity.ivfTopK(q, e, 3, Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8,
+      dimHint = 64))
     assert(deep == hier, s"deep(1-level) != hier: only-deep=${deep -- hier}, only-hier=${hier -- deep}")
     assert(deep.nonEmpty, "the reduction check must exercise real neighbors")
   }
@@ -1174,13 +1182,13 @@ class PipelineSpec extends SparkSuite {
     assert(dq.released)
     val q = e.where(col("vec_id") < 10)
     val exD = intercept[IllegalArgumentException](
-      Similarity.ivfTopKDeep(q, e, 3, dq, widths = Seq(4, 16, 24), dimHint = 64))
+      Similarity.ivfTopK(q, e, 3, Quantizer.Deep(dq, widths = Seq(4, 16, 24)), dimHint = 64))
     assert(exD.getMessage.contains("after unpersist"), exD.getMessage)
     val hq = Similarity.hierQuantizer(e, nTop = 4, occupancy = 32,
       iters = 1, dimHint = 64)
     hq.unpersist()
     val exH = intercept[IllegalArgumentException](
-      Similarity.ivfTopKHier(q, e, 3, hq, nProbe = 8, nProbeTop = 4, dimHint = 64))
+      Similarity.ivfTopK(q, e, 3, Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8, dimHint = 64))
     assert(exH.getMessage.contains("after unpersist"), exH.getMessage)
   }
 
@@ -1198,8 +1206,8 @@ class PipelineSpec extends SparkSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = pairs(Similarity.bruteTopK(q, e, 3))
-    val deep = pairs(Similarity.ivfTopKDeep(q, e, 3, dq,
-      widths = Seq(4, 16, 24), dimHint = 64))
+    val deep = pairs(Similarity.ivfTopK(q, e, 3,
+      Quantizer.Deep(dq, widths = Seq(4, 16, 24)), dimHint = 64))
     val recall = (deep & brute).size.toDouble / brute.size
     info(f"3-level deep recall@3 = $recall%.3f over ${brute.size} truth pairs")
     // measured 0.6 when frozen (probe-everything widths measure 1.0 — the

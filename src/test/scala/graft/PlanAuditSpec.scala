@@ -365,6 +365,14 @@ class PlanAuditSpec extends SparkSuite {
     // the bucket stage must be explode + join + hash aggregate
     assert(p.contains("Generate posexplode"), "vector explode present")
     assert(p.contains("HashAggregate"), "plane dots via hash aggregate")
+    assert(!p.contains("lambdafunction"),
+      s"an interpreted lambda keeps its Project out of whole-stage codegen:\n$p")
+    // the float -> double vector widening is a plain Cast in every emb
+    // query, never a per-element transform lambda
+    for (q <- reg.keys.filter(_.startsWith("emb_")).toSeq.sorted) {
+      val pq = plan(q)
+      assert(!pq.contains("transform("), s"$q widens its vectors through a lambda:\n$pq")
+    }
   }
 
   test("kmeans assignment: plan-time-model loop, no centroid join, no argmax window") {
@@ -454,7 +462,7 @@ class PlanAuditSpec extends SparkSuite {
     // materialized candidate set; (b) the greedy descent (branch join +
     // leaf scoring, the dominant phase past ~1M vectors) feeds BOTH the
     // home and probe consumers through ONE shared id-partitioned window
-    // exchange — the always-true filter guards in cosineDedupIvfHier keep
+    // exchange — the always-true filter guards in Quantizer.Hier keep
     // the two window subtrees CANONICALLY IDENTICAL (column pruning would
     // otherwise drop rn from one branch and h0 from the other,
     // de-canonicalizing them and silently doubling the descent). The
@@ -639,7 +647,8 @@ class PlanAuditSpec extends SparkSuite {
     val existing = spark.read.parquet(s"$dir/corpus")
     val batch = e.where(col("vec_id") % 5 === 0)
     val p = graft.functions.Similarity
-      .semDedupIncremental(existing, batch, 0.4, model, dimHint = 64)
+      .semDedupIncremental(existing, batch, 0.4, graft.functions.Similarity.Quantizer.Flat(model),
+        dimHint = 64)
       .queryExecution.executedPlan.toString
     val corpusScans = p.linesIterator.count(l =>
       l.contains("Scan parquet") && l.contains("sdinc"))
@@ -658,8 +667,9 @@ class PlanAuditSpec extends SparkSuite {
     // JIT loop), and no all-pairs shape. Probes written to their own
     // parquet path so the scan count is unambiguous in the plan text.
     val e = Tables.embeddings(spark, d)
-    val model = graft.functions.Similarity.kmeansModel(e.where(col("label") =!= 9),
-      nCent = 4, iters = 1, dimHint = 64)
+    val model = graft.functions.Similarity.Quantizer.Flat(
+      graft.functions.Similarity.kmeansModel(e.where(col("label") =!= 9),
+        nCent = 4, iters = 1, dimHint = 64))
     val dir = java.nio.file.Files.createTempDirectory("decinc").toString
     graft.functions.Similarity.evalProbeFrame(e.where(col("label") === 9),
       model, nProbe = 4, dimHint = 64)

@@ -124,8 +124,8 @@ class ScaleProbeSpec extends SparkSuite {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val df = graft.functions.Similarity.cosineDedupIvf(e, 0.4, nProbe = 2,
-        dimHint = 64, model = model)
+      val df = graft.functions.Similarity.cosineDedupIvf(e, 0.4,
+        graft.functions.Similarity.Quantizer.Flat(model), nProbe = 2, dimHint = 64)
       // a sizing count() inside cosineDedupIvf is a BLOCKING action, so
       // its job-start event is posted before the call returns; listener
       // delivery is async, so give the bus a beat to drain (the public
@@ -140,7 +140,7 @@ class ScaleProbeSpec extends SparkSuite {
 
   test("hierarchical descent: scored centroids per vector grow ~sqrt per decade " +
       "(the flat model grows linearly and walls at the driver cap)") {
-    // the quantitative claim cosineDedupIvfHier rests on, measured from
+    // the quantitative claim Quantizer.Hier rests on, measured from
     // the frames (deterministic — no wall-clock noise): a vector scores
     // nTop top centroids + the probed branches' leaves. With nTop ~ sqrt(k)
     // that is ~2*sqrt(k) per vector vs the flat path's k; per decade the
