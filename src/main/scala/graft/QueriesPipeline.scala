@@ -529,6 +529,453 @@ object QueriesPipeline {
        |SELECT qid, nid, sim, rank FROM r WHERE rank <= 3 ORDER BY qid, rank""".stripMargin
   }
 
+  // ── The IVF emb entries: one quantizer recipe × one query shape ─────────
+  //
+  // Each IVF `emb_` entry is one (shape, recipe) cell: the shape builder
+  // (annQ, knnQ, dedupQ, semDedupQ, semDedupIncQ, decontamQ, decontamIncQ)
+  // writes the Spark op call and the oracle tail once; the [[Recipe]]
+  // supplies the quantizer to both engines. The CTE fragments keep each
+  // entry's original spelling, so every oracle text is unchanged.
+
+  /** The emb family's near-dup threshold (see emb_dedup_cosine). */
+  private val EmbTau = 0.4
+  /** Row splits, as SQL predicates: both engines read the same text
+    * (`e.where(…)` in Spark, a `SELECT * FROM e WHERE …` CTE in DuckDB). */
+  private val OldRows = "vec_id % 5 <> 0"
+  private val NewRows = "vec_id % 5 = 0"
+  private val CorpusRows = "label <> 9"
+  private val EvalRows = "label = 9"
+
+  private def embCte(label: Boolean): String =
+    s"e AS (SELECT vec_id, ${if (label) "label, " else ""}embedding::DOUBLE[] AS v FROM embeddings)"
+  private def splitCte(name: String, where: String): String =
+    s"$name AS (SELECT * FROM e WHERE $where)"
+  private def withCtes(ctes: Seq[String], select: String): String =
+    ctes.mkString("WITH ", ",\n", "\n") + select
+
+  /** Rounded cosine of every `src` row to every centroid of `cent`. */
+  private def scoreCte(name: String, src: String, cent: String): String =
+    s"""$name AS (SELECT $src.vec_id AS id, cid,
+       |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM $src, $cent)""".stripMargin
+  /** Per id, the `from` rows ranked on (cs DESC, c), kept where `rn` holds. */
+  private def rankCte(name: String, sel: String, from: String, rn: String,
+      c: String = "cid"): String =
+    s"""$name AS (SELECT $sel FROM (
+       |    SELECT id, $c, row_number() OVER
+       |      (PARTITION BY id ORDER BY cs DESC, $c) AS rn FROM $from) WHERE rn $rn)""".stripMargin
+  /** The best-ranked `from` row per id as `(id, cell, aff)`. */
+  private def homeAffCte(name: String, from: String): String =
+    s"""$name AS (SELECT id, cid AS cell, cs AS aff FROM (
+       |    SELECT id, cid, cs, row_number() OVER
+       |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM $from) WHERE rn = 1)""".stripMargin
+  /** The leaf scores of the branches in `from` (aliased `a`), vectors from `src`. */
+  private def leafCte(name: String, from: String, a: String, src: String): String =
+    s"""$name AS (SELECT $a.id, l.cid,
+       |    round(1e-9 + list_cosine_similarity($src.v, l.cw), 4) AS cs
+       |  FROM $from $a JOIN lv l USING (branch) JOIN $src ON $src.vec_id = $a.id)""".stripMargin
+
+  /** The seeded 2-pass Lloyd replay over `src` (cent0 → aff1 → asg1 →
+    * dims → flat1 → cm1 → cent1); `limit` closes cent0's salted sample.
+    * `oracleKmeans` keeps its own chain (dims first). */
+  private def lloydCtes(src: String, limit: String): Seq[String] = Seq(
+    s"cent0 AS (SELECT vec_id AS cid, v AS cv FROM $src ORDER BY $SALT$limit)",
+    scoreCte("aff1", src, "cent0"),
+    rankCte("asg1", "id, cid AS cell", "aff1", "= 1"),
+    s"dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM $src LIMIT 1))",
+    s"""flat1 AS (SELECT a.cell, d.i, $src.v[d.i] AS w
+       |  FROM asg1 a JOIN $src ON $src.vec_id = a.id CROSS JOIN dims d)""".stripMargin,
+    """cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
+      |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1)""".stripMargin,
+    """cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
+      |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid)""".stripMargin)
+
+  /** The Lloyd top level over `src` (`limit` sizes it), each row's home
+    * branch `homeb$sfx` as spelled by `homeb`, and the branch sizes. */
+  private def branchCtes(src: String, sfx: String, limit: String,
+      homeb: Seq[String]): Seq[String] =
+    lloydCtes(src, limit) ++ (scoreCte(s"baf$sfx", src, "cent1") +: homeb) :+
+      s"bcnt AS (SELECT branch, count(*) AS n FROM homeb$sfx GROUP BY 1)"
+  /** The query shapes' home branch over `e`: through a ranked `brk`. */
+  private val BrkHome = Seq(
+    """brk AS (SELECT id, cid, row_number() OVER
+      |    (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM baf)""".stripMargin,
+    "homeb AS (SELECT id, cid AS branch FROM brk WHERE rn = 1)")
+  /** Each `from` row's salted rank within its `key` group — the order a
+    * per-parent sample takes its children in. */
+  private def saltCte(name: String, key: String, from: String): String =
+    s"""$name AS (SELECT h.$key, h.id, row_number() OVER (PARTITION BY h.$key
+       |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
+       |  FROM $from h)""".stripMargin
+
+  /** SQL twin of `Quantizer.flatCells`: ⌈count(src) / occupancy⌉ cells. */
+  private def flatLimit(src: String): String =
+    s"\n  LIMIT (SELECT CAST(ceil(count(*) / ${Similarity.DedupCellOccupancy}.0) AS BIGINT) FROM $src)"
+
+  /** How an IVF emb entry gets its coarse quantizer, in both engines.
+    * `train` builds the Spark `Similarity.Quantizer` over a frame (the
+    * flat and hier sizing rules live in the `Quantizer` companion, the
+    * deep one in [[Recipe.Deep]]); the SQL methods replay the same model
+    * and cell choices over a source CTE. `sfx` suffixes the per-source
+    * CTE names (`afo`, `bafn`, …). */
+  private sealed trait Recipe {
+    def train(vecs: DataFrame): Quantizer
+    /** Training reads the corpus beyond the op's own scan, so the ANN
+      * shape caches it. */
+    def trained: Boolean = true
+  }
+  /** A recipe the query shapes (ANN top-k, k-NN vote) probe through. */
+  private sealed trait SearchRecipe extends Recipe {
+    /** `ivfTopK`'s sample size (-1: unused, or its own ⌈n/64⌉). */
+    def nCent: Int = -1
+    /** The model over `e`, then `cells (nid, cell)` — every row's home —
+      * and `probes (qid, cell)` — the `nProbe` cells of each row where
+      * `q(idColumn)` holds. */
+    def queryFan(q: String => String, nProbe: Int): Seq[String]
+  }
+  /** A recipe the curation shapes (cosine dedup, semdedup, decontam) run
+    * through. */
+  private sealed trait CurateRecipe extends Recipe {
+    /** The model over `e`, then `cells`/`home (m, cell)` and `probes (p,
+      * cell)` over every row. */
+    def pairFan(nProbe: Int): Seq[String]
+    /** The model trained over `src`. */
+    def model(src: String, sfx: String): Seq[String]
+    /** `name (id, cell, aff)`: the home cells of the training rows `src`. */
+    def homes(name: String, src: String, sfx: String): Seq[String]
+    /** What rows outside the training set rank against, emitted once
+      * before the first [[newHomes]] or [[probes]] (a flat model: nothing). */
+    def frozenTop: Seq[String] = Nil
+    /** `name (id, cell, aff)`: the home cells of rows outside the
+      * training set, through the frozen model (a flat model ranks them
+      * like training rows). */
+    def newHomes(name: String, src: String, sfx: String): Seq[String] =
+      homes(name, src, sfx)
+    /** `probes (id, cell)`: the `nProbe` cells of each `src` row. */
+    def probes(src: String, sfx: String, nProbe: Int): Seq[String]
+  }
+
+  private object Recipe {
+    /** The untrained salted sample `ivfTopK` draws itself: `nCent` cells,
+      * or ⌈n/64⌉ when unset. */
+    final case class Sample(override val nCent: Int = -1) extends SearchRecipe {
+      def train(vecs: DataFrame): Quantizer = Quantizer.Flat(Nil)
+      override def trained: Boolean = false
+      def queryFan(q: String => String, nProbe: Int): Seq[String] = Seq(
+        s"cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT" +
+          (if (nCent > 0) s" LIMIT $nCent)" else flatLimit("e") + ")"),
+        scoreCte("af", "e", "cent"),
+        """cells AS (SELECT id AS nid, cid AS cell FROM (
+          |    SELECT id, cid, row_number() OVER
+          |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM af)
+          |  WHERE rn = 1)""".stripMargin,
+        s"""probes AS (SELECT id AS qid, cid AS cell FROM (
+           |    SELECT id, cid, row_number() OVER
+           |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn
+           |    FROM af WHERE ${q("id")})
+           |  WHERE rn <= $nProbe)""".stripMargin)
+    }
+
+    /** The 2-pass seeded Lloyd model at ⌈n/64⌉ cells (`Quantizer.flatCells`). */
+    case object Trained extends CurateRecipe {
+      def train(vecs: DataFrame): Quantizer =
+        Quantizer.Flat(Similarity.kmeansModel(vecs,
+          nCent = Quantizer.flatCells(vecs.count()), iters = 2, dimHint = AnnDim))
+      def model(src: String, sfx: String): Seq[String] = lloydCtes(src, flatLimit(src))
+      def pairFan(nProbe: Int): Seq[String] = model("e", "") ++ Seq(
+        scoreCte("af", "e", "cent1"),
+        """rk AS (SELECT id, cid, row_number() OVER
+          |    (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM af)""".stripMargin,
+        "cells AS (SELECT id AS m, cid AS cell FROM rk WHERE rn = 1)",
+        s"probes AS (SELECT id AS p, cid AS cell FROM rk WHERE rn <= $nProbe)")
+      def homes(name: String, src: String, sfx: String): Seq[String] =
+        Seq(scoreCte(s"af$sfx", src, "cent1"), homeAffCte(name, s"af$sfx"))
+      def probes(src: String, sfx: String, nProbe: Int): Seq[String] = Seq(
+        scoreCte(s"af$sfx", src, "cent1"),
+        rankCte("probes", "id, cid AS cell", s"af$sfx", s"<= $nProbe"))
+    }
+
+    /** The hierarchical quantizer: a trained top level of
+      * `Quantizer.hierTop(n, occupancy)` centroids over per-branch salted
+      * leaves at `occupancy`; probes fan over `nProbeTop` branches. */
+    final case class Hier(occupancy: Int, nProbeTop: Int = 2)
+        extends SearchRecipe with CurateRecipe {
+      def train(vecs: DataFrame): Quantizer =
+        Quantizer.Hier(Similarity.hierQuantizer(vecs,
+          nTop = Quantizer.hierTop(vecs.count(), occupancy), occupancy = occupancy,
+          iters = 2, dimHint = AnnDim), nProbeTop)
+      /** The branches over `src` and the per-branch leaf sample `lv`. */
+      private def tree(src: String, sfx: String, homeb: Seq[String]): Seq[String] =
+        branchCtes(src, sfx, s" LIMIT\n  (SELECT greatest(8, CAST(round(sqrt(count(*) / " +
+          s"$occupancy.0)) AS BIGINT)) FROM $src)", homeb) ++ Seq(
+          saltCte("samp", "branch", s"homeb$sfx"),
+          s"""lv AS (SELECT s.branch, s.id AS cid, $src.v AS cw
+             |  FROM samp s JOIN bcnt USING (branch) JOIN $src ON $src.vec_id = s.id
+             |  WHERE s.rn <= ceil(bcnt.n / $occupancy.0))""".stripMargin)
+      private def homeBranch(sfx: String): String =
+        rankCte(s"homeb$sfx", "id, cid AS branch", s"baf$sfx", "= 1")
+      /** The query shapes' spellings of the tree over `e` and of the
+        * leaf-bearing top `centb`. */
+      private def searchTree: Seq[String] = tree("e", "", BrkHome)
+      private val CentbCols = """centb AS (SELECT cid, cv FROM cent1
+        |  WHERE cid IN (SELECT DISTINCT branch FROM lv))""".stripMargin
+
+      def queryFan(q: String => String, nProbe: Int): Seq[String] = searchTree ++ Seq(
+        leafCte("laf0", "homeb", "h", "e"),
+        rankCte("cells", "id AS nid, cid AS cell", "laf0", "= 1"),
+        CentbCols,
+        s"""bafq AS (SELECT e.vec_id AS id, cid,
+           |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs
+           |  FROM e, centb WHERE ${q("e.vec_id")})""".stripMargin,
+        rankCte("probq", "id, cid AS branch", "bafq", s"<= $nProbeTop"),
+        leafCte("lafq", "probq", "p", "e"),
+        rankCte("probes", "id AS qid, cid AS cell", "lafq", s"<= $nProbe"))
+      def pairFan(nProbe: Int): Seq[String] = searchTree ++ Seq(
+        CentbCols,
+        scoreCte("bafb", "e", "centb"),
+        rankCte("probb", "id, cid AS branch, rn AS slot", "bafb", s"<= $nProbeTop"),
+        """laf AS (SELECT p.id, p.slot, l.cid,
+          |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
+          |  FROM probb p JOIN lv l USING (branch) JOIN e ON e.vec_id = p.id)""".stripMargin,
+        """home AS (SELECT id AS m, cid AS cell FROM (
+          |    SELECT id, cid, row_number() OVER
+          |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf WHERE slot = 1)
+          |  WHERE rn = 1)""".stripMargin,
+        s"""probes AS (SELECT id AS p, cid AS cell FROM (
+           |    SELECT id, cid, row_number() OVER
+           |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf)
+           |  WHERE rn <= $nProbe)""".stripMargin)
+      def model(src: String, sfx: String): Seq[String] = tree(src, sfx, Seq(homeBranch(sfx)))
+      def homes(name: String, src: String, sfx: String): Seq[String] =
+        Seq(leafCte(s"laf$sfx", s"homeb$sfx", "p", src), homeAffCte(name, s"laf$sfx"))
+      override def frozenTop: Seq[String] = Seq(
+        """centb AS (SELECT * FROM cent1
+          |  WHERE cid IN (SELECT DISTINCT branch FROM lv))""".stripMargin)
+      override def newHomes(name: String, src: String, sfx: String): Seq[String] =
+        Seq(scoreCte(s"baf$sfx", src, "centb"), homeBranch(sfx)) ++ homes(name, src, sfx)
+      def probes(src: String, sfx: String, nProbe: Int): Seq[String] = Seq(
+        scoreCte(s"baf$sfx", src, "centb"),
+        rankCte("probb", "id, cid AS branch", s"baf$sfx", s"<= $nProbeTop"),
+        leafCte(s"laf$sfx", "probb", "p", src),
+        rankCte("probes", "id, cid AS cell", s"laf$sfx", s"<= $nProbe"))
+    }
+
+    /** The 3-level quantizer of emb_ann_deep: c = max(4, round(∛⌈n/8⌉))
+      * trained top centroids, salted mids at 8·c occupancy and leaves at
+      * 8; queries fan (4, 16, 24), so `nProbe` does not apply. */
+    case object Deep extends SearchRecipe {
+      def train(vecs: DataFrame): Quantizer = {
+        val c = math.max(4, math.round(math.cbrt(math.ceil(vecs.count() / 8.0))).toInt)
+        Quantizer.Deep(Similarity.deepQuantizer(vecs, nTop = c,
+          occupancies = Seq(8 * c, 8), iters = 2, dimHint = AnnDim), widths = Seq(4, 16, 24))
+      }
+      def queryFan(q: String => String, nProbe: Int): Seq[String] =
+        Seq("par AS (SELECT greatest(4, CAST(round(pow(ceil(count(*) / 8.0), 1.0/3.0)) AS BIGINT)) AS c FROM e)") ++
+          branchCtes("e", "", "\n  LIMIT (SELECT c FROM par)", BrkHome) ++ Seq(
+          saltCte("bsamp", "branch", "homeb"),
+          """mids AS (SELECT s.branch, s.id AS mid, e.v AS mv
+            |  FROM bsamp s JOIN bcnt USING (branch) JOIN e ON e.vec_id = s.id
+            |  WHERE s.rn <= ceil(bcnt.n / (8.0 * (SELECT c FROM par))))""".stripMargin,
+          """maf AS (SELECT h.id, m.mid,
+            |    round(1e-9 + list_cosine_similarity(e.v, m.mv), 4) AS cs
+            |  FROM homeb h JOIN mids m USING (branch) JOIN e ON e.vec_id = h.id)""".stripMargin,
+          rankCte("homem", "id, mid", "maf", "= 1", c = "mid"),
+          "mcnt AS (SELECT mid, count(*) AS n FROM homem GROUP BY 1)",
+          saltCte("msamp", "mid", "homem"),
+          """leaves AS (SELECT s.mid, s.id AS cid, e.v AS cw
+            |  FROM msamp s JOIN mcnt USING (mid) JOIN e ON e.vec_id = s.id
+            |  WHERE s.rn <= ceil(mcnt.n / 8.0))""".stripMargin,
+          """laf AS (SELECT h.id, l.cid,
+            |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
+            |  FROM homem h JOIN leaves l USING (mid) JOIN e ON e.vec_id = h.id)""".stripMargin,
+          rankCte("cells", "id AS nid, cid AS cell", "laf", "= 1"),
+          """centb AS (SELECT cid, cv FROM cent1
+            |  WHERE cid IN (SELECT DISTINCT branch FROM mids))""".stripMargin,
+          s"""qbaf AS (SELECT e.vec_id AS id, cid,
+             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs
+             |  FROM e, centb WHERE ${q("e.vec_id")})""".stripMargin,
+          rankCte("qb", "id, cid AS branch", "qbaf", "<= 4"),
+          """qmaf AS (SELECT q.id, m.mid,
+            |    round(1e-9 + list_cosine_similarity(e.v, m.mv), 4) AS cs
+            |  FROM qb q JOIN mids m USING (branch) JOIN e ON e.vec_id = q.id)""".stripMargin,
+          rankCte("qmid", "id, mid", "qmaf", "<= 16", c = "mid"),
+          """qlaf AS (SELECT q.id, l.cid,
+            |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
+            |  FROM qmid q JOIN leaves l USING (mid) JOIN e ON e.vec_id = q.id)""".stripMargin,
+          rankCte("probes", "id AS qid, cid AS cell", "qlaf", "<= 24"))
+    }
+  }
+
+  /** The ANN/k-NN candidates: probe → home-cell pairs and their rounded
+    * cosines, as `sc`. */
+  private def candCtes(sc: String): Seq[String] = Seq(
+    """cand AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
+      |  WHERE qid <> nid)""".stripMargin,
+    s"""$sc AS (SELECT qid, nid,
+       |    round(1e-9 + list_cosine_similarity(eq.v, en.v), 4) AS sim
+       |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid)""".stripMargin)
+
+  /** The ANN query set: the first 10 vectors (`q` over an id column). */
+  private val FirstTen = (c: String) => s"$c < 10"
+
+  /** `ivfTopK` of the rows of `e` where `q` holds, against all of `e`. */
+  private def ivfNeighbors(e: DataFrame, r: SearchRecipe, q: String => String,
+      k: Int, nProbe: Int): DataFrame =
+    Similarity.ivfTopK(e.where(q("vec_id")), e, k, r.train(e), nProbe, r.nCent, AnnDim)
+
+  /** ANN top-3 of the first 10 vectors through `r` (`sc` names the
+    * oracle's scored-pair CTE). */
+  private def annQ(r: SearchRecipe, nProbe: Int = 4, sc: String = "sc"): Q =
+    Q((s, d) => {
+        val e = if (r.trained) cached(emb(s, d)) else emb(s, d)
+        ivfNeighbors(e, r, FirstTen, 3, nProbe).orderBy("qid", "rank")
+      },
+      Some(withCtes(Seq(embCte(label = false)) ++ r.queryFan(FirstTen, nProbe) ++ candCtes(sc) :+
+        s"""r AS (SELECT qid, nid, sim, CAST(row_number() OVER
+           |    (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rank FROM $sc)""".stripMargin,
+        """SELECT qid, nid, sim, rank FROM r WHERE rank <= 3
+          |ORDER BY qid, rank""".stripMargin)))
+
+  /** k-NN label vote: every 10th vector is a query, its 5 approximate
+    * nearest neighbors through `r` vote (weight = presence; ties to the
+    * best similarity DESC, then the lowest label), and the frame records
+    * pred/truth/correct per query. */
+  private def knnQ(r: SearchRecipe, nProbe: Int): Q = {
+    val q = (c: String) => s"$c % 10 = 0"
+    Q((s, d) => {
+        val e = cached(emb(s, d))
+        val nn = ivfNeighbors(e, r, q, 5, nProbe)
+        val lab = e.select(col("vec_id").as("nid"), col("label").as("nlabel"))
+        val votes = nn.join(lab, "nid")
+          .groupBy("qid", "nlabel")
+          .agg(count(lit(1)).as("votes"), max(col("sim")).as("best"))
+        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
+          .orderBy(col("votes").desc, col("best").desc, col("nlabel"))
+        val pred = votes.withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1).select(col("qid"), col("nlabel").as("pred"))
+        pred.join(e.select(col("vec_id").as("qid"), col("label").as("truth")), "qid")
+          .select(col("qid"), col("pred"), col("truth"),
+            (col("pred") === col("truth")).as("correct"))
+          .orderBy("qid")
+      },
+      Some(withCtes(Seq(embCte(label = true)) ++ r.queryFan(q, nProbe) ++ candCtes("sc") ++ Seq(
+        """r AS (SELECT qid, nid, sim, row_number() OVER
+          |    (PARTITION BY qid ORDER BY sim DESC, nid) AS rank FROM sc)""".stripMargin,
+        """votes AS (SELECT qid, en.label AS nlabel, count(*) AS votes,
+          |    max(sim) AS best
+          |  FROM r JOIN e en ON en.vec_id = r.nid WHERE rank <= 5 GROUP BY 1, 2)""".stripMargin,
+        """pred AS (SELECT qid, nlabel AS pred FROM (
+          |    SELECT qid, nlabel, row_number() OVER (PARTITION BY qid
+          |      ORDER BY votes DESC, best DESC, nlabel) AS rn FROM votes)
+          |  WHERE rn = 1)""".stripMargin),
+        """SELECT p.qid, p.pred, t.label AS truth,
+          |  (p.pred = t.label) AS correct
+          |FROM pred p JOIN e t ON t.vec_id = p.qid ORDER BY 1""".stripMargin)))
+  }
+
+  /** Cosine near-dup pairs (a < b, cos ≥ tau) through `r`; the entry
+    * keeps its own verify CTEs and final SELECT. Training + dedup share
+    * one cached scan. */
+  private def dedupQ(r: CurateRecipe, nProbe: Int, verify: Seq[String], select: String): Q =
+    Q((s, d) => {
+        val e = cached(emb(s, d))
+        Similarity.cosineDedupIvf(e, EmbTau, r.train(e), nProbe = nProbe,
+          dimHint = AnnDim).orderBy("a", "b")
+      },
+      Some(withCtes(Seq(embCte(label = false)) ++ r.pairFan(nProbe) ++ verify, select)))
+
+  /** SemDeDup's within-cell drops over `cells` (vectors from `src`): a
+    * vector drops when a same-cell vector at cos ≥ tau outranks it on
+    * (aff ASC, id ASC). */
+  private def dropsCtes(sfx: String, cells: String, src: String): Seq[String] = Seq(
+    s"""pr$sfx AS (SELECT x.id, x.aff, y.id AS oid, y.aff AS oaff,
+       |    round(1e-9 + list_cosine_similarity(ex.v, ey.v), 4) AS cos
+       |  FROM $cells x JOIN $cells y ON x.cell = y.cell AND x.id <> y.id
+       |  JOIN $src ex ON ex.vec_id = x.id JOIN $src ey ON ey.vec_id = y.id)""".stripMargin,
+    s"""drops$sfx AS (SELECT DISTINCT id FROM pr$sfx WHERE cos >= $EmbTau
+       |  AND (oaff < aff OR (oaff = aff AND oid < id)))""".stripMargin)
+  /** The keep/drop decision frame: every `cells` row, kept unless in `drops`. */
+  private def keepSelect(cells: String, drops: String, a: String): String =
+    s"""SELECT c.id AS vec_id, c.cell, c.aff, ($a.id IS NULL) AS keep
+       |FROM $cells c LEFT JOIN $drops $a ON $a.id = c.id ORDER BY 1""".stripMargin
+
+  /** SemDeDup through `r`: training + assignment + prune share one cached scan. */
+  private def semDedupQ(r: CurateRecipe): Q =
+    Q((s, d) => {
+        val e = cached(emb(s, d))
+        Similarity.semDedup(e, EmbTau, r.train(e), dimHint = AnnDim).orderBy("vec_id")
+      },
+      Some(withCtes(Seq(embCte(label = false)) ++ r.model("e", "") ++ r.homes("cells", "e", "") ++
+        dropsCtes("", "cells", "e"), keepSelect("cells", "drops", "d"))))
+
+  /** Incremental SemDeDup through `r`: the quantizer is trained on the old
+    * corpus (vec_id % 5 <> 0), whose prior-run decisions are the stored
+    * state; the batch (vec_id % 5 = 0) is judged against the kept corpus
+    * and within itself. */
+  private def semDedupIncQ(r: CurateRecipe): Q =
+    Q((s, d) => {
+        val e = cached(emb(s, d))
+        val old = e.where(OldRows)
+        val q = r.train(old)
+        // the stored state a production run reads back: kept rows with
+        // their prior-run cell assignments and vectors
+        val kept = Similarity.semDedup(old, EmbTau, q, dimHint = AnnDim)
+          .where(col("keep")).select(col("vec_id"), col("cell"))
+          .join(old.select(col("vec_id"), col("embedding")), "vec_id")
+        Similarity.semDedupIncremental(kept, e.where(NewRows), EmbTau, q,
+          dimHint = AnnDim).orderBy("vec_id")
+      },
+      Some(withCtes(Seq(embCte(label = false), splitCte("eo", OldRows), splitCte("en", NewRows)) ++
+        r.model("eo", "o") ++ r.homes("cellso", "eo", "o") ++ dropsCtes("o", "cellso", "eo") ++
+        ("""kept AS (SELECT c.id, c.cell FROM cellso c
+           |  LEFT JOIN dropso d ON d.id = c.id WHERE d.id IS NULL)""".stripMargin +:
+          r.frozenTop) ++ r.newHomes("cellsn", "en", "n") ++
+        (s"""xdrop AS (SELECT DISTINCT n.id FROM cellsn n JOIN kept k ON k.cell = n.cell
+            |  JOIN en ON en.vec_id = n.id JOIN eo ON eo.vec_id = k.id
+            |  WHERE round(1e-9 + list_cosine_similarity(en.v, eo.v), 4) >= $EmbTau)""".stripMargin +:
+          dropsCtes("n", "cellsn", "en")) :+
+        "alldrops AS (SELECT id FROM dropsn UNION SELECT id FROM xdrop)",
+        keepSelect("cellsn", "alldrops", "d"))))
+
+  /** Decontamination hits: `cells` rows (vectors from `src`) within tau of
+    * an eval vector probing their cell. */
+  private def hitsCte(cells: String, src: String): String =
+    s"""hits AS (SELECT DISTINCT c.id FROM $cells c JOIN probes p ON p.cell = c.cell
+       |  JOIN $src ON $src.vec_id = c.id JOIN ev ON ev.vec_id = p.id
+       |  WHERE round(1e-9 + list_cosine_similarity($src.v, ev.v), 4) >= $EmbTau)""".stripMargin
+
+  /** Semantic decontamination through `r` (trained on the corpus, label
+    * <> 9): eval vectors (label 9) probe 4 cells. */
+  private def decontamQ(r: CurateRecipe): Q =
+    Q((s, d) => {
+        val e = cached(emb(s, d))
+        val corpus = e.where(CorpusRows)
+        Similarity.semanticDecontaminate(corpus, e.where(EvalRows), EmbTau, r.train(corpus),
+          nProbe = 4, dimHint = AnnDim).orderBy("vec_id")
+      },
+      Some(withCtes(Seq(embCte(label = true), splitCte("eo", CorpusRows), splitCte("ev", EvalRows)) ++
+        r.model("eo", "o") ++ r.homes("cells", "eo", "o") ++ r.frozenTop ++
+        r.probes("ev", "e", 4) :+ hitsCte("cells", "eo"), keepSelect("cells", "hits", "h"))))
+
+  /** Incremental decontamination through `r`: trained on the old corpus,
+    * the eval probe frame computed once, the batch homed through the
+    * frozen model (`cells` names the batch's home CTE). */
+  private def decontamIncQ(r: CurateRecipe, cells: String): Q = {
+    val old = s"$CorpusRows AND $OldRows"
+    val batch = s"$CorpusRows AND $NewRows"
+    Q((s, d) => {
+        val e = cached(emb(s, d))
+        val q = r.train(e.where(old))
+        val probes = Similarity.evalProbeFrame(e.where(EvalRows), q, nProbe = 4,
+          dimHint = AnnDim)
+        Similarity.semanticDecontaminateIncremental(e.where(batch), probes, EmbTau,
+          q, dimHint = AnnDim).orderBy("vec_id")
+      },
+      Some(withCtes(Seq(embCte(label = true), splitCte("eold", old), splitCte("en", batch),
+        splitCte("ev", EvalRows)) ++ r.model("eold", "o") ++ r.frozenTop ++
+        r.newHomes(cells, "en", "n") ++ r.probes("ev", "e", 4) :+ hitsCte(cells, "en"),
+        keepSelect(cells, "hits", "h"))))
+  }
+
   /** Shared oracle for the incremental-dedup CONTRACT (plain anti-join and
     * the Bloom-prefiltered variant below): which src18/src19 batch
     * fingerprints are NEW vs the frozen corpus. The Bloom changes the
@@ -1779,33 +2226,7 @@ object QueriesPipeline {
     // cell, queries probe their 4 nearest cells and rank exactly within.
     // Every stage is a pure function of the input, so the oracle replays
     // assignment, probing, and ranking verbatim.
-    "emb_ann_ivf" -> Q(
-      (s, d) => Similarity.ivfTopK(
-        emb(s, d).where(col("vec_id") < 10), emb(s, d), 3,
-        nCent = 16, nProbe = 4, dimHint = AnnDim)
-        .orderBy("qid", "rank"),
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-             |cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT LIMIT 16),
-             |af AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent),
-             |cells AS (SELECT id AS nid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM af)
-             |  WHERE rn = 1),
-             |probes AS (SELECT id AS qid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn
-             |    FROM af WHERE id < 10)
-             |  WHERE rn <= 4),
-             |cand AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
-             |  WHERE qid <> nid),
-             |s AS (SELECT qid, nid,
-             |    round(1e-9 + list_cosine_similarity(eq.v, en.v), 4) AS sim
-             |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid),
-             |r AS (SELECT qid, nid, sim, CAST(row_number() OVER
-             |    (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rank FROM s)
-             |SELECT qid, nid, sim, rank FROM r WHERE rank <= 3
-             |ORDER BY qid, rank""".stripMargin)),
+    "emb_ann_ivf" -> annQ(Recipe.Sample(16), sc = "s"),
 
     // k-NN label classification through the IVF index — the standard
     // embedding-quality eval (and the label-propagation primitive): every
@@ -1823,57 +2244,7 @@ object QueriesPipeline {
     // scale-killer shape the 100× checks exist to catch. Deterministic
     // end to end (rounded sims, total-order tie-breaks), so the oracle
     // replays index, vote, and verdicts exactly.
-    "emb_knn_classify" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val k = math.max(1, math.ceil(
-          e.count().toDouble / Similarity.DedupCellOccupancy).toInt)
-        val nn = Similarity.ivfTopK(e.where(col("vec_id") % 10 === 0), e, 5,
-          nCent = k, nProbe = 6, dimHint = AnnDim)
-        val lab = e.select(col("vec_id").as("nid"), col("label").as("nlabel"))
-        val votes = nn.join(lab, "nid")
-          .groupBy("qid", "nlabel")
-          .agg(count(lit(1)).as("votes"), max(col("sim")).as("best"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(col("votes").desc, col("best").desc, col("nlabel"))
-        val pred = votes.withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).select(col("qid"), col("nlabel").as("pred"))
-        pred.join(e.select(col("vec_id").as("qid"), col("label").as("truth")), "qid")
-          .select(col("qid"), col("pred"), col("truth"),
-            (col("pred") === col("truth")).as("correct"))
-          .orderBy("qid")
-      },
-      Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-              |cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT
-              |  LIMIT (SELECT CAST(ceil(count(*) / ${Similarity.DedupCellOccupancy}.0) AS BIGINT) FROM e)),
-              |af AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent),
-              |cells AS (SELECT id AS nid, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM af)
-              |  WHERE rn = 1),
-              |probes AS (SELECT id AS qid, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn
-              |    FROM af WHERE id % 10 = 0)
-              |  WHERE rn <= 6),
-              |cand AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
-              |  WHERE qid <> nid),
-              |sc AS (SELECT qid, nid,
-              |    round(1e-9 + list_cosine_similarity(eq.v, en.v), 4) AS sim
-              |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid),
-              |r AS (SELECT qid, nid, sim, row_number() OVER
-              |    (PARTITION BY qid ORDER BY sim DESC, nid) AS rank FROM sc),
-              |votes AS (SELECT qid, en.label AS nlabel, count(*) AS votes,
-              |    max(sim) AS best
-              |  FROM r JOIN e en ON en.vec_id = r.nid WHERE rank <= 5 GROUP BY 1, 2),
-              |pred AS (SELECT qid, nlabel AS pred FROM (
-              |    SELECT qid, nlabel, row_number() OVER (PARTITION BY qid
-              |      ORDER BY votes DESC, best DESC, nlabel) AS rn FROM votes)
-              |  WHERE rn = 1)
-              |SELECT p.qid, p.pred, t.label AS truth,
-              |  (p.pred = t.label) AS correct
-              |FROM pred p JOIN e t ON t.vec_id = p.qid ORDER BY 1""".stripMargin)),
+    "emb_knn_classify" -> knnQ(Recipe.Sample(), nProbe = 6),
 
     // k-NN label classification through the HIERARCHICAL quantizer — the
     // >8M-vector twin of emb_knn_classify, completing the flat/hier pair
@@ -1884,91 +2255,7 @@ object QueriesPipeline {
     // collected) and the vote tail is identical. Pairs are scored packed
     // inside the cell join (no per-pair payload re-attach — load-bearing
     // here because the query set is n/10, not a fixed batch).
-    "emb_knn_hier" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val nTop = math.max(8, math.round(math.sqrt(e.count() / 64.0)).toInt)
-        val hq = Similarity.hierQuantizer(e, nTop = nTop, occupancy = 64,
-          iters = 2, dimHint = AnnDim)
-        val nn = Similarity.ivfTopK(e.where(col("vec_id") % 10 === 0), e, 5,
-          Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8, dimHint = AnnDim)
-        val lab = e.select(col("vec_id").as("nid"), col("label").as("nlabel"))
-        val votes = nn.join(lab, "nid")
-          .groupBy("qid", "nlabel")
-          .agg(count(lit(1)).as("votes"), max(col("sim")).as("best"))
-        val w = org.apache.spark.sql.expressions.Window.partitionBy("qid")
-          .orderBy(col("votes").desc, col("best").desc, col("nlabel"))
-        val pred = votes.withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1).select(col("qid"), col("nlabel").as("pred"))
-        pred.join(e.select(col("vec_id").as("qid"), col("label").as("truth")), "qid")
-          .select(col("qid"), col("pred"), col("truth"),
-            (col("pred") === col("truth")).as("correct"))
-          .orderBy("qid")
-      },
-      Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-             |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
-             |  (SELECT greatest(8, CAST(round(sqrt(count(*) / 64.0)) AS BIGINT)) FROM e)),
-             |aff1 AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent0),
-             |asg1 AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-             |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM e LIMIT 1)),
-             |flat1 AS (SELECT a.cell, d.i, e.v[d.i] AS w
-             |  FROM asg1 a JOIN e ON e.vec_id = a.id CROSS JOIN dims d),
-             |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-             |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-             |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-             |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-             |baf AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent1),
-             |brk AS (SELECT id, cid, row_number() OVER
-             |    (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM baf),
-             |homeb AS (SELECT id, cid AS branch FROM brk WHERE rn = 1),
-             |bcnt AS (SELECT branch, count(*) AS n FROM homeb GROUP BY 1),
-             |samp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-             |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-             |  FROM homeb h),
-             |lv AS (SELECT s.branch, s.id AS cid, e.v AS cw
-             |  FROM samp s JOIN bcnt USING (branch) JOIN e ON e.vec_id = s.id
-             |  WHERE s.rn <= ceil(bcnt.n / 64.0)),
-             |laf0 AS (SELECT h.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-             |  FROM homeb h JOIN lv l USING (branch) JOIN e ON e.vec_id = h.id),
-             |cells AS (SELECT id AS nid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf0) WHERE rn = 1),
-             |centb AS (SELECT cid, cv FROM cent1
-             |  WHERE cid IN (SELECT DISTINCT branch FROM lv)),
-             |bafq AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs
-             |  FROM e, centb WHERE e.vec_id % 10 = 0),
-             |probq AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafq) WHERE rn <= 4),
-             |lafq AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-             |  FROM probq p JOIN lv l USING (branch) JOIN e ON e.vec_id = p.id),
-             |probes AS (SELECT id AS qid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafq) WHERE rn <= 8),
-             |cand AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
-             |  WHERE qid <> nid),
-             |sc AS (SELECT qid, nid,
-             |    round(1e-9 + list_cosine_similarity(eq.v, en.v), 4) AS sim
-             |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid),
-             |r AS (SELECT qid, nid, sim, row_number() OVER
-             |    (PARTITION BY qid ORDER BY sim DESC, nid) AS rank FROM sc),
-             |votes AS (SELECT qid, en.label AS nlabel, count(*) AS votes,
-             |    max(sim) AS best
-             |  FROM r JOIN e en ON en.vec_id = r.nid WHERE rank <= 5 GROUP BY 1, 2),
-             |pred AS (SELECT qid, nlabel AS pred FROM (
-             |    SELECT qid, nlabel, row_number() OVER (PARTITION BY qid
-             |      ORDER BY votes DESC, best DESC, nlabel) AS rn FROM votes)
-             |  WHERE rn = 1)
-             |SELECT p.qid, p.pred, t.label AS truth,
-             |  (p.pred = t.label) AS correct
-             |FROM pred p JOIN e t ON t.vec_id = p.qid ORDER BY 1""".stripMargin)),
+    "emb_knn_hier" -> knnQ(Recipe.Hier(64, nProbeTop = 4), nProbe = 8),
 
     // IVF-PQ (Similarity.ivfPqTopK): the composed 100 TB ANN architecture
     // — IVF cells cut the scan to ~nProbe/nCent of the corpus, PQ codes
@@ -1984,40 +2271,28 @@ object QueriesPipeline {
           nCent = 16, nProbe = 4, m = 32, ksub = 64, dimHint = AnnDim)
           .orderBy("qid", "rank")
       },
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-             |cent AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT LIMIT 16),
-             |af AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent),
-             |cells AS (SELECT id AS nid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM af)
-             |  WHERE rn = 1),
-             |probes AS (SELECT id AS qid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn
-             |    FROM af WHERE id < 10)
-             |  WHERE rn <= 4),
-             |pairs AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
-             |  WHERE qid <> nid),
-             |cb AS (SELECT v AS cv2, (row_number() OVER (ORDER BY $SALT) - 1) AS c
-             |  FROM e ORDER BY $SALT LIMIT 64),
-             |dt AS (SELECT e.vec_id AS id, j, c,
-             |    round(1e-9 + list_sum(list_transform(range(1, 3),
-             |      i -> (v[j*2 + i] - cv2[j*2 + i])^2)), 4) AS d2
-             |  FROM e, cb, (SELECT unnest(range(32)) AS j)),
-             |codes AS (SELECT id AS nid, j, c FROM (
-             |    SELECT id, j, c, row_number() OVER
-             |      (PARTITION BY id, j ORDER BY d2, c) AS rn FROM dt)
-             |  WHERE rn = 1),
-             |qd AS (SELECT id AS qid, j, c, d2 FROM dt WHERE id < 10),
-             |adc AS (SELECT p.qid, p.nid, round(1e-9 + sum(qd.d2), 4) AS adist
-             |  FROM pairs p JOIN codes ON codes.nid = p.nid
-             |  JOIN qd ON qd.qid = p.qid AND qd.j = codes.j AND qd.c = codes.c
-             |  GROUP BY 1, 2),
-             |r AS (SELECT qid, nid, adist, CAST(row_number() OVER
-             |    (PARTITION BY qid ORDER BY adist, nid) AS BIGINT) AS rank FROM adc)
-             |SELECT qid, nid, adist, rank FROM r WHERE rank <= 3
-             |ORDER BY qid, rank""".stripMargin)),
+      Some(withCtes(Seq(embCte(label = false)) ++ Recipe.Sample(16).queryFan(FirstTen, 4) :+
+        s"""pairs AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
+           |  WHERE qid <> nid),
+           |cb AS (SELECT v AS cv2, (row_number() OVER (ORDER BY $SALT) - 1) AS c
+           |  FROM e ORDER BY $SALT LIMIT 64),
+           |dt AS (SELECT e.vec_id AS id, j, c,
+           |    round(1e-9 + list_sum(list_transform(range(1, 3),
+           |      i -> (v[j*2 + i] - cv2[j*2 + i])^2)), 4) AS d2
+           |  FROM e, cb, (SELECT unnest(range(32)) AS j)),
+           |codes AS (SELECT id AS nid, j, c FROM (
+           |    SELECT id, j, c, row_number() OVER
+           |      (PARTITION BY id, j ORDER BY d2, c) AS rn FROM dt)
+           |  WHERE rn = 1),
+           |qd AS (SELECT id AS qid, j, c, d2 FROM dt WHERE id < 10),
+           |adc AS (SELECT p.qid, p.nid, round(1e-9 + sum(qd.d2), 4) AS adist
+           |  FROM pairs p JOIN codes ON codes.nid = p.nid
+           |  JOIN qd ON qd.qid = p.qid AND qd.j = codes.j AND qd.c = codes.c
+           |  GROUP BY 1, 2),
+           |r AS (SELECT qid, nid, adist, CAST(row_number() OVER
+           |    (PARTITION BY qid ORDER BY adist, nid) AS BIGINT) AS rank FROM adc)""".stripMargin,
+        """SELECT qid, nid, adist, rank FROM r WHERE rank <= 3
+          |ORDER BY qid, rank""".stripMargin))),
 
     // PQ-Flat asymmetric-distance ANN (Similarity.pqTopK): 32 subspaces x
     // 64 sample codewords over the 64-dim embeddings — the memory-bounded
@@ -2073,43 +2348,12 @@ object QueriesPipeline {
     // despite the index being approximate. tau=0.4 suits the testdata
     // (max pairwise cosine ~0.6; real near-dup corpora run this at 0.95+
     // unchanged).
-    "emb_dedup_cosine" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d)) // training passes + dedup share one scan
-        val n = e.count()
-        val k = math.max(1, math.ceil(
-          n.toDouble / Similarity.DedupCellOccupancy).toInt)
-        val trained = Similarity.kmeansModel(e, nCent = k, iters = 2,
-          dimHint = AnnDim)
-        Similarity.cosineDedupIvf(e, 0.4, Quantizer.Flat(trained), nProbe = 6,
-          dimHint = AnnDim).orderBy("a", "b")
-      },
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT
-              |  LIMIT (SELECT CAST(ceil(count(*) / ${Similarity.DedupCellOccupancy}.0) AS BIGINT) FROM e)),
-              |aff1 AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent0),
-              |asg1 AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-              |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM e LIMIT 1)),
-              |flat1 AS (SELECT a.cell, d.i, e.v[d.i] AS w
-              |  FROM asg1 a JOIN e ON e.vec_id = a.id CROSS JOIN dims d),
-              |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-              |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-              |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-              |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-              |af AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent1),
-              |rk AS (SELECT id, cid, row_number() OVER
-              |    (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM af),
-              |cells AS (SELECT id AS m, cid AS cell FROM rk WHERE rn = 1),
-              |probes AS (SELECT id AS p, cid AS cell FROM rk WHERE rn <= 6),
-              |cand AS (SELECT DISTINCT least(m, p) AS a, greatest(m, p) AS b
-              |  FROM cells JOIN probes USING (cell) WHERE m <> p),
-              |v AS (SELECT a, b, round(1e-9 + list_cosine_similarity(ea.v, eb.v), 4) AS cos
-              |  FROM cand JOIN e ea ON ea.vec_id = a JOIN e eb ON eb.vec_id = b)
-              |SELECT a, b, cos FROM v WHERE cos >= 0.4 ORDER BY 1,2""".stripMargin)),
+    "emb_dedup_cosine" -> dedupQ(Recipe.Trained, nProbe = 6, Seq(
+      """cand AS (SELECT DISTINCT least(m, p) AS a, greatest(m, p) AS b
+        |  FROM cells JOIN probes USING (cell) WHERE m <> p)""".stripMargin,
+      """v AS (SELECT a, b, round(1e-9 + list_cosine_similarity(ea.v, eb.v), 4) AS cos
+        |  FROM cand JOIN e ea ON ea.vec_id = a JOIN e eb ON eb.vec_id = b)""".stripMargin),
+      s"SELECT a, b, cos FROM v WHERE cos >= $EmbTau ORDER BY 1,2"),
 
     // SemDeDup (Abbas et al. 2023) — the cluster-then-prune recipe next
     // to the pair-enumeration dedups: train the same constant-occupancy
@@ -2124,45 +2368,7 @@ object QueriesPipeline {
     // decision. Scale: model is plan-time, assignment one JIT'd loop,
     // pairwise confined to constant-occupancy cells (O(n·occ) streamed
     // pairs), decisions ride the cell exchange.
-    "emb_semdedup" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d)) // training + assignment + verify share one scan
-        val n = e.count()
-        val k = math.max(1, math.ceil(
-          n.toDouble / Similarity.DedupCellOccupancy).toInt)
-        val trained = Similarity.kmeansModel(e, nCent = k, iters = 2,
-          dimHint = AnnDim)
-        Similarity.semDedup(e, 0.4, Quantizer.Flat(trained), dimHint = AnnDim)
-          .orderBy("vec_id")
-      },
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT
-              |  LIMIT (SELECT CAST(ceil(count(*) / ${Similarity.DedupCellOccupancy}.0) AS BIGINT) FROM e)),
-              |aff1 AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent0),
-              |asg1 AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-              |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM e LIMIT 1)),
-              |flat1 AS (SELECT a.cell, d.i, e.v[d.i] AS w
-              |  FROM asg1 a JOIN e ON e.vec_id = a.id CROSS JOIN dims d),
-              |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-              |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-              |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-              |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-              |af AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent1),
-              |cells AS (SELECT id, cid AS cell, cs AS aff FROM (
-              |    SELECT id, cid, cs, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM af) WHERE rn = 1),
-              |pr AS (SELECT x.id, x.aff, y.id AS oid, y.aff AS oaff,
-              |    round(1e-9 + list_cosine_similarity(ex.v, ey.v), 4) AS cos
-              |  FROM cells x JOIN cells y ON x.cell = y.cell AND x.id <> y.id
-              |  JOIN e ex ON ex.vec_id = x.id JOIN e ey ON ey.vec_id = y.id),
-              |drops AS (SELECT DISTINCT id FROM pr WHERE cos >= 0.4
-              |  AND (oaff < aff OR (oaff = aff AND oid < id)))
-              |SELECT c.id AS vec_id, c.cell, c.aff, (d.id IS NULL) AS keep
-              |FROM cells c LEFT JOIN drops d ON d.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_semdedup" -> semDedupQ(Recipe.Trained),
 
     // SemDeDup through the hierarchical quantizer — the >8M-vector
     // flavor: the flat emb_semdedup trains an n/64-centroid model
@@ -2171,56 +2377,7 @@ object QueriesPipeline {
     // trained √k-ish top level only, leaves stay distributed, ~2√k
     // scored centroids/vector) and the within-cell prune + keep rule are
     // identical to the flat path (bit-for-bit at nTop=1, spec-pinned).
-    "emb_semdedup_hier" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d)) // training + descent + prune share one scan
-        val nTop = math.max(8, math.round(math.sqrt(e.count() / 64.0)).toInt)
-        val hq = Similarity.hierQuantizer(e, nTop = nTop, occupancy = 64,
-          iters = 2, dimHint = AnnDim)
-        Similarity.semDedup(e, 0.4, Quantizer.Hier(hq), dimHint = AnnDim)
-          .orderBy("vec_id")
-      },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-             |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
-             |  (SELECT greatest(8, CAST(round(sqrt(count(*) / 64.0)) AS BIGINT)) FROM e)),
-             |aff1 AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent0),
-             |asg1 AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-             |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM e LIMIT 1)),
-             |flat1 AS (SELECT a.cell, d.i, e.v[d.i] AS w
-             |  FROM asg1 a JOIN e ON e.vec_id = a.id CROSS JOIN dims d),
-             |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-             |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-             |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-             |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-             |baf AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent1),
-             |homeb AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM baf) WHERE rn = 1),
-             |bcnt AS (SELECT branch, count(*) AS n FROM homeb GROUP BY 1),
-             |samp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-             |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-             |  FROM homeb h),
-             |lv AS (SELECT s.branch, s.id AS cid, e.v AS cw
-             |  FROM samp s JOIN bcnt USING (branch) JOIN e ON e.vec_id = s.id
-             |  WHERE s.rn <= ceil(bcnt.n / 64.0)),
-             |laf AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-             |  FROM homeb p JOIN lv l USING (branch) JOIN e ON e.vec_id = p.id),
-             |cells AS (SELECT id, cid AS cell, cs AS aff FROM (
-             |    SELECT id, cid, cs, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf) WHERE rn = 1),
-             |pr AS (SELECT x.id, x.aff, y.id AS oid, y.aff AS oaff,
-             |    round(1e-9 + list_cosine_similarity(ex.v, ey.v), 4) AS cos
-             |  FROM cells x JOIN cells y ON x.cell = y.cell AND x.id <> y.id
-             |  JOIN e ex ON ex.vec_id = x.id JOIN e ey ON ey.vec_id = y.id),
-             |drops AS (SELECT DISTINCT id FROM pr WHERE cos >= 0.4
-             |  AND (oaff < aff OR (oaff = aff AND oid < id)))
-             |SELECT c.id AS vec_id, c.cell, c.aff, (d.id IS NULL) AS keep
-             |FROM cells c LEFT JOIN drops d ON d.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_semdedup_hier" -> semDedupQ(Recipe.Hier(64)),
 
     // Incremental SemDeDup — the daily-batch form a production pipeline
     // actually runs (round-11 verdict item 6): the corpus (vec_id%5<>0
@@ -2236,70 +2393,7 @@ object QueriesPipeline {
     // (plan-gated); the day's cost is O(|batch|·occ) regardless of
     // corpus size. The oracle replays the frozen model's Lloyd passes,
     // the prior run's decisions, and both drop legs exactly.
-    "emb_semdedup_inc" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val old = e.where(col("vec_id") % 5 =!= 0)
-        val batch = e.where(col("vec_id") % 5 === 0)
-        val k = math.max(1, math.ceil(
-          old.count().toDouble / Similarity.DedupCellOccupancy).toInt)
-        val trained = Quantizer.Flat(Similarity.kmeansModel(old, nCent = k, iters = 2,
-          dimHint = AnnDim))
-        // the stored state a production run reads back: kept rows with
-        // their prior-run cell assignments and vectors
-        val kept = Similarity.semDedup(old, 0.4, trained, dimHint = AnnDim)
-          .where(col("keep")).select(col("vec_id"), col("cell"))
-          .join(old.select(col("vec_id"), col("embedding")), "vec_id")
-        Similarity.semDedupIncremental(kept, batch, 0.4, trained,
-          dimHint = AnnDim).orderBy("vec_id")
-      },
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              |eo AS (SELECT * FROM e WHERE vec_id % 5 <> 0),
-              |en AS (SELECT * FROM e WHERE vec_id % 5 = 0),
-              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM eo ORDER BY $SALT
-              |  LIMIT (SELECT CAST(ceil(count(*) / ${Similarity.DedupCellOccupancy}.0) AS BIGINT) FROM eo)),
-              |aff1 AS (SELECT eo.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent0),
-              |asg1 AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-              |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM eo LIMIT 1)),
-              |flat1 AS (SELECT a.cell, d.i, eo.v[d.i] AS w
-              |  FROM asg1 a JOIN eo ON eo.vec_id = a.id CROSS JOIN dims d),
-              |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-              |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-              |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-              |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-              |afo AS (SELECT eo.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent1),
-              |cellso AS (SELECT id, cid AS cell, cs AS aff FROM (
-              |    SELECT id, cid, cs, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM afo) WHERE rn = 1),
-              |pro AS (SELECT x.id, x.aff, y.id AS oid, y.aff AS oaff,
-              |    round(1e-9 + list_cosine_similarity(ex.v, ey.v), 4) AS cos
-              |  FROM cellso x JOIN cellso y ON x.cell = y.cell AND x.id <> y.id
-              |  JOIN eo ex ON ex.vec_id = x.id JOIN eo ey ON ey.vec_id = y.id),
-              |dropso AS (SELECT DISTINCT id FROM pro WHERE cos >= 0.4
-              |  AND (oaff < aff OR (oaff = aff AND oid < id))),
-              |kept AS (SELECT c.id, c.cell FROM cellso c
-              |  LEFT JOIN dropso d ON d.id = c.id WHERE d.id IS NULL),
-              |afn AS (SELECT en.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM en, cent1),
-              |cellsn AS (SELECT id, cid AS cell, cs AS aff FROM (
-              |    SELECT id, cid, cs, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM afn) WHERE rn = 1),
-              |xdrop AS (SELECT DISTINCT n.id FROM cellsn n JOIN kept k ON k.cell = n.cell
-              |  JOIN en ON en.vec_id = n.id JOIN eo ON eo.vec_id = k.id
-              |  WHERE round(1e-9 + list_cosine_similarity(en.v, eo.v), 4) >= 0.4),
-              |prn AS (SELECT x.id, x.aff, y.id AS oid, y.aff AS oaff,
-              |    round(1e-9 + list_cosine_similarity(ex.v, ey.v), 4) AS cos
-              |  FROM cellsn x JOIN cellsn y ON x.cell = y.cell AND x.id <> y.id
-              |  JOIN en ex ON ex.vec_id = x.id JOIN en ey ON ey.vec_id = y.id),
-              |dropsn AS (SELECT DISTINCT id FROM prn WHERE cos >= 0.4
-              |  AND (oaff < aff OR (oaff = aff AND oid < id))),
-              |alldrops AS (SELECT id FROM dropsn UNION SELECT id FROM xdrop)
-              |SELECT c.id AS vec_id, c.cell, c.aff, (d.id IS NULL) AS keep
-              |FROM cellsn c LEFT JOIN alldrops d ON d.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_semdedup_inc" -> semDedupIncQ(Recipe.Trained),
 
     // Incremental SemDeDup through the HIERARCHICAL quantizer — the
     // >8M-vector twin of emb_semdedup_inc: the flat form's trained
@@ -2308,88 +2402,7 @@ object QueriesPipeline {
     // the prior run's decisions come from semDedup through the same hq,
     // and each arrival's home cell is the shared greedy descent (~2√k
     // scored centroids). Drop legs identical to the flat twin.
-    "emb_semdedup_inc_hier" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val old = e.where(col("vec_id") % 5 =!= 0)
-        val batch = e.where(col("vec_id") % 5 === 0)
-        val nTop = math.max(8, math.round(math.sqrt(old.count() / 64.0)).toInt)
-        val hq = Similarity.hierQuantizer(old, nTop = nTop, occupancy = 64,
-          iters = 2, dimHint = AnnDim)
-        val kept = Similarity.semDedup(old, 0.4, Quantizer.Hier(hq), dimHint = AnnDim)
-          .where(col("keep")).select(col("vec_id"), col("cell"))
-          .join(old.select(col("vec_id"), col("embedding")), "vec_id")
-        Similarity.semDedupIncremental(kept, batch, 0.4, Quantizer.Hier(hq),
-          dimHint = AnnDim).orderBy("vec_id")
-      },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-             |eo AS (SELECT * FROM e WHERE vec_id % 5 <> 0),
-             |en AS (SELECT * FROM e WHERE vec_id % 5 = 0),
-             |cent0 AS (SELECT vec_id AS cid, v AS cv FROM eo ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
-             |  (SELECT greatest(8, CAST(round(sqrt(count(*) / 64.0)) AS BIGINT)) FROM eo)),
-             |aff1 AS (SELECT eo.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent0),
-             |asg1 AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-             |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM eo LIMIT 1)),
-             |flat1 AS (SELECT a.cell, d.i, eo.v[d.i] AS w
-             |  FROM asg1 a JOIN eo ON eo.vec_id = a.id CROSS JOIN dims d),
-             |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-             |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-             |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-             |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-             |bafo AS (SELECT eo.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent1),
-             |homebo AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafo) WHERE rn = 1),
-             |bcnt AS (SELECT branch, count(*) AS n FROM homebo GROUP BY 1),
-             |samp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-             |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-             |  FROM homebo h),
-             |lv AS (SELECT s.branch, s.id AS cid, eo.v AS cw
-             |  FROM samp s JOIN bcnt USING (branch) JOIN eo ON eo.vec_id = s.id
-             |  WHERE s.rn <= ceil(bcnt.n / 64.0)),
-             |lafo AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(eo.v, l.cw), 4) AS cs
-             |  FROM homebo p JOIN lv l USING (branch) JOIN eo ON eo.vec_id = p.id),
-             |cellso AS (SELECT id, cid AS cell, cs AS aff FROM (
-             |    SELECT id, cid, cs, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafo) WHERE rn = 1),
-             |pro AS (SELECT x.id, x.aff, y.id AS oid, y.aff AS oaff,
-             |    round(1e-9 + list_cosine_similarity(ex.v, ey.v), 4) AS cos
-             |  FROM cellso x JOIN cellso y ON x.cell = y.cell AND x.id <> y.id
-             |  JOIN eo ex ON ex.vec_id = x.id JOIN eo ey ON ey.vec_id = y.id),
-             |dropso AS (SELECT DISTINCT id FROM pro WHERE cos >= 0.4
-             |  AND (oaff < aff OR (oaff = aff AND oid < id))),
-             |kept AS (SELECT c.id, c.cell FROM cellso c
-             |  LEFT JOIN dropso d ON d.id = c.id WHERE d.id IS NULL),
-             |centb AS (SELECT * FROM cent1
-             |  WHERE cid IN (SELECT DISTINCT branch FROM lv)),
-             |bafn AS (SELECT en.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM en, centb),
-             |homebn AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafn) WHERE rn = 1),
-             |lafn AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(en.v, l.cw), 4) AS cs
-             |  FROM homebn p JOIN lv l USING (branch) JOIN en ON en.vec_id = p.id),
-             |cellsn AS (SELECT id, cid AS cell, cs AS aff FROM (
-             |    SELECT id, cid, cs, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafn) WHERE rn = 1),
-             |xdrop AS (SELECT DISTINCT n.id FROM cellsn n JOIN kept k ON k.cell = n.cell
-             |  JOIN en ON en.vec_id = n.id JOIN eo ON eo.vec_id = k.id
-             |  WHERE round(1e-9 + list_cosine_similarity(en.v, eo.v), 4) >= 0.4),
-             |prn AS (SELECT x.id, x.aff, y.id AS oid, y.aff AS oaff,
-             |    round(1e-9 + list_cosine_similarity(ex.v, ey.v), 4) AS cos
-             |  FROM cellsn x JOIN cellsn y ON x.cell = y.cell AND x.id <> y.id
-             |  JOIN en ex ON ex.vec_id = x.id JOIN en ey ON ey.vec_id = y.id),
-             |dropsn AS (SELECT DISTINCT id FROM prn WHERE cos >= 0.4
-             |  AND (oaff < aff OR (oaff = aff AND oid < id))),
-             |alldrops AS (SELECT id FROM dropsn UNION SELECT id FROM xdrop)
-             |SELECT c.id AS vec_id, c.cell, c.aff, (d.id IS NULL) AS keep
-             |FROM cellsn c LEFT JOIN alldrops d ON d.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_semdedup_inc_hier" -> semDedupIncQ(Recipe.Hier(64)),
 
     // Embedding-space decontamination — the SEMANTIC twin of
     // doc_decontaminate (an eval paraphrase shares no 4-gram but sits
@@ -2402,120 +2415,14 @@ object QueriesPipeline {
     // vector contaminated. Output is the family's keep/drop decision
     // frame; the oracle replays training, both assignments, and every
     // decision.
-    "emb_decontaminate" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val corpus = e.where(col("label") =!= 9)
-        val ev = e.where(col("label") === 9)
-        val k = math.max(1, math.ceil(
-          corpus.count().toDouble / Similarity.DedupCellOccupancy).toInt)
-        val trained = Similarity.kmeansModel(corpus, nCent = k, iters = 2,
-          dimHint = AnnDim)
-        Similarity.semanticDecontaminate(corpus, ev, 0.4, Quantizer.Flat(trained),
-          nProbe = 4, dimHint = AnnDim).orderBy("vec_id")
-      },
-      Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-              |eo AS (SELECT * FROM e WHERE label <> 9),
-              |ev AS (SELECT * FROM e WHERE label = 9),
-              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM eo ORDER BY $SALT
-              |  LIMIT (SELECT CAST(ceil(count(*) / ${Similarity.DedupCellOccupancy}.0) AS BIGINT) FROM eo)),
-              |aff1 AS (SELECT eo.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent0),
-              |asg1 AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-              |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM eo LIMIT 1)),
-              |flat1 AS (SELECT a.cell, d.i, eo.v[d.i] AS w
-              |  FROM asg1 a JOIN eo ON eo.vec_id = a.id CROSS JOIN dims d),
-              |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-              |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-              |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-              |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-              |afo AS (SELECT eo.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent1),
-              |cells AS (SELECT id, cid AS cell, cs AS aff FROM (
-              |    SELECT id, cid, cs, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM afo) WHERE rn = 1),
-              |afe AS (SELECT ev.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM ev, cent1),
-              |probes AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM afe) WHERE rn <= 4),
-              |hits AS (SELECT DISTINCT c.id FROM cells c JOIN probes p ON p.cell = c.cell
-              |  JOIN eo ON eo.vec_id = c.id JOIN ev ON ev.vec_id = p.id
-              |  WHERE round(1e-9 + list_cosine_similarity(eo.v, ev.v), 4) >= 0.4)
-              |SELECT c.id AS vec_id, c.cell, c.aff, (h.id IS NULL) AS keep
-              |FROM cells c LEFT JOIN hits h ON h.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_decontaminate" -> decontamQ(Recipe.Trained),
 
     // Embedding decontamination through the HIERARCHICAL quantizer — the
     // >8M-vector twin of emb_decontaminate (flat trained model = the
     // measured 235 s-at-300× assignment wall): corpus homes via the
     // width-1 descent, the small eval side descends with (2, 4) fan and
     // takes its global top-4 cells, same packed-unit cross join.
-    "emb_decontam_hier" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val corpus = e.where(col("label") =!= 9)
-        val ev = e.where(col("label") === 9)
-        val nTop = math.max(8, math.round(math.sqrt(corpus.count() / 64.0)).toInt)
-        val hq = Similarity.hierQuantizer(corpus, nTop = nTop, occupancy = 64,
-          iters = 2, dimHint = AnnDim)
-        Similarity.semanticDecontaminate(corpus, ev, 0.4, Quantizer.Hier(hq, nProbeTop = 2),
-          nProbe = 4, dimHint = AnnDim).orderBy("vec_id")
-      },
-      Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-             |eo AS (SELECT * FROM e WHERE label <> 9),
-             |ev AS (SELECT * FROM e WHERE label = 9),
-             |cent0 AS (SELECT vec_id AS cid, v AS cv FROM eo ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
-             |  (SELECT greatest(8, CAST(round(sqrt(count(*) / 64.0)) AS BIGINT)) FROM eo)),
-             |aff1 AS (SELECT eo.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent0),
-             |asg1 AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-             |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM eo LIMIT 1)),
-             |flat1 AS (SELECT a.cell, d.i, eo.v[d.i] AS w
-             |  FROM asg1 a JOIN eo ON eo.vec_id = a.id CROSS JOIN dims d),
-             |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-             |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-             |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-             |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-             |bafo AS (SELECT eo.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eo, cent1),
-             |homebo AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafo) WHERE rn = 1),
-             |bcnt AS (SELECT branch, count(*) AS n FROM homebo GROUP BY 1),
-             |samp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-             |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-             |  FROM homebo h),
-             |lv AS (SELECT s.branch, s.id AS cid, eo.v AS cw
-             |  FROM samp s JOIN bcnt USING (branch) JOIN eo ON eo.vec_id = s.id
-             |  WHERE s.rn <= ceil(bcnt.n / 64.0)),
-             |lafo AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(eo.v, l.cw), 4) AS cs
-             |  FROM homebo p JOIN lv l USING (branch) JOIN eo ON eo.vec_id = p.id),
-             |cells AS (SELECT id, cid AS cell, cs AS aff FROM (
-             |    SELECT id, cid, cs, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafo) WHERE rn = 1),
-             |centb AS (SELECT * FROM cent1
-             |  WHERE cid IN (SELECT DISTINCT branch FROM lv)),
-             |bafe AS (SELECT ev.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM ev, centb),
-             |probb AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafe) WHERE rn <= 2),
-             |lafe AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(ev.v, l.cw), 4) AS cs
-             |  FROM probb p JOIN lv l USING (branch) JOIN ev ON ev.vec_id = p.id),
-             |probes AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafe) WHERE rn <= 4),
-             |hits AS (SELECT DISTINCT c.id FROM cells c JOIN probes p ON p.cell = c.cell
-             |  JOIN eo ON eo.vec_id = c.id JOIN ev ON ev.vec_id = p.id
-             |  WHERE round(1e-9 + list_cosine_similarity(eo.v, ev.v), 4) >= 0.4)
-             |SELECT c.id AS vec_id, c.cell, c.aff, (h.id IS NULL) AS keep
-             |FROM cells c LEFT JOIN hits h ON h.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_decontam_hier" -> decontamQ(Recipe.Hier(64, nProbeTop = 2)),
 
     // INCREMENTAL embedding decontamination — the form a production
     // pipeline actually runs daily (the round-12 verdict's item 3: the
@@ -2530,54 +2437,7 @@ object QueriesPipeline {
     // (DecontamStream, ParitySpec) is STATELESS — canonical stream-static
     // join + dropDuplicates. Oracle replays the frozen training, the
     // probe frame, and every decision.
-    "emb_decontam_inc" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val old = e.where(col("label") =!= 9 && col("vec_id") % 5 =!= 0)
-        val batch = e.where(col("label") =!= 9 && col("vec_id") % 5 === 0)
-        val ev = e.where(col("label") === 9)
-        val k = math.max(1, math.ceil(
-          old.count().toDouble / Similarity.DedupCellOccupancy).toInt)
-        val trained = Quantizer.Flat(Similarity.kmeansModel(old, nCent = k, iters = 2,
-          dimHint = AnnDim))
-        val probes = Similarity.evalProbeFrame(ev, trained, nProbe = 4,
-          dimHint = AnnDim)
-        Similarity.semanticDecontaminateIncremental(batch, probes, 0.4,
-          trained, dimHint = AnnDim).orderBy("vec_id")
-      },
-      Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-              |eold AS (SELECT * FROM e WHERE label <> 9 AND vec_id % 5 <> 0),
-              |en AS (SELECT * FROM e WHERE label <> 9 AND vec_id % 5 = 0),
-              |ev AS (SELECT * FROM e WHERE label = 9),
-              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM eold ORDER BY $SALT
-              |  LIMIT (SELECT CAST(ceil(count(*) / ${Similarity.DedupCellOccupancy}.0) AS BIGINT) FROM eold)),
-              |aff1 AS (SELECT eold.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eold, cent0),
-              |asg1 AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-              |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM eold LIMIT 1)),
-              |flat1 AS (SELECT a.cell, d.i, eold.v[d.i] AS w
-              |  FROM asg1 a JOIN eold ON eold.vec_id = a.id CROSS JOIN dims d),
-              |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-              |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-              |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-              |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-              |afn AS (SELECT en.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM en, cent1),
-              |cells AS (SELECT id, cid AS cell, cs AS aff FROM (
-              |    SELECT id, cid, cs, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM afn) WHERE rn = 1),
-              |afe AS (SELECT ev.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM ev, cent1),
-              |probes AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM afe) WHERE rn <= 4),
-              |hits AS (SELECT DISTINCT c.id FROM cells c JOIN probes p ON p.cell = c.cell
-              |  JOIN en ON en.vec_id = c.id JOIN ev ON ev.vec_id = p.id
-              |  WHERE round(1e-9 + list_cosine_similarity(en.v, ev.v), 4) >= 0.4)
-              |SELECT c.id AS vec_id, c.cell, c.aff, (h.id IS NULL) AS keep
-              |FROM cells c LEFT JOIN hits h ON h.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_decontam_inc" -> decontamIncQ(Recipe.Trained, "cells"),
 
     // Incremental decontamination through the HIERARCHICAL quantizer —
     // the >8M-vector daily path (flat frozen model = the measured
@@ -2588,79 +2448,7 @@ object QueriesPipeline {
     // LEAF-BEARING top only, so the oracle's batch side ranks over centb
     // (out-of-training arrivals are exactly where a memberless branch
     // would otherwise silently drop rows).
-    "emb_decontam_inc_hier" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d))
-        val old = e.where(col("label") =!= 9 && col("vec_id") % 5 =!= 0)
-        val batch = e.where(col("label") =!= 9 && col("vec_id") % 5 === 0)
-        val ev = e.where(col("label") === 9)
-        val nTop = math.max(8, math.round(math.sqrt(old.count() / 64.0)).toInt)
-        val hq = Similarity.hierQuantizer(old, nTop = nTop, occupancy = 64,
-          iters = 2, dimHint = AnnDim)
-        val probes = Similarity.evalProbeFrame(ev, Quantizer.Hier(hq, nProbeTop = 2),
-          nProbe = 4, dimHint = AnnDim)
-        Similarity.semanticDecontaminateIncremental(batch, probes, 0.4,
-          Quantizer.Hier(hq), dimHint = AnnDim).orderBy("vec_id")
-      },
-      Some("""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-             |eold AS (SELECT * FROM e WHERE label <> 9 AND vec_id % 5 <> 0),
-             |en AS (SELECT * FROM e WHERE label <> 9 AND vec_id % 5 = 0),
-             |ev AS (SELECT * FROM e WHERE label = 9),
-             |cent0 AS (SELECT vec_id AS cid, v AS cv FROM eold ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
-             |  (SELECT greatest(8, CAST(round(sqrt(count(*) / 64.0)) AS BIGINT)) FROM eold)),
-             |aff1 AS (SELECT eold.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eold, cent0),
-             |asg1 AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-             |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM eold LIMIT 1)),
-             |flat1 AS (SELECT a.cell, d.i, eold.v[d.i] AS w
-             |  FROM asg1 a JOIN eold ON eold.vec_id = a.id CROSS JOIN dims d),
-             |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-             |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-             |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-             |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-             |bafo AS (SELECT eold.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM eold, cent1),
-             |homebo AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafo) WHERE rn = 1),
-             |bcnt AS (SELECT branch, count(*) AS n FROM homebo GROUP BY 1),
-             |samp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-             |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-             |  FROM homebo h),
-             |lv AS (SELECT s.branch, s.id AS cid, eold.v AS cw
-             |  FROM samp s JOIN bcnt USING (branch) JOIN eold ON eold.vec_id = s.id
-             |  WHERE s.rn <= ceil(bcnt.n / 64.0)),
-             |centb AS (SELECT * FROM cent1
-             |  WHERE cid IN (SELECT DISTINCT branch FROM lv)),
-             |bafn AS (SELECT en.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM en, centb),
-             |homebn AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafn) WHERE rn = 1),
-             |lafn AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(en.v, l.cw), 4) AS cs
-             |  FROM homebn p JOIN lv l USING (branch) JOIN en ON en.vec_id = p.id),
-             |cellsn AS (SELECT id, cid AS cell, cs AS aff FROM (
-             |    SELECT id, cid, cs, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafn) WHERE rn = 1),
-             |bafe AS (SELECT ev.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM ev, centb),
-             |probb AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafe) WHERE rn <= 2),
-             |lafe AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(ev.v, l.cw), 4) AS cs
-             |  FROM probb p JOIN lv l USING (branch) JOIN ev ON ev.vec_id = p.id),
-             |probes AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafe) WHERE rn <= 4),
-             |hits AS (SELECT DISTINCT c.id FROM cellsn c JOIN probes p ON p.cell = c.cell
-             |  JOIN en ON en.vec_id = c.id JOIN ev ON ev.vec_id = p.id
-             |  WHERE round(1e-9 + list_cosine_similarity(en.v, ev.v), 4) >= 0.4)
-             |SELECT c.id AS vec_id, c.cell, c.aff, (h.id IS NULL) AS keep
-             |FROM cellsn c LEFT JOIN hits h ON h.id = c.id ORDER BY 1""".stripMargin)),
+    "emb_decontam_inc_hier" -> decontamIncQ(Recipe.Hier(64, nProbeTop = 2), "cellsn"),
 
     // Hierarchical (two-level) IVF cosine dedup — the >8M-vector scale
     // path: the flat emb_dedup_cosine quantizer walls twice near 8M
@@ -2675,142 +2463,19 @@ object QueriesPipeline {
     // ranks on 4dp-rounded cosines with lowest-cid ties, so the oracle
     // replays the Lloyd passes, the greedy branch descent, the leaf
     // sample, and the verify EXACTLY.
-    "emb_dedup_hier" -> Q(
-      (s, d) => {
-        val e = cached(emb(s, d)) // training + descent + verify share one scan
-        // scale-adaptive top level: nTop ~ sqrt(k) keeps the descent at
-        // ~2*sqrt(k) scored centroids/vector at ANY corpus size (the
-        // count hits the eagerly-built cache — no extra scan); floors at
-        // 8 so the gate SFs exercise a real multi-branch tree
-        val nTop = math.max(8, math.round(math.sqrt(e.count() / 32.0)).toInt)
-        val hq = Similarity.hierQuantizer(e, nTop = nTop, occupancy = 32,
-          iters = 2, dimHint = AnnDim)
-        Similarity.cosineDedupIvf(e, 0.4, Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8,
-          dimHint = AnnDim).orderBy("a", "b")
-      },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-             |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
-             |  (SELECT greatest(8, CAST(round(sqrt(count(*) / 32.0)) AS BIGINT)) FROM e)),
-             |aff1 AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent0),
-             |asg1 AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-             |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM e LIMIT 1)),
-             |flat1 AS (SELECT a.cell, d.i, e.v[d.i] AS w
-             |  FROM asg1 a JOIN e ON e.vec_id = a.id CROSS JOIN dims d),
-             |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-             |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-             |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-             |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-             |baf AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent1),
-             |brk AS (SELECT id, cid, row_number() OVER
-             |    (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM baf),
-             |homeb AS (SELECT id, cid AS branch FROM brk WHERE rn = 1),
-             |bcnt AS (SELECT branch, count(*) AS n FROM homeb GROUP BY 1),
-             |samp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-             |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-             |  FROM homeb h),
-             |lv AS (SELECT s.branch, s.id AS cid, e.v AS cw
-             |  FROM samp s JOIN bcnt USING (branch) JOIN e ON e.vec_id = s.id
-             |  WHERE s.rn <= ceil(bcnt.n / 32.0)),
-             |centb AS (SELECT cid, cv FROM cent1
-             |  WHERE cid IN (SELECT DISTINCT branch FROM lv)),
-             |bafb AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, centb),
-             |probb AS (SELECT id, cid AS branch, rn AS slot FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafb) WHERE rn <= 4),
-             |laf AS (SELECT p.id, p.slot, l.cid,
-             |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-             |  FROM probb p JOIN lv l USING (branch) JOIN e ON e.vec_id = p.id),
-             |home AS (SELECT id AS m, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf WHERE slot = 1)
-             |  WHERE rn = 1),
-             |probes AS (SELECT id AS p, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf)
-             |  WHERE rn <= 8),
-             |cand AS (SELECT DISTINCT least(m, p) AS a, greatest(m, p) AS b
-             |  FROM home JOIN probes USING (cell) WHERE m <> p),
-             |vv AS (SELECT a, b, round(1e-9 + list_cosine_similarity(ea.v, eb.v), 4) AS cos
-             |  FROM cand JOIN e ea ON ea.vec_id = a JOIN e eb ON eb.vec_id = b)
-             |SELECT a, b, cos FROM vv WHERE cos >= 0.4 ORDER BY 1, 2""".stripMargin)),
+    "emb_dedup_hier" -> dedupQ(Recipe.Hier(32, nProbeTop = 4), nProbe = 8, Seq(
+      """cand AS (SELECT DISTINCT least(m, p) AS a, greatest(m, p) AS b
+        |  FROM home JOIN probes USING (cell) WHERE m <> p)""".stripMargin,
+      """vv AS (SELECT a, b, round(1e-9 + list_cosine_similarity(ea.v, eb.v), 4) AS cos
+        |  FROM cand JOIN e ea ON ea.vec_id = a JOIN e eb ON eb.vec_id = b)""".stripMargin),
+      s"SELECT a, b, cos FROM vv WHERE cos >= $EmbTau ORDER BY 1, 2"),
 
     // IVF-Flat ANN through the SAME hierarchical quantizer (ivfTopK, Quantizer.Hier):
     // candidates land in their greedy-descent home cell, queries probe
     // the top leaves across their best branches, pairs flow as bare ids
     // through the cell equi-join. Shares emb_dedup_hier's trained-top +
     // salted-leaf model construction, so the oracle prelude is identical.
-    "emb_ann_hier" -> Q(
-      (s, d) => {
-        val ec = cached(emb(s, d))
-        // same scale-adaptive nTop ~ sqrt(k) as emb_dedup_hier
-        val nTop = math.max(8, math.round(math.sqrt(ec.count() / 32.0)).toInt)
-        val hq = Similarity.hierQuantizer(ec, nTop = nTop, occupancy = 32,
-          iters = 2, dimHint = AnnDim)
-        Similarity.ivfTopK(ec.where(col("vec_id") < 10), ec, 3,
-          Quantizer.Hier(hq, nProbeTop = 4), nProbe = 8, dimHint = AnnDim)
-          .orderBy("qid", "rank")
-      },
-      Some("""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-             |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY ('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id LIMIT
-             |  (SELECT greatest(8, CAST(round(sqrt(count(*) / 32.0)) AS BIGINT)) FROM e)),
-             |aff1 AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent0),
-             |asg1 AS (SELECT id, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-             |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM e LIMIT 1)),
-             |flat1 AS (SELECT a.cell, d.i, e.v[d.i] AS w
-             |  FROM asg1 a JOIN e ON e.vec_id = a.id CROSS JOIN dims d),
-             |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-             |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-             |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-             |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-             |baf AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent1),
-             |brk AS (SELECT id, cid, row_number() OVER
-             |    (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM baf),
-             |homeb AS (SELECT id, cid AS branch FROM brk WHERE rn = 1),
-             |bcnt AS (SELECT branch, count(*) AS n FROM homeb GROUP BY 1),
-             |samp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-             |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-             |  FROM homeb h),
-             |lv AS (SELECT s.branch, s.id AS cid, e.v AS cw
-             |  FROM samp s JOIN bcnt USING (branch) JOIN e ON e.vec_id = s.id
-             |  WHERE s.rn <= ceil(bcnt.n / 32.0)),
-             |laf0 AS (SELECT h.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-             |  FROM homeb h JOIN lv l USING (branch) JOIN e ON e.vec_id = h.id),
-             |cells AS (SELECT id AS nid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf0) WHERE rn = 1),
-             |centb AS (SELECT cid, cv FROM cent1
-             |  WHERE cid IN (SELECT DISTINCT branch FROM lv)),
-             |bafq AS (SELECT e.vec_id AS id, cid,
-             |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs
-             |  FROM e, centb WHERE e.vec_id < 10),
-             |probq AS (SELECT id, cid AS branch FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM bafq) WHERE rn <= 4),
-             |lafq AS (SELECT p.id, l.cid,
-             |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-             |  FROM probq p JOIN lv l USING (branch) JOIN e ON e.vec_id = p.id),
-             |probes AS (SELECT id AS qid, cid AS cell FROM (
-             |    SELECT id, cid, row_number() OVER
-             |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM lafq) WHERE rn <= 8),
-             |cand AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
-             |  WHERE qid <> nid),
-             |sc AS (SELECT qid, nid,
-             |    round(1e-9 + list_cosine_similarity(eq.v, en.v), 4) AS sim
-             |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid),
-             |r AS (SELECT qid, nid, sim, CAST(row_number() OVER
-             |    (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rank FROM sc)
-             |SELECT qid, nid, sim, rank FROM r WHERE rank <= 3
-             |ORDER BY qid, rank""".stripMargin)),
+    "emb_ann_hier" -> annQ(Recipe.Hier(32, nProbeTop = 4), nProbe = 8),
 
     // IVF-Flat ANN through the RECURSIVE (3-level) quantizer — the
     // >10^10-vector scale path the HierQuantizer scaladoc promised
@@ -2823,93 +2488,7 @@ object QueriesPipeline {
     // every sample is salted — the oracle replays the Lloyd passes, both
     // sample levels, both re-homes, the probe fan, and the rank exactly.
     // One-level deepQuantizer ≡ hierQuantizer bit-for-bit (spec-pinned).
-    "emb_ann_deep" -> Q(
-      (s, d) => {
-        val ec = cached(emb(s, d))
-        val k = math.ceil(ec.count() / 8.0)
-        val c = math.max(4, math.round(math.cbrt(k)).toInt)
-        val dq = Similarity.deepQuantizer(ec, nTop = c,
-          occupancies = Seq(8 * c, 8), iters = 2, dimHint = AnnDim)
-        Similarity.ivfTopK(ec.where(col("vec_id") < 10), ec, 3,
-          Quantizer.Deep(dq, widths = Seq(4, 16, 24)), dimHint = AnnDim)
-          .orderBy("qid", "rank")
-      },
-      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-              |par AS (SELECT greatest(4, CAST(round(pow(ceil(count(*) / 8.0), 1.0/3.0)) AS BIGINT)) AS c FROM e),
-              |cent0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY $SALT
-              |  LIMIT (SELECT c FROM par)),
-              |aff1 AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent0),
-              |asg1 AS (SELECT id, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM aff1) WHERE rn = 1),
-              |dims AS (SELECT unnest(range(1, 1 + len(v))) AS i FROM (SELECT v FROM e LIMIT 1)),
-              |flat1 AS (SELECT a.cell, d.i, e.v[d.i] AS w
-              |  FROM asg1 a JOIN e ON e.vec_id = a.id CROSS JOIN dims d),
-              |cm1 AS (SELECT cell, list(m ORDER BY i) AS cv FROM (
-              |    SELECT cell, i, avg(w) AS m FROM flat1 GROUP BY 1, 2) GROUP BY 1),
-              |cent1 AS (SELECT c0.cid, coalesce(cm1.cv, c0.cv) AS cv
-              |  FROM cent0 c0 LEFT JOIN cm1 ON cm1.cell = c0.cid),
-              |baf AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs FROM e, cent1),
-              |brk AS (SELECT id, cid, row_number() OVER
-              |    (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM baf),
-              |homeb AS (SELECT id, cid AS branch FROM brk WHERE rn = 1),
-              |bcnt AS (SELECT branch, count(*) AS n FROM homeb GROUP BY 1),
-              |bsamp AS (SELECT h.branch, h.id, row_number() OVER (PARTITION BY h.branch
-              |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-              |  FROM homeb h),
-              |mids AS (SELECT s.branch, s.id AS mid, e.v AS mv
-              |  FROM bsamp s JOIN bcnt USING (branch) JOIN e ON e.vec_id = s.id
-              |  WHERE s.rn <= ceil(bcnt.n / (8.0 * (SELECT c FROM par)))),
-              |maf AS (SELECT h.id, m.mid,
-              |    round(1e-9 + list_cosine_similarity(e.v, m.mv), 4) AS cs
-              |  FROM homeb h JOIN mids m USING (branch) JOIN e ON e.vec_id = h.id),
-              |homem AS (SELECT id, mid FROM (
-              |    SELECT id, mid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, mid) AS rn FROM maf) WHERE rn = 1),
-              |mcnt AS (SELECT mid, count(*) AS n FROM homem GROUP BY 1),
-              |msamp AS (SELECT h.mid, h.id, row_number() OVER (PARTITION BY h.mid
-              |    ORDER BY ('0x' || substr(md5(h.id::VARCHAR),1,15))::BIGINT, h.id) AS rn
-              |  FROM homem h),
-              |leaves AS (SELECT s.mid, s.id AS cid, e.v AS cw
-              |  FROM msamp s JOIN mcnt USING (mid) JOIN e ON e.vec_id = s.id
-              |  WHERE s.rn <= ceil(mcnt.n / 8.0)),
-              |laf AS (SELECT h.id, l.cid,
-              |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-              |  FROM homem h JOIN leaves l USING (mid) JOIN e ON e.vec_id = h.id),
-              |cells AS (SELECT id AS nid, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM laf) WHERE rn = 1),
-              |centb AS (SELECT cid, cv FROM cent1
-              |  WHERE cid IN (SELECT DISTINCT branch FROM mids)),
-              |qbaf AS (SELECT e.vec_id AS id, cid,
-              |    round(1e-9 + list_cosine_similarity(v, cv), 4) AS cs
-              |  FROM e, centb WHERE e.vec_id < 10),
-              |qb AS (SELECT id, cid AS branch FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM qbaf) WHERE rn <= 4),
-              |qmaf AS (SELECT q.id, m.mid,
-              |    round(1e-9 + list_cosine_similarity(e.v, m.mv), 4) AS cs
-              |  FROM qb q JOIN mids m USING (branch) JOIN e ON e.vec_id = q.id),
-              |qmid AS (SELECT id, mid FROM (
-              |    SELECT id, mid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, mid) AS rn FROM qmaf) WHERE rn <= 16),
-              |qlaf AS (SELECT q.id, l.cid,
-              |    round(1e-9 + list_cosine_similarity(e.v, l.cw), 4) AS cs
-              |  FROM qmid q JOIN leaves l USING (mid) JOIN e ON e.vec_id = q.id),
-              |probes AS (SELECT id AS qid, cid AS cell FROM (
-              |    SELECT id, cid, row_number() OVER
-              |      (PARTITION BY id ORDER BY cs DESC, cid) AS rn FROM qlaf) WHERE rn <= 24),
-              |cand AS (SELECT qid, nid FROM probes JOIN cells USING (cell)
-              |  WHERE qid <> nid),
-              |sc AS (SELECT qid, nid,
-              |    round(1e-9 + list_cosine_similarity(eq.v, en.v), 4) AS sim
-              |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid),
-              |r AS (SELECT qid, nid, sim, CAST(row_number() OVER
-              |    (PARTITION BY qid ORDER BY sim DESC, nid) AS BIGINT) AS rank FROM sc)
-              |SELECT qid, nid, sim, rank FROM r WHERE rank <= 3
-              |ORDER BY qid, rank""".stripMargin)),
+    "emb_ann_deep" -> annQ(Recipe.Deep),
 
     // cosine of each vector to its label centroid (cluster cohesion).
     "emb_centroid_cos" -> Q(
@@ -3009,9 +2588,12 @@ object QueriesPipeline {
         // the whole corpus into <= nCent partitions (8 tasks at any n —
         // measured 37 s at 300x, flat to 1000x because one task's wall
         // IS the query), while the aggregate's partials keep every
-        // input partition busy and the join side is nCent rows
-        val asg = Similarity.kmeansAssign(emb(s, d), nCent = 8, iters = 2,
-          dimHint = AnnDim)
+        // input partition busy and the join side is nCent rows. The narrow
+        // (vec_id, cell, aff) assignment feeds both the aggregate and the
+        // join, so it is materialized once: one corpus scan, one
+        // assignment Project
+        val asg = cached(Similarity.kmeansAssign(emb(s, d), nCent = 8, iters = 2,
+          dimHint = AnnDim))
         val st = asg.groupBy("cell").agg(
           r4(avg(col("aff"))).as("mu"),
           r4(coalesce(stddev_samp(col("aff")), lit(0.0))).as("sd"))

@@ -334,7 +334,15 @@ object Similarity {
     *    unit vector `vp`;
     *  - [[probes]]: `(id, cell, vp)` — the `nProbe` probed cells per id;
     *  - [[cellsAndProbes]]: the home `(id, cell, vp)` and probe frames of
-    *    the same rows, from one pass where the quantizer has one. */
+    *    the same rows, from one pass where the quantizer has one.
+    *
+    * Sizing rules, one definition each: the flat ⌈n/64⌉ cell count is
+    * [[Quantizer.flatCells]] (the salted-sample default, [[sampleCells]],
+    * and the registry's trained flat recipe); the hier top level
+    * max(8, round(√(n / occupancy))) is [[Quantizer.hierTop]] (the
+    * registry's hier recipe); the deep top level is QueriesPipeline's
+    * `Recipe.Deep` (emb_ann_deep, its one use). ScaleProbes sizes its
+    * probe quantizers by its own √⌈n/occupancy⌉ rule. */
   sealed trait Quantizer {
     /** No cells (an empty training corpus): the ops return their empty frame. */
     private[functions] def isEmpty: Boolean
@@ -351,6 +359,17 @@ object Similarity {
   }
 
   object Quantizer {
+    /** The flat cell count for `n` vectors: ⌈n / [[DedupCellOccupancy]]⌉,
+      * at least 1 — constant occupancy keeps IVF candidates O(n). */
+    private[graft] def flatCells(n: Long): Int = math.max(1, math.ceil(n.toDouble / DedupCellOccupancy).toInt)
+
+    /** The [[hierQuantizer]] top-level size for `n` vectors at leaf
+      * `occupancy`: max(8, round(√(n / occupancy))). nTop ~ √k keeps the
+      * descent at ~2√k scored centroids per vector at any corpus size; the
+      * floor of 8 gives small corpora a real multi-branch tree. */
+    private[graft] def hierTop(n: Long, occupancy: Int): Int =
+      math.max(8, math.round(math.sqrt(n / occupancy.toDouble)).toInt)
+
     /** A flat model held on the driver: `model` is `(cid, weights)` — a
       * trained [[kmeansModel]] or the salted sample. Home cell and
       * probes come from ONE JIT'd [[topByRounded]] loop per row over the
@@ -483,10 +502,7 @@ object Similarity {
   /** The sample model's cell count: `nCent`, else ⌈n / occupancy⌉ with
     * n = `nHint`, else a count of `vecs`. */
   private def sampleCells(vecs: DataFrame, nCent: Int, nHint: Long): Int =
-    if (nCent > 0) nCent else {
-      val n = if (nHint > 0) nHint else vecs.count()
-      math.max(1, math.ceil(n.toDouble / DedupCellOccupancy).toInt)
-    }
+    if (nCent > 0) nCent else Quantizer.flatCells(if (nHint > 0) nHint else vecs.count())
 
   /** IVF cell-bucketed cosine near-dup pairs — the SCALE flavor of
     * [[cosineDedupLsh]] (which is asymptotically n²/2^nPlanes: fixed
@@ -889,20 +905,10 @@ object Similarity {
     val ex = cv.withColumn("pbs", branchesU(col("v")))
       .select(col("id"), col("v"), posexplode(col("pbs")))
       .toDF("id", "v", "slot", "branch")
-    // leaves grouped in PACKED form (round 21, guide §4): the per-leaf
-    // binary blob makes the per-(row, branch) UDF input conversion one
-    // array copy per leaf instead of dim boxed Doubles — see
-    // [[packedScoreUdf]], which also documents why the scoring stays
-    // bit-identical. collect_list's arrival order is nondeterministic
-    // but irrelevant: topByRounded ranks on (rounded cos desc, cid) — a
-    // total order (cids unique) — so the result is a pure function of
-    // the SET, which is what the oracle replay proves at every SF.
-    // Per-branch top-nPerBranch truncation is lossless for the global
-    // (cs desc, cid) rank.
-    val leafArr = hq.leaves
-      .withColumn("nw", norm(col("cw")))
-      .groupBy("branch")
-      .agg(collect_list(struct(col("cid"), packRaw(col("cw")).as("pw"), col("nw"))).as("lc"))
+    // leaves grouped in packed form ([[packedGroups]]); per-branch
+    // top-nPerBranch truncation is lossless for the global (cs desc, cid)
+    // rank
+    val leafArr = packedGroups(hq.leaves, "branch")
     val scoreU = packedScoreUdf(nPerBranch)
     ex.join(leafArr, "branch")
       .select(col("id"), col("slot"), explode(scoreU(col("v"), col("lc"))).as("cc"))
@@ -1031,14 +1037,7 @@ object Similarity {
     * DESC, cid). Output `(id, v, cell, cs)`. */
   private def scoreChildren(rows: DataFrame, children: DataFrame,
       keep: Int): DataFrame = {
-    // packed-leaf form, same rationale and bit-identity argument as
-    // [[hierDescent]]'s leafArr (see [[packedScoreUdf]]); set-not-order
-    // function of lc: topByRounded ranks on a total order (rounded cos
-    // desc, cid unique) — collect_list nondeterminism is irrelevant,
-    // which is what the oracle replay proves
-    val grouped = children.withColumn("nw", norm(col("cw")))
-      .groupBy("parent")
-      .agg(collect_list(struct(col("cid"), packRaw(col("cw")).as("pw"), col("nw"))).as("lc"))
+    val grouped = packedGroups(children, "parent")
     val scoreU = packedScoreUdf(keep)
     rows.join(grouped, "parent")
       .select(col("id"), col("v"), explode(scoreU(col("v"), col("lc"))).as("cc"))
@@ -1126,6 +1125,24 @@ object Similarity {
     while (i < v.length) { bb.putDouble(v(i)); i += 1 }
     bb.array()
   }
+
+  /** A `(key, cid, cw)` centroid frame — [[hierDescent]]'s leaves,
+    * [[scoreChildren]]'s children — grouped per `key` into the packed
+    * `(cid, pw, nw)` list [[packedScoreUdf]] reads (round 21, guide §4):
+    * the per-centroid binary blob makes the per-(row, key) UDF input
+    * conversion one array copy instead of dim boxed Doubles, and
+    * [[packedScoreUdf]] documents why scoring stays bit-identical. The
+    * norm nw = √(pw·pw) runs through the codegen'd DotPacked, which sums
+    * 0.0 + w₀·w₀ + w₁·w₁ + … left to right in doubles — [[norm]]'s sum
+    * bit for bit, without its interpreted lambda. collect_list's arrival
+    * order is nondeterministic but irrelevant: topByRounded ranks on
+    * (rounded cos desc, cid) — a total order (cids unique) — so scores
+    * are a pure function of the SET, which the oracle replay proves. */
+  private[graft] def packedGroups(cents: DataFrame, key: String): DataFrame =
+    cents.withColumn("pw", packRaw(col("cw")))
+      .withColumn("nw", sqrt(org.apache.spark.sql.GraftColumns.dotPacked(col("pw"), col("pw"))))
+      .groupBy(key)
+      .agg(collect_list(struct(col("cid"), col("pw"), col("nw"))).as("lc"))
 
   /** Unpack a [[packRaw]] blob: one bulk primitive copy, no per-element
     * boxing. */

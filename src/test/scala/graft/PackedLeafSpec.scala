@@ -34,6 +34,26 @@ class PackedLeafSpec extends SparkSuite {
     }
   }
 
+  test("packedGroups' codegen'd centroid norm equals Similarity.norm bit for bit") {
+    // the leaf/child frames norm their centroids as sqrt(dot_packed(pw, pw))
+    // inside whole-stage codegen; the descent's rankings rest on that norm
+    // being the very double the interpreted aggregate lambda produced
+    val cents = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(lit(0L).as("branch"), col("vec_id").as("cid"),
+        Similarity.toDouble(col("embedding")).as("cw"))
+    val ref = cents.select(col("cid"), Similarity.norm(col("cw")).as("ref"))
+    val got = Similarity.packedGroups(cents, "branch")
+      .select(explode(col("lc")).as("c"))
+      .select(col("c.cid").as("cid"), col("c.nw").as("nw"))
+    val rows = got.join(ref, "cid").collect()
+    assert(rows.length == cents.count() && rows.length > 0)
+    rows.foreach { r =>
+      assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
+        s"norm drift at cid ${r.getLong(0)}: ${r.getDouble(1)} vs ${r.getDouble(2)}")
+    }
+  }
+
   test("packRaw of an empty vector is an empty blob (and unpacks to empty)") {
     import spark.implicits._
     val packed = Seq(Seq.empty[Double]).toDF("v")

@@ -372,6 +372,10 @@ class PlanAuditSpec extends SparkSuite {
     for (q <- reg.keys.filter(_.startsWith("emb_")).toSeq.sorted) {
       val pq = plan(q)
       assert(!pq.contains("transform("), s"$q widens its vectors through a lambda:\n$pq")
+      // nor does any other emb stage take a lambda: the hier/deep leaf
+      // frames norm their centroids with the codegen'd dot_packed
+      assert(!pq.contains("lambdafunction"),
+        s"$q: an interpreted lambda keeps its Project out of whole-stage codegen:\n$pq")
     }
   }
 
@@ -390,6 +394,30 @@ class PlanAuditSpec extends SparkSuite {
       assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
         s"$q: assignment degenerated to a nested loop:\n$p")
     }
+    // emb_outlier's assignment feeds both the (mu, sd) aggregate and the
+    // join back: it runs ONCE (materialized), not once per consumer.
+    // Physical nodes, each cached relation walked once — InMemoryRelation
+    // text embeds its child plan, so string counts would double-count
+    import org.apache.spark.sql.execution.{ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case o                        => o +: o.children.flatMap(nodes)
+    }
+    def withCaches(p: SparkPlan): Seq[SparkPlan] = {
+      val top = nodes(p)
+      top ++ top.collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
+        .distinct.flatMap(withCaches)
+    }
+    val out = reg("emb_outlier").fn(spark, d).queryExecution.executedPlan
+    val assigns = withCaches(out).count {
+      case pr: ProjectExec => pr.projectList.exists(_.toString.contains("kmeans: expected dim"))
+      case _               => false
+    }
+    assert(assigns == 1, s"emb_outlier: expected ONE assignment Project, got $assigns:\n$out")
+    spark.catalog.clearCache()
   }
 
   test("incremental dedup: anti-join on the fingerprint key, no text in the exchange") {
