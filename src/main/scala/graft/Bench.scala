@@ -362,7 +362,8 @@ object Bench {
     }
     def tally(group: String): GroupTally =
       Option(groups.get(group)).getOrElse(GroupTally())
-    def bytes(group: String): Long = tally(group).bytes
+    def attempt(group: String): GroupTally = tally(buildGroup(group)) + tally(group)
+    def bytes(group: String): Long = attempt(group).bytes
     /** Bounded listener-bus drain: polls the event counter until it has
       * been stable for 3 consecutive 50 ms ticks (all posted events
       * applied — the bus delivers to each listener in order, so once OUR
@@ -384,11 +385,10 @@ object Bench {
 
   /** Per-query isolation sweep, shared with [[Verify]]: clear the
     * CacheManager AND unpersist every still-registered RDD.
-    * `clearCache()` alone is not enough — `localCheckpoint` blocks
-    * (Graph CC label frames, Augurs cluster intermediates, the pack
-    * planner's output pin) live at the RDD layer OUTSIDE the
-    * CacheManager, and ContextCleaner only frees them on a driver GC,
-    * which a 128 GiB heap may not run for an entire pass. Round 16
+    * `clearCache()` alone is not enough — `Pin.cut` blocks (Graph CC
+    * label frames, Augurs cluster intermediates) live at the RDD layer
+    * OUTSIDE the CacheManager, and ContextCleaner only frees them on a
+    * driver GC, which a 128 GiB heap may not run for an entire pass. Round 16
     * measured the consequence: blocks leaked by earlier queries
     * accumulated executor storage across all 139 queries and inflated
     * later ones (doc_curate_e2e 3.95 → 6.7 s with an unchanged plan —
@@ -469,15 +469,20 @@ object Bench {
       jitp: Seq[Double] = Seq.empty, ccm: Seq[Double] = Seq.empty,
       jitq: Map[String, Double] = Map.empty, layers: Map[String, Layers] = Map.empty)
 
+  /** The job group of an attempt's `fn(spark, dir)` call; `group` is its write's. */
+  private[graft] def buildGroup(group: String): String = s"$group:build"
+
   /** One query's kept attempt split by layer, recorded under
     * `BENCHMARK.json`'s `per_layer` names: `queries.build_s` (the
-    * `fn(spark, dir)` call, timed apart from the write), `sched.jobs`,
-    * `sched.stages` and `sched.tasks` of its job group, `exec.run_s`
+    * `fn(spark, dir)` call, timed apart from the write),
+    * `queries.build_jobs` (the jobs that call ran), `sched.jobs`,
+    * `sched.stages` and `sched.tasks` of the whole attempt, `exec.run_s`
     * (summed task `executorRunTime`) and `jvm.gc_s` (JVM collection time
     * over the attempt; driver and executors share the JVM). */
-  final case class Layers(buildS: Double, jobs: Long, stages: Long, tasks: Long,
-      runS: Double, gcS: Double) {
+  final case class Layers(buildS: Double, buildJobs: Long, jobs: Long, stages: Long,
+      tasks: Long, runS: Double, gcS: Double) {
     def fields: Seq[(String, String)] = Seq("queries.build_s" -> rd(buildS, 3),
+      "queries.build_jobs" -> buildJobs.toString,
       "sched.jobs" -> jobs.toString, "sched.stages" -> stages.toString,
       "sched.tasks" -> tasks.toString, "exec.run_s" -> rd(runS, 3),
       "jvm.gc_s" -> rd(gcS, 3))
@@ -693,9 +698,10 @@ object Bench {
         group: String, desc: String): Unit = {
       val qSt0 = procStatSteal()
       val (jc0, _) = jitStat()
-      // job-group = this query+attempt: every stage its jobs submit is
-      // tallied to this key no matter when the listener event lands
-      spark.sparkContext.setJobGroup(group, desc, interruptOnCancel = false)
+      // job-group = this query+attempt (its build, then its write): every
+      // stage its jobs submit is tallied to this key no matter when the
+      // listener event lands
+      spark.sparkContext.setJobGroup(buildGroup(group), desc, interruptOnCancel = false)
       val watch = SlowWatch.arm(s"$desc")
       val gc0 = gcMs()
       val t0 = System.nanoTime()
@@ -703,6 +709,7 @@ object Bench {
       try {
         val df = fn(spark, sfDir)
         built = System.nanoTime()
+        spark.sparkContext.setJobGroup(group, desc, interruptOnCancel = false)
         df.write.format("noop").mode("overwrite").save()
       } catch { case e: Throwable =>
         errors += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).takeWhile(_ != '\n').take(200)}"
@@ -737,7 +744,7 @@ object Bench {
         // per-query isolation: a persisted frame from one query must not
         // serve an identical subplan in another (Spark's cache matches on
         // canonicalized plans), or the second query's number is fiction;
-        // the RDD-layer sweep also drops leaked localCheckpoint blocks
+        // the RDD-layer sweep also drops leaked Pin.cut blocks
         // (see [[isolate]]) so no query pays for a predecessor's storage
         isolate(spark)
         timeOne(name, fn, s"$name#$p", s"bench $name pass $p")
@@ -795,8 +802,9 @@ object Bench {
     val caps = kept.flatMap { case (n, r) => r.steal.map(n -> _) }
     val shuf = kept.map { case (n, r) => n -> tally.bytes(r.group) }
     val layers = kept.map { case (n, r) =>
-      val t = tally.tally(r.group)
-      n -> Layers(r.build, t.jobs, t.stages, t.tasks, t.runMs / 1e3, r.gc)
+      val t = tally.attempt(r.group)
+      n -> Layers(r.build, tally.tally(buildGroup(r.group)).jobs, t.jobs, t.stages,
+        t.tasks, t.runMs / 1e3, r.gc)
     }
     // cross-pass byte-equality record (r19 verdict what's-wrong #1): a
     // fixed plan over fixed data writes the same shuffle bytes every

@@ -4,7 +4,7 @@ import graft.Queries.Q
 import graft.functions.{Similarity, TextFunctions => TF}
 import graft.functions.Similarity.Quantizer
 import graft.functions.HalfUp.r4
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Pin, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Training-data pipeline queries: text analysis, deduplication (exact /
@@ -23,15 +23,6 @@ object QueriesPipeline {
   /** DuckDB replay of the salted sample-model ordering every ANN entry
     * uses (Similarity: orderBy(hash60(vec_id), vec_id)). */
   private val SALT = "('0x' || substr(md5(vec_id::VARCHAR),1,15))::BIGINT, vec_id"
-
-  /** persist + EAGER materialization (one count pass) for frames consumed
-    * by multiple plan branches. Lazy persist lets the first action's
-    * CONCURRENT stages race to compute the same cached partitions —
-    * dueling stages block on each other's in-progress block writes and
-    * runtime goes bimodal (measured 1.5 s vs 8-14 s run-to-run on
-    * doc_dedup_minhash at sf0.1). One eager pass builds the cache cleanly;
-    * every branch then reads hot blocks. clearCache() still reclaims it. */
-  private def cached(df: DataFrame): DataFrame = { val p = df.persist(); p.count(); p }
 
   private def docs(s: SparkSession, d: String): DataFrame = Tables.documents(s, d)
   private def emb(s: SparkSession, d: String): DataFrame = Tables.embeddings(s, d)
@@ -345,31 +336,29 @@ object QueriesPipeline {
        |  FROM m GROUP BY 1,2)""".stripMargin
   }
 
-  /** Verified MinHash-LSH near-dup pairs (a, b, j): band-collision
-    * candidates, exact Jaccard ≥ 0.2 over hashed shingle sets. Feeds both
-    * the pair query (doc_dedup_minhash) and the cluster collapse
-    * (doc_dedup_cluster).
-    *
-    * persist: the signature frame feeds FOUR plan branches (band self-
-    * join x2, verify join x2) — without it Spark recomputes the whole
-    * tokenize+md5 pass per branch (no CSE across exchanges). The
-    * persisted frame is #docs × (8 longs + hashed set) — tiny next to
-    * the text it derives from; at scale this is the materialized
-    * signature table every LSH pipeline keeps. */
+  /** The MinHash signature frame (cached) and its distinct band-collision
+    * candidate pairs (a < b). The cache: the signature frame feeds FOUR
+    * plan branches (band self-join x2, verify join x2) — without it Spark
+    * recomputes the whole tokenize+md5 pass per branch (no CSE across
+    * exchanges). It is #docs × (8 longs + hashed set) — tiny next to the
+    * text it derives from; at scale this is the materialized signature
+    * table every LSH pipeline keeps. */
+  private def minhashCandidates(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val base = Pin.cache(
+      minhashAgg(hashedShingleRows(docs(s, d), 2, Nil), Nil, withSet = true))
+    val bands = bandRows(base, Nil)
+    (base, bands.as("x").join(bands.as("y"),
+      col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
+        col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct())
+  }
+
   /** Scale-probe hook: the banded candidate count + mean shingle-set
     * length behind [[minhashVerifiedPairs]] — the two numbers that size
     * its verify-join shuffle (candidates × 2 × setLen × 8 bytes). */
   private[graft] def minhashProbe(s: SparkSession, d: String): (Long, Double) = {
-    val base = cached(
-      minhashAgg(hashedShingleRows(docs(s, d), 2, Nil), Nil, withSet = true))
-    val bands = bandRows(base, Nil)
-    val cand = bands.as("x").join(bands.as("y"),
-      col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct().count()
-    val meanSet = base.select(
-      org.apache.spark.sql.functions.avg(size(col("shh")))).head.getDouble(0)
-    (cand, meanSet)
+    val (base, cand) = minhashCandidates(s, d)
+    (cand.count(), base.select(avg(size(col("shh")))).head.getDouble(0))
   }
 
   /** Scale-probe hook: the overlap matrix's mechanism numbers — how
@@ -387,8 +376,8 @@ object QueriesPipeline {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
-  /** doc_ppl_buckets' (persisted scored frame, UN-checkpointed output):
-    * the query checkpoint-and-unpersists; PlanAuditSpec audits the
+  /** doc_ppl_buckets' (cached scored frame, UN-cut output): the query
+    * cuts the output and releases the scored frame; PlanAuditSpec audits the
     * returned output frame's plan (two-literal CASE split, no corpus
     * rank window, one output range partition).
     *
@@ -400,9 +389,8 @@ object QueriesPipeline {
     * recovers the gap (COVERAGE round-14). Disk round-trips ~120 MB —
     * noise next to the chain — and descent rounds read it back in ~1 s. */
   private[graft] def pplBucketsFrames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val scored = lmPplScores(docs(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    scored.count()
+    val scored = Pin.cache(lmPplScores(docs(s, d)),
+      org.apache.spark.storage.StorageLevel.DISK_ONLY)
     val qs = graft.ops.Sketch.exactQuantiles(scored, "nll",
       Seq(1.0 / 3, 2.0 / 3), buckets = 512, cap = 4096)
     val bs = qs.result.orderBy("p").collect().map(_.getDouble(1))
@@ -414,14 +402,12 @@ object QueriesPipeline {
     (scored, out)
   }
 
+  /** Verified MinHash-LSH near-dup pairs (a, b, j): band-collision
+    * candidates, exact Jaccard ≥ 0.2 over hashed shingle sets. Feeds both
+    * the pair query (doc_dedup_minhash) and the cluster collapse
+    * (doc_dedup_cluster). */
   private def minhashVerifiedPairs(s: SparkSession, d: String): DataFrame = {
-    val base = cached(
-      minhashAgg(hashedShingleRows(docs(s, d), 2, Nil), Nil, withSet = true))
-    val bands = bandRows(base, Nil)
-    val cand = bands.as("x").join(bands.as("y"),
-      col("x.band") === col("y.band") && col("x.key") === col("y.key") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b")).distinct()
+    val (base, cand) = minhashCandidates(s, d)
     cand
       .join(base.select(col("doc_id").as("a"), col("shh").as("sha")), "a")
       .join(base.select(col("doc_id").as("b"), col("shh").as("shb")), "b")
@@ -826,7 +812,7 @@ object QueriesPipeline {
     * oracle's scored-pair CTE). */
   private def annQ(r: SearchRecipe, nProbe: Int = 4, sc: String = "sc"): Q =
     Q((s, d) => {
-        val e = if (r.trained) cached(emb(s, d)) else emb(s, d)
+        val e = if (r.trained) Pin.cache(emb(s, d)) else emb(s, d)
         ivfNeighbors(e, r, FirstTen, 3, nProbe).orderBy("qid", "rank")
       },
       Some(withCtes(Seq(embCte(label = false)) ++ r.queryFan(FirstTen, nProbe) ++ candCtes(sc) :+
@@ -842,7 +828,7 @@ object QueriesPipeline {
   private def knnQ(r: SearchRecipe, nProbe: Int): Q = {
     val q = (c: String) => s"$c % 10 = 0"
     Q((s, d) => {
-        val e = cached(emb(s, d))
+        val e = Pin.cache(emb(s, d))
         val nn = ivfNeighbors(e, r, q, 5, nProbe)
         val lab = e.select(col("vec_id").as("nid"), col("label").as("nlabel"))
         val votes = nn.join(lab, "nid")
@@ -877,7 +863,7 @@ object QueriesPipeline {
     * one cached scan. */
   private def dedupQ(r: CurateRecipe, nProbe: Int, verify: Seq[String], select: String): Q =
     Q((s, d) => {
-        val e = cached(emb(s, d))
+        val e = Pin.cache(emb(s, d))
         Similarity.cosineDedupIvf(e, EmbTau, r.train(e), nProbe = nProbe,
           dimHint = AnnDim).orderBy("a", "b")
       },
@@ -901,7 +887,7 @@ object QueriesPipeline {
   /** SemDeDup through `r`: training + assignment + prune share one cached scan. */
   private def semDedupQ(r: CurateRecipe): Q =
     Q((s, d) => {
-        val e = cached(emb(s, d))
+        val e = Pin.cache(emb(s, d))
         Similarity.semDedup(e, EmbTau, r.train(e), dimHint = AnnDim).orderBy("vec_id")
       },
       Some(withCtes(Seq(embCte(label = false)) ++ r.model("e", "") ++ r.homes("cells", "e", "") ++
@@ -913,7 +899,7 @@ object QueriesPipeline {
     * and within itself. */
   private def semDedupIncQ(r: CurateRecipe): Q =
     Q((s, d) => {
-        val e = cached(emb(s, d))
+        val e = Pin.cache(emb(s, d))
         val old = e.where(OldRows)
         val q = r.train(old)
         // the stored state a production run reads back: kept rows with
@@ -947,7 +933,7 @@ object QueriesPipeline {
     * <> 9): eval vectors (label 9) probe 4 cells. */
   private def decontamQ(r: CurateRecipe): Q =
     Q((s, d) => {
-        val e = cached(emb(s, d))
+        val e = Pin.cache(emb(s, d))
         val corpus = e.where(CorpusRows)
         Similarity.semanticDecontaminate(corpus, e.where(EvalRows), EmbTau, r.train(corpus),
           nProbe = 4, dimHint = AnnDim).orderBy("vec_id")
@@ -963,7 +949,7 @@ object QueriesPipeline {
     val old = s"$CorpusRows AND $OldRows"
     val batch = s"$CorpusRows AND $NewRows"
     Q((s, d) => {
-        val e = cached(emb(s, d))
+        val e = Pin.cache(emb(s, d))
         val q = r.train(e.where(old))
         val probes = Similarity.evalProbeFrame(e.where(EvalRows), q, nProbe = 4,
           dimHint = AnnDim)
@@ -1270,22 +1256,18 @@ object QueriesPipeline {
     // takes real descent rounds rather than a one-shot collect.
     "doc_token_budget" -> Q(
       (s, d) => {
-        // The scored projection is persisted across the descent rounds:
-        // 3 narrow columns (~2% of corpus bytes), read by every round's
-        // histogram — the A/B at sf0.1 measured 3.0 s recompute (each
-        // round re-runs the 4-regex quality score over the corpus) vs
-        // 2.0 s persisted (one scoring scan + cached rounds + the
-        // returned frame's own re-derivation). Released before return;
-        // the returned frame re-derives the projection so it carries no
-        // dependency on the freed blocks.
+        // The scored projection (3 narrow columns) is cached across the
+        // descent rounds: 2.0 s vs 3.0 s recomputing the 4-regex quality
+        // score per round (sf0.1). Released before return; the returned
+        // frame re-derives the projection, so it needs no freed block.
         val mk = () => docs(s, d).select(col("doc_id"),
           round(TF.qualityScore(col("text")) + lit(1e-9), 2).as("score"),
           TF.tokenCount(col("text")).cast("long").as("ntok"))
-        val base = mk().persist()
+        val base = Pin.cache(mk(), eager = false)
         val sel = try {
           graft.ops.Sketch.budgetSelect(base, "score", "ntok",
             "doc_id", budget = 13000L, buckets = 64, cap = 32)
-        } finally base.unpersist()
+        } finally Pin.release(base)
         mk().filter(sel.predicate(col("score"), col("doc_id")))
           .orderBy("doc_id")
       },
@@ -1569,7 +1551,7 @@ object QueriesPipeline {
     // one banded shuffle, verification proportional to candidates.
     "doc_ngram_jaccard" -> Q(
       (s, d) => {
-        val base = cached(minhashAgg(hashedShingleRows(docs(s, d), 3, Seq("source")),
+        val base = Pin.cache(minhashAgg(hashedShingleRows(docs(s, d), 3, Seq("source")),
           Seq("source"), withSet = true)) // same four-branch reuse as doc_dedup_minhash
         val bands = bandRows(base, Seq("source"))
         val cand = bands.as("x").join(bands.as("y"),
@@ -1639,13 +1621,13 @@ object QueriesPipeline {
     "doc_dedup_simhash" -> Q(
       (s, d) => {
         // one window pass tags every doc with its signature-group id (the
-        // group's lowest doc_id); reps = the gid rows themselves. persist:
+        // group's lowest doc_id); reps = the gid rows themselves. cache:
         // the frame feeds both band-join sides and all four expansion
         // probes — without it the tokenize+md5+aggregate pipeline reruns
         // per branch
         val wSig = org.apache.spark.sql.expressions.Window
           .partitionBy("w0", "w1", "w2", "w3")
-        val members = cached(simhashSig128(s, d)
+        val members = Pin.cache(simhashSig128(s, d)
           .withColumn("gid", min("doc_id").over(wSig)))
         val reps = members.where(col("doc_id") === col("gid"))
         val bands = reps.select(col("gid") +: (0 until 4).map(w => col(s"w$w")) :+
@@ -1708,9 +1690,9 @@ object QueriesPipeline {
     // scan-side filter chain and one shuffle on the fingerprint.
     "doc_corpus_clean" -> Q(
       (s, d) => {
-        // persist: the survivor frame feeds BOTH the keep-groupBy and the
+        // cache: the survivor frame feeds BOTH the keep-groupBy and the
         // join probe — without it the tokenize+md5 scoring runs twice
-        val f = cached(docs(s, d).select(col("doc_id"),
+        val f = Pin.cache(docs(s, d).select(col("doc_id"),
           TF.fingerprint(col("text")).as("fp"),
           r4(TF.qualityScore(col("text"))).as("q"),
           TF.langGuess(col("text")).as("lg"))
@@ -1936,18 +1918,13 @@ object QueriesPipeline {
     // <=-driven), so the cut is deterministic.
     "doc_ppl_buckets" -> Q(
       (s, d) => {
-        // eager localCheckpoint materializes the (small) output and cuts
-        // its lineage off the persisted frame, so the DISK_ONLY blocks
-        // can be dropped HERE instead of leaking one cache entry per
-        // invocation outside the cache-isolated harnesses (round-14
-        // advisor note) — by checkpoint time the descent is done, so
-        // nothing contends with the LM joins the DISK_ONLY choice
-        // protects. PlanAuditSpec audits [[pplBucketsFrames]]'s
-        // pre-checkpoint plan (a checkpointed frame reads as a bare RDD
-        // scan — nothing left to gate).
+        // an eager cut of the (small) output frees the DISK_ONLY blocks
+        // HERE, not one leaked cache entry per invocation; the descent
+        // is done by then. PlanAuditSpec audits [[pplBucketsFrames]]'s
+        // pre-cut plan (a cut frame reads as a bare RDD scan).
         val (scored, out0) = pplBucketsFrames(s, d)
-        val out = out0.localCheckpoint(true)
-        scored.unpersist(false)
+        val out = Pin.cut(out0, eager = true)
+        Pin.release(scored)
         out
       },
       Some(s"""WITH ${oracleLmPpl()},
@@ -2265,7 +2242,7 @@ object QueriesPipeline {
       (s, d) => {
         // one materialized scan feeds cells, codes, and both model
         // collects (4 consumers otherwise re-read the parquet each)
-        val ec = cached(emb(s, d))
+        val ec = Pin.cache(emb(s, d))
         Similarity.ivfPqTopK(
           ec.where(col("vec_id") < 10), ec, 3,
           nCent = 16, nProbe = 4, m = 32, ksub = 64, dimHint = AnnDim)
@@ -2304,7 +2281,7 @@ object QueriesPipeline {
     // encode (rounded per-subspace L2 argmin) and ADC scoring exactly.
     "emb_pq" -> Q(
       (s, d) => {
-        val ec = cached(emb(s, d)) // encode + codebook collect share one scan
+        val ec = Pin.cache(emb(s, d)) // encode + codebook collect share one scan
         Similarity.pqTopK(
           ec.where(col("vec_id") < 10), ec, 3,
           m = 32, ksub = 64, dimHint = AnnDim)
@@ -2592,7 +2569,7 @@ object QueriesPipeline {
         // (vec_id, cell, aff) assignment feeds both the aggregate and the
         // join, so it is materialized once: one corpus scan, one
         // assignment Project
-        val asg = cached(Similarity.kmeansAssign(emb(s, d), nCent = 8, iters = 2,
+        val asg = Pin.cache(Similarity.kmeansAssign(emb(s, d), nCent = 8, iters = 2,
           dimHint = AnnDim))
         val st = asg.groupBy("cell").agg(
           r4(avg(col("aff"))).as("mu"),
@@ -3035,7 +3012,7 @@ object QueriesPipeline {
     * (a) pure map-side recompute: 72.6 s @300× / 278 s @1000× —
     *     CPU-redundant but zero memory risk (scan + explode + md5 is
     *     embarrassingly parallel, nothing held);
-    * (b) persist(bi): 44.1 s @300× (−39%) but the corpus-sized cache
+    * (b) caching bi: 44.1 s @300× (−39%) but the corpus-sized cache
     *     competes with execution memory at 1000× — 196 s with 16 s
     *     GC at 32 partitions and AGGREGATE_OUT_OF_MEMORY at 256;
     * (c) per-(doc, bigram) multiplicity aggregation: no ReuseExchange
@@ -3162,7 +3139,7 @@ object QueriesPipeline {
       (symbols.cast("double") <= lit(0.1) * greatest(nTok, lit(1))) &&
       (bulletFrac < 0.9)
     // stage 1: the one scoring scan — every per-doc signal the chain needs
-    val base = cached(corpus.select(col("doc_id"),
+    val base = Pin.cache(corpus.select(col("doc_id"),
       TF.fingerprint(col("text")).as("fp"),
       round(TF.qualityScore(col("text")) + lit(1e-9), 2).as("score"),
       (TF.langGuess(col("text")) === "en").as("lgen"),
@@ -3181,7 +3158,7 @@ object QueriesPipeline {
     // screens before the stateful dedup).
     val ev = hashedShingleRows(g.where(col("source") === "src19"), 4, Nil)
       .select("h").distinct()
-    val contam = cached(hashedShingleRows(corpus, 4, Nil)
+    val contam = Pin.cache(hashedShingleRows(corpus, 4, Nil)
       .join(broadcast(ev), "h").select("doc_id").distinct())
     val fClean = f.join(broadcast(contam), Seq("doc_id"), "left_anti")
     // stage 4: exact dedup among the clean survivors (one fp exchange,
@@ -3192,12 +3169,12 @@ object QueriesPipeline {
     // exchange per pass) off the base cache; the frame is #survivors ×
     // 3 narrow cols — the same persist discipline as base/contam.
     val keep = fClean.groupBy("fp").agg(min("doc_id").as("keep"))
-    val kept2 = cached(fClean.join(keep, "fp").where(col("doc_id") === col("keep"))
+    val kept2 = Pin.cache(fClean.join(keep, "fp").where(col("doc_id") === col("keep"))
       .select("doc_id", "score", "ntok"))
     // stage 5: budget descent over the cached frames — no corpus access
     val sel = graft.ops.Sketch.budgetSelect(kept2, "score", "ntok",
       "doc_id", budget = 8000L, buckets = 64, cap = 32)
-    val kept3 = cached(kept2.filter(sel.predicate(col("score"), col("doc_id"))))
+    val kept3 = Pin.cache(kept2.filter(sel.predicate(col("score"), col("doc_id"))))
     // stages 6-7: global salted rank into 25-doc shards, two-phase
     val h = TF.hash60(concat(lit("shard:"), col("doc_id").cast("string")))
     val hd = kept3.select(col("doc_id"), col("score"), col("ntok"),

@@ -18,10 +18,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      // per-query cache isolation, same as Bench: cached()/persisted
-      // frames (emb scans, quantizer level frames) from one query must
-      // not stay resident across the other 100+ queries' runs — and the
-      // RDD-layer sweep drops leaked localCheckpoint blocks too
+      // per-query cache isolation, same as Bench: Pin.cache'd frames
+      // (emb scans, quantizer level frames) from one query must not stay
+      // resident across the other 100+ queries' runs — and the
+      // RDD-layer sweep drops leaked Pin.cut blocks too
       Bench.isolate(spark)
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Pin}
 import org.apache.spark.sql.functions._
 import HalfUp.r4
 
@@ -819,13 +819,11 @@ object Similarity {
     @transient @volatile private var released0 = false
     /** True once [[unpersist]] ran — the quantizer must no longer be used. */
     def released: Boolean = released0
-    /** Release the distributed half of the model: unpersist the leaf
-      * frame's storage blocks (no-op when nothing is cached) and mark the
-      * quantizer dead — any later descent fails loudly instead of
-      * silently recomputing (or worse, quietly serving) a released model.
-      * Long-lived apps training several quantizers call this when done;
-      * Bench/Verify's per-query clearCache() covers the harness paths. */
-    def unpersist(): Unit = { released0 = true; leaves.unpersist() }
+    /** Mark the quantizer dead, so any later descent fails loudly instead
+      * of silently recomputing (or serving) a released model. There is
+      * nothing to free: `leaves` is a lazy plan [[hierQuantizer]] never
+      * caches. */
+    def unpersist(): Unit = released0 = true
     private[functions] def requireLive(op: String): Unit =
       require(!released0,
         s"$op: HierQuantizer used after unpersist() — retrain the model")
@@ -952,15 +950,11 @@ object Similarity {
     @transient @volatile private var released0 = false
     /** True once [[unpersist]] ran — the quantizer must no longer be used. */
     def released: Boolean = released0
-    /** Release the model's distributed half: unpersist every level
-      * frame's storage blocks ([[deepQuantizer]] persists them eagerly —
-      * they ARE the model) and mark the quantizer dead, so any later
-      * descent fails loudly instead of silently re-running the whole
-      * Lloyd + sample + re-home lineage per consumer. A long-lived
-      * session training several quantizers otherwise accumulates
-      * storage-memory blocks per model; Bench/Verify's per-query
-      * clearCache() covers the harness paths. */
-    def unpersist(): Unit = { released0 = true; levels.foreach(_.unpersist()) }
+    /** Free every level frame's blocks ([[deepQuantizer]] caches them
+      * eagerly — they ARE the model) and mark the quantizer dead, so any
+      * later descent fails loudly instead of silently re-running the whole
+      * Lloyd + sample + re-home lineage per consumer. */
+    def unpersist(): Unit = { released0 = true; levels.foreach(Pin.release) }
     private[functions] def requireLive(op: String): Unit =
       require(!released0,
         s"$op: DeepQuantizer used after unpersist() — retrain the model")
@@ -996,22 +990,18 @@ object Similarity {
     val wIn = org.apache.spark.sql.expressions.Window.partitionBy("parent")
     val wSalt = wIn.orderBy(TextFunctions.hash60(col("id").cast("string")), col("id"))
     val built = occupancies.zipWithIndex.map { case (occ, li) =>
-      // each level frame is PERSISTED and eagerly materialized: it is the
+      // each level frame is CACHED and eagerly materialized: it is the
       // distributed half of the MODEL (1/occ-th of its parent population
       // — k^(i/L)-ish rows, not the corpus), and its consumers — the next
       // level's re-home plus both of [[Quantizer.Deep]]'s descents — would
       // otherwise each recompute the whole Lloyd + sample + re-home
-      // lineage (the unpersisted form measured ~5 recomputes and 50
-      // window nodes in one emb_ann_deep plan). Bench/Verify clear the
-      // cache per query; long-lived apps release via
-      // [[DeepQuantizer.unpersist]] when done with the quantizer.
-      val lvl = asg
+      // lineage (the uncached form measured ~5 recomputes and 50
+      // window nodes in one emb_ann_deep plan).
+      val lvl = Pin.cache(asg
         .withColumn("rn", row_number().over(wSalt))
         .withColumn("n", count(lit(1)).over(wIn))
         .where(col("rn") <= ceil(col("n") / lit(occ.toDouble)))
-        .select(col("parent"), col("id").as("cid"), col("v").as("cw"))
-        .persist()
-      lvl.count()
+        .select(col("parent"), col("id").as("cid"), col("v").as("cw")))
       if (li < occupancies.length - 1)
         // re-home: each vector has exactly ONE parent here, so the
         // per-parent top-1 IS the per-id argmax — no window needed
@@ -1102,7 +1092,8 @@ object Similarity {
     * (zero vector → zero vector, matching [[cosLoop]]'s 0-cosine
     * convention). Runs once per bucket row — off the hot path; the hot
     * per-candidate loop is the native [[DotPacked]] expression. */
-  private val packUnit = udf { (v: Seq[Double]) =>
+  private val packUnit = udf { (s: Seq[Double]) =>
+    val v = s.toArray // Spark passes a List: indexing it is O(i)
     var i = 0; var n2 = 0.0
     while (i < v.length) { n2 += v(i) * v(i); i += 1 }
     val inv = if (n2 > 0) 1.0 / math.sqrt(n2) else 0.0
@@ -1118,7 +1109,8 @@ object Similarity {
     * exact IEEE bits), for payloads whose consumer needs the original
     * values: the packed-leaf centroid frames ([[packedScoreUdf]]), whose
     * scoring arithmetic must stay bit-identical to the unpacked form. */
-  private[graft] val packRaw = udf { (v: Seq[Double]) =>
+  private[graft] val packRaw = udf { (s: Seq[Double]) =>
+    val v = s.toArray // Spark passes a List: indexing it is O(i)
     val bb = java.nio.ByteBuffer.allocate(v.length * 8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
     var i = 0

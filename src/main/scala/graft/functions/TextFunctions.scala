@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   * expressible in the DuckDB oracle. */
 object TextFunctions {
 
-  /** Lowercased word tokens, empty strings filtered. */
+  /** Lowercased word tokens, empty strings removed (no lambda: codegen'd). */
   def tokens(text: Column): Column =
-    filter(split(lower(text), "\\W+"), t => t =!= "")
+    array_remove(split(lower(text), "\\W+"), "")
 
   def distinctTokens(text: Column): Column = array_distinct(tokens(text))
 

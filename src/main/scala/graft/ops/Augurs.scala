@@ -3,7 +3,7 @@ package graft.ops
 import graft.core.Timeline
 import graft.functions.HalfUp
 import graft.functions.HalfUp.r4
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Pin}
 import org.apache.spark.sql.functions._
 
 /** Time-series analytics ops — the Spark re-derivation of the reference's
@@ -566,7 +566,7 @@ object Augurs {
     *    (sid_a, sid_b) order across partition indexes.
     *
     * EXECUTION CONTRACT: this method runs Spark jobs EAGERLY at call time
-    * (the budget-guard count and the two localCheckpoint
+    * (the budget-guard count and the two [[Pin.cut]]
     * materializations execute before it returns) — it is not a lazy plan
     * builder, same contract as [[clusterDtwDistributed]]. The series
     * frame is checkpointed ONCE and BOTH consumers (the bucket rank that
@@ -574,23 +574,20 @@ object Augurs {
     * two live executions a non-deterministic source Timeline (e.g. a
     * sampled frame) could surface sids in the pair frame that are absent
     * from the pinned token map, and the inner tag join would silently
-    * drop those pairs (round-19 advisor). k-row × window blocks,
-    * executor-local and non-replicated — see the clusterDtwDistributed
-    * contract note for the recovery caveat. */
+    * drop those pairs (round-19 advisor). k-row × window blocks; see
+    * [[Pin]] for when they survive executor loss. */
   def dtwMatrixOrdered(t: Timeline, window: Int, band: Int = Int.MaxValue,
       maxPairs: Long = DtwDefaultMaxPairs, buckets: Int = 32): DataFrame = {
-    // LAZY checkpoints (round 21, guide §1.2): plan truncation is still
-    // immediate, block materialization rides the rank count below — the
-    // FIRST action, a full count, computes every partition of BOTH
-    // frames in one job (two fewer jobs, one fewer pass over the k-row
-    // frames). The pair budget is guarded on that same k (= the series
+    // LAZY cuts (round 21): the rank count below, a full count, computes
+    // every partition of BOTH frames in one job. The pair budget is
+    // guarded on that same k (= the series
     // actually entering the DP — the operand the k² bound is ABOUT),
     // and throws at call time, before any DP task can run. The raw key
     // count is checked first as a fast-fail: one column-pruned distinct
     // count, so an over-budget input throws before the window build and
     // its two shuffles run at all.
     requirePairBudget(t, maxPairs, "dtwMatrixOrdered")
-    val s = seriesOf(t, window).localCheckpoint(false)
+    val s = Pin.cut(seriesOf(t, window), eager = false)
     val tok = bucketTokens(buckets)
     // WEIGHTED bucketing (round 18): equal sid-RANGES would load the
     // upper-triangle wedge unevenly — the rank-r sid owns (k-r) pairs,
@@ -603,7 +600,7 @@ object Augurs {
     // ~1.75×). Rank comes from the two-phase form; the checkpoint pins
     // ONE sampled bucket assignment for the offsets and the tag join
     // (the lexRankPhase1 consistency contract), k-row blocks.
-    val rankedB = lexRankPhase1(s.select("sid"), buckets).localCheckpoint(false)
+    val rankedB = Pin.cut(lexRankPhase1(s.select("sid"), buckets), eager = false)
     val k = rankedB.count() // materializes s and rankedB (full count)
     requirePairBudget(k, maxPairs, "dtwMatrixOrdered")
     val wTot = math.max(1L, k * (k - 1) / 2)
@@ -711,39 +708,27 @@ object Augurs {
     *    the driver loop's rules.
     *
     * EXECUTION CONTRACT: this method runs Spark jobs EAGERLY at call time
-    * (the budget-guard count, the localCheckpoint materializations, and
+    * (the budget-guard count, the [[Pin.cut]] materializations, and
     * the CC rounds all execute before it returns) — it is not a lazy plan
-    * builder. The checkpointed intermediates are executor-local,
-    * NON-REPLICATED blocks: on a real cluster, losing an executor after
-    * the call returns makes downstream actions on the returned frame fail
-    * unrecoverably (localCheckpoint truncates lineage, so there is
-    * nothing to recompute from). Acceptable in local mode and for
-    * consume-immediately pipelines (the registry/bench protocol sinks the
-    * frame right away and then sweeps the blocks — Bench.isolate); on an
-    * unreliable cluster flip the checkpoints to reliable `checkpoint()`
-    * or persist-with-replication. ContextCleaner frees the blocks when
-    * the frame is GC'd; callers that keep the session hot should sweep
-    * explicitly ([[graft.ops.Graph.freeCheckpoint]] / Bench.isolate). */
+    * builder. See [[Pin]] for when the cut blocks survive executor loss;
+    * ContextCleaner frees them when the frame is GC'd, and `Bench.isolate`
+    * sweeps them between queries. */
   def clusterDtwDistributed(t: Timeline, window: Int, eps: Double, minPts: Int,
       band: Int = Int.MaxValue, maxPairs: Long = DtwDefaultMaxPairs): DataFrame = {
     // materialize the shared inputs ONCE (round-16, measured at the
     // registry rewire): the k-row series frame feeds the pair DP, the
     // rank, and three set-op branches, and the eps-edge list has
     // three consumers (degree, CC, border pick) — without the
-    // localCheckpoints the events window+agg re-executes ~4× and the
-    // O(k²) DP ~3× per run. The checkpointed frames are k-row and
+    // cuts the events window+agg re-executes ~4× and the
+    // O(k²) DP ~3× per run. The cut frames are k-row and
     // OUTPUT-sized (near-pairs only, the k²-row matrix dies inside the
     // join stage). The budget guard's count is free off the
     // materialized frame.
-    // LAZY checkpoints throughout (round 21, guide §1.2 — job fixed
-    // costs): plan truncation is immediate, block materialization rides
-    // the next full action — ser's rides the budget count below, half's
-    // and rankedB's ride the stage jobs of CC's edge read (whose plan
-    // reads both), so the eager per-frame materialization jobs disappear
-    // while every pin/consistency contract keeps holding: each frame is
-    // ONE fixed RDD from creation (range-partitioner sampling runs once,
-    // at RDD build), and its first action computes every partition.
-    val ser = seriesOf(t, window).localCheckpoint(false)
+    // LAZY cuts throughout (round 21): ser's blocks ride the budget
+    // count below, half's and rankedB's the jobs of CC's edge read; each
+    // frame is ONE fixed RDD from creation (range-partitioner sampling
+    // runs once, at RDD build), so every consumer reads one snapshot.
+    val ser = Pin.cut(seriesOf(t, window), eager = false)
     requirePairBudget(ser.count(), maxPairs, "clusterDtwDistributed")
     val sids = ser.select("sid")
     // the eps-graph needs only the DECISION dtw<=eps, so the DP is
@@ -759,17 +744,17 @@ object Augurs {
     // window=8; the full table is on the constant's scaladoc). The
     // registry's window=16 sits exactly at the measured win boundary
     // (1.21× kernel-level) and dispatches to the abandon kernel.
-    val half = ser.as("a").join(ser.as("b"), col("a.sid") < col("b.sid"))
+    val half = Pin.cut(ser.as("a").join(ser.as("b"), col("a.sid") < col("b.sid"))
       .where(org.apache.spark.sql.GraftColumns.dtwBandLeAuto(
         col("a.series"), col("b.series"), band, eps, window))
-      .select(col("a.sid").as("sid_a"), col("b.sid").as("sid_b")).localCheckpoint(false)
+      .select(col("a.sid").as("sid_a"), col("b.sid").as("sid_b")), eager = false)
     val edges = half.union(half.select(col("sid_b"), col("sid_a"))).toDF("u", "v")
     val deg = sids.as("s").join(edges, col("s.sid") === col("u"), "left_outer")
       .groupBy(col("s.sid").as("sid")).agg((count(col("v")) + lit(1)).as("nn"))
     val core = deg.where(col("nn") >= minPts).select(col("sid"))
     // two-phase lex rank: checkpoint phase 1 so offsets and the final
     // join see ONE sampled bucket assignment (k-row blocks)
-    val rankedB = lexRankPhase1(sids, buckets = 32).localCheckpoint(false)
+    val rankedB = Pin.cut(lexRankPhase1(sids, buckets = 32), eager = false)
     val ranked = rankedB.join(broadcast(lexRankOffsets(rankedB)), "b")
       .select(col("sid"), (col("off") + col("rk")).as("rid"))
     val coreR = core.join(ranked, "sid")

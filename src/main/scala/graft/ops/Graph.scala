@@ -2,11 +2,10 @@ package graft.ops
 
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftFrames}
+import org.apache.spark.sql.{DataFrame, GraftFrames, Pin}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import scala.collection.mutable.LongMap
 
@@ -53,21 +52,16 @@ object Graph {
     * A re-executed task can only over-count: one more cycle, never a
     * wrong label.
     *
-    * Pinning truncates each cycle's lineage, so the driver never replays
-    * the iteration. By default it is `localCheckpoint` (executor-local,
-    * non-replicated blocks: losing an executor kills the job, and re-
-    * running it is cheaper than a per-cycle write at single-digit cycles).
-    * When `sparkContext.getCheckpointDir` is set, the edges and every
-    * cycle's labels use a reliable `checkpoint()` instead, persisted first
-    * so each write re-reads blocks, not the cycle.
-    *
-    * Storage hygiene: the edge blocks and each cycle's label blocks are
-    * freed as soon as the next cycle materializes (pinned RDDs live
-    * outside the CacheManager, so `clearCache()` never reclaims them).
-    * Only the RETURNED frame stays cached: a checkpointed `Scan
-    * ExistingRDD` leaf declaring `hashpartitioning(id)` — the partitioner
-    * places ids exactly where that exchange would — so downstream joins on
-    * `id` plan no exchange. Free it with [[freeCheckpoint]].
+    * Every cycle's labels are an eager [[org.apache.spark.sql.Pin.cut]],
+    * so the driver never replays the iteration (see `Pin`). The edges are
+    * a lazy cut that is never performed (a job cuts only the first marked
+    * RDD on its path, the cycle's labels), so lost edge blocks recompute
+    * from the input. Label blocks are released once the next cycle
+    * materializes, edge blocks at the end. Only the RETURNED frame stays
+    * pinned: a cut `Scan ExistingRDD` leaf declaring `hashpartitioning(id)`
+    * — the partitioner places ids exactly where that exchange would — so
+    * downstream joins on `id` plan no exchange. Free it with
+    * [[org.apache.spark.sql.Pin.release]].
     *
     * `symmetric = true` promises `edges` already contains both directions
     * of every edge (the aug_cluster path builds them that way): the
@@ -78,18 +72,13 @@ object Graph {
     val spark = edges.sparkSession
     val sc = spark.sparkContext
     val part = new IdPartitioner(GraftFrames.shufflePartitions(spark))
-    val reliable = sc.getCheckpointDir.isDefined
-    def pin[T](r: RDD[T]): RDD[T] =
-      if (reliable) { r.persist(StorageLevel.MEMORY_AND_DISK).checkpoint(); r }
-      else r.localCheckpoint()
     val Seq(s, t) = edges.columns.take(2).toSeq
-    val und = edges.select(col(s).cast("long"), col(t).cast("long")).queryExecution.toRdd
+    val und = Pin.cut(edges.select(col(s).cast("long"), col(t).cast("long")).queryExecution.toRdd
       .flatMap { r =>
         if (r.isNullAt(0) || r.isNullAt(1)) Nil
         else if (symmetric) List((r.getLong(0), r.getLong(1)))
         else List((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
-      }.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
-    if (reliable) { und.checkpoint(); und.count() }
+      }.partitionBy(part), eager = false)
     // seeded init: label = min(id, neighbors), one narrow pass
     var labels: RDD[(Long, Long)] = und.mapPartitions({ es =>
       val m = new LongMap[Long]
@@ -113,18 +102,18 @@ object Graph {
     var done = false
     while (!done && it < maxIter) {
       lowered.reset()
-      val next = pin(round(round(labels).mapValues(_._1)).mapPartitions(_.map {
+      // the cycle's one job: materializes its blocks, counts lowered labels
+      val next = Pin.cut(round(round(labels).mapValues(_._1)).mapPartitions(_.map {
         case (v, (c, old)) => if (c < old) lowered.add(1); InternalRow(v, c)
-      }, preservesPartitioning = true))
-      next.count() // the cycle's one job: materializes its blocks, counts lowered labels
-      if (pinned != null) pinned.unpersist(blocking = false) // last cycle's blocks are dead
+      }, preservesPartitioning = true), eager = true)
+      if (pinned != null) Pin.release(pinned) // last cycle's blocks are dead
       pinned = next
       labels = next.mapPartitions(_.map(r => (r.getLong(0), r.getLong(1))),
         preservesPartitioning = true)
       done = lowered.value == 0
       it += 2
     }
-    und.unpersist(blocking = false)
+    Pin.release(und)
     require(done, s"connectedComponents: no fixpoint after $maxIter rounds (diameter > $maxIter?)")
     GraftFrames.hashPartitioned(spark, pinned, StructType(Seq(
       StructField("id", LongType, nullable = false),
@@ -144,16 +133,4 @@ object Graph {
     }
     override def hashCode: Int = numPartitions
   }
-
-  /** Drop the executor blocks behind a `localCheckpoint`ed frame.
-    * localCheckpoint caches at the RDD layer (NOT the CacheManager), so
-    * neither `df.unpersist()` nor `catalog.clearCache()` reclaims it —
-    * the block handle lives on the LogicalRDD the checkpoint left behind.
-    * No-op on frames that aren't checkpoint leaves. */
-  def freeCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.apache.spark.sql.{DataFrame, Pin}
+
 /** `feedback` (reference `fluent.rs:363-368,1101-1105`, `interp.rs:2173,
   * 2208`): a cycle-delayed feedback edge — the value fed into the sink
   * arrives back at the source on the NEXT engine cycle, keeping the DAG
@@ -33,21 +35,18 @@ object Feedback {
   /** WHOLE-GRAPH feedback, bounded-epoch batch form: the reference's
     * `run_for(cycles)` with a feedback edge re-runs the graph with last
     * cycle's output as next cycle's feedback input — in Spark that is an
-    * iterative batch loop, one epoch per cycle. `localCheckpoint` after
-    * each epoch truncates the lineage (n epochs would otherwise build an
-    * n-deep plan and overwhelm the optimizer) and materializes the epoch
-    * exactly once. Cross-key/global aggregation inside `step` is allowed —
-    * this is the part per-key state ([[proc]]) cannot express. */
-  def iterateEpochs(start: org.apache.spark.sql.DataFrame, epochs: Int)(
-      step: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+    * iterative batch loop, one epoch per cycle. An eager
+    * [[org.apache.spark.sql.Pin.cut]] after each epoch truncates the
+    * lineage (n epochs would otherwise build an n-deep plan and overwhelm
+    * the optimizer) and materializes the epoch exactly once, then frees
+    * the epoch before it. Cross-key/global aggregation inside `step` is
+    * allowed — this is the part per-key state ([[proc]]) cannot express. */
+  def iterateEpochs(start: DataFrame, epochs: Int)(step: DataFrame => DataFrame): DataFrame = {
     require(epochs >= 0)
-    var cur = start
-    var i = 0
-    while (i < epochs) {
-      cur = step(cur).localCheckpoint(true)
-      i += 1
+    (0 until epochs).foldLeft(start) { (cur, i) =>
+      val next = Pin.cut(step(cur), eager = true)
+      if (i > 0) Pin.release(cur)
+      next
     }
-    cur
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Pin}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
@@ -59,14 +59,14 @@ object RetrievalStream {
     * because restricting postings to the query's terms never changes
     * how many docs contain each term. */
   final case class SparseIndex(postings: DataFrame, n: Double, avgdl: Double) {
-    /** Release the persisted postings frame (the frozen model). */
-    def unpersist(): Unit = { postings.unpersist(); () }
+    /** Release the cached postings frame (the frozen model). */
+    def unpersist(): Unit = Pin.release(postings)
   }
 
   /** Build the frozen inverted index from a (doc_id, text) frame with
     * the batch tokenizer. One groupBy((id, tok)) + one per-tok df
     * aggregate — both at posting grain, both once, before the stream:
-    * the postings frame is persist()ed (it is the model — the quantizer
+    * the postings frame is cached (it is the model — the quantizer
     * level-frame discipline), otherwise every micro-batch's
     * stream-static join would re-tokenize and re-aggregate the whole
     * corpus. Call [[SparseIndex.unpersist]] when retiring the index. */
@@ -81,7 +81,7 @@ object RetrievalStream {
         explode(TF.tokens(col("text"))).as("tok"))
       .groupBy("id", "tok").agg(count(lit(1)).cast("double").as("tf"))
     val df = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("df"))
-    SparseIndex(tf.join(df, "tok").join(dls, "id").persist(), n, avgdl)
+    SparseIndex(Pin.cache(tf.join(df, "tok").join(dls, "id"), eager = false), n, avgdl)
   }
 
   /** arrivals ⋈ frozen index → ≤ `kOut` [[RetrievalHit]]s per arrival.

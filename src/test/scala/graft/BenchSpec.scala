@@ -258,14 +258,20 @@ class BenchSpec extends SparkSuite {
   }
 
   test("the run record splits every query's kept attempt by layer") {
-    val qs = SparkEntry.queries.filter { case (n, _) => Set("q_anti_join", "evt_dataframe")(n) }
+    // doc_token_budget's histogram descent runs jobs inside its builder
+    val qs = SparkEntry.queries.filter { case (n, _) =>
+      Set("q_anti_join", "evt_dataframe", "doc_token_budget")(n) }
     val (results, errors, probes) = Bench.run(spark, "/root/testdata/sf0.001", qs)
-    assert(errors.isEmpty, s"both queries run: $errors")
+    assert(errors.isEmpty, s"every query runs: $errors")
+    assert(probes.layers("doc_token_budget").buildJobs >= 1,
+      s"the builder's own jobs land in queries.build_jobs: ${probes.layers}")
     assert(probes.layers.keySet == qs.keySet, s"a layer split per query: ${probes.layers}")
     probes.layers.foreach { case (n, l) =>
       assert(l.buildS >= 0 && l.buildS <= results(n), s"$n: build within the wall: $l")
       assert(l.jobs >= 1 && l.stages >= 1 && l.tasks >= l.stages,
         s"$n: its job group ran jobs, stages and tasks: $l")
+      assert(l.buildJobs >= 0 && l.buildJobs < l.jobs,
+        s"$n: build jobs are a share of the attempt's jobs (the write runs one): $l")
       assert(l.runS >= 0 && l.gcS >= 0, s"$n: $l")
     }
     assert(probes.layers.values.map(_.runS).sum > 0, "task run time is tallied")
@@ -274,7 +280,7 @@ class BenchSpec extends SparkSuite {
       "/root/testdata/sf0.001", passes = 2)
     val layers = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(java.nio.file.Files.readString(path)).get("layers")
-    for (n <- qs.keys; f <- Seq("queries.build_s", "sched.jobs", "sched.stages",
+    for (n <- qs.keys; f <- Seq("queries.build_s", "queries.build_jobs", "sched.jobs", "sched.stages",
         "sched.tasks", "exec.run_s", "jvm.gc_s"))
       assert(layers.path(n).has(f), s"record has $n $f: $layers")
     java.nio.file.Files.delete(path)

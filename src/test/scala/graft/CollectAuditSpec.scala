@@ -124,6 +124,22 @@ class CollectAuditSpec extends AnyFunSuite {
       "on the JVM's own ThreadInfo array and take(12) on a stack trace - " +
       "thread/frame-count-bounded driver diagnostics, never Spark data"))
 
+  /** The materialization verbs: every persist, cache and
+    * lineage cut in `src/main` goes through `Pin`, which decides in one
+    * place whether a pinned frame survives executor loss; the only
+    * `unpersist` outside it is `Bench.isolate`'s per-query harness sweep,
+    * the catch-all for frames tests and the harness pin and never
+    * release. file -> (count, argument). */
+  private val allowPin: Map[String, (Int, String)] = Map(
+    "org/apache/spark/sql/Pin.scala" -> (5,
+      "Pin's own bodies: cache's persist; cut's Dataset localCheckpoint; " +
+        "cut's RDD persist + checkpoint and localCheckpoint (the frame's " +
+        "reliable form goes through the RDD form)"))
+  private val allowUnpersist: Map[String, (Int, String)] = Map(
+    "org/apache/spark/sql/Pin.scala" -> (2, "Pin.release's frame and RDD forms"),
+    "graft/Bench.scala" -> (1,
+      "Bench.isolate: the per-query sweep of every still-registered RDD"))
+
   private def countPattern(pattern: String): Map[String, Int] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
@@ -156,6 +172,13 @@ class CollectAuditSpec extends AnyFunSuite {
 
   test("every .collect() in src/main is allowlisted with a boundedness argument") {
     check(countPattern("\\.collect\\(\\)"), allow, ".collect()")
+  }
+
+  test("every persist, cache and lineage cut in src/main goes through Pin") {
+    check(countPattern(
+      "(?<!un)persist\\(|\\.cache\\(\\)|localCheckpoint\\(|\\.checkpoint\\("),
+      allowPin, "persist/cache/localCheckpoint/checkpoint")
+    check(countPattern("\\.unpersist\\("), allowUnpersist, "unpersist")
   }
 
   test("every other materialization verb in src/main is allowlisted too") {

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Graph
+import org.apache.spark.sql.Pin
 import org.apache.spark.sql.functions._
 
 /** Connected components: exact component labels on known graphs. */
@@ -48,7 +49,7 @@ class GraphSpec extends SparkSuite {
     val out = Graph.connectedComponents(chain.toDF("src", "dst"))
     val c = out.select("component").distinct().as[Long].collect().toSeq
     assert(c == Seq(1L), s"one component labeled 1, got $c")
-    Graph.freeCheckpoint(out)
+    Pin.release(out)
   }
 
   test("round blocks are freed: only the returned frame stays cached") {
@@ -64,7 +65,7 @@ class GraphSpec extends SparkSuite {
     val mine = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(mine.size == 1,
       s"expected only the returned label frame cached, got ${mine.size} new RDDs")
-    Graph.freeCheckpoint(out)
+    Pin.release(out)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
@@ -120,7 +121,7 @@ class GraphSpec extends SparkSuite {
     val got = sym.as[(Long, Long)].collect().toMap
     assert(got == components(edges: _*), "symmetric path differs from the default path")
     assert(got == unionFind(edges), "symmetric path differs from the union-find reference")
-    Graph.freeCheckpoint(sym)
+    Pin.release(sym)
   }
 
   test("the label frame sits where its declared hashpartitioning(id) says") {
@@ -133,7 +134,7 @@ class GraphSpec extends SparkSuite {
     val p = out.join(out.select(col("id"), col("component").as("c2")), "id")
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"a self-join on id must plan no exchange:\n$p")
-    Graph.freeCheckpoint(out)
+    Pin.release(out)
   }
 
   test("with a checkpoint directory set, the labels end in a reliable checkpoint") {
@@ -147,7 +148,7 @@ class GraphSpec extends SparkSuite {
         assert(rdd.isCheckpointed && rdd.getCheckpointFile.isDefined,
           s"label lineage must end in a reliable checkpoint:\n${rdd.toDebugString}")
         assert(out.as[(Long, Long)].collect().toMap == unionFind(edges))
-        Graph.freeCheckpoint(out)
+        Pin.release(out)
       }
     } finally {
       val walk = java.nio.file.Files.walk(dir)

@@ -10,4 +10,9 @@ object CheckpointDirs {
     sc.setCheckpointDir(dir)
     try body finally sc.checkpointDir = prev
   }
+
+  /** Remove every block of RDD `rddId` from every block manager — what
+    * losing the executors that held them does to a pinned RDD. */
+  def dropBlocks(rddId: Int): Unit =
+    SparkEnv.get.blockManager.master.removeRdd(rddId, blocking = true)
 }
